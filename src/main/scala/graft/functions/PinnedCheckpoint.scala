@@ -30,29 +30,19 @@ import org.apache.spark.sql.functions.col
   * from `sortWithinPartitions(k)`. Declaring a layout the blocks already
   * have is metadata repair, not a semantics change; origin statistics are
   * carried over so join-strategy choices are unaffected.
+  *
+  * Lifetime — the one rule for every engine materialization, pins
+  * included. A frame built and used inside one eager call is released by
+  * that call (`persist … finally unpersist()`). Checkpoint and pin blocks
+  * that back a returned lazy frame last as long as that frame is
+  * reachable: Spark's ContextCleaner frees them once the last reference
+  * has been garbage-collected, as for any `localCheckpoint`.
+  * SQL-cache persists that back a lazy result are freed by
+  * `spark.catalog.clearCache()`. The engine keeps no registry of its
+  * own: a local checkpoint cannot be recomputed, so freeing blocks that a
+  * caller's lazy frame still reads would make that frame fail.
   */
 object PinnedCheckpoint {
-  /** Checkpoint blocks are NOT freed by `spark.catalog.clearCache()`
-    * (they are raw RDD blocks, not SQL cache entries) and otherwise
-    * linger until the driver GCs the RDD handle — a long-lived session
-    * running many checkpointing queries accumulates dead blocks and
-    * churns storage memory. Bounded FIFO: once more than `cap` pinned
-    * RDDs are live, the oldest is unpersisted. No operator invocation
-    * creates more than 2 pins (HITS's src/dst edge copies), and a
-    * caller comparing two lazily-held results holds ≤4, so 6 releases
-    * only frames from finished invocations. (Measured at cap 32: the
-    * squatting edge-frame blocks — up to ~3 GB at bench scale — crowded
-    * the dedup family's own persists out of storage memory, a
-    * consistent +0.5-1.7 s across that family in two full runs.)
-    */
-  private val live = new java.util.ArrayDeque[org.apache.spark.rdd.RDD[_]]()
-  private val cap = 6
-
-  private def track(rdd: org.apache.spark.rdd.RDD[_]): Unit = synchronized {
-    live.addLast(rdd)
-    if (live.size > cap) live.removeFirst().unpersist(blocking = false)
-  }
-
   def byKey(df: DataFrame, parts: Int, key: String): DataFrame = {
     require(parts > 0, s"pinned checkpoint needs parts > 0, got $parts")
     val ck = df.repartition(parts, col(key))
@@ -61,7 +51,6 @@ object PinnedCheckpoint {
       .asInstanceOf[Dataset[org.apache.spark.sql.Row]]
     ck.queryExecution.logical match {
       case lr: LogicalRDD =>
-        track(lr.rdd)
         val attr = lr.output.find(_.name == key).getOrElse(
           throw new IllegalArgumentException(
             s"pinned checkpoint: no column '$key' in ${lr.output}"))

@@ -23,13 +23,14 @@ import org.apache.spark.sql.functions._
   * 9 rounds, sf0.1 needs 10) — fixpoint is correctness, not polish.
   *
   * Scale posture (100 TB): the edge frame is read ONCE into a
-  * hash-partitioned localCheckpoint keyed on the join column, so every
-  * round's edge join reuses that partitioning and only the (small,
-  * changing) label frames shuffle — O(1) edge shuffles per fixpoint, not
-  * O(diameter). Each round's labels are localCheckpoint-ed so lineage
-  * stays flat (on a real cluster: checkpoint() to durable storage for
-  * fault tolerance). Label state is one (id, lbl) row per node — never
-  * O(edges²).
+  * localCheckpoint hash-partitioned on the join column, so no round
+  * re-derives it. The checkpoint does not declare that layout under AQE
+  * (its plan reports `UnknownPartitioning(0)`, see
+  * [[org.apache.spark.sql.graft.PinnedCheckpoint]]), so every round's
+  * edge join still exchanges the edge frame. Each round's labels are
+  * localCheckpoint-ed so lineage stays flat (on a real cluster:
+  * checkpoint() to durable storage for fault tolerance). Label state is
+  * one (id, lbl) row per node — never O(edges²).
   */
 object Components {
 
@@ -64,14 +65,9 @@ object Components {
     // the `a` endpoints alone cover every touched node. Singletons rejoin
     // with lbl = id after convergence (one left join, outside the loop).
     //
-    // Pre-partition the edge frame by the join key ONCE (round 4): the
-    // loop joins edges on `a` every round, and a localCheckpoint
-    // materializes the hash partitioning, so EnsureRequirements reuses it
-    // and the per-round plans shuffle only the (small, changing) label
-    // frames — O(1) edge shuffles for the whole fixpoint instead of
-    // O(diameter). At corpus scale the edge shuffle dominates a round, so
-    // this is the difference between 1 and `diameter` passes of the edge
-    // frame over the network.
+    // Materialize the edge frame ONCE, partitioned by the join key `a`.
+    // The checkpoint declares no layout under AQE, so each round's join
+    // on `a` still exchanges it: one edge shuffle per round.
     val eByA = edges.repartition(col("a")).localCheckpoint()
     var labels = eByA
       .select(col("a").as("id"))
@@ -94,13 +90,12 @@ object Components {
       // scheduling overhead on small label frames.
       val obs = org.apache.spark.sql.Observation(s"cc_round_$rounds")
       // Neighbor minimum PUSHED from the a-endpoint (round 13, guide §2.3):
-      // join the node-sized label vector onto the edge frame's checkpointed
-      // a-partitioning and aggregate min(lbl) by b — the partial (map-side)
-      // aggregation collapses the edge-sized join output to one row per
-      // distinct b per partition BEFORE the exchange, so only node-sized
-      // frames ever cross the wire. The previous lookup-join form
-      // (labels ⋈ edges ⋈ labels on e.b) re-shuffled the EDGE-sized joined
-      // frame on b every round — O(rounds) edge shuffles, not O(1).
+      // join the node-sized label vector onto the edge frame on `a` and
+      // aggregate min(lbl) by b — the partial (map-side) aggregation
+      // collapses the edge-sized join output to one row per distinct b
+      // per partition BEFORE the exchange on b. The previous lookup-join
+      // form (labels ⋈ edges ⋈ labels on e.b) re-shuffled the EDGE-sized
+      // joined frame on b every round, on top of the edge exchange on a.
       val nmin = eByA.hint("shuffle_hash")
         .join(labels.hint("shuffle_hash"), col("a") === col("id"))
         .groupBy(col("b"))
@@ -248,13 +243,15 @@ object Components {
     * maximal fixpoint; removal order only affects intermediate states).
     *
     * Scale shape (the [[connectedComponents]] idiom): the symmetric edge
-    * frame is hash-partitioned on `a` once; each round is one
-    * partition-local degree count + two semi-joins against the (small)
-    * qualifying-node frame, localCheckpoint-ed to keep lineage flat, with
-    * the round's edge count folded into the checkpoint job via observe()
-    * — one job per round. Rounds are data-bounded: each round strictly
-    * shrinks the edge set until the fixpoint, and `maxRounds` caps
-    * adversarial peel chains the way DefaultMaxPropagationRounds caps CC
+    * frame is checkpointed once, hash-partitioned on `a`; the checkpoint
+    * declares no layout under AQE, so each round's degree count and
+    * semi-joins exchange it again. Each round is one degree count + two
+    * semi-joins against the (small) qualifying-node frame,
+    * localCheckpoint-ed to keep lineage flat, with the round's edge count
+    * folded into the checkpoint job via observe() — one job per round.
+    * Rounds are data-bounded: each round strictly shrinks the edge set
+    * until the fixpoint, and `maxRounds` caps adversarial peel chains
+    * the way DefaultMaxPropagationRounds caps CC
     * (the declared graph converges in ≤ 4 rounds at every harness SF;
     * the oracle peels exactly `maxRounds` times, so a budget hit still
     * agrees with it — both report the round-`maxRounds` state).

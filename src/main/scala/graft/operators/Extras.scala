@@ -51,11 +51,6 @@ object Extras {
     // instead of two joins — the per-round network cost is exactly the
     // rank vector, nothing else
     val outw = e0p.groupBy("src").agg(sum(col("cnt")).as("w")).persist()
-    // localCheckpoint, not persist (round 14 — the HITS 6a0e199 idiom):
-    // a persisted plan reports unknown partitioning under AQE, so every
-    // iteration's rank join re-exchanged the EDGE frame; the checkpoint
-    // pins hash(src) + sort statically, so each round moves only the
-    // node-sized rank vector.
     val edges = org.apache.spark.sql.graft.PinnedCheckpoint.byKey(
       e0p.join(outw, Seq("src")),
       edges0.sparkSession.sparkContext.defaultParallelism, "src")
@@ -140,17 +135,9 @@ object Extras {
     // return (hub, null) and NPE at first downstream use (same parameter
     // discipline as pageRank)
     require(rounds >= 1, s"hits: rounds=$rounds must be >= 1")
-    // Two statically-partitioned copies of the edge frame (round 13) —
-    // the auth half-round joins on src, the hub half-round on dst, so a
-    // SINGLE src-partitioned copy re-exchanged the edges on dst every
-    // half-round. localCheckpoint (not persist) pins partitioning + sort
-    // order statically in the LogicalRDD, so each half-round's SMJ moves
-    // and sorts only the node-sized score vector; eDst derives from the
-    // materialized eSrc, so the caller's edge derivation runs once.
-    // Measured −16% on graph_hits (stash A/B, min-of-2 filtered runs).
-    // round 14: declared-layout checkpoints (PinnedCheckpoint) — the
-    // r13 plain localCheckpoint recorded UnknownPartitioning under AQE,
-    // so each half-round still re-exchanged the edge copy it probed
+    // Two pinned copies of the edge frame: the auth half-round joins on
+    // src, the hub half-round on dst. eDst derives from the materialized
+    // e, so the caller's edge derivation runs once.
     val npHits = edges0.sparkSession.sparkContext.defaultParallelism
     val e = org.apache.spark.sql.graft.PinnedCheckpoint.byKey(
       edges0, npHits, "src")
@@ -1240,6 +1227,9 @@ object Extras {
         |       floor(CAST(6 * n1 + 3 * n2 + 2 * n3 AS DOUBLE) / 6
         |             * 1000000) / 1000000 AS harmonic3
         |FROM h ORDER BY node""".stripMargin) { (s, d) =>
+      // materialized once for the degree count and the BFS; the
+      // checkpoint declares no layout under AQE, so neither reuses the
+      // partitioning on `a` (multiSourceDistances repartitions again)
       val e = symmetrize(coOrderEdges(s, d, "1997-01-01", "1997-02-01"))
         .repartition(col("a")).localCheckpoint()
       val deg = e.groupBy(col("a").as("node"))
@@ -1367,10 +1357,6 @@ object Extras {
         |SELECT node, rank FROM r3
         |ORDER BY rank DESC, node LIMIT 20""".stripMargin) { (s, d) =>
       val pair = custSuppPairs(s, d)
-      // checkpoint-pin hash(src) + sort (round 14): a persisted (or
-      // plainly checkpointed) plan reports unknown partitioning under
-      // AQE, so all three power-iteration rounds re-exchanged the edge
-      // frame; the declared-layout checkpoint moves it ONCE
       val edges = org.apache.spark.sql.graft.PinnedCheckpoint.byKey(
         pair.select(explode(array(
             struct(col("c").as("src"), col("s").as("dst"), col("cnt")),
@@ -1452,10 +1438,6 @@ object Extras {
         |SELECT node, x AS katz FROM x3
         |ORDER BY katz DESC, node LIMIT 20""".stripMargin) { (s, d) =>
       val pair = custSuppPairs(s, d)
-      // checkpoint-pin hash(src) + sort (round 14): persist reported
-      // unknown partitioning under AQE, so all three Katz rounds
-      // re-exchanged the edge frame; the declared-layout checkpoint
-      // moves it once
       val edges = org.apache.spark.sql.graft.PinnedCheckpoint.byKey(
         pair.select(explode(array(
             struct(col("c").as("src"), col("s").as("dst"), col("cnt")),
@@ -2186,27 +2168,16 @@ object Extras {
     * Cache contract: persists the edge frame; callers doing repeated
     * runs should clearCache() when done, as with [[pageRank]].
     */
-  /** Symmetrized adjacency (u, v) pinned at FULL parallelism on the
-    * wedge key v (round 13; completed round 14). The wedge self-join's
-    * cost is its OUTPUT (Σ deg² candidate pairs), which AQE cannot see:
-    * it sizes the join's reduce partitions from the tiny edge-frame
-    * input bytes and coalesced the whole wedge enumeration onto 2 tasks
-    * (event-log evidence: 3.4M wedge rows produced by 2 tasks of ~2 s
-    * on 32 cores). An EXPLICIT partition count is a hard constraint AQE
+  /** Symmetrized adjacency (u, v) pinned ([[PinnedCheckpoint]]) at FULL
+    * parallelism on the wedge key v, so both sides of the wedge
+    * self-join read it with no further exchange on v. The wedge
+    * self-join's cost is its OUTPUT (Σ deg² candidate pairs), which AQE
+    * cannot see: it sizes the join's reduce partitions from the tiny
+    * edge-frame input bytes and coalesced the whole wedge enumeration
+    * onto 2 tasks (event-log evidence: 3.4M wedge rows produced by 2
+    * tasks of ~2 s on 32 cores). An EXPLICIT partition count is a hard constraint AQE
     * will not coalesce, sized from the session's parallelism
     * (scale-adaptive — cores of the cluster, not a tuned constant).
-    *
-    * Round 14 (VERDICT r13 #1): the r13 form was `persist().
-    * repartition(np, v)`, which under AQE reports UNKNOWN partitioning
-    * at every reference — each of the 4-5 consumers of the frame
-    * (both wedge sides, the degree aggregate ×2) paid its own full
-    * edge-frame Exchange on top of the cache scan (plan evidence:
-    * plans/r14/graph_jaccard_neighbors_before.txt, Exchanges 12/16/32/
-    * 43 all re-shuffling InMemoryTableScans of the same relation). The
-    * HITS idiom (6a0e199) — repartition → sortWithinPartitions →
-    * localCheckpoint — pins partitioning + sort order statically in
-    * the LogicalRDD, so every consumer reads the materialized blocks
-    * co-partitioned on v with no further exchange.
     */
   private def symByV(e: DataFrame): DataFrame = {
     val np = e.sparkSession.sparkContext.defaultParallelism
@@ -2338,9 +2309,10 @@ object Extras {
     * convergence loop would not terminate there.
     *
     * Scale shape: edge frame repartitioned on the probe side +
-    * checkpointed ONCE; per round one label-vector shuffle against it +
-    * one (node, label) count; labels localCheckpointed per round (flat
-    * lineage, the CC-loop posture).
+    * checkpointed ONCE; the checkpoint declares no layout under AQE, so
+    * each round's join exchanges the edge frame as well as the label
+    * vector, then runs one (node, label) count; labels localCheckpointed
+    * per round (flat lineage, the CC-loop posture).
     */
   def labelPropagation(edgesSym: DataFrame, rounds: Int): DataFrame = {
     val e = edgesSym.repartition(col("b")).localCheckpoint()
@@ -2368,6 +2340,8 @@ object Extras {
     */
   def multiSourceDistances(
       edgesSym: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
+    // materialized once; the checkpoint declares no layout under AQE, so
+    // every hop's join on `a` still exchanges the edge frame
     val e = edgesSym.repartition(col("a")).localCheckpoint()
     var visited = seeds
       .select(col("node").as("seed"), col("node"), lit(0).as("dist"))

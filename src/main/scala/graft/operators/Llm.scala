@@ -154,33 +154,6 @@ object Llm {
       .orderBy("d1", "d2")
   }
 
-  /** Blocks persisted by the MOST RECENT prefix/auto/shared-shingle
-    * sim-join invocation. The multi-reference reuse inside one call needs
-    * the persist (the doc/shingle frame feeds the prefix explode and both
-    * verify sides), but a returned lazy DataFrame gives no "materialized,
-    * safe to unpersist" hook — so the lifecycle is scoped per invocation:
-    * each new call releases the previous call's blocks, and
-    * [[releaseSimJoinCaches]] releases the last. A long-lived session
-    * therefore holds at most ONE invocation's working set, never an
-    * unbounded accumulation (the 200k-doc ScaleSmoke previously needed a
-    * manual clearCache). Contract: the previous call's RESULT must be
-    * materialized before the next call — the natural sequential use.
-    */
-  private val simJoinCaches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-
-  /** Must run BEFORE the new call's persist: a repeated identical plan
-    * re-persists into the SAME cache entry (cache-manager plan matching),
-    * so unpersisting the old frame after would evict the new one too. */
-  private def registerSimJoinCaches(fresh: DataFrame*): Unit = synchronized {
-    simJoinCaches ++= fresh
-  }
-
-  /** Release the blocks persisted by the latest sim-join invocation. */
-  def releaseSimJoinCaches(): Unit = synchronized {
-    simJoinCaches.foreach(_.unpersist(blocking = false))
-    simJoinCaches.clear()
-  }
-
   /** Prefix-filtered EXACT Jaccard join at threshold τ — candidates from
     * [[ppjoinCandidates]], then [[ppjoinVerify]] (the doc frame is
     * persisted once and feeds the prefix explode and both verify sides).
@@ -188,9 +161,7 @@ object Llm {
     * share an oracle shape.
     */
   private[graft] def prefixJaccardJoin(docsDf: DataFrame, tau: Double): DataFrame = {
-    releaseSimJoinCaches()
     val docFrame = ppjoinDocFrame(docsDf, tau).persist()
-    registerSimJoinCaches(docFrame)
     ppjoinVerify(docFrame, ppjoinCandidates(docFrame, tau), tau)
   }
 
@@ -201,11 +172,9 @@ object Llm {
     * common). */
   private[graft] def sharedShingleThreshold(
       docsDf: DataFrame, tau: Double): DataFrame = {
-    releaseSimJoinCaches()
     // spread form: feeds sizes + both pair sides (the self-join must
     // not inherit the scan's one-split width)
     val sh = shingleDfSpread(docsDf).persist()
-    registerSimJoinCaches(sh)
     sharedShingleThresholdFrom(sh, tau)
   }
 
@@ -247,10 +216,8 @@ object Llm {
   private[graft] def simJoinThresholdAuto(
       docsDf: DataFrame, tau: Double,
       candBudgetPerDoc: Long = 32L): DataFrame = {
-    releaseSimJoinCaches()
     // spread form, cache-matched by ppjoinDocFrame's identical subtree
     val sh = shingleDfSpread(docsDf).persist()
-    registerSimJoinCaches(sh)
     val probe = sh.groupBy("s").agg(count(lit(1)).as("df"))
       .agg(sum(col("df") * (col("df") - 1)).as("pair_mass2"))
       .head()
@@ -264,7 +231,6 @@ object Llm {
       // ppjoinDocFrame re-derives shingleDf(docsDf) — the cache manager
       // matches the canonicalized plan, so the persisted frame is reused
       val docFrame = ppjoinDocFrame(docsDf, tau).persist()
-      registerSimJoinCaches(docFrame)
       ppjoinVerify(docFrame, ppjoinCandidates(docFrame, tau), tau)
     } else {
       sharedShingleThresholdFrom(sh, tau)

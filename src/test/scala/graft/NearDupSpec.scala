@@ -422,15 +422,16 @@ class NearDupSpec extends AnyFunSuite {
     spark.catalog.clearCache()
   }
 
+  private def simRows(d: org.apache.spark.sql.DataFrame) =
+    d.select("d1", "d2", "inter").as[(Long, Long, Long)].collect().toSet
+
   test("adaptive sim join: BOTH branches produce identical rows (≡ brute)") {
     val docsDf = spark.read.parquet(s"$dir/documents.parquet")
-    def rows(d: org.apache.spark.sql.DataFrame) =
-      d.select("d1", "d2", "inter").as[(Long, Long, Long)].collect().toSet
     // budget 0 forces the shared-shingle fallback; Long.MaxValue forces
     // the prefix verify — the branch choice must be result-invisible
-    val viaFallback = rows(operators.Llm.simJoinThresholdAuto(docsDf, 0.5, 0L))
+    val viaFallback = simRows(operators.Llm.simJoinThresholdAuto(docsDf, 0.5, 0L))
     spark.catalog.clearCache()
-    val viaPrefix = rows(operators.Llm.simJoinThresholdAuto(
+    val viaPrefix = simRows(operators.Llm.simJoinThresholdAuto(
       docsDf, 0.5, Long.MaxValue))
     spark.catalog.clearCache()
     val brute = bruteJaccard(0.5)
@@ -438,29 +439,32 @@ class NearDupSpec extends AnyFunSuite {
     assert(viaPrefix == brute, s"prefix branch diverged: $viaPrefix vs $brute")
   }
 
-  test("sim-join cache lifecycle: repeated invocations don't accumulate " +
-    "cached blocks (r8 advice — prior behavior leaked per call)") {
+  test("sim-join result held lazily across a second sim-join call " +
+    "still equals the brute-force rows") {
+    val docsDf = spark.read.parquet(s"$dir/documents.parquet")
+    val held = operators.Llm.prefixJaccardJoin(docsDf, 0.5)
+    val second = simRows(operators.Llm.simJoinThresholdAuto(docsDf, 0.5, 0L))
+    val brute = bruteJaccard(0.5)
+    assert(simRows(held) == brute, "lazily held result diverged")
+    assert(second == brute, "second call diverged")
+    spark.catalog.clearCache()
+  }
+
+  test("sim-join cache lifecycle: clearCache() releases every frame " +
+    "the calls cached") {
     val docsDf = spark.read.parquet(s"$dir/documents.parquet")
     spark.catalog.clearCache()
-    def cachedEntries: Int = {
-      // distinct cached plans currently registered in this session
-      spark.sparkContext.getPersistentRDDs.size
-    }
-    // first invocation establishes the per-call working set…
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
     operators.Llm.prefixJaccardJoin(docsDf, 0.5).count()
-    val afterFirst = cachedEntries
-    // …subsequent invocations (any variant) swap it, never stack on top
     operators.Llm.simJoinThresholdAuto(docsDf, 0.5, Long.MaxValue).count()
     operators.Llm.prefixJaccardJoin(docsDf, 0.5).count()
     operators.Llm.sharedShingleThreshold(docsDf, 0.5).count()
-    val afterMany = cachedEntries
-    assert(afterMany <= afterFirst + 1,
-      s"sim-join caches accumulated: $afterFirst → $afterMany entries")
-    // explicit release drops the final invocation's blocks too
-    operators.Llm.releaseSimJoinCaches()
-    assert(cachedEntries == 0 ||
-      cachedEntries < afterFirst,
-      s"releaseSimJoinCaches left ${cachedEntries} persistent RDDs")
+    val cached = persisted -- before
+    assert(cached.nonEmpty, "the calls must cache their working frames")
+    spark.catalog.clearCache()
+    val left = persisted intersect cached
+    assert(left.isEmpty, s"clearCache() left sim-join RDDs $left")
   }
 
   test("prefix length law: p = n - ceil(τ·n) + 1, 1 ≤ p ≤ n") {

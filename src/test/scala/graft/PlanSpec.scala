@@ -250,6 +250,62 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct"))
   }
 
+  /** Every physical plan a key runs: its eager build-time actions (the
+    * loop checkpoints that read a pin) plus the returned frame. AQE plans
+    * are taken as EnsureRequirements first laid them out. */
+  private def plansOf(name: String): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    def initial(p: SparkPlan): SparkPlan = p match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    val seen = scala.collection.mutable.ArrayBuffer[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        seen.synchronized { seen += initial(qe.executedPlan) }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val df = SparkEntry.queries(name)(spark, sf)
+      org.apache.spark.graft.TestBusHook.waitUntilEmpty(spark)
+      seen.synchronized(seen.toSeq) :+ initial(df.queryExecution.executedPlan)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("pinned keys: no Exchange on a pin's key directly over that pin") {
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning}
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    def hashKeys(p: Partitioning): Option[Seq[String]] = p match {
+      case h: HashPartitioning => Some(h.expressions.flatMap(_.references.map(_.name)))
+      case _ => None
+    }
+    // the declared hash keys of a pinned scan, seen through the narrow
+    // operators that keep its layout
+    def pinKeys(p: SparkPlan): Option[Seq[String]] = p match {
+      case s: RDDScanExec => hashKeys(s.outputPartitioning)
+      case _: ProjectExec | _: FilterExec | _: WholeStageCodegenExec |
+          _: InputAdapter | _: ColumnarToRowExec => pinKeys(p.children.head)
+      case _ => None
+    }
+    for (k <- Seq("graph_pagerank", "graph_pagerank_directed", "graph_katz",
+        "graph_hits", "graph_common_neighbors", "graph_jaccard_neighbors")) {
+      val plans = plansOf(k)
+      spark.catalog.clearCache()
+      assert(plans.exists(_.exists(pinKeys(_).isDefined)),
+        s"$k: no plan reads a pinned scan")
+      val reExchanged = plans.flatMap(_.collect {
+        case x: ShuffleExchangeExec
+            if hashKeys(x.outputPartitioning).exists(pinKeys(x.child).contains) => x
+      })
+      assert(reExchanged.isEmpty,
+        s"$k re-exchanges a pin on its own key:\n${reExchanged.mkString("\n")}")
+    }
+  }
+
   test("graph edge derivation: within-order pairs explode in-row, no self-join") {
     // round 7: the LIVE builder derives the i<j part pairs from ONE
     // collect_set-per-order aggregate + a nested-transform explode, so
