@@ -35,14 +35,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // 100 TB structural rewrite (no fact re-shuffle) documented on
     // org.apache.spark.sql.graft.ApproxDistinctRewrite.
     ext.injectOptimizerRule(org.apache.spark.sql.graft.ApproxDistinctRewrite)
-    // Native as-of join (round 7): the §2.L preference-(c) whole-operator
-    // extension — AsOfJoin logical node planned by AsOfJoinExec's
-    // one-pass co-partitioned merge (no fan-out join + group limit).
-    ext.injectPlannerStrategy(_ => org.apache.spark.sql.graft.AsOfJoinStrategy)
-    // Native gap-sessionization (round 7, cont.): Sessionize logical node
-    // planned by SessionizeExec's one-pass constant-state stream — same
-    // exchange+sort as the window compose, no per-group window buffer.
-    ext.injectPlannerStrategy(_ => org.apache.spark.sql.graft.SessionizeStrategy)
     // Opt-in cartesian guard (round 7): analysis-time rejection of
     // unconditional cross joins under spark.graft.guard.noCartesian.
     ext.injectCheckRule(org.apache.spark.sql.graft.CartesianGuard)

@@ -19,7 +19,6 @@ object ScaleSmoke {
       .config("spark.ui.enabled", "false")
       // bucketed-layout stages saveAsTable into a scratch warehouse
       .config("spark.sql.warehouse.dir", "/tmp/graft_scale_warehouse")
-      // the as-of stages plan through the injected AsOfJoinStrategy
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -53,27 +52,11 @@ object ScaleSmoke {
       (pmod(xxhash64(col("id"), lit(3)), lit(10000)) / 100.0).as("value"))
 
     // the REAL operator (not an inline copy — the gap rule must stay the
-    // one definition in Etl)
-    // Native one-pass sessionizer (round 7, cont.) vs the window compose
-    // at 60M: identical exchange+sort, but constant state instead of the
-    // window group buffer. Session-count equality is required — at this
-    // scale a flag/counter divergence would be visible here first.
-    var sessViaWindow = -1L; var sessViaNative = -2L
-    time("sessionize 60M") {
-      sessViaWindow = operators.Etl.sessionized(ev)
-        .groupBy("user_id", "session_id").agg(count(lit(1)))
-        .count()
-      sessViaWindow
-    }
+    // one definition in Etl): the native one-pass sessionizer at 60M
     time("sessionize native 60M") {
-      sessViaNative = org.apache.spark.sql.graft.SessionizePlan
-        .sessionize(ev, "user_id", "ts", Seq("event_id"))
+      operators.Etl.sessionized(ev)
         .groupBy("user_id", "session_id").agg(count(lit(1))).count()
-      sessViaNative
     }
-    if (sessViaWindow >= 0 && sessViaNative >= 0)
-      require(sessViaWindow == sessViaNative,
-        s"sessionize disagreement: window=$sessViaWindow native=$sessViaNative")
 
     time("monthly agg 60M") {
       ev.groupBy(col("user_id"), date_trunc("month", col("ts")).as("m"))
@@ -844,10 +827,10 @@ object ScaleSmoke {
 
     // Zipf(1.1) user ids — real CommCare-like workloads are Zipfian, not
     // uniform: inverse-CDF of the continuous Zipf over N=30k users, so the
-    // hottest user owns ~10% of all 60M events (~6.2M rows in ONE window
+    // hottest user owns ~10% of all 60M events (~6.2M rows in ONE shuffle
     // partition; P(id=0) = (2^-0.1 - 1)/(30000^-0.1 - 1) ≈ 0.104).
-    // Stresses: (a) the sessionize window sort on the hot key's single
-    // task — AQE cannot split a window partition; (b) the per-(user,month)
+    // Stresses: (a) the sessionize sort on the hot key's single task —
+    // AQE cannot split a per-key ordered partition; (b) the per-(user,month)
     // groupBy, where map-side partial aggregation is the built-in defense
     // and Skew.saltedAgg the manual one.
     val zipfU = (pmod(xxhash64(col("event_id"), lit(9)), lit(1000000)) + 0.5) / 1000000.0

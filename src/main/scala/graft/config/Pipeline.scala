@@ -116,12 +116,7 @@ object Pipeline {
       // one materialization feeds three aggregate builds
       .persist()
     try {
-      val sessions = Etl.sessionizedScalable(ev)
-        .groupBy(col("user_id"), col("session_id"))
-        .agg(
-          min(col("ts")).as("session_start"),
-          max(col("ts")).as("session_end"),
-          count(lit(1)).as("n_events"))
+      val sessions = Etl.sessionSummaries(Etl.sessionizedScalable(ev))
       val monthly = Etl.monthlyUsage(ev)
       // lifetime state is pure mergeable aggregates: min/max/count are
       // monoids, and (round 5) the per-user VALUE MEDIAN rides a KLL
@@ -259,32 +254,6 @@ object Pipeline {
       io.read(spark, outDir, "monthly_usage").count(), path)
   }
 
-  /** Incremental maintenance of the published `sessions` table — a true
-    * STATE MERGE, not a recompute: no pre-batch event is ever rescanned.
-    * Append-only exactness argument: batch events all have
-    * ts ≥ batchStart > every published event, so the ONLY published
-    * session new events can extend is each user's temporally-last one
-    * (highest session_id). Sessionize the batch alone; the user's first
-    * batch session continues that last session iff its first event is
-    * within [[Etl.SessionGapMinutes]] of the published session_end (the
-    * same strict-gap rule, so ids/rows equal the full rebuild exactly —
-    * PipelineSpec pins equality around a boundary-crossing session);
-    * later batch sessions can never bridge (their preceding gap was
-    * already judged > gap within the batch). Global ids are
-    * last_sid + batch_sid − bridge.
-    *
-    * Only partitions holding a changed row (a bridged session keeps its
-    * OLD start month — that partition is rewritten; new sessions land in
-    * their own months) are overwritten; the new partition content is
-    * published-minus-replaced-plus-changed, localCheckpoint-ed before the
-    * dynamic overwrite because it is derived from the very files being
-    * replaced. At 100 TB the cost is one batch scan + one pass over the
-    * published SESSIONS table (to find each user's tail) — the raw event
-    * history is never rescanned, and the sessions table is orders of
-    * magnitude smaller than the event stream it summarizes. ScaleSmoke
-    * measures the merge at 5× cheaper than the full rebuild on a 60M-event
-    * history + 1M-event batch.
-    */
   /** Batch-local session summaries: sessionize the batch ALONE (skew-safe
     * plan) and reduce to one row per (user, local session id).
     */
@@ -329,6 +298,32 @@ object Pipeline {
           .as("n_events"))
   }
 
+  /** Incremental maintenance of the published `sessions` table — a true
+    * STATE MERGE, not a recompute: no pre-batch event is ever rescanned.
+    * Append-only exactness argument: batch events all have
+    * ts ≥ batchStart > every published event, so the ONLY published
+    * session new events can extend is each user's temporally-last one
+    * (highest session_id). Sessionize the batch alone; the user's first
+    * batch session continues that last session iff its first event is
+    * within [[Etl.SessionGapMinutes]] of the published session_end (the
+    * same strict-gap rule, so ids/rows equal the full rebuild exactly —
+    * PipelineSpec pins equality around a boundary-crossing session);
+    * later batch sessions can never bridge (their preceding gap was
+    * already judged > gap within the batch). Global ids are
+    * last_sid + batch_sid − bridge.
+    *
+    * Only partitions holding a changed row (a bridged session keeps its
+    * OLD start month — that partition is rewritten; new sessions land in
+    * their own months) are overwritten; the new partition content is
+    * published-minus-replaced-plus-changed, localCheckpoint-ed before the
+    * dynamic overwrite because it is derived from the very files being
+    * replaced. At 100 TB the cost is one batch scan + one pass over the
+    * published SESSIONS table (to find each user's tail) — the raw event
+    * history is never rescanned, and the sessions table is orders of
+    * magnitude smaller than the event stream it summarizes. ScaleSmoke
+    * measures the merge at 5× cheaper than the full rebuild on a 60M-event
+    * history + 1M-event batch.
+    */
   def runIncrementalSessions(
       spark: SparkSession, cfg: RunConfig, outDir: String,
       batchStart: String, io: LakeIO = InPlaceIO): TableResult = {

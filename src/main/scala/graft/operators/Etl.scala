@@ -1,9 +1,10 @@
 package graft.operators
 
 import graft.{Q, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SessionizePlan
 
 /** §2.I ETL composites — the pipelines that make the engine
   * "dimagi-data-platform-shaped" (SURVEY.md §2.I; requirements R3–R9,
@@ -26,16 +27,11 @@ object Etl {
   /** Per-user event ordering — unique tie-break on event_id (FIXTURES.md). */
   private val byUserTime = Window.partitionBy("user_id").orderBy("ts", "event_id")
 
-  /** The visit gap rule, shared by every sessionize variant (and their
-    * DuckDB twins, which hardcode the same constant): strictly more than
-    * [[SessionGapMinutes]] since the previous event starts a new visit.
-    * One definition — the gap constant and strictness are load-bearing
-    * for the LawsProps equality laws between the variants.
+  /** The visit gap (R3): strictly more than this many minutes since the
+    * user's previous event starts a new visit. Every sessionizer call in
+    * the engine passes it, and the DuckDB oracles hardcode the same 30.
     */
   val SessionGapMinutes = 30
-  private def gapExceeded(prevTs: Column): Column =
-    prevTs.isNull ||
-      col("ts") > prevTs + expr(s"INTERVAL $SessionGapMinutes MINUTES")
 
   /** Secondary-sort SCAN twin of etl_clamped_ledger's in-row fold — the
     * unbounded-history dial the declared key's scaladoc names, as code:
@@ -90,32 +86,27 @@ object Etl {
       .toDF("user_id", "n_events", "balance_cents", "n_clamps")
   }
 
-  /** Events annotated with a per-user session_id: a gap > 30 min (strict)
-    * starts a new session (R3 visit construction). Comparison is done in
-    * timestamp domain (`ts > prev + INTERVAL 30 MINUTES`) so Spark and the
-    * DuckDB oracle agree to the microsecond.
+  /** Events annotated with a per-user session_id: a gap of more than
+    * [[SessionGapMinutes]] (strict) starts a new session (R3 visit
+    * construction). Runs the native one-pass [[SessionizePlan]] operator:
+    * one exchange on user_id and one sort, then a constant-state stream.
+    * The gap test is exact in microseconds, so Spark and the DuckDB
+    * oracle's `ts > prev + INTERVAL 30 MINUTE` agree.
     */
-  def sessionized(ev: DataFrame): DataFrame = {
-    val prev = lag(col("ts"), 1).over(byUserTime)
-    ev.withColumn(
-        "new_sess",
-        when(gapExceeded(prev), 1).otherwise(0))
-      .withColumn(
-        "session_id",
-        sum(col("new_sess"))
-          .over(byUserTime.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-  }
+  def sessionized(ev: DataFrame): DataFrame =
+    SessionizePlan.sessionize(ev, Seq("user_id"), "ts", Seq("event_id"),
+      SessionGapMinutes)
 
   /** Skew-safe twin of [[sessionized]] for Zipfian user ids — SAME result
     * (pinned by a LawsProps equality law), different plan. Plain
     * sessionize sorts each user's whole history in ONE task; a hot user
     * owning 10% of a 100 TB stream is a straggler AQE cannot split
-    * (window partitions, unlike joins/aggs, have no skew rule —
-    * SCALING.md round-3 measurement). Here:
+    * (SCALING.md round-3 measurement). Here:
     *
-    *  1. events window over (user, coarse time bucket) — the hot user's
-    *     sort parallelizes across buckets; local session counter `__ls`
-    *     treats each bucket's first event as a start (maybe falsely);
+    *  1. the native sessionizer runs per (user, coarse time bucket) — the
+    *     hot user's sort parallelizes across buckets; the local session
+    *     counter `__ls` treats each bucket's first event as a start
+    *     (maybe falsely);
     *  2. per-(user, bucket) summaries (first/last ts, local start count) —
     *     rows = non-empty buckets per user, orders of magnitude smaller —
     *     get a per-user window: `__bridge` = this bucket's first event
@@ -142,13 +133,10 @@ object Etl {
     val bridge = fresh("__bridge"); val baseC = fresh("__base")
 
     val bucketMicros = bucketMinutes * 60L * 1000000L
-    val byUserBucket = Window.partitionBy("user_id", bk).orderBy("ts", "event_id")
-    val prev = lag(col("ts"), 1).over(byUserBucket)
-    val local = ev
-      .withColumn(bk, floor(unix_micros(col("ts")) / bucketMicros))
-      .withColumn(ls,
-        sum(when(gapExceeded(prev), 1).otherwise(0))
-          .over(byUserBucket.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    val local = SessionizePlan.sessionize(
+      ev.withColumn(bk, floor(unix_micros(col("ts")) / bucketMicros)),
+      Seq("user_id", bk), "ts", Seq("event_id"), SessionGapMinutes,
+      sessionCol = ls)
     val summary = local.groupBy(col("user_id"), col(bk))
       .agg(min(col("ts")).as("first_ts"), max(col("ts")).as("last_ts"),
         max(col(ls)).as("n_local"))
@@ -177,19 +165,22 @@ object Etl {
     * (`<=>` / IS DISTINCT FROM) so null→null is continuity and null→x is a
     * split. Entity is constant within a session BY CONSTRUCTION.
     */
-  def sessionizedEntity(ev: DataFrame): DataFrame = {
-    val prevTs = lag(col("ts"), 1).over(byUserTime)
-    val prevEnt = lag(col("entity"), 1).over(byUserTime)
-    ev.withColumn("entity", get_json_object(col("props"), "$.k"))
-      .withColumn(
-        "new_sess",
-        when(gapExceeded(prevTs) || !(col("entity") <=> prevEnt), 1)
-          .otherwise(0))
-      .withColumn(
-        "session_id",
-        sum(col("new_sess"))
-          .over(byUserTime.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-  }
+  def sessionizedEntity(ev: DataFrame): DataFrame =
+    SessionizePlan.sessionize(
+      ev.withColumn("entity", get_json_object(col("props"), "$.k")),
+      Seq("user_id"), "ts", Seq("event_id"), SessionGapMinutes,
+      entity = Some("entity"))
+
+  /** One row per session of a sessionized frame: first and last event
+    * time and event count. `extra` names columns constant within a
+    * session (the entity) that the summary carries.
+    */
+  def sessionSummaries(sessions: DataFrame, extra: String*): DataFrame =
+    sessions.groupBy(("user_id" +: "session_id" +: extra).map(col): _*)
+      .agg(
+        min(col("ts")).as("session_start"),
+        max(col("ts")).as("session_end"),
+        count(lit(1)).as("n_events"))
 
   private val sessionizeEntityOracle =
     """WITH g AS (
@@ -233,6 +224,13 @@ object Etl {
       |       CAST(count(*) AS BIGINT) AS n_events
       |FROM s GROUP BY user_id, session_id
       |ORDER BY user_id, session_id""".stripMargin
+
+  private def plainSessions(s: SparkSession, d: String): DataFrame =
+    sessionSummaries(sessionized(events(s, d))).orderBy("user_id", "session_id")
+
+  private def entitySessions(s: SparkSession, d: String): DataFrame =
+    sessionSummaries(sessionizedEntity(events(s, d)), "entity")
+      .orderBy("user_id", "session_id")
 
   /** Monthly usage indicators per (user, month) — R4, the flagship. */
   def monthlyUsage(s: SparkSession, d: String): DataFrame =
@@ -444,46 +442,18 @@ object Etl {
     },
 
     // R3: visit construction — gap-based sessionization (SURVEY.md §2.I).
-    Q("etl_sessionize", sessionizeOracle) { (s, d) =>
-      sessionized(events(s, d))
-        .groupBy(col("user_id"), col("session_id"))
-        .agg(
-          min(col("ts")).as("session_start"),
-          max(col("ts")).as("session_end"),
-          count(lit(1)).as("n_events"))
-        .orderBy("user_id", "session_id")
-    },
+    Q("etl_sessionize", sessionizeOracle)(plainSessions),
 
     // R3 at Zipf scale: the skew-safe two-level plan, declared with the
     // SAME oracle as etl_sessionize — the driver hash-verifies that the
-    // bucketed+stitched plan is bit-identical to the single-window one.
+    // bucketed+stitched plan is bit-identical to the single-pass one.
     Q("etl_sessionize_scalable", sessionizeOracle) { (s, d) =>
-      sessionizedScalable(events(s, d))
-        .groupBy(col("user_id"), col("session_id"))
-        .agg(
-          min(col("ts")).as("session_start"),
-          max(col("ts")).as("session_end"),
-          count(lit(1)).as("n_events"))
+      sessionSummaries(sessionizedScalable(events(s, d)))
         .orderBy("user_id", "session_id")
     },
 
-    // The native one-pass operator (plans/SessionizePlan.scala — §2.L
-    // preference-(c), the AsOfJoin pattern applied to sessionization),
-    // declared with the SAME oracle as etl_sessionize: the driver
-    // hash-verifies that swapping the two-window compose for the
-    // constant-state physical stream moves nothing. Same single exchange
-    // + sort (declared child requirements), but no window group buffer —
-    // a hot user's history streams instead of spilling.
-    Q("etl_sessionize_native", sessionizeOracle) { (s, d) =>
-      org.apache.spark.sql.graft.SessionizePlan
-        .sessionize(events(s, d), "user_id", "ts", Seq("event_id"))
-        .groupBy(col("user_id"), col("session_id"))
-        .agg(
-          min(col("ts")).as("session_start"),
-          max(col("ts")).as("session_end"),
-          count(lit(1)).as("n_events"))
-        .orderBy("user_id", "session_id")
-    },
+    // Declared key kept under its name: the same plan as etl_sessionize.
+    Q("etl_sessionize_native", sessionizeOracle)(plainSessions),
 
     // R3: CASE-AWARE visit construction — the reference's full visit
     // heuristic groups consecutive submissions by time proximity AND shared
@@ -492,19 +462,9 @@ object Etl {
     // fn_json); a new visit starts on a >30-min gap OR when the entity
     // under work changes (null-safe, so untagged events never silently glue
     // to a case). Same plan shape as etl_sessionize: ONE exchange on
-    // user_id, two lags + running sum in the sorted partition — entity
+    // user_id, the entity test rides the same one-pass stream — entity
     // awareness costs zero extra shuffles at 100 TB.
-    Q(
-      "etl_sessionize_entity",
-      sessionizeEntityOracle) { (s, d) =>
-      sessionizedEntity(events(s, d))
-        .groupBy(col("user_id"), col("session_id"), col("entity"))
-        .agg(
-          min(col("ts")).as("session_start"),
-          max(col("ts")).as("session_end"),
-          count(lit(1)).as("n_events"))
-        .orderBy("user_id", "session_id")
-    },
+    Q("etl_sessionize_entity", sessionizeEntityOracle)(entitySessions),
 
     // Feature scaling (round 7, cont.): min-max normalization and
     // z-score standardization of the value column against PER-TYPE
@@ -795,25 +755,9 @@ object Etl {
         .orderBy("event_type")
     },
 
-    // The ENTITY-AWARE native operator: the same SessionizeExec stream
-    // with an optional null-safe entity split (a change of the case
-    // under work starts a new visit inside the time gap) — proving the
-    // physical operator generalizes past the plain gap rule. Same oracle
-    // as etl_sessionize_entity: three plans (window compose, native,
-    // native-entity) now pin two sessionize semantics between them.
-    Q("etl_sessionize_entity_native", sessionizeEntityOracle) { (s, d) =>
-      org.apache.spark.sql.graft.SessionizePlan
-        .sessionize(
-          events(s, d)
-            .withColumn("entity", get_json_object(col("props"), "$.k")),
-          "user_id", "ts", Seq("event_id"), entity = Some("entity"))
-        .groupBy(col("user_id"), col("session_id"), col("entity"))
-        .agg(
-          min(col("ts")).as("session_start"),
-          max(col("ts")).as("session_end"),
-          count(lit(1)).as("n_events"))
-        .orderBy("user_id", "session_id")
-    },
+    // Declared key kept under its name: the same plan as
+    // etl_sessionize_entity.
+    Q("etl_sessionize_entity_native", sessionizeEntityOracle)(entitySessions),
 
     // R4: the monthly usage table — flagship (also wired as SparkEntry.entry).
     Q("etl_monthly_usage", monthlyUsageOracle)(monthlyUsage),

@@ -2,8 +2,8 @@ package graft.operators
 
 import graft.{Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.AsOfJoinPlan
 
 /** §2.A scans, §2.B projection/filter, §2.C joins, §2.F sort/limit,
   * §2.G set ops (SURVEY.md §2). All thin assemblies of the DataFrame API —
@@ -11,12 +11,48 @@ import org.apache.spark.sql.functions._
   *  - scans keep projection+filter pushed into the vectorized parquet reader;
   *  - small dims are broadcast explicitly (`broadcast()`), facts shuffle on
   *    join keys and AQE picks SMJ/SHJ;
-  *  - the as-of join is equi-key + range residual + windowed pick, the
-  *    100 TB-safe shape (no custom physical operator needed, SURVEY.md §4.3).
+  *  - every as-of join runs the native one-pass merge
+  *    ([[org.apache.spark.sql.graft.AsOfJoinPlan]]); its oracles spell the
+  *    equi + range join and rank-1 window it replaces.
   */
 object Relational {
 
   private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
+
+  /** One event type's rows as an as-of side, `(user_id, ts, event_id)`
+    * renamed to `(key, ts, id)`. */
+  private def eventSide(s: SparkSession, d: String, eventType: String,
+      key: String, ts: String, id: String): DataFrame =
+    t(s, d, "events").where(col("event_type") === eventType)
+      .select(col("user_id").as(key), col("ts").as(ts), col("event_id").as(id))
+
+  /** Each purchase with the user's latest view at or before it (within
+    * `toleranceMicros` when given). */
+  private def purchaseLastView(toleranceMicros: Option[Long])(
+      s: SparkSession, d: String): DataFrame =
+    AsOfJoinPlan
+      .asof(eventSide(s, d, "purchase", "user_id", "p_ts", "p_id"),
+        eventSide(s, d, "view", "v_user", "v_ts", "v_id"),
+        "user_id", "v_user", "p_ts", "v_ts",
+        rightTie = Seq("v_id"), toleranceMicros = toleranceMicros)
+      .select("user_id", "p_id", "p_ts", "v_id", "v_ts")
+      .orderBy("p_id")
+
+  private val purchaseLastViewOracle =
+    """WITH p AS (
+      |  SELECT user_id, ts AS p_ts, event_id AS p_id FROM events
+      |  WHERE event_type = 'purchase'
+      |), v AS (
+      |  SELECT user_id AS v_user, ts AS v_ts, event_id AS v_id FROM events
+      |  WHERE event_type = 'view'
+      |), j AS (
+      |  SELECT p.user_id, p.p_id, p.p_ts, v.v_id, v.v_ts,
+      |         row_number() OVER (PARTITION BY p.p_id
+      |             ORDER BY v_ts DESC NULLS LAST, v_id DESC NULLS LAST) AS rn
+      |  FROM p LEFT JOIN v ON v.v_user = p.user_id AND v.v_ts <= p.p_ts
+      |)
+      |SELECT user_id, p_id, p_ts, v_id, v_ts FROM j WHERE rn = 1
+      |ORDER BY p_id""".stripMargin
 
   val qs: Seq[Q] = Seq(
 
@@ -207,9 +243,6 @@ object Relational {
         .orderBy("n_name", "r_name")
     },
 
-    // As-of: each purchase matched to the user's latest at-or-before view.
-    // No native asof join in Spark — equi+range join then windowed pick;
-    // InferWindowGroupLimit turns the rn=1 filter into a group-limit.
     // Correlated scalar subquery (round 5): customers holding their
     // nation's top balance. Exercises Catalyst's DECORRELATION — the
     // per-row subquery is rewritten into one aggregate + one join
@@ -259,75 +292,19 @@ object Relational {
           |ORDER BY n_name, c_acctbal DESC, c_custkey""".stripMargin)
     },
 
-    Q("join_asof",
-      """WITH p AS (
-        |  SELECT user_id, ts AS p_ts, event_id AS p_id FROM events
-        |  WHERE event_type = 'purchase'
-        |), v AS (
-        |  SELECT user_id AS v_user, ts AS v_ts, event_id AS v_id FROM events
-        |  WHERE event_type = 'view'
-        |), j AS (
-        |  SELECT p.user_id, p.p_id, p.p_ts, v.v_id, v.v_ts,
-        |         row_number() OVER (PARTITION BY p.p_id
-        |             ORDER BY v_ts DESC NULLS LAST, v_id DESC NULLS LAST) AS rn
-        |  FROM p LEFT JOIN v ON v.v_user = p.user_id AND v.v_ts <= p.p_ts
-        |)
-        |SELECT user_id, p_id, p_ts, v_id, v_ts FROM j WHERE rn = 1
-        |ORDER BY p_id""".stripMargin) { (s, d) =>
-      val ev = t(s, d, "events")
-      val p = ev.where(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").as("p_ts"), col("event_id").as("p_id"))
-      val v = ev.where(col("event_type") === "view")
-        .select(col("user_id").as("v_user"), col("ts").as("v_ts"),
-          col("event_id").as("v_id"))
-      val w = Window.partitionBy("p_id")
-        .orderBy(col("v_ts").desc_nulls_last, col("v_id").desc_nulls_last)
-      p.join(v, col("v_user") === col("user_id") && col("v_ts") <= col("p_ts"), "left")
-        .withColumn("rn", row_number().over(w))
-        .where(col("rn") === 1)
-        .select("user_id", "p_id", "p_ts", "v_id", "v_ts")
-        .orderBy("p_id")
-    },
-
-    // Native as-of join (round 7, cont.): the SAME attribution semantics
-    // as join_asof, executed by the engine's own physical operator
-    // (org.apache.spark.sql.graft.AsOfJoinPlan — custom LogicalPlan +
-    // Strategy + one-pass co-partitioned merge SparkPlan, §2.L
-    // preference (c), registered via GraftExtensions). Where the
-    // composed form fans out every historical view per purchase before
-    // the rank-1 window prunes, the native plan reads each side ONCE in
+    // As-of: each purchase matched to the user's latest at-or-before view,
+    // by the engine's own physical operator (AsOfJoinPlan — custom
+    // LogicalPlan + Strategy + one-pass co-partitioned merge, §2.L
+    // preference (c)). Where the composed form (the oracle's join +
+    // rank-1 window) fans out every historical view per purchase before
+    // the window prunes, the native plan reads each side ONCE in
     // sort-merge layout: one exchange + sort per side, then a linear
     // per-partition merge holding a single candidate row — the 100 TB
-    // shape for "most recent observation at or before t". Same oracle
-    // as join_asof (the point: a user can swap operators and nothing
-    // about the answer moves).
-    Q("join_asof_native",
-      """WITH p AS (
-        |  SELECT user_id, ts AS p_ts, event_id AS p_id FROM events
-        |  WHERE event_type = 'purchase'
-        |), v AS (
-        |  SELECT user_id AS v_user, ts AS v_ts, event_id AS v_id FROM events
-        |  WHERE event_type = 'view'
-        |), j AS (
-        |  SELECT p.user_id, p.p_id, p.p_ts, v.v_id, v.v_ts,
-        |         row_number() OVER (PARTITION BY p.p_id
-        |             ORDER BY v_ts DESC NULLS LAST, v_id DESC NULLS LAST) AS rn
-        |  FROM p LEFT JOIN v ON v.v_user = p.user_id AND v.v_ts <= p.p_ts
-        |)
-        |SELECT user_id, p_id, p_ts, v_id, v_ts FROM j WHERE rn = 1
-        |ORDER BY p_id""".stripMargin) { (s, d) =>
-      val ev = t(s, d, "events")
-      val p = ev.where(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").as("p_ts"), col("event_id").as("p_id"))
-      val v = ev.where(col("event_type") === "view")
-        .select(col("user_id").as("v_user"), col("ts").as("v_ts"),
-          col("event_id").as("v_id"))
-      org.apache.spark.sql.graft.AsOfJoinPlan
-        .asof(p, v, "user_id", "v_user", "p_ts", "v_ts",
-          rightTie = Seq("v_id"))
-        .select("user_id", "p_id", "p_ts", "v_id", "v_ts")
-        .orderBy("p_id")
-    },
+    // shape for "most recent observation at or before t".
+    Q("join_asof", purchaseLastViewOracle)(purchaseLastView(None)),
+
+    // Declared key kept under its name: the same plan as join_asof.
+    Q("join_asof_native", purchaseLastViewOracle)(purchaseLastView(None)),
 
     // Tolerance-bounded as-of (round 7, cont.): most recent view within
     // ONE DAY before the purchase — stale matches (an attribution window
@@ -351,19 +328,7 @@ object Relational {
         |                    AND v.v_ts >= p.p_ts - INTERVAL 1 DAY
         |)
         |SELECT user_id, p_id, p_ts, v_id, v_ts FROM j WHERE rn = 1
-        |ORDER BY p_id""".stripMargin) { (s, d) =>
-      val ev = t(s, d, "events")
-      val p = ev.where(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").as("p_ts"), col("event_id").as("p_id"))
-      val v = ev.where(col("event_type") === "view")
-        .select(col("user_id").as("v_user"), col("ts").as("v_ts"),
-          col("event_id").as("v_id"))
-      org.apache.spark.sql.graft.AsOfJoinPlan
-        .asof(p, v, "user_id", "v_user", "p_ts", "v_ts",
-          rightTie = Seq("v_id"), toleranceMicros = Some(86400000000L))
-        .select("user_id", "p_id", "p_ts", "v_id", "v_ts")
-        .orderBy("p_id")
-    },
+        |ORDER BY p_id""".stripMargin)(purchaseLastView(Some(86400000000L))),
 
     // FORWARD as-of (round 7, cont.): per signup, the user's FIRST
     // purchase at-or-after — the time-to-convert attach (the mirror
@@ -424,21 +389,15 @@ object Relational {
         |       CASE WHEN b_id IS NOT NULL AND (f_id IS NULL OR bgap <= fgap)
         |            THEN bgap ELSE fgap END AS gap_us
         |FROM j ORDER BY s_id""".stripMargin) { (s, d) =>
-      val ev = t(s, d, "events")
-      val sg = ev.where(col("event_type") === "signup")
-        .select(col("user_id"), col("ts").as("s_ts"),
-          col("event_id").as("s_id"))
+      val sg = eventSide(s, d, "signup", "user_id", "s_ts", "s_id")
         .persist() // probe side of BOTH native as-of passes
-      val p = ev.where(col("event_type") === "purchase")
-        .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-          col("event_id").as("p_id"))
-        .persist()
-      val bwd = org.apache.spark.sql.graft.AsOfJoinPlan
+      val p = eventSide(s, d, "purchase", "p_user", "p_ts", "p_id").persist()
+      val bwd = AsOfJoinPlan
         .asof(sg, p, "user_id", "p_user", "s_ts", "p_ts",
           rightTie = Seq("p_id"), forward = false)
         .select(col("user_id"), col("s_id"), col("s_ts"),
           col("p_id").as("b_id"), col("p_ts").as("b_ts"))
-      val fwd = org.apache.spark.sql.graft.AsOfJoinPlan
+      val fwd = AsOfJoinPlan
         .asof(sg, p, "user_id", "p_user", "s_ts", "p_ts",
           rightTie = Seq("p_id"), forward = true)
         .select(col("s_id"), col("p_id").as("f_id"), col("p_ts").as("f_ts"))
@@ -471,14 +430,10 @@ object Relational {
         |)
         |SELECT user_id, s_id, s_ts, p_id, p_ts FROM j WHERE rn = 1
         |ORDER BY s_id""".stripMargin) { (s, d) =>
-      val ev = t(s, d, "events")
-      val sg = ev.where(col("event_type") === "signup")
-        .select(col("user_id"), col("ts").as("s_ts"), col("event_id").as("s_id"))
-      val p = ev.where(col("event_type") === "purchase")
-        .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-          col("event_id").as("p_id"))
-      org.apache.spark.sql.graft.AsOfJoinPlan
-        .asof(sg, p, "user_id", "p_user", "s_ts", "p_ts",
+      AsOfJoinPlan
+        .asof(eventSide(s, d, "signup", "user_id", "s_ts", "s_id"),
+          eventSide(s, d, "purchase", "p_user", "p_ts", "p_id"),
+          "user_id", "p_user", "s_ts", "p_ts",
           rightTie = Seq("p_id"), forward = true)
         .select("user_id", "s_id", "s_ts", "p_id", "p_ts")
         .orderBy("s_id")

@@ -14,16 +14,17 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 
 /** Native AS-OF join — the §2.L preference-(c) showcase: a whole-operator
   * semantic Spark's built-ins can only express by composition, implemented
-  * as a custom `LogicalPlan` + `Strategy` + physical `SparkPlan` and
-  * registered through [[graft.GraftExtensions]].
+  * as a custom `LogicalPlan` + `Strategy` + physical `SparkPlan`; the
+  * public surface registers the strategy on the caller's session.
   *
   * Semantics: LEFT OUTER; for each left row, attach the LAST right row
   * (in `(key, ts, tie…)` order) with the same key and `right.ts <=
   * left.ts` — i.e. the most recent right observation at or before the
   * left timestamp, ties on ts broken by the tie columns (highest wins).
   *
-  * Why a physical operator: the declarative compose (`join_asof`, §2.C)
-  * is `left ⋈ right ON key AND rts <= lts` followed by a rank-1 window —
+  * Why a physical operator: the declarative form (the one the `join_asof`
+  * DuckDB oracle spells) is `left ⋈ right ON key AND rts <= lts` followed
+  * by a rank-1 window —
   * at 100 TB the intermediate join FANS OUT to every historical right row
   * per left row (a purchase joins its user's ENTIRE view history) before
   * the group-limit prunes; Spark's InferWindowGroupLimit bounds the
@@ -36,7 +37,7 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
   * EnsureRequirements plans the co-partitioned exchanges and sorts — AQE
   * and reuse apply to them like any join's.
   *
-  * Null semantics match the composed form: a NULL left key or ts matches
+  * Null semantics match the declarative form: a NULL left key or ts matches
   * nothing (row still emitted, right side NULL); NULL right keys/ts are
   * skipped (`=` and `<=` are never true through NULL).
   */
@@ -225,8 +226,8 @@ case class AsOfJoinExec(
 }
 
 /** Public surface: build the logical node from two DataFrames by column
-  * name. Requires the [[AsOfJoinStrategy]] to be registered (done by
-  * [[graft.GraftExtensions]]); without it the node has no physical plan.
+  * name. Registers [[AsOfJoinStrategy]] on the left frame's session, so
+  * the node plans on any session.
   */
 object AsOfJoinPlan {
   def asof(
@@ -247,7 +248,8 @@ object AsOfJoinPlan {
       attr(left, leftKey), attr(right, rightKey),
       attr(left, leftTs), attr(right, rightTs),
       rightTie.map(attr(right, _)), forward, toleranceMicros)
-    classic.Dataset.ofRows(
-      left.sparkSession.asInstanceOf[classic.SparkSession], node)
+    val session = left.sparkSession.asInstanceOf[classic.SparkSession]
+    RegisterStrategy(session, AsOfJoinStrategy)
+    classic.Dataset.ofRows(session, node)
   }
 }

@@ -4,9 +4,9 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
-  Ascending, Attribute, AttributeReference, AttributeSet, GenericInternalRow,
-  JoinedRow, SortOrder, UnsafeProjection}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
+  Alias, Ascending, Attribute, AttributeReference, AttributeSet,
+  GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{
   ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.catalyst.util.TypeUtils
@@ -14,32 +14,34 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.types.LongType
 
 /** Native gap-sessionization — the second §2.L preference-(c) operator
-  * (after [[AsOfJoin]]): append a per-key `session_id` where a gap
-  * greater than `gapMicros` between consecutive timestamps starts a new
-  * session.
+  * (after [[AsOfJoin]]) and the engine's only sessionizer: append a
+  * per-key `session_id` where a gap greater than `gapMicros` between
+  * consecutive timestamps starts a new session.
   *
-  * Why a physical operator: the declarative compose (etl_sessionize,
-  * §2.G) is lag → flag → running sum — TWO window functions over the same
-  * `(key) ORDER BY (ts, tie…)` frame. Spark plans them into one Window
-  * node, but a Window operator BUFFERS each partition group (spilling
+  * Why a physical operator: the declarative form is lag → flag → running
+  * sum — TWO window functions over the same `(keys) ORDER BY (ts, tie…)`
+  * frame, and a Window operator BUFFERS each partition group (spilling
   * past `spark.sql.windowExec.buffer.spill.threshold`) and evaluates two
   * frame computers per row. This operator declares the identical
   * distribution/ordering requirements — EnsureRequirements plans the same
   * single exchange + sort, AQE applies — and then streams each partition
-  * in ONE forward pass with O(1) state (previous key, previous ts, a
+  * in ONE forward pass with O(1) state (previous keys, previous ts, a
   * counter): no group buffer, no spill threshold, no per-row frame
   * evaluation. The 100 TB upshot: a hot key's multi-GB event history
-  * never needs to fit a window buffer.
+  * never needs to fit a window buffer (SCALING.md: 7.9 s vs 20.8 s for
+  * the window form at 60M events).
   *
-  * Semantics — EXACTLY the composed form's (shared oracle pins it):
-  * ordering `(key, ts, tie…)` ascending nulls-first; a row starts a new
-  * session iff it is the key's first row, or the previous row's ts is
-  * NULL, or `ts > prev_ts + gap` (strict). NULL keys form one group,
-  * like window partitioning. `session_id` starts at 1 per key.
+  * Semantics — EXACTLY the window form's, which the DuckDB oracle spells:
+  * ordering `(keys…, ts, tie…)` ascending nulls-first; a row starts a new
+  * session iff it is the key tuple's first row, or the previous row's ts
+  * is NULL, or `ts > prev_ts + gap` (strict), or (with `entity`) the
+  * entity differs null-safely from the previous row's. Keys compare
+  * null-safely, so NULL keys form one group, like window partitioning.
+  * `session_id` starts at 1 per key tuple.
   */
 case class Sessionize(
     child: LogicalPlan,
-    key: Attribute,
+    keys: Seq[Attribute],
     ts: Attribute,
     tie: Seq[Attribute],
     gapMicros: Long,
@@ -61,12 +63,12 @@ object SessionizeStrategy extends SparkStrategy {
 }
 
 /** Physical one-pass sessionizer. The child arrives hash-partitioned on
-  * the key and sorted `(key, ts, tie…)` (declared requirements); each
+  * the keys and sorted `(keys…, ts, tie…)` (declared requirements); each
   * partition streams through with constant state.
   */
 case class SessionizeExec(
     child: SparkPlan,
-    key: Attribute,
+    keys: Seq[Attribute],
     ts: Attribute,
     tie: Seq[Attribute],
     gapMicros: Long,
@@ -87,19 +89,18 @@ case class SessionizeExec(
   override def outputOrdering: Seq[SortOrder] = child.outputOrdering
 
   override def requiredChildDistribution: Seq[Distribution] =
-    Seq(ClusteredDistribution(Seq(key)))
+    Seq(ClusteredDistribution(keys))
 
   override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(
-    SortOrder(key, Ascending) +: SortOrder(ts, Ascending) +:
-      tie.map(SortOrder(_, Ascending)))
+    (keys ++ (ts +: tie)).map(SortOrder(_, Ascending)))
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val keyIdx = child.output.indexWhere(_.exprId == key.exprId)
-    val tsIdx = child.output.indexWhere(_.exprId == ts.exprId)
-    val entIdx = entity.map(e =>
-      child.output.indexWhere(_.exprId == e.exprId)).getOrElse(-1)
+    def idx(a: Attribute) = child.output.indexWhere(_.exprId == a.exprId)
+    val keyIdx = keys.map(idx).toArray
+    val keyTypes = keys.map(_.dataType).toArray
+    val tsIdx = idx(ts)
+    val entIdx = entity.map(idx).getOrElse(-1)
     val entType = entity.map(_.dataType).orNull
-    val keyType = key.dataType
     val tsType = ts.dataType
     val outAttrs = output
     val gap = gapMicros
@@ -107,7 +108,7 @@ case class SessionizeExec(
     val numSessions = longMetric("numSessions")
 
     child.execute().mapPartitionsInternal { iter =>
-      val keyOrd = TypeUtils.getInterpretedOrdering(keyType)
+      val keyOrds = keyTypes.map(TypeUtils.getInterpretedOrdering)
       val joined = new JoinedRow
       val resultProj = UnsafeProjection.create(outAttrs, outAttrs)
       val idRow = new GenericInternalRow(1)
@@ -115,7 +116,7 @@ case class SessionizeExec(
       val entOrd = if (entIdx >= 0) TypeUtils.getInterpretedOrdering(entType)
         else null
       var hasPrev = false
-      var prevKey: Any = null
+      val prevKeys = new Array[Any](keyIdx.length) // null = NULL key
       var prevTsNull = true
       var prevTs = 0L
       var prevEnt: Any = null
@@ -123,16 +124,27 @@ case class SessionizeExec(
       var counter = 0L
 
       iter.map { row =>
-        val kNull = row.isNullAt(keyIdx)
-        val k = if (kNull) null else row.get(keyIdx, keyType)
         val tNull = row.isNullAt(tsIdx)
         val t = if (tNull) 0L else row.get(tsIdx, tsType)
           .asInstanceOf[Number].longValue
-        val sameKey = hasPrev &&
-          (if (kNull || prevKey == null) kNull && prevKey == null
-           else keyOrd.compare(k, prevKey) == 0)
+        // null-safe equality on every key; the previous keys are then
+        // replaced by stable copies — unsafe-row-backed values (UTF8String,
+        // binary, structs, arrays, decimals) are reused buffers, and
+        // copyValue deep-copies every buffer-backed type
+        var sameKey = hasPrev
+        var i = 0
+        while (i < keyIdx.length) {
+          val k = if (row.isNullAt(keyIdx(i))) null
+            else row.get(keyIdx(i), keyTypes(i))
+          val pk = prevKeys(i)
+          sameKey = sameKey &&
+            (if (k == null || pk == null) k == null && pk == null
+             else keyOrds(i).compare(k, pk) == 0)
+          prevKeys(i) = if (k == null) null else InternalRow.copyValue(k)
+          i += 1
+        }
         if (!sameKey) counter = 0L
-        // composed-form flag: first row of the key, NULL previous ts, or a
+        // window-form flag: first row of the keys, NULL previous ts, or a
         // strict gap. A NULL current ts never exceeds the gap (SQL 3VL) —
         // and under nulls-first ordering it can only follow another NULL.
         // entity split (null-safe <=>): a change of the entity under work
@@ -147,11 +159,7 @@ case class SessionizeExec(
         if (newSess) { counter += 1L; numSessions += 1 }
         hasPrev = true
         prevEntNull = entIdx < 0 || entNull
-        // stable copies: unsafe-row-backed values (UTF8String, binary,
-        // structs, arrays, decimals) are reused buffers; copyValue
-        // deep-copies every buffer-backed type, not just strings
         prevEnt = if (entIdx < 0 || entNull) null else InternalRow.copyValue(ent)
-        prevKey = if (kNull) null else InternalRow.copyValue(k)
         prevTsNull = tNull
         prevTs = t
         numOut += 1
@@ -166,15 +174,17 @@ case class SessionizeExec(
 }
 
 /** Public surface: append `session_id` to a DataFrame by column names.
-  * Requires [[SessionizeStrategy]] (registered by [[graft.GraftExtensions]]).
+  * Registers [[SessionizeStrategy]] on the frame's session, so the node
+  * plans on any session. Every caller passes the gap: the engine's visit
+  * rule is `graft.operators.Etl.SessionGapMinutes`.
   */
 object SessionizePlan {
   def sessionize(
       df: DataFrame,
-      key: String,
+      keys: Seq[String],
       ts: String,
-      tie: Seq[String] = Nil,
-      gapMinutes: Int = 30,
+      tie: Seq[String],
+      gapMinutes: Int,
       sessionCol: String = "session_id",
       entity: Option[String] = None): DataFrame = {
     import org.apache.spark.sql.classic
@@ -183,13 +193,17 @@ object SessionizePlan {
         .find(_.name == name)
         .getOrElse(throw new IllegalArgumentException(
           s"column $name not in ${df.columns.mkString(", ")}"))
-    val node = Sessionize(
-      df.queryExecution.analyzed,
-      attr(key), attr(ts), tie.map(attr),
-      gapMinutes.toLong * 60L * 1000000L,
-      entity.map(attr),
-      AttributeReference(sessionCol, LongType, nullable = false)())
-    classic.Dataset.ofRows(
-      df.sparkSession.asInstanceOf[classic.SparkSession], node)
+    val child = df.queryExecution.analyzed
+    val sessionAttr = AttributeReference(sessionCol, LongType, nullable = false)()
+    val node = Sessionize(child, keys.map(attr), attr(ts), tie.map(attr),
+      gapMinutes.toLong * 60L * 1000000L, entity.map(attr), sessionAttr)
+    val session = df.sparkSession.asInstanceOf[classic.SparkSession]
+    RegisterStrategy(session, SessionizeStrategy)
+    // Re-alias the produced column. The analyzer gives a self-join's
+    // second side fresh ids for a Project's aliases, not for a custom
+    // node's produced attribute; without the alias both sides of
+    // `sessions.as("a").join(sessions.as("b"))` share one session_id.
+    classic.Dataset.ofRows(session,
+      Project(child.output :+ Alias(sessionAttr, sessionCol)(), node))
   }
 }

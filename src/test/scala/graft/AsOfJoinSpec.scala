@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.AsOfJoinPlan
 import org.scalatest.funsuite.AnyFunSuite
@@ -24,8 +25,22 @@ class AsOfJoinSpec extends AnyFunSuite {
     (p, v)
   }
 
+  /** Test-scope composed as-of: the equi + range join and rank-1 window
+    * that the join_asof oracle spells. The engine keeps only the native
+    * operator; this is its independent reference. */
+  private def composedAsof = {
+    val (p, v) = purchasesViews
+    val w = Window.partitionBy("p_id")
+      .orderBy(col("v_ts").desc_nulls_last, col("v_id").desc_nulls_last)
+    p.join(v, col("v_user") === col("user_id") && col("v_ts") <= col("p_ts"), "left")
+      .withColumn("rn", row_number().over(w))
+      .where(col("rn") === 1)
+      .select("user_id", "p_id", "p_ts", "v_id", "v_ts")
+      .orderBy("p_id")
+  }
+
   test("native as-of == composed join+window form on the real fixture") {
-    val composed = SparkEntry.queries("join_asof")(spark, sf).collect()
+    val composed = composedAsof.collect()
     val native = SparkEntry.queries("join_asof_native")(spark, sf).collect()
     assert(native.length == composed.length)
     native.zip(composed).foreach { case (n, c) => assert(n == c) }

@@ -74,21 +74,8 @@ object LawsProps extends Properties("graft.laws") {
         d.select("event_id", "session_id")
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val viaNative = ids(org.apache.spark.sql.graft.SessionizePlan
-        .sessionize(df, "user_id", "ts", Seq("event_id"), gapMinutes = gapMin))
-      // window twin with the SAME parameterized gap (Etl.sessionized pins
-      // 30 min, so rebuild the two-window compose inline)
-      val byU = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id").orderBy("ts", "event_id")
-      val prev = lag(col("ts"), 1).over(byU)
-      val viaWindow = ids(df
-        .withColumn("new_sess",
-          when(prev.isNull ||
-            col("ts") > prev + expr(s"INTERVAL $gapMin MINUTES"), 1)
-            .otherwise(0))
-        .withColumn("session_id", sum(col("new_sess")).over(
-          byU.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-            org.apache.spark.sql.expressions.Window.currentRow))))
-      viaNative == viaWindow
+        .sessionize(df, Seq("user_id"), "ts", Seq("event_id"), gapMin))
+      viaNative == ids(WindowSessionizer(df, gapMin))
     }
 
   private val entityEventsGen: Gen[List[(Long, java.sql.Timestamp, Long, String)]] = for {

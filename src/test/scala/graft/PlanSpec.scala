@@ -69,6 +69,47 @@ class PlanSpec extends AnyFunSuite {
     assert(exchanges == 1, s"expected 1 user_id exchange, plan had $exchanges:\n$p")
   }
 
+  test("etl_sessionize_scalable: events shuffle on (user_id, bucket) into Sessionize") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.graft.SessionizeExec
+    val p = SparkEntry.queries("etl_sessionize_scalable")(spark, sf)
+      .queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case other => other
+      }
+    // the stitch reads the sessionized events twice, so the initial plan
+    // holds two copies of the subtree (the exchange is reused at run time)
+    val sess = p.collect { case s: SessionizeExec => s }
+    assert(sess.nonEmpty, s"expected a Sessionize node:\n$p")
+    // the point of the skew path: a hot user's events split across buckets
+    def exchangeKeys(child: org.apache.spark.sql.execution.SparkPlan) = child match {
+      case s: SortExec => s.child match {
+        case e: ShuffleExchangeExec => e.outputPartitioning match {
+          case h: HashPartitioning => h.expressions.flatMap(_.references).map(_.name)
+          case other => fail(s"events exchange is not hash-partitioned: $other")
+        }
+        case other => fail(s"Sessionize's sort is not fed by an exchange:\n$other")
+      }
+      case other => fail(s"Sessionize is not fed by a sort:\n$other")
+    }
+    assert(sess.forall(one => exchangeKeys(one.child).sorted == Seq("__bk", "user_id")),
+      s"events must hash on (user_id, bucket), not user_id alone:\n$p")
+    // the stitch window runs over per-(user, bucket) summaries only
+    val windows = p.collect { case w: WindowExec => w }
+    assert(windows.forall(!_.child.output.exists(_.name == "event_id")),
+      s"a Window runs over event rows:\n$p")
+  }
+
+  test("join_asof plans the native AsOfJoin, no Window") {
+    val p = plan("join_asof")
+    assert(p.contains("AsOfJoin"), s"expected the native operator:\n$p")
+    assert(!p.contains("Window"), s"join_asof must not plan a Window:\n$p")
+  }
+
   test("tpch_q5: bounded dims broadcast, no cartesian, filters pushed") {
     val p = plan("tpch_q5")
     // nation/region carry explicit hints (fixed 25/5 rows at every SF);

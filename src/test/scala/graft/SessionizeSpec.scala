@@ -80,7 +80,7 @@ class SessionizeSpec extends AnyFunSuite {
 
   private def nativeAnnotated(df: org.apache.spark.sql.DataFrame) =
     org.apache.spark.sql.graft.SessionizePlan
-      .sessionize(df, "user_id", "ts", Seq("event_id"))
+      .sessionize(df, Seq("user_id"), "ts", Seq("event_id"), Etl.SessionGapMinutes)
 
   test("native operator ≡ window compose, row for row (randomized + nulls)") {
     val rnd = new scala.util.Random(23)
@@ -97,7 +97,7 @@ class SessionizeSpec extends AnyFunSuite {
     val viaNative = nativeAnnotated(df)
       .select("event_id", "session_id")
       .as[(Long, Long)].collect().toMap
-    val viaWindow = Etl.sessionized(df)
+    val viaWindow = WindowSessionizer(df)
       .select("event_id", "session_id")
       .as[(Long, Long)].collect().toMap
     assert(viaNative.size == rows.size)
@@ -119,13 +119,12 @@ class SessionizeSpec extends AnyFunSuite {
         rnd.nextInt(3).toLong, ent)
     }
     val df = rows.toDF("event_id", "ts", "user_id", "props")
-    val viaNative = org.apache.spark.sql.graft.SessionizePlan
-      .sessionize(df.withColumn("entity",
-          get_json_object(col("props"), "$.k")),
-        "user_id", "ts", Seq("event_id"), entity = Some("entity"))
+    val viaNative = Etl.sessionizedEntity(df)
       .select("event_id", "session_id")
       .as[(Long, Long)].collect().toMap
-    val viaWindow = Etl.sessionizedEntity(df)
+    val viaWindow = WindowSessionizer(
+        df.withColumn("entity", get_json_object(col("props"), "$.k")),
+        entity = Some("entity"))
       .select("event_id", "session_id")
       .as[(Long, Long)].collect().toMap
     assert(viaNative.size == rows.size)
@@ -181,5 +180,38 @@ class SessionizeSpec extends AnyFunSuite {
     val plan = agged.queryExecution.executedPlan.toString
     assert("Exchange".r.findAllIn(plan).length == 1,
       s"agg after native sessionize should reuse its partitioning:\n$plan")
+  }
+
+  test("sessionized output self-joins: each side keeps its own session_id") {
+    val sess = Etl.sessionSummaries(Etl.sessionized(ev(
+      (1, "2024-01-01 10:00:00", 1), (2, "2024-01-01 10:20:00", 1),
+      (3, "2024-01-01 12:00:00", 1), (4, "2024-01-01 10:10:00", 2))))
+    val pairs = sess.as("a")
+      .join(sess.as("b"), col("a.user_id") < col("b.user_id") &&
+        col("a.session_start") <= col("b.session_end") &&
+        col("b.session_start") <= col("a.session_end"))
+      .select(col("a.session_id"), col("b.session_id"))
+      .as[(Long, Long)].collect().toSeq
+    assert(pairs == Seq((1L, 1L)), pairs)
+  }
+
+  test("native sessionize and as-of plan on a new session, registering once") {
+    import org.apache.spark.sql.graft.{AsOfJoinPlan, AsOfJoinStrategy, SessionizeStrategy}
+    val fresh = spark.newSession()
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    import fresh.implicits._
+    val events = Seq((1L, ts("2024-01-01 10:00:00"), 1L), (2L, ts("2024-01-01 12:00:00"), 1L))
+      .toDF("event_id", "ts", "user_id")
+    val left = Seq((1L, 10L)).toDF("k", "ts")
+    val right = Seq((1L, 5L, "r")).toDF("rk", "rts", "tag")
+    for (_ <- 1 to 2) {
+      assert(Etl.sessionized(events).select("session_id").as[Long].collect().sorted
+        .toSeq == Seq(1L, 2L))
+      assert(AsOfJoinPlan.asof(left, right, "k", "rk", "ts", "rts")
+        .select("tag").as[String].collect().toSeq == Seq("r"))
+    }
+    val registered = fresh.experimental.extraStrategies
+    assert(registered.count(_ == SessionizeStrategy) == 1 &&
+      registered.count(_ == AsOfJoinStrategy) == 1, registered)
   }
 }
