@@ -21,10 +21,10 @@ import org.apache.spark.sql.graft.{KllFunctions, KmvFunctions}
   * tables per run, and idempotent rebuild beats incremental mutation for
   * a lake (PipelineSpec pins rerun-idempotence). How a rebuild or an
   * incremental commit LANDS is the [[LakeIO]] strategy: in-place
-  * overwrite (historical default) or the round-8/9 manifest protocol
-  * (atomic pointer swaps, no torn-read hazard). At 100 TB each stage is
-  * the already-audited operator plan (one user_id exchange feeds both the
-  * session and monthly aggregates); the sink adds only the partition
+  * overwrite (historical default) or [[LakeCommit]] manifest commits (no
+  * torn-read hazard). At 100 TB each stage is the already-audited
+  * operator plan (one user_id exchange feeds both the session and
+  * monthly aggregates); the sink adds only the partition
   * columns. Sessions use the skew-safe two-level plan: a config-selected
   * window over real traffic is exactly where Zipfian hot users live.
   */
@@ -44,10 +44,10 @@ object Pipeline {
     *    go through the whole-table manifest ([[graft.sources.Sources.publishVersion]]),
     *    partitioned calendar tables through the PARTITION-LEVEL manifest
     *    ([[graft.sources.Sources.publishPartitions]]) so an incremental
-    *    run stages only the touched partitions and swaps each pointer
+    *    run stages only the touched partitions and commits each one
     *    atomically — a concurrent reader sees every partition either
     *    wholly old or wholly new, and NO materialization barrier is
-    *    needed because a staged version dir never overlaps the files the
+    *    needed because a staged generation never overlaps the files the
     *    input frame reads (the in-place path's torn-read hazard is
     *    structural, not incidental).
     *
@@ -85,25 +85,26 @@ object Pipeline {
         case Some(c) =>
           graft.sources.Sources.publishPartitions(spark, path, observed, c)
         case None =>
-          graft.sources.Sources.publishVersion(spark, path, observed, None)
+          graft.sources.Sources.publishVersion(spark, path, observed)
       }
       TableResult(path.split('/').last, obs.get("rows").asInstanceOf[Long], path)
     }
     def replacePartitions(df: DataFrame, path: String, partCol: String): Unit =
       graft.sources.Sources.publishPartitions(df.sparkSession, path, df, partCol)
-    // a staged version dir never overlaps its input's files — no barrier
+    // a staged generation never overlaps its input's files — no barrier
     def materialize(df: DataFrame): DataFrame = df
   }
 
-  /** Layout-detecting manifested read: a table-level `_CURRENT` means the
-    * whole-table manifest; otherwise the partition-level one (pruned at
+  /** Layout-detecting manifested read: a table-level manifest means the
+    * whole-table layout; otherwise the partition-level one (pruned at
     * LISTING time when `partValues` is given). */
   private def readManifested(spark: SparkSession, path: String,
       partValues: Option[Seq[String]]): DataFrame =
-    if (graft.sources.Sources.currentVersion(spark, path).isDefined)
-      graft.sources.Sources.readCurrent(spark, path)
-    else
-      graft.sources.Sources.readCurrentPartitions(spark, path, partValues)
+    LakeCommit.currentGen(path, graft.sources.Sources.ManifestTable) match {
+      case Some(gen) => spark.read.parquet(gen)
+      case None =>
+        graft.sources.Sources.readCurrentPartitions(spark, path, partValues)
+    }
 
   def run(spark: SparkSession, cfg: RunConfig, outDir: String): Seq[TableResult] =
     run(spark, cfg, outDir, InPlaceIO)
@@ -343,7 +344,7 @@ object Pipeline {
     // session replaces (same (user_id, session_id) key), plus the changes
     // in-place: materialize BEFORE overwriting the source files (the
     // content derives from the very files dynamic overwrite replaces);
-    // manifested: staged version dirs never overlap the input — no barrier
+    // manifested: staged generations never overlap the input — no barrier
     val content = io.materialize(prior
       .where(monthOf.isin(affected: _*))
       .join(changed.select("user_id", "session_id"),
@@ -502,27 +503,10 @@ object Pipeline {
     }
   }
 
-  /** ATOMIC publish of one pipeline table under the manifest protocol
-    * (round 8 — `Sources.publishVersion`): a reader concurrent with a
-    * rebuild sees the previous complete version until the single
-    * pointer move, never the in-progress overwrite the in-place `write`
-    * exposes. Same observe()-rides-the-write count discipline. Pair with
-    * [[readTableCurrent]] on the consumer side. */
-  def publishTable(
-      df: DataFrame, partitionCol: Option[String],
-      path: String): TableResult = {
-    val spark = df.sparkSession
-    val obs = org.apache.spark.sql.Observation(s"publish_${path.split('/').last}")
-    graft.sources.Sources.publishVersion(spark, path,
-      df.observe(obs, count(lit(1)).as("rows")), partitionCol)
-    TableResult(path.split('/').last, obs.get("rows").asInstanceOf[Long], path)
-  }
-
-  /** Current-version reader for tables published with [[publishTable]] or
-    * [[ManifestedIO]]. Under the partition-level layout a `month` filter
-    * prunes at LISTING time (the unwanted partitions never reach a scan);
-    * the residual `where` keeps the row-level contract identical across
-    * layouts. */
+  /** Current-version reader for tables published with [[ManifestedIO]].
+    * Under the partition-level layout a `month` filter prunes at LISTING
+    * time (the unwanted partitions never reach a scan); the residual
+    * `where` keeps the row-level contract identical across layouts. */
   def readTableCurrent(spark: SparkSession, outDir: String, table: String,
       month: Option[String] = None): DataFrame = {
     // partition dir values are the cast-to-string timestamp images

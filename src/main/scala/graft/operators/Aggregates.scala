@@ -41,6 +41,30 @@ object Aggregates {
       |         AS total
       |FROM r GROUP BY decile ORDER BY decile""".stripMargin
 
+  /** The SCALE plan for the weighted median (round 8), shared by
+    * agg_weighted_median and agg_weighted_median_fenced: a window
+    * partitioned by l_returnflag would be THREE giant tasks at 100 TB.
+    * RankFence.weightedMedianFenced does one KLL fence pass, exact
+    * per-(flag, interval) decimal weights locate each flag's crossing
+    * interval on the driver, and the only running-sum window runs over
+    * that ONE interval per flag (≈ n/64 rows), seeded with the exact
+    * weight-before. */
+  private def weightedMedianFenced(s: SparkSession, d: String): DataFrame = {
+    val li = t(s, d, "lineitem")
+      .select(col("l_returnflag"), col("l_extendedprice"),
+        col("l_quantity").cast("decimal(18,4)").as("w"),
+        col("l_orderkey"), col("l_linenumber"))
+    RankFence.weightedMedianFenced(li, "l_returnflag",
+        Seq(RankFence.OrderCol("l_extendedprice"),
+          RankFence.OrderCol("l_orderkey"),
+          RankFence.OrderCol("l_linenumber")),
+        weightCol = "w")
+      .select(col("l_returnflag"),
+        col("median").as("weighted_median_price"),
+        col("total").cast("double").as("total_qty"))
+      .orderBy("l_returnflag")
+  }
+
   /** Shared by agg_weighted_median / agg_weighted_median_fenced. */
   private val weightedMedianOracle =
     """WITH r AS (
@@ -1809,49 +1833,14 @@ object Aggregates {
     // Exact weighted median (round 7, cont.): per return flag, the
     // quantity-weighted median unit price — the "half the VOLUME sold
     // below this price" statistic plain percentiles (agg_median, row-
-    // weighted) cannot answer. Classic cumulative-weight formulation:
-    // sort by value, running weight, first row whose cumulative weight
-    // reaches half the total. Weights fold in exact DECIMAL(18,4) (both
-    // the running and total sums — engine-ordered double folds would
-    // make the crossing row itself nondeterministic); the crossing test
-    // is cumw·2 ≥ total in decimal, and the pick is a rank-1 selection
-    // under a total order. One exchange on the group key; both windows
-    // share its sort.
-    Q("agg_weighted_median", weightedMedianOracle) { (s, d) =>
-      val wRun = Window.partitionBy("l_returnflag")
-        .orderBy("l_extendedprice", "l_orderkey", "l_linenumber")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wAll = Window.partitionBy("l_returnflag")
-      val r = t(s, d, "lineitem")
-        .select(col("l_returnflag"), col("l_extendedprice"),
-          col("l_quantity"), col("l_orderkey"), col("l_linenumber"))
-        .withColumn("cumw",
-          sum(col("l_quantity").cast("decimal(18,4)")).over(wRun))
-        .withColumn("totw",
-          sum(col("l_quantity").cast("decimal(18,4)")).over(wAll))
-        .where(col("cumw") * 2 >= col("totw"))
-      // the pick is the FIRST crossing row = min (cumw, price) per flag
-      // (cumw is strictly increasing within a flag — weights > 0), so a
-      // partial-aggregating groupBy replaces the old rank-1 window's
-      // second exchange + sort over the filtered half (round 13,
-      // guide §2.3 "aggregate before you shuffle")
-      r.groupBy(col("l_returnflag"))
-        .agg(min(struct(col("cumw"), col("l_extendedprice"), col("totw")))
-          .as("m"))
-        .select(col("l_returnflag"),
-          col("m.l_extendedprice").as("weighted_median_price"),
-          col("m.totw").cast("double").as("total_qty"))
-        .orderBy("l_returnflag")
-    },
+    // weighted) cannot answer: the first row, under the (price, key)
+    // total order, whose cumulative weight reaches half the total, with
+    // weights folded in exact DECIMAL(18,4). Both this key and its
+    // `_fenced` twin run [[weightedMedianFenced]]: the two-window compose
+    // that used to serve it lost at sf0.1 (2.19 vs 3.17 s) and at 6M rows
+    // (3.5 vs 4.2 s), and only the fence runs at 60M (SCALING.md).
+    Q("agg_weighted_median", weightedMedianOracle)(weightedMedianFenced),
 
-    // The SCALE plan for the weighted median (round 8): the compose
-    // above partitions its windows by l_returnflag — THREE giant tasks
-    // at 100 TB. RankFence.weightedMedianFenced: one KLL fence pass,
-    // exact per-(flag, interval) decimal weights locate each flag's
-    // crossing interval on the driver, and the only running-sum window
-    // runs over that ONE interval per flag (≈ n/64 rows), seeded with
-    // the exact weight-before. Same first-crossing-row semantics, same
-    // oracle, byte-identical result.
     // Exact GLOBAL percentiles, fenced (round 8): the element at rank
     // max(1, ⌈q·n⌉) under the (price, key) total order for q ∈ {25, 50,
     // 75, 90, 99}% — quantile_disc semantics, EXACT (approx_percentile's
@@ -1886,21 +1875,7 @@ object Aggregates {
       rows.toDF("pct", "rnk", "value").orderBy("pct")
     },
 
-    Q("agg_weighted_median_fenced", weightedMedianOracle) { (s, d) =>
-      val li = t(s, d, "lineitem")
-        .select(col("l_returnflag"), col("l_extendedprice"),
-          col("l_quantity").cast("decimal(18,4)").as("w"),
-          col("l_orderkey"), col("l_linenumber"))
-      RankFence.weightedMedianFenced(li, "l_returnflag",
-          Seq(RankFence.OrderCol("l_extendedprice"),
-            RankFence.OrderCol("l_orderkey"),
-            RankFence.OrderCol("l_linenumber")),
-          weightCol = "w")
-        .select(col("l_returnflag"),
-          col("median").as("weighted_median_price"),
-          col("total").cast("double").as("total_qty"))
-        .orderBy("l_returnflag")
-    },
+    Q("agg_weighted_median_fenced", weightedMedianOracle)(weightedMedianFenced),
 
     // Mann-Kendall trend test (round 7, cont.): per event_type, the
     // nonparametric monotone-trend statistic over the daily count series

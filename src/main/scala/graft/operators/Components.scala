@@ -48,8 +48,7 @@ object Components {
 
   /** @param nodes frame containing one row per node
     * @param idCol node-id column in `nodes` (labels start as the id)
-    * @param edges SYMMETRIC edge frame with columns (a, b), persisted by
-    *              the caller
+    * @param edges SYMMETRIC edge frame with columns (a, b); read once
     * @param maxPropagationRounds diameter budget before auto-switching to
     *              [[connectedComponentsStar]] (see
     *              [[DefaultMaxPropagationRounds]])
@@ -74,7 +73,8 @@ object Components {
       .distinct()
       .withColumn("lbl", col("id"))
       .localCheckpoint()
-    var converged = labels.isEmpty
+    val noEdges = labels.isEmpty
+    var converged = noEdges
     var rounds = 0
     while (!converged && rounds < maxPropagationRounds) {
       // shuffle_hash hints: the edge frame at corpus scale is far past any
@@ -138,10 +138,15 @@ object Components {
     // shuffling for O(diameter) more rounds. Discarding the partial
     // labels is deliberate: star contraction works on the EDGE set, and
     // seeding it with partial labels would complicate the algorithm for
-    // at most `maxPropagationRounds` saved hops.
-    if (!converged) return connectedComponentsStar(nodes, idCol, edges)
+    // at most `maxPropagationRounds` saved hops. It runs on the
+    // checkpointed edges, so the caller's frame is still read only once.
+    if (!converged) return connectedComponentsStar(nodes, idCol, eByA)
+    // With no edges the label frame is empty, but its planner stats are
+    // the edge plan's estimates; broadcast it so the rejoin does not
+    // shuffle the node frame.
+    val lab = labels.select(col("id"), col("lbl"))
     nodes.select(col(idCol).as("id"))
-      .join(labels.select(col("id"), col("lbl")), Seq("id"), "left")
+      .join(if (noEdges) broadcast(lab) else lab, Seq("id"), "left")
       .select(col("id"), coalesce(col("lbl"), col("id")).as("lbl"))
   }
 

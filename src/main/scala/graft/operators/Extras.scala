@@ -1079,9 +1079,9 @@ object Extras {
       val nodes = sym.select(col("a").as("id")).distinct()
       // Star contraction, NOT propagation (round 7): this is the
       // general-graph key, and the co-order graph's diameter GROWS with
-      // SF (22 propagation rounds at sf0.1 — measured — already past the
-      // 12-round budget, so propagation burned its full budget and then
-      // restarted on the star engine anyway: 13 s → 3.4 s local). The
+      // SF. At sf0.1 propagation (even with pointer jumping) uses up its
+      // 12-round budget and then restarts on the star engine: 6.5 s and
+      // 145 jobs, against 2.6 s and 70 jobs for star directly. The
       // near-dup keys keep propagation because LSH similarity graphs
       // have small data-independent diameters; an arbitrary edge list
       // gets the O(log n) engine directly, per SCALING.md's engine A/B.

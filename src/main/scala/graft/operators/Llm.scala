@@ -456,8 +456,7 @@ object Llm {
   /** τ=0.35 cosine near-dup groups over the embeddings corpus — the
     * llm_dedup_groups chain (brute edges + exact connected components),
     * factored so llm_dedup_cluster_sizes reports over the SAME groups.
-    * `edges` is persisted (evaluated once, reused every propagation
-    * round); per-round lineage control lives in Components. symPairs
+    * Components reads the edges once into its own checkpoint; symPairs
     * keeps the O(n²) cosine scan to ONE evaluation.
     */
   private def cosineDedupGroups(s: SparkSession, d: String): DataFrame = {
@@ -466,8 +465,8 @@ object Llm {
     val e0 = a.join(broadcast(b), col("a_id") < col("b_id"))
       .where(round(pairCos("a", "b"), 6) >= 0.35)
       .select(col("a_id").as("ea"), col("b_id").as("eb"))
-    val edges = symPairs(e0, "ea", "eb").persist()
-    Components.connectedComponents(emb(s, d), "vec_id", edges)
+    Components.connectedComponents(emb(s, d), "vec_id",
+        symPairs(e0, "ea", "eb"))
       .select(col("id").as("vec_id"), col("lbl").as("group_id"))
   }
 
@@ -493,8 +492,8 @@ object Llm {
     * Factored (round 10) so llm_dedup_groups_lsh and the
     * llm_dedup_cluster_sizes_lsh curation report run the SAME groups. */
   private def lshDedupGroups(s: SparkSession, d: String): DataFrame = {
-    val edges = symPairs(lshVerifiedEdges(s, d), "ea", "eb").persist()
-    Components.connectedComponents(emb(s, d), "vec_id", edges)
+    Components.connectedComponents(emb(s, d), "vec_id",
+        symPairs(lshVerifiedEdges(s, d), "ea", "eb"))
       .select(col("id").as("vec_id"), col("lbl").as("group_id"))
   }
 
@@ -1955,6 +1954,19 @@ object Llm {
     s.read.parquet(dir).repartition(col("d1"))
   }
 
+  /** The ≥0.2 verified near-dup pairs (d1, d2) the minhash groups join. */
+  private def minhashDupPairs(s: SparkSession, d: String): DataFrame =
+    minhashVerifiedLake(s, d).where(col("est_jaccard") >= 0.2).select("d1", "d2")
+
+  /** (doc_id, group_id) minhash near-dup groups — exact connected
+    * components over the [[minhashDupPairs]] graph, group_id = min member
+    * id. The chain every minhash-group key shares, as [[lshDedupGroups]]
+    * is for embeddings. */
+  private def minhashDedupGroups(s: SparkSession, d: String): DataFrame =
+    Components.connectedComponents(docs(s, d), "doc_id",
+        symPairs(minhashDupPairs(s, d), "d1", "d2"))
+      .select(col("id").as("doc_id"), col("lbl").as("group_id"))
+
   /** Spark twin of [[minhashVerifiedCtes]]: verified near-dup pairs
     * (d1 < d2, exact Jaccard over distinct shingles) from minhash-banded
     * candidates. All 16 minhashes in ONE aggregation pass over the raw
@@ -2185,8 +2197,8 @@ object Llm {
       scrubPii: Boolean = false): DataFrame = {
     val e0 = minhashVerified(docsDf, hashes = hashes)
       .where(col("est_jaccard") >= 0.2).select("d1", "d2")
-    val edges = symPairs(e0, "d1", "d2").persist()
-    val keep = Components.connectedComponents(docsDf, "doc_id", edges)
+    val keep = Components.connectedComponents(docsDf, "doc_id",
+        symPairs(e0, "d1", "d2"))
       .where(col("id") === col("lbl"))
       .select(col("id").as("doc_id"))
     // Real-pipeline stage order: dedup runs on RAW text (a PII span is
@@ -3314,11 +3326,8 @@ object Llm {
          |                  AS DOUBLE) / sum(toks) * 1000000) / 1000000
          |         AS savings_share
          |FROM keepf JOIN tk USING (doc_id)""".stripMargin) { (s, d) =>
-      val e0 = minhashVerifiedLake(s, d)
-        .where(col("est_jaccard") >= 0.2).select("d1", "d2")
-      val edges = symPairs(e0, "d1", "d2").persist()
-      val keepf = Components.connectedComponents(docs(s, d), "doc_id", edges)
-        .select(col("id").as("doc_id"), (col("id") === col("lbl")).as("is_kept"))
+      val keepf = minhashDedupGroups(s, d)
+        .select(col("doc_id"), (col("doc_id") === col("group_id")).as("is_kept"))
       val tk = docs(s, d).select(col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("toks"))
       keepf.join(tk, Seq("doc_id"))
@@ -5333,11 +5342,8 @@ object Llm {
          |FROM gs LEFT JOIN ge ON gs.group_id = ge.group_id
          |WHERE n_members >= 2
          |ORDER BY gs.group_id""".stripMargin) { (s, d) =>
-      val e0 = minhashVerifiedLake(s, d)
-        .where(col("est_jaccard") >= 0.2).select("d1", "d2")
-      val edges = symPairs(e0, "d1", "d2").persist()
-      val g = Components.connectedComponents(docs(s, d), "doc_id", edges)
-        .select(col("id").as("doc_id"), col("lbl").as("group_id"))
+      val e0 = minhashDupPairs(s, d)
+      val g = minhashDedupGroups(s, d)
       val gs = g.groupBy("group_id").agg(count(lit(1)).as("n_members"))
       val ge = e0.join(g.withColumnRenamed("doc_id", "d1"), Seq("d1"))
         .groupBy("group_id").agg(count(lit(1)).as("n_edges"))
@@ -5505,12 +5511,8 @@ object Llm {
          |), ${Components.reachMinCte("SELECT doc_id AS id FROM documents", "edges")}
          |SELECT node AS doc_id, min(r) AS group_id, node = min(r) AS is_kept
          |FROM reach GROUP BY node ORDER BY doc_id""".stripMargin) { (s, d) =>
-      val e0 = minhashVerifiedLake(s, d)
-        .where(col("est_jaccard") >= 0.2).select("d1", "d2")
-      val edges = symPairs(e0, "d1", "d2").persist()
-      Components.connectedComponents(docs(s, d), "doc_id", edges)
-        .select(col("id").as("doc_id"), col("lbl").as("group_id"),
-          (col("id") === col("lbl")).as("is_kept"))
+      minhashDedupGroups(s, d)
+        .withColumn("is_kept", col("doc_id") === col("group_id"))
         .orderBy("doc_id")
     },
 
@@ -5541,16 +5543,11 @@ object Llm {
          |             / count(*) * 1000000) / 1000000 AS dup_rate
          |FROM g JOIN grpsz USING (group_id) JOIN documents d USING (doc_id)
          |GROUP BY d.source ORDER BY d.source""".stripMargin) { (s, d) =>
-      val e0 = minhashVerifiedLake(s, d)
-        .where(col("est_jaccard") >= 0.2).select("d1", "d2")
-      val edges = symPairs(e0, "d1", "d2").persist()
       // the group frame feeds TWO consumers (the size aggregate and the
       // source join) — unpinned, the whole minhash+CC chain executes
       // twice (measured: 5.9 s vs llm_neardup_prune's 3.8 on the shared
       // chain)
-      val g = Components.connectedComponents(docs(s, d), "doc_id", edges)
-        .select(col("id").as("doc_id"), col("lbl").as("group_id"))
-        .persist()
+      val g = minhashDedupGroups(s, d).persist()
       val sz = g.groupBy("group_id").agg(count(lit(1)).as("gsz"))
       val dup = sum(when(col("gsz") >= 2, 1L).otherwise(0L))
       g.join(sz, Seq("group_id"))
@@ -5594,11 +5591,7 @@ object Llm {
          |         ORDER BY quality DESC, doc_id) = 1 AS is_kept
          |FROM g JOIN q USING (doc_id) ORDER BY doc_id""".stripMargin) {
       (s, d) =>
-      val e0 = minhashVerifiedLake(s, d)
-        .where(col("est_jaccard") >= 0.2).select("d1", "d2")
-      val edges = symPairs(e0, "d1", "d2").persist()
-      val groups = Components.connectedComponents(docs(s, d), "doc_id", edges)
-        .select(col("id").as("doc_id"), col("lbl").as("group_id"))
+      val groups = minhashDedupGroups(s, d)
       val q = docs(s, d).select(col("doc_id"),
         qualityCol(size(split(col("text"), " ")), stopCountCol).as("quality"))
       val w = Window.partitionBy("group_id")
@@ -8247,12 +8240,8 @@ object Llm {
          |            AS BIGINT) AS lost_occurrences,
          |       CAST(sum(occ) AS BIGINT) AS total_occurrences
          |FROM wv""".stripMargin) { (s, d) =>
-      val e0 = minhashVerifiedLake(s, d)
-        .where(col("est_jaccard") >= 0.2).select("d1", "d2")
-      val edges = symPairs(e0, "d1", "d2").persist()
-      val keepf = Components.connectedComponents(docs(s, d), "doc_id", edges)
-        .select(col("id").as("doc_id"),
-          (col("id") === col("lbl")).as("is_kept"))
+      val keepf = minhashDedupGroups(s, d)
+        .select(col("doc_id"), (col("doc_id") === col("group_id")).as("is_kept"))
       val tfw = docs(s, d)
         .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
         .groupBy("doc_id", "w").agg(count(lit(1)).as("c"))

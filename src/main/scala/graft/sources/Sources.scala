@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.config.LakeCommit
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -305,11 +306,8 @@ object Sources {
       targetBytes: Long = 128L << 20): (Int, Int) = {
     import org.apache.hadoop.fs.Path
     val path = new Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dataFiles = fs.listStatus(path)
-      .filter(f => f.isFile && !f.getPath.getName.startsWith("_"))
-    val totalBytes = dataFiles.map(_.getLen).sum
-    val nOut = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
+    val fs = hadoopFs(spark, path)
+    val (nIn, nOut) = compactionPlan(spark, dir, targetBytes)
     val tmp = new Path(path.getParent, path.getName + ".compacting")
     fs.delete(tmp, true)
     spark.read.parquet(dir)
@@ -320,141 +318,62 @@ object Sources {
     require(fs.rename(path, old), s"compact: could not retire $path")
     require(fs.rename(tmp, path), s"compact: could not publish $tmp")
     fs.delete(old, true)
-    (dataFiles.length, nOut)
+    (nIn, nOut)
   }
-
-  // ---- Atomic manifested tables (round 8 — VERDICT r7 "atomic lake
-  // ---- publish"): the two-rename swap above has a window where the
-  // ---- table dir does not exist, and object stores have no atomic
-  // ---- directory rename at all. The manifest protocol removes both:
-  // ----
-  // ----   tableDir/
-  // ----     v_00001/            immutable version dirs (plain parquet)
-  // ----     v_00002/
-  // ----     _CURRENT            one-line pointer, swapped ATOMICALLY
-  // ----
-  // ---- Writers stage a COMPLETE new version dir, then repoint _CURRENT
-  // ---- in one atomic file move (java.nio ATOMIC_MOVE on local paths,
-  // ---- FileContext rename OVERWRITE — atomic — on HDFS; on S3-class
-  // ---- stores the pointer is a single small object whose PUT is
-  // ---- atomic-by-key, the same trick Iceberg's version-hint plays).
-  // ---- A reader resolves the pointer once and then reads an immutable
-  // ---- dir — it sees the old table or the new table, NEVER a partial
-  // ---- or missing one. Version dirs older than `keepVersions` retire
-  // ---- lazily, leaving in-flight readers a grace window.
-
-  private val CurrentPtr = "_CURRENT"
 
   private def hadoopFs(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Currently-published version name (e.g. "v_00007"), if any. */
-  def currentVersion(spark: SparkSession, tableDir: String): Option[String] = {
-    import org.apache.hadoop.fs.Path
-    val ptr = new Path(tableDir, CurrentPtr)
-    val fs = hadoopFs(spark, ptr)
-    if (!fs.exists(ptr)) None
-    else {
-      val in = fs.open(ptr)
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val tmp = new Array[Byte](256)
-        var n = in.read(tmp)
-        while (n > 0) { buf.write(tmp, 0, n); n = in.read(tmp) }
-        Some(new String(buf.toByteArray,
-          java.nio.charset.StandardCharsets.UTF_8).trim)
-      } finally in.close()
-    }
+  /** (data files directly under `dir`, files a rewrite into
+    * `targetBytes`-sized files produces). */
+  private def compactionPlan(
+      spark: SparkSession, dir: String, targetBytes: Long): (Int, Int) = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val files = hadoopFs(spark, p).listStatus(p)
+      .filter(f => f.isFile && !f.getPath.getName.startsWith("_"))
+    val totalBytes = files.map(_.getLen).sum
+    (files.length, math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt)
+  }
+
+  // ---- Manifested tables: every versioned table commits through
+  // ---- [[graft.config.LakeCommit]] (stage a complete generation, commit
+  // ---- by creating one manifest file, retire superseded generations
+  // ---- past [[graft.config.LakeCommit.RetireSupersededMs]]); its doc is
+  // ---- the protocol. A whole-table manifest keeps its state under
+  // ---- `tableDir`; a partition-level table keeps one state dir per
+  // ---- `__part=` dir.
+
+  /** Logical table name of every manifested state dir. */
+  private[graft] val ManifestTable = "data"
+
+  /** Serving generation dir of the manifested state at `stateDir`;
+    * `verb` names the caller in the error when nothing was published. */
+  private def servingGen(stateDir: String, verb: String): String =
+    LakeCommit.currentGen(stateDir, ManifestTable).getOrElse(
+      throw new IllegalStateException(s"$verb: $stateDir has no published version"))
+
+  /** Commit the complete generation `gen` staged under `stateDir`, then
+    * retire what it supersedes. Returns `gen`. */
+  private def commitGen(stateDir: String, gen: String): String = {
+    require(LakeCommit.commit(stateDir, ManifestTable, gen),
+      s"a racing writer committed $gen first")
+    LakeCommit.cleanup(stateDir, ManifestTable,
+      retireMs = LakeCommit.RetireSupersededMs)
+    gen
   }
 
   /** Read the current version of a manifested table. */
-  def readCurrent(spark: SparkSession, tableDir: String): DataFrame = {
-    val v = currentVersion(spark, tableDir).getOrElse(
-      throw new IllegalStateException(
-        s"readCurrent: $tableDir has no published version"))
-    spark.read.parquet(s"$tableDir/$v")
-  }
+  def readCurrent(spark: SparkSession, tableDir: String): DataFrame =
+    spark.read.parquet(servingGen(tableDir, "readCurrent"))
 
-  /** Atomically swap the pointer file: stage `content` in a temp name,
-    * then one atomic move over [[CurrentPtr]]. */
-  private def swapPointer(
-      spark: SparkSession, tableDir: String, content: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val dir = new Path(tableDir)
-    val fs = hadoopFs(spark, dir)
-    val tmp = new Path(dir, s"$CurrentPtr.tmp")
-    val dst = new Path(dir, CurrentPtr)
-    val out = fs.create(tmp, true)
-    try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    if ("file" == fs.getUri.getScheme) {
-      // local fs: FileContext's OVERWRITE rename is delete-then-rename
-      // (a visibility window); java.nio ATOMIC_MOVE is truly atomic
-      java.nio.file.Files.move(
-        java.nio.file.Paths.get(tmp.toUri.getPath),
-        java.nio.file.Paths.get(dst.toUri.getPath),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    } else {
-      org.apache.hadoop.fs.FileContext
-        .getFileContext(fs.getUri, spark.sparkContext.hadoopConfiguration)
-        .rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    }
-  }
-
-  /** Publish `df` as the table's next version: stage the full version
-    * dir, atomically repoint, lazily retire old versions. Returns the
-    * new version name. A crash before the swap leaves a dangling
-    * staged dir and an untouched pointer — readers never notice, and
-    * the NEXT successful publish cleans the partial dir up.
-    *
-    * Retirement only counts PUBLISHED versions (name ≤ the pointer read
-    * at publish start): a dangling staged dir left by a crashed publish
-    * sorts NEWER than the current pointer, and counting it against
-    * `keepVersions` would delete the just-superseded CURRENT version
-    * immediately — exactly the in-flight-reader grace window the
-    * protocol exists to provide. Dangling dirs (never pointed at, so
-    * never readable) are deleted outright instead; the new version
-    * number still advances past them so a recovered writer can never
-    * collide with a half-written dir name. */
+  /** Publish `df` as the table's next generation. A reader sees the
+    * previous generation until the commit, never a partial one. Returns
+    * the new generation dir. */
   def publishVersion(
-      spark: SparkSession, tableDir: String, df: DataFrame,
-      partitionCol: Option[String] = None,
-      keepVersions: Int = 2): String =
-    commitVersion(spark, tableDir, keepVersions) { next =>
-      val w = df.write.mode(SaveMode.Overwrite)
-      partitionCol.fold(w)(c => w.partitionBy(c)).parquet(s"$tableDir/$next")
-    }
-
-  /** The version-bookkeeping core shared by [[publishVersion]] and
-    * [[publishPartitions]]: compute the next version name, let `stage`
-    * materialize it (write or rename), swap the pointer, retire old
-    * published versions, clean crashed-publish leftovers. */
-  private def commitVersion(
-      spark: SparkSession, tableDir: String, keepVersions: Int)(
-      stage: String => Unit): String = {
-    import org.apache.hadoop.fs.Path
-    val dir = new Path(tableDir)
-    val fs = hadoopFs(spark, dir)
-    fs.mkdirs(dir)
-    val current = currentVersion(spark, tableDir)
-    val existing = fs.listStatus(dir)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("v_"))
-      .map(_.getPath.getName).sorted
-    // zero-padded names order lexicographically == numerically; with no
-    // pointer nothing was ever published, so every v_* dir is dangling
-    val (published, dangling) = existing.partition(v => current.exists(v <= _))
-    val next = f"v_${existing.lastOption
-      .map(_.stripPrefix("v_").toInt).getOrElse(0) + 1}%05d"
-    stage(next)
-    swapPointer(spark, tableDir, next)
-    // retire published versions older than the keep window (never the
-    // new one); clean crashed-publish leftovers unconditionally — no
-    // reader can hold a dir the pointer never named
-    published.dropRight(keepVersions - 1)
-      .foreach(v => fs.delete(new Path(dir, v), true))
-    dangling.foreach(v => fs.delete(new Path(dir, v), true))
-    next
+      spark: SparkSession, tableDir: String, df: DataFrame): String = {
+    val gen = LakeCommit.stage(tableDir, ManifestTable)
+    df.write.mode(SaveMode.Overwrite).parquet(gen)
+    commitGen(tableDir, gen)
   }
 
   // ---- Partition-level manifest (round 9 — VERDICT r8 #7, the
@@ -466,12 +385,12 @@ object Sources {
   // ---- each PARTITION is its own small manifested table:
   // ----
   // ----   tableDir/
-  // ----     __part=2024-01-01 00%3A00%3A00/   v_00001/ v_00002/ _CURRENT
-  // ----     __part=2024-02-01 00%3A00%3A00/   v_00001/ _CURRENT
+  // ----     __part=2024-01-01 00%3A00%3A00/   _manifests/ data.g1-…/ data.g2-…/
+  // ----     __part=2024-02-01 00%3A00%3A00/   _manifests/ data.g1-…/
   // ----
   // ---- Writers stage ALL affected partitions in one Spark write pass,
-  // ---- then commit each partition with the same stage-swap-retire
-  // ---- protocol. Atomicity is PER PARTITION — exactly the granularity
+  // ---- then move each partition into its own stage and commit it.
+  // ---- Atomicity is PER PARTITION — exactly the granularity
   // ---- of the append-only calendar-partitioned semantics (each
   // ---- partition's content is independently complete; a reader
   // ---- mid-publish sees some partitions old and some new, the same
@@ -487,18 +406,17 @@ object Sources {
   /** Stage-once, commit-per-partition publish of `df`'s partitions (by
     * `partCol`) into the partition-level manifest at `tableDir`.
     * Partitions of the table NOT present in `df` keep their current
-    * version and their files — this is the incremental commit for
+    * generation and their files — this is the incremental commit for
     * append-only partitioned tables. Returns partition-dir → new
-    * version. One Spark write stages everything; the per-partition
-    * commits are driver-side renames + pointer swaps (bounded by the
+    * generation dir. One Spark write stages everything; the per-partition
+    * commits are driver-side renames + manifest creations (bounded by the
     * CALENDAR for month/day partitioning, the caller's contract). */
   def publishPartitions(
       spark: SparkSession, tableDir: String, df: DataFrame,
-      partCol: String, keepVersions: Int = 2): Map[String, String] = {
+      partCol: String): Map[String, String] = {
     import org.apache.hadoop.fs.Path
     val dir = new Path(tableDir)
     val fs = hadoopFs(spark, dir)
-    fs.mkdirs(dir)
     val stage = new Path(dir, s"_stage_${java.util.UUID.randomUUID().toString.take(8)}")
     try {
       df.withColumn(PartDirCol, col(partCol).cast("string"))
@@ -508,84 +426,70 @@ object Sources {
         .filter(s => s.isDirectory && s.getPath.getName.startsWith(PartDirCol + "="))
         .map(_.getPath.getName).sorted
       staged.map { p =>
-        val pd = new Path(dir, p)
-        p -> commitVersion(spark, pd.toString, keepVersions) { next =>
-          require(fs.rename(new Path(stage, p), new Path(pd, next)),
-            s"publishPartitions: could not commit $p as $next under $tableDir")
-        }
+        val pd = s"$tableDir/$p"
+        val gen = LakeCommit.stage(pd, ManifestTable)
+        fs.mkdirs(new Path(pd))
+        require(fs.rename(new Path(stage, p), new Path(gen)),
+          s"publishPartitions: could not stage $p as $gen")
+        p -> commitGen(pd, gen)
       }.toMap
     } finally fs.delete(stage, true)
   }
 
-  /** Decoded partition values currently published at `tableDir` (the
-    * `partCol.cast(string)` images — e.g. "2024-01-01 00:00:00"). */
-  def listPartitions(spark: SparkSession, tableDir: String): Seq[String] = {
+  /** (decoded value, dir name) of every `__part=` dir under `tableDir`,
+    * sorted by dir name. */
+  private def partitionDirs(
+      spark: SparkSession, tableDir: String): Seq[(String, String)] = {
     import org.apache.hadoop.fs.Path
     val dir = new Path(tableDir)
     val fs = hadoopFs(spark, dir)
     if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir)
+    else fs.listStatus(dir).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(PartDirCol + "="))
-      .map(_.getPath.getName)
-      .filter(p => fs.exists(new Path(new Path(dir, p), CurrentPtr)))
+      .map(_.getPath.getName).sorted
       .map(p => java.net.URLDecoder.decode(
-        p.stripPrefix(PartDirCol + "="), "UTF-8"))
-      .sorted.toSeq
+        p.stripPrefix(PartDirCol + "="), "UTF-8") -> p)
   }
 
-  /** Read the current version of every published partition (optionally
+  /** Decoded partition values currently published at `tableDir` (the
+    * `partCol.cast(string)` images — e.g. "2024-01-01 00:00:00"). */
+  def listPartitions(spark: SparkSession, tableDir: String): Seq[String] =
+    partitionDirs(spark, tableDir).collect {
+      case (v, p) if LakeCommit.currentGen(s"$tableDir/$p", ManifestTable).isDefined => v
+    }.sorted
+
+  /** Read the current generation of every published partition (optionally
     * pruned to `partValues`, matched against the DECODED dir values —
-    * listing-time pruning: unwanted partitions never reach the scan).
-    * The result carries the original partition column because the data
-    * files kept it. */
+    * listing-time pruning: unwanted partitions are never resolved, let
+    * alone scanned). Each kept partition is resolved once. The result
+    * carries the original partition column because the data files kept
+    * it. */
   def readCurrentPartitions(
       spark: SparkSession, tableDir: String,
       partValues: Option[Seq[String]] = None): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val dir = new Path(tableDir)
-    val fs = hadoopFs(spark, dir)
-    val parts = (if (fs.exists(dir)) fs.listStatus(dir)
-      else Array.empty[org.apache.hadoop.fs.FileStatus])
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(PartDirCol + "="))
-      .map(_.getPath.getName)
-      .filter(p => fs.exists(new Path(new Path(dir, p), CurrentPtr)))
-      .filter(p => partValues.forall(_.contains(java.net.URLDecoder.decode(
-        p.stripPrefix(PartDirCol + "="), "UTF-8"))))
-      .sorted
-    require(parts.nonEmpty,
+    val resolved = partitionDirs(spark, tableDir).flatMap { case (v, p) =>
+      if (partValues.forall(_.contains(v)))
+        LakeCommit.currentGen(s"$tableDir/$p", ManifestTable)
+      else None
+    }
+    require(resolved.nonEmpty,
       s"readCurrentPartitions: no published partition under $tableDir" +
         partValues.fold("")(vs => s" matches ${vs.mkString(", ")}"))
-    val resolved = parts.map { p =>
-      val pd = s"$tableDir/$p"
-      val v = currentVersion(spark, pd).getOrElse(throw new IllegalStateException(
-        s"readCurrentPartitions: $pd lost its pointer mid-read"))
-      s"$pd/$v"
-    }
-    spark.read.parquet(resolved.toIndexedSeq: _*)
+    spark.read.parquet(resolved: _*)
   }
 
   /** Small-file compaction under the manifest protocol: rewrite the
-    * CURRENT version into a new right-sized version and swap the
-    * pointer — in-flight readers keep their immutable old dir; there is
-    * no crash window at all (contrast [[compactSmallFiles]]'s raw-dir
-    * renames). Returns (files before, files after). */
+    * CURRENT generation into a new right-sized one and commit it —
+    * in-flight readers keep their immutable old dir; there is no crash
+    * window at all (contrast [[compactSmallFiles]]'s raw-dir renames).
+    * Works on a whole table or on one partition dir. Returns (files
+    * before, files after). */
   def compactManifested(
       spark: SparkSession, tableDir: String,
-      targetBytes: Long = 128L << 20,
-      keepVersions: Int = 2): (Int, Int) = {
-    import org.apache.hadoop.fs.Path
-    val v = currentVersion(spark, tableDir).getOrElse(
-      throw new IllegalStateException(
-        s"compactManifested: $tableDir has no published version"))
-    val cur = new Path(s"$tableDir/$v")
-    val fs = hadoopFs(spark, cur)
-    val dataFiles = fs.listStatus(cur)
-      .filter(f => f.isFile && !f.getPath.getName.startsWith("_"))
-    val totalBytes = dataFiles.map(_.getLen).sum
-    val nOut = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
-    publishVersion(spark, tableDir,
-      spark.read.parquet(cur.toString).repartition(nOut),
-      keepVersions = keepVersions)
-    (dataFiles.length, nOut)
+      targetBytes: Long = 128L << 20): (Int, Int) = {
+    val cur = servingGen(tableDir, "compactManifested")
+    val (nIn, nOut) = compactionPlan(spark, cur, targetBytes)
+    publishVersion(spark, tableDir, spark.read.parquet(cur).repartition(nOut))
+    (nIn, nOut)
   }
 }

@@ -306,7 +306,7 @@ class PipelineSpec extends AnyFunSuite {
     val outB = Files.createTempDirectory("graft_pub_manifest").toString
     // the same frame through both publish paths
     val rPlain = monthly.write.mode("overwrite").parquet(s"$outA/monthly")
-    val r1 = Pipeline.publishTable(monthly, None, s"$outB/monthly")
+    val r1 = Pipeline.ManifestedIO.overwrite(monthly, None, s"$outB/monthly")
     assert(r1.rows > 0)
     val plain = spark.read.parquet(s"$outA/monthly")
       .collect().map(_.toString).sorted
@@ -314,12 +314,14 @@ class PipelineSpec extends AnyFunSuite {
       .collect().map(_.toString).sorted
     assert(manifested.toSeq == plain.toSeq)
     assert(manifested.length == r1.rows)
-    // a rebuild lands as v_00002 and the reader follows the pointer
-    val r2 = Pipeline.publishTable(monthly.limit(3), None, s"$outB/monthly")
+    // a rebuild commits a new generation and the reader follows it
+    def gen = graft.config.LakeCommit.currentGen(s"$outB/monthly",
+      graft.sources.Sources.ManifestTable)
+    val g1 = gen
+    val r2 = Pipeline.ManifestedIO.overwrite(monthly.limit(3), None, s"$outB/monthly")
     assert(r2.rows == 3)
     assert(Pipeline.readTableCurrent(spark, outB, "monthly").count() == 3)
-    assert(graft.sources.Sources.currentVersion(spark, s"$outB/monthly")
-      .contains("v_00002"))
+    assert(g1.isDefined && gen.isDefined && gen != g1)
   }
 
   test("incremental corpus build publishes through the manifested lake; " +
@@ -332,17 +334,17 @@ class PipelineSpec extends AnyFunSuite {
     val out = Files.createTempDirectory("graft_corpus_lake").toString
     // nightly shape: the corpus half's full build is the published base
     // table; each batch's incremental build publishes beside it and the
-    // training consumer reads the UNION of the two current pointers
+    // training consumer reads the UNION of the two current generations
     val corpusPacked = graft.operators.Llm
       .corpusBuild(docsDf.where(col("doc_id") < bound))
-    val rc = Pipeline.publishTable(corpusPacked, None, s"$out/packed_corpus")
+    val rc = Pipeline.ManifestedIO.overwrite(corpusPacked, None, s"$out/packed_corpus")
     val batchPacked = graft.operators.Llm
       .corpusBuildIncremental(spark, regDir,
         docsDf.where(col("doc_id") >= bound))
-    val r1 = Pipeline.publishTable(batchPacked, None, s"$out/packed_batch")
+    val r1 = Pipeline.ManifestedIO.overwrite(batchPacked, None, s"$out/packed_batch")
     assert(rc.rows > 0 && r1.rows > 0)
     // concurrent reader through a re-publish: every read must land on a
-    // WHOLE version's count — the pointer swap is atomic, so a reader
+    // WHOLE version's count — the commit is atomic, so a reader
     // can observe the old version or the new one, never a torn mix
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]
     @volatile var stop = false
@@ -352,10 +354,10 @@ class PipelineSpec extends AnyFunSuite {
     })
     reader.start()
     try {
-      val r2 = Pipeline.publishTable(
+      val r2 = Pipeline.ManifestedIO.overwrite(
         batchPacked.limit(3), None, s"$out/packed_batch")
       assert(r2.rows == 3)
-      Thread.sleep(300) // let the reader observe the new pointer too
+      Thread.sleep(300) // let the reader observe the new generation too
     } finally { stop = true; reader.join() }
     assert(!seen.isEmpty, "the concurrent reader must have read something")
     val counts = seen.toArray(Array.empty[java.lang.Long]).map(_.toLong).toSet
@@ -371,7 +373,9 @@ class PipelineSpec extends AnyFunSuite {
   test("manifested lake (r9): per-partition atomic incremental maintenance == " +
     "in-place twin; untouched partitions keep their version; concurrent " +
     "reader survives publish and compaction") {
+    import graft.config.LakeCommit
     import graft.sources.Sources
+    def gen(dir: String) = LakeCommit.currentGen(dir, Sources.ManifestTable)
     // sf0.001 events span January 2024 only — split mid-month
     val pre = RunConfig(sf, Seq("events"), endDate = Some("2024-01-16"))
     val batch = RunConfig(sf, Seq("events"), startDate = Some("2024-01-16"))
@@ -381,14 +385,14 @@ class PipelineSpec extends AnyFunSuite {
     Pipeline.run(spark, pre, outM, Pipeline.ManifestedIO)
 
     // layout law: calendar tables land as PARTITION-LEVEL manifests (one
-    // pointer per month/day dir), state tables as whole-table manifests
+    // state dir per month/day dir), state tables as whole-table manifests
     def partDirs(t: String) = new java.io.File(s"$outM/$t").listFiles()
       .filter(_.getName.startsWith("__part=")).sortBy(_.getName)
     assert(partDirs("monthly_usage").nonEmpty && partDirs("churn_daily").nonEmpty)
-    assert(partDirs("monthly_usage").forall(d =>
-      new java.io.File(d, "_CURRENT").isFile))
-    assert(Sources.currentVersion(spark, s"$outM/user_lifetime").contains("v_00001"))
-    assert(Sources.currentVersion(spark, s"$outM/type_reach").contains("v_00001"))
+    assert(partDirs("monthly_usage").forall(d => gen(d.getPath).isDefined))
+    assert(gen(s"$outM/monthly_usage").isEmpty)
+    assert(gen(s"$outM/user_lifetime").isDefined)
+    assert(gen(s"$outM/type_reach").isDefined)
 
     val tables = Seq("sessions", "monthly_usage", "user_lifetime",
       "churn_daily", "type_reach")
@@ -404,19 +408,19 @@ class PipelineSpec extends AnyFunSuite {
         rowsOf(outP, t, Pipeline.InPlaceIO), s"full rebuild diverged on $t")
 
     // capture an untouchable early-January churn DAY partition and the
-    // (single, touched) month partition's version BEFORE the batch
+    // (single, touched) month partition's generation BEFORE the batch
     val day5Dir = partDirs("churn_daily")
       .find(_.getName.startsWith("__part=2024-01-05")).get
-    val day5VersionBefore = Sources.currentVersion(spark, day5Dir.getPath).get
-    val day5FilesBefore = new java.io.File(day5Dir, day5VersionBefore)
+    val day5GenBefore = gen(day5Dir.getPath).get
+    val day5FilesBefore = new java.io.File(day5GenBefore)
       .listFiles().map(f => f.getName -> f.lastModified()).toSet
     val janDir = partDirs("monthly_usage")
       .find(_.getName.startsWith("__part=2024-01")).get
-    assert(Sources.currentVersion(spark, janDir.getPath).contains("v_00001"))
+    val janGenBefore = gen(janDir.getPath).get
 
     // a reader that resolved the CURRENT monthly table before the batch
-    // lands must keep reading the pre-batch content through the swap
-    // (immutable version dirs + keepVersions grace window)
+    // lands must keep reading the pre-batch content through the commit
+    // (immutable generations + the superseded-generation retention window)
     val preBatchReader = Pipeline.ManifestedIO.read(spark, outM, "monthly_usage")
     val preBatchRows = preBatchReader.drop("month").collect().map(_.toSeq).toSet
 
@@ -432,13 +436,12 @@ class PipelineSpec extends AnyFunSuite {
       assert(rowsOf(outM, t, Pipeline.ManifestedIO) ==
         rowsOf(outP, t, Pipeline.InPlaceIO), s"incremental diverged on $t")
 
-    // the untouched early-January churn day kept its version AND files;
-    // the touched month partition advanced to v_00002
-    assert(Sources.currentVersion(spark, day5Dir.getPath)
-      .contains(day5VersionBefore))
-    assert(new java.io.File(day5Dir, day5VersionBefore).listFiles()
+    // the untouched early-January churn day kept its generation AND
+    // files; the touched month partition committed a new generation
+    assert(gen(day5Dir.getPath).contains(day5GenBefore))
+    assert(new java.io.File(day5GenBefore).listFiles()
       .map(f => f.getName -> f.lastModified()).toSet == day5FilesBefore)
-    assert(Sources.currentVersion(spark, janDir.getPath).contains("v_00002"))
+    assert(gen(janDir.getPath).exists(_ != janGenBefore))
     // the pre-batch reader still sees exactly the pre-batch table
     assert(preBatchReader.drop("month").collect().map(_.toSeq).toSet
       == preBatchRows)
@@ -453,8 +456,8 @@ class PipelineSpec extends AnyFunSuite {
       s"pruning leaked: ${pruned.inputFiles.take(3).mkString(", ")}")
 
     // concurrent reader through a COMPACTION (whole-table manifest): the
-    // reader resolved v_k; compaction publishes v_{k+1} and the keep
-    // window preserves v_k for in-flight readers
+    // reader resolved generation k; compaction commits k+1 and the
+    // retention window preserves k for in-flight readers
     val lifeReader = Pipeline.readTableCurrent(spark, outM, "user_lifetime")
     val lifeRows = lifeReader.drop("value_kll").collect().map(_.toSeq).toSet
     val (filesBefore, filesAfter) =
@@ -467,8 +470,8 @@ class PipelineSpec extends AnyFunSuite {
       "post-compaction reader diverged")
 
     // concurrent reader through a PER-PARTITION compaction: each partition
-    // dir is itself a manifested table, so the same protocol compacts one
-    // month while readers of the whole table keep their resolution
+    // dir is itself a manifested state dir, so the same protocol compacts
+    // one month while readers of the whole table keep their resolution
     val tableReader = Pipeline.ManifestedIO.read(spark, outM, "monthly_usage")
     val tableRows = tableReader.drop("month").collect().map(_.toSeq).toSet
     Sources.compactManifested(spark, janDir.getPath)

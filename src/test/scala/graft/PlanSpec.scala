@@ -1144,7 +1144,6 @@ class PlanSpec extends AnyFunSuite {
     val audited: Map[String, String] = Map(
       "win_ntile" -> "(twin) deliberate 4-bucket report key; RankFence.ntileFenced is the scale path",
       "agg_hist_equidepth" -> "(twin) of agg_hist_equidepth_fenced",
-      "agg_weighted_median" -> "(twin) of agg_weighted_median_fenced",
       "etl_rfm" -> "(twin) of etl_rfm_fenced",
       "etl_pareto_revenue" -> "(twin) of etl_pareto_revenue_fenced",
       "win_percent_cume" -> "(twin) §2.E percent_rank/cume_dist surface demo; RankFence is the exact-rank scale path",

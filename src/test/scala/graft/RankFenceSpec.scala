@@ -98,7 +98,7 @@ class RankFenceSpec extends AnyFunSuite {
     }
     val df = rows.toDF("g", "v", "w", "id")
       .withColumn("w", col("w").cast("decimal(18,4)"))
-    // the compose (the agg_weighted_median shape)
+    // the two-window compose (the weighted-median oracle's shape)
     val wRun = Window.partitionBy("g").orderBy("v", "id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wAll = Window.partitionBy("g")
@@ -208,7 +208,7 @@ class RankFenceSpec extends AnyFunSuite {
     }
   }
 
-  // the two-window compose (the agg_weighted_median shape) with a
+  // the two-window compose (the weighted-median oracle's shape) with a
   // direction-aware order — truth for the recursive-escape laws
   private def composeWeightedMedian(
       df: org.apache.spark.sql.DataFrame,

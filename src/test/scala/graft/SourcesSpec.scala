@@ -264,46 +264,51 @@ class SourcesSpec extends AnyFunSuite {
     }
   }
 
-  test("manifested publish: version dirs + atomic pointer, old versions retire") {
+  test("manifested publish: each publish commits a generation; superseded ones retire") {
+    import graft.config.LakeCommit
     import graft.sources.Sources
     val d = java.nio.file.Files.createTempDirectory("graft_manifest").toString
     val t = s"$d/tbl"
     import spark.implicits._
-    val v1 = Sources.publishVersion(spark, t,
-      (1L to 10L).toDF("x"), keepVersions = 2)
-    assert(v1 == "v_00001" && Sources.currentVersion(spark, t).contains(v1))
+    def current = LakeCommit.currentGen(t, Sources.ManifestTable)
+    def gens = new java.io.File(t).list()
+      .filter(_.startsWith(s"${Sources.ManifestTable}.g")).toSet
+    val g1 = Sources.publishVersion(spark, t, (1L to 10L).toDF("x"))
+    assert(current.contains(g1))
     assert(Sources.readCurrent(spark, t).count() == 10)
-    val v2 = Sources.publishVersion(spark, t,
-      (1L to 20L).toDF("x"), keepVersions = 2)
-    assert(v2 == "v_00002")
+    val g2 = Sources.publishVersion(spark, t, (1L to 20L).toDF("x"))
+    assert(g2 != g1 && current.contains(g2))
     assert(Sources.readCurrent(spark, t).count() == 20)
-    Sources.publishVersion(spark, t, (1L to 30L).toDF("x"), keepVersions = 2)
+    val g3 = Sources.publishVersion(spark, t, (1L to 30L).toDF("x"))
     assert(Sources.readCurrent(spark, t).count() == 30)
-    // keep window honored: v_00001 retired, v_00002 kept for in-flight readers
-    val dirs = new java.io.File(t).list().filter(_.startsWith("v_")).sorted
-    assert(dirs.toSeq == Seq("v_00002", "v_00003"), dirs.mkString(","))
+    // superseded generations stay for the retention window, so a reader
+    // that resolved g1 or g2 before a commit keeps its files
+    val name = (g: String) => new java.io.File(g).getName
+    assert(gens == Set(g1, g2, g3).map(name), gens.mkString(","))
+    // past the window (0 here) only the serving generation is left
+    LakeCommit.cleanup(t, Sources.ManifestTable, retireMs = 0L)
+    assert(gens == Set(name(g3)), gens.mkString(","))
+    assert(current.contains(g3) && Sources.readCurrent(spark, t).count() == 30)
   }
 
-  test("dangling staged dir never counts against keepVersions (r9 advice): " +
-    "the superseded CURRENT version keeps its grace window") {
+  test("crashed stage: uncommitted generation stays invisible; next publish succeeds") {
+    import graft.config.LakeCommit
     import graft.sources.Sources
     val d = java.nio.file.Files.createTempDirectory("graft_dangling").toString
     val t = s"$d/tbl"
     import spark.implicits._
-    Sources.publishVersion(spark, t, (1L to 10L).toDF("x"), keepVersions = 2)
-    Sources.publishVersion(spark, t, (1L to 20L).toDF("x"), keepVersions = 2)
-    // crashed publish: v_00003 fully staged, pointer never swapped
-    (1L to 99L).toDF("x").write.parquet(s"$t/v_00003")
-    val v = Sources.publishVersion(spark, t,
-      (1L to 30L).toDF("x"), keepVersions = 2)
-    // the dangling dir must not displace v_00002 (the version an
-    // in-flight reader may still hold) from the keep window; the
-    // partial dir itself is junk and gets cleaned; the new version
-    // number advances past the dangling name
-    assert(v == "v_00004", v)
-    val dirs = new java.io.File(t).list().filter(_.startsWith("v_")).sorted
-    assert(dirs.toSeq == Seq("v_00002", "v_00004"), dirs.mkString(","))
+    val g1 = Sources.publishVersion(spark, t, (1L to 10L).toDF("x"))
+    // crashed publish: a complete stage written, never committed
+    val crashed = LakeCommit.stage(t, Sources.ManifestTable)
+    (1L to 99L).toDF("x").write.parquet(crashed)
+    assert(LakeCommit.currentGen(t, Sources.ManifestTable).contains(g1))
+    assert(Sources.readCurrent(spark, t).count() == 10)
+    val g2 = Sources.publishVersion(spark, t, (1L to 30L).toDF("x"))
+    assert(g2 != crashed &&
+      LakeCommit.currentGen(t, Sources.ManifestTable).contains(g2))
     assert(Sources.readCurrent(spark, t).count() == 30)
+    // the superseded generation keeps its retention window
+    assert(new java.io.File(g1).isDirectory)
   }
 
   test("crash window: a reader concurrent with publishes/compactions never " +
@@ -315,7 +320,7 @@ class SourcesSpec extends AnyFunSuite {
     // invariant per version i: exactly 100·i rows, every row's tag == i
     def frame(i: Int) =
       (1 to 100 * i).map(_ => i).toDF("tag")
-    Sources.publishVersion(spark, t, frame(1), keepVersions = 6)
+    Sources.publishVersion(spark, t, frame(1))
     @volatile var writerDone = false
     val violations = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val reader = new Thread(() => {
@@ -337,12 +342,13 @@ class SourcesSpec extends AnyFunSuite {
     })
     reader.start()
     for (i <- 2 to 8) {
-      Sources.publishVersion(spark, t, frame(i), keepVersions = 6)
-      if (i % 3 == 0) Sources.compactManifested(spark, t, keepVersions = 6)
+      Sources.publishVersion(spark, t, frame(i))
+      if (i % 3 == 0) Sources.compactManifested(spark, t)
     }
-    // simulate a crash MID-publish: a staged version dir with NO pointer
-    // swap — readers must keep seeing the last published version
-    frame(99).write.parquet(s"$t/v_90000")
+    // simulate a crash MID-publish: a staged generation with NO commit —
+    // readers must keep seeing the last published version
+    frame(99).write.parquet(
+      graft.config.LakeCommit.stage(t, Sources.ManifestTable))
     val before = Sources.readCurrent(spark, t).groupBy("tag").count().collect()
     writerDone = true
     reader.join(60000)
