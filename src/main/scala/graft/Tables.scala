@@ -24,7 +24,10 @@ object Tables {
     * every action still scans the parquet files; nothing about the DATA
     * is cached. Keyed on the session so test sessions and the bench
     * session never share plans; bounded by #sessions × #dirs × 10
-    * tables. */
+    * tables. A cached plan keeps the file listing it was built with, so
+    * it serves immutable inputs only (the harness tables); a directory
+    * that grows between runs loads through [[graft.config.RunConfig]],
+    * which calls [[load]]. */
   private val planCache =
     new java.util.concurrent.ConcurrentHashMap[
       (SparkSession, String, String), DataFrame]
@@ -33,7 +36,9 @@ object Tables {
     planCache.computeIfAbsent((spark, sfDir, name),
       _ => load(spark, sfDir, name))
 
-  private def load(
+  /** Plan `<sfDir>/<name>.parquet` afresh (new file listing), decoding
+    * `events.ts` to microsecond timestamps. */
+  private[graft] def load(
       spark: SparkSession, sfDir: String, name: String): DataFrame = {
     if (name == "events") {
       // events.ts has shipped in two physical encodings across testdata

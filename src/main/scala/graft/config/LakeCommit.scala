@@ -10,9 +10,10 @@ import org.apache.spark.sql.SparkSession
   * deployment keeps its lake on S3/GCS, where directory rename is neither
   * atomic nor cheap. Every versioned table commits here instead: the IVF
   * and PQ indexes, MaintLog, SketchRegistry, AnalyticFrames, LakeCache
-  * and the `Sources` manifested tables behind `Pipeline.ManifestedIO`.
-  * The in-place writers (`Pipeline.InPlaceIO`, the plain-parquet sinks,
-  * `Sources.compactSmallFiles`) keep no versions and do not use it.
+  * and the `Sources` manifested tables that hold every `Pipeline` lake
+  * table. The plain-parquet sinks (`Sources.sinkPartitioned`,
+  * `sinkParquet`) and `Sources.compactSmallFiles` keep no versions and do
+  * not use it.
   *
   * The protocol is the manifest-pointer commit the big table formats use
   * (Iceberg's version files, Delta's log): writers STAGE a complete generation

@@ -1,7 +1,8 @@
 package graft.config
 
 import graft.operators.Etl
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import graft.sources.Sources
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.{KllFunctions, KmvFunctions}
 
@@ -13,104 +14,54 @@ import org.apache.spark.sql.graft.{KllFunctions, KmvFunctions}
   *     → windowed `events` scan (filters pushed to parquet)
   *     → the standard aggregate DAG: sessions (R3) → monthly usage (R4)
   *       → user lifetime (R5)
-  *     → month-partitioned parquet under `outDir/<table>/` (R2's
-  *       warehouse-table analog; partition pruning serves month-range
-  *       readers)
+  *     → manifested tables under `outDir/<table>/` (R2's warehouse-table
+  *       analog; calendar tables keep one `__part=` state dir per month or
+  *       day, so month-range readers prune at listing time)
   *
   * Re-runs REBUILD each table — the reference rebuilds its aggregate
   * tables per run, and idempotent rebuild beats incremental mutation for
-  * a lake (PipelineSpec pins rerun-idempotence). How a rebuild or an
-  * incremental commit LANDS is the [[LakeIO]] strategy: in-place
-  * overwrite (historical default) or [[LakeCommit]] manifest commits (no
-  * torn-read hazard). At 100 TB each stage is the already-audited
-  * operator plan (one user_id exchange feeds both the session and
-  * monthly aggregates); the sink adds only the partition
-  * columns. Sessions use the skew-safe two-level plan: a config-selected
-  * window over real traffic is exactly where Zipfian hot users live.
+  * a lake (PipelineSpec pins rerun-idempotence). Every table lands
+  * through [[LakeCommit]]: state tables as a whole-table generation
+  * ([[Sources.publishVersion]]), calendar tables one generation per
+  * touched partition ([[Sources.publishPartitions]]). A reader sees each
+  * table, or each partition, wholly old or wholly new, and a commit
+  * never overwrites the files its input frame reads, so no maintainer
+  * needs a materialization barrier. Calendar partitioning is append-only:
+  * a rebuild replaces the partitions it produces and leaves absent ones
+  * in place. At 100 TB each stage is the already-audited operator plan
+  * (one user_id exchange feeds both the session and monthly
+  * aggregates). Sessions use the skew-safe two-level plan: a
+  * config-selected window over real traffic is exactly where Zipfian hot
+  * users live.
   */
 object Pipeline {
 
   final case class TableResult(table: String, rows: Long, path: String)
 
-  /** Commit/read strategy for the maintained lake tables (round 9 —
-    * VERDICT r8 #7). The MERGE LOGIC of every maintainer is written once;
-    * what varies is how state is read back and how a commit lands:
-    *
-    *  - [[InPlaceIO]] — the historical path: plain parquet dirs,
-    *    dynamic-partition-overwrite for partition replacement, and a
-    *    `localCheckpoint()` materialization barrier before any commit
-    *    that rewrites the very files its input frame reads.
-    *  - [[ManifestedIO]] — the atomic path: unpartitioned state tables
-    *    go through the whole-table manifest ([[graft.sources.Sources.publishVersion]]),
-    *    partitioned calendar tables through the PARTITION-LEVEL manifest
-    *    ([[graft.sources.Sources.publishPartitions]]) so an incremental
-    *    run stages only the touched partitions and commits each one
-    *    atomically — a concurrent reader sees every partition either
-    *    wholly old or wholly new, and NO materialization barrier is
-    *    needed because a staged generation never overlaps the files the
-    *    input frame reads (the in-place path's torn-read hazard is
-    *    structural, not incidental).
-    *
-    * Contract for ManifestedIO partitioned tables: append-only calendar
-    * partitioning (a full rebuild replaces the partitions it produces and
-    * leaves absent ones in place — months never vanish from an
-    * append-only stream).
-    */
-  sealed trait LakeIO {
-    def read(spark: SparkSession, outDir: String, table: String): DataFrame
-    def overwrite(df: DataFrame, partitionCol: Option[String], path: String): TableResult
-    def replacePartitions(df: DataFrame, path: String, partCol: String): Unit
-    def materialize(df: DataFrame): DataFrame
-  }
+  /** The only value of the trailing `io` argument of [[run]], the
+    * maintainers and [[reachOverlap]]. It selects nothing: every table
+    * lands through [[LakeCommit]]. The argument is kept only so that call
+    * sites that pass it, such as `run(spark, cfg, dir, ManifestedIO)`,
+    * still compile. */
+  case object ManifestedIO
 
-  case object InPlaceIO extends LakeIO {
-    def read(spark: SparkSession, outDir: String, table: String): DataFrame =
-      spark.read.parquet(s"$outDir/$table")
-    def overwrite(df: DataFrame, partitionCol: Option[String], path: String): TableResult =
-      write(df, partitionCol, path)
-    def replacePartitions(df: DataFrame, path: String, partCol: String): Unit =
-      writeDynamic(df, path, partCol)
-    def materialize(df: DataFrame): DataFrame = df.localCheckpoint()
-  }
-
-  case object ManifestedIO extends LakeIO {
-    def read(spark: SparkSession, outDir: String, table: String): DataFrame =
-      readManifested(spark, s"$outDir/$table", None)
-    def overwrite(df: DataFrame, partitionCol: Option[String], path: String): TableResult = {
-      val spark = df.sparkSession
-      val obs = org.apache.spark.sql.Observation(
-        s"publish_${path.split('/').last}")
-      val observed = df.observe(obs, count(lit(1)).as("rows"))
-      partitionCol match {
-        case Some(c) =>
-          graft.sources.Sources.publishPartitions(spark, path, observed, c)
-        case None =>
-          graft.sources.Sources.publishVersion(spark, path, observed)
-      }
-      TableResult(path.split('/').last, obs.get("rows").asInstanceOf[Long], path)
+  /** Publish `df` as the table at `path`: one generation per `partitionCol`
+    * value, or one whole-table generation. The row count rides the write
+    * pass through `observe`. */
+  private[graft] def publish(
+      df: DataFrame, partitionCol: Option[String], path: String): TableResult = {
+    val spark = df.sparkSession
+    val obs = org.apache.spark.sql.Observation(s"publish_${path.split('/').last}")
+    val observed = df.observe(obs, count(lit(1)).as("rows"))
+    partitionCol match {
+      case Some(c) => Sources.publishPartitions(spark, path, observed, c)
+      case None => Sources.publishVersion(spark, path, observed)
     }
-    def replacePartitions(df: DataFrame, path: String, partCol: String): Unit =
-      graft.sources.Sources.publishPartitions(df.sparkSession, path, df, partCol)
-    // a staged generation never overlaps its input's files — no barrier
-    def materialize(df: DataFrame): DataFrame = df
+    TableResult(path.split('/').last, obs.get("rows").asInstanceOf[Long], path)
   }
-
-  /** Layout-detecting manifested read: a table-level manifest means the
-    * whole-table layout; otherwise the partition-level one (pruned at
-    * LISTING time when `partValues` is given). */
-  private def readManifested(spark: SparkSession, path: String,
-      partValues: Option[Seq[String]]): DataFrame =
-    LakeCommit.currentGen(path, graft.sources.Sources.ManifestTable) match {
-      case Some(gen) => spark.read.parquet(gen)
-      case None =>
-        graft.sources.Sources.readCurrentPartitions(spark, path, partValues)
-    }
-
-  def run(spark: SparkSession, cfg: RunConfig, outDir: String): Seq[TableResult] =
-    run(spark, cfg, outDir, InPlaceIO)
 
   def run(spark: SparkSession, cfg: RunConfig, outDir: String,
-      io: LakeIO): Seq[TableResult] = {
+      io: ManifestedIO.type = ManifestedIO): Seq[TableResult] = {
     require(cfg.tables.contains("events"),
       "Pipeline.run: the aggregate DAG is built from 'events'; select it in RunConfig")
     val ev = cfg.table(spark, "events")
@@ -135,20 +86,20 @@ object Pipeline {
           KllFunctions.kllQuantile(col("value_kll"), lit(0.5)))
 
       Seq(
-        io.overwrite(sessions.withColumn("month", date_trunc("month", col("session_start"))),
+        publish(sessions.withColumn("month", date_trunc("month", col("session_start"))),
           Some("month"), s"$outDir/sessions"),
-        io.overwrite(monthly, Some("month"), s"$outDir/monthly_usage"),
-        io.overwrite(lifetime, None, s"$outDir/user_lifetime"),
+        publish(monthly, Some("month"), s"$outDir/monthly_usage"),
+        publish(lifetime, None, s"$outDir/user_lifetime"),
         // round-5 continuation: the daily churn/retention ledger joins
         // the lake (same one-definition rule — Etl.churnDaily is the
         // declared etl_churn_daily key)
-        io.overwrite(Etl.churnDaily(ev), Some("day"), s"$outDir/churn_daily"),
+        publish(Etl.churnDaily(ev), Some("day"), s"$outDir/churn_daily"),
         // round-7 continuation: per-type audience-reach KMV sketches —
         // the FIFTH incrementally-maintained table, and the first whose
         // state enables cross-row set algebra at read time (pairwise
         // audience overlap via reachOverlap) that no scalar aggregate
         // state could answer
-        io.overwrite(typeReach(ev), None, s"$outDir/type_reach"))
+        publish(typeReach(ev), None, s"$outDir/type_reach"))
     } finally ev.unpersist()
   }
 
@@ -171,9 +122,9 @@ object Pipeline {
     * EXACTLY the full rebuild, not an approximation of it. */
   def runIncrementalReach(
       spark: SparkSession, cfg: RunConfig, outDir: String,
-      batchStart: String, io: LakeIO = InPlaceIO): TableResult = {
+      batchStart: String, io: ManifestedIO.type = ManifestedIO): TableResult = {
     val path = s"$outDir/type_reach"
-    val prior = io.read(spark, outDir, "type_reach")
+    val prior = readTableCurrent(spark, outDir, "type_reach")
     val batch = typeReach(
       cfg.copy(startDate = None).table(spark, "events")
         .where(col("ts") >= lit(batchStart).cast("timestamp")))
@@ -188,17 +139,16 @@ object Pipeline {
           .as("reach_kmv"))
       .withColumn("users_est",
         KmvFunctions.kmvEstimate(col("reach_kmv")))
-    // in-place: materialize BEFORE overwriting the source files
-    io.overwrite(io.materialize(merged), None, path)
-    TableResult("type_reach", io.read(spark, outDir, "type_reach").count(), path)
+    publish(merged, None, path)
+    TableResult("type_reach", readTableCurrent(spark, outDir, "type_reach").count(), path)
   }
 
   /** Read-time set algebra over the published sketches: pairwise audience
     * overlap estimates — the query the KMV state exists to answer without
     * rescanning history. */
   def reachOverlap(spark: SparkSession, outDir: String,
-      io: LakeIO = InPlaceIO): DataFrame = {
-    val t = io.read(spark, outDir, "type_reach")
+      io: ManifestedIO.type = ManifestedIO): DataFrame = {
+    val t = readTableCurrent(spark, outDir, "type_reach")
     val a = t.select(col("event_type").as("t1"), col("reach_kmv").as("ka"),
       col("users_est").as("est1"))
     val b = t.select(col("event_type").as("t2"), col("reach_kmv").as("kb"),
@@ -211,8 +161,8 @@ object Pipeline {
 
   /** Incremental maintenance of the published `monthly_usage` table for an
     * append-only event stream (R9: per-run delta loads) — recompute ONLY
-    * the months the new batch touches and overwrite ONLY those partitions
-    * (dynamic partition overwrite; untouched months keep their files).
+    * the months the new batch touches and commit ONLY those partitions
+    * (untouched months keep their generation and files).
     *
     * Exactness under the session gap rule: a month's `n_sessions` counts
     * sessions STARTING in it, and whether the month's first per-user event
@@ -222,7 +172,7 @@ object Pipeline {
     * the full rebuild for those months (an event older than the gap
     * cannot suppress a start; appends cannot change earlier months at
     * all). PipelineSpec pins equality with a full rebuild around a random
-    * split and that untouched partitions are physically untouched.
+    * split and that untouched partitions keep their generation.
     *
     * The driver-side `collect` is the affected-MONTH list (bounded by the
     * calendar, not the data). At 100 TB this is the nightly delta-load
@@ -231,7 +181,7 @@ object Pipeline {
     */
   def runIncrementalMonthly(
       spark: SparkSession, cfg: RunConfig, outDir: String,
-      batchStart: String, io: LakeIO = InPlaceIO): TableResult = {
+      batchStart: String, io: ManifestedIO.type = ManifestedIO): TableResult = {
     val path = s"$outDir/monthly_usage"
     // The cfg's startDate is STRIPPED for the recompute scan: a caller
     // passing startDate = batchStart (the natural delta-load config)
@@ -250,9 +200,9 @@ object Pipeline {
       affected.map(_.getTime).min - Etl.SessionGapMinutes * 60L * 1000L)
     val recomputed = Etl.monthlyUsage(ev.where(col("ts") >= lit(lookbackStart)))
       .where(col("month").isin(affected.toSeq: _*))
-    io.replacePartitions(recomputed, path, "month")
+    Sources.publishPartitions(spark, path, recomputed, "month")
     TableResult("monthly_usage",
-      io.read(spark, outDir, "monthly_usage").count(), path)
+      readTableCurrent(spark, outDir, "monthly_usage").count(), path)
   }
 
   /** Batch-local session summaries: sessionize the batch ALONE (skew-safe
@@ -315,11 +265,10 @@ object Pipeline {
     *
     * Only partitions holding a changed row (a bridged session keeps its
     * OLD start month — that partition is rewritten; new sessions land in
-    * their own months) are overwritten; the new partition content is
-    * published-minus-replaced-plus-changed, localCheckpoint-ed before the
-    * dynamic overwrite because it is derived from the very files being
-    * replaced. At 100 TB the cost is one batch scan + one pass over the
-    * published SESSIONS table (to find each user's tail) — the raw event
+    * their own months) are republished; the new partition content is
+    * published-minus-replaced-plus-changed. At 100 TB the cost is one
+    * batch scan + one pass over the published SESSIONS table (to find
+    * each user's tail) — the raw event
     * history is never rescanned, and the sessions table is orders of
     * magnitude smaller than the event stream it summarizes. ScaleSmoke
     * measures the merge at 5× cheaper than the full rebuild on a 60M-event
@@ -327,32 +276,29 @@ object Pipeline {
     */
   def runIncrementalSessions(
       spark: SparkSession, cfg: RunConfig, outDir: String,
-      batchStart: String, io: LakeIO = InPlaceIO): TableResult = {
+      batchStart: String, io: ManifestedIO.type = ManifestedIO): TableResult = {
     val path = s"$outDir/sessions"
-    val prior = io.read(spark, outDir, "sessions")
+    val prior = readTableCurrent(spark, outDir, "sessions")
       .select("user_id", "session_id", "session_start", "session_end", "n_events")
     val batch = cfg.copy(startDate = None).table(spark, "events")
       .where(col("ts") >= lit(batchStart).cast("timestamp"))
     val batchSessions = batchSessionSummaries(batch)
     if (batchSessions.isEmpty)
-      return TableResult("sessions", io.read(spark, outDir, "sessions").count(), path)
+      return TableResult("sessions", readTableCurrent(spark, outDir, "sessions").count(), path)
     val changed = mergeSessions(prior, batchSessions)
     val monthOf = date_trunc("month", col("session_start"))
     val affected = changed.select(monthOf.as("m")).distinct()
       .collect().map(_.getTimestamp(0)).toSeq
     // published rows of the affected months, minus the rows a merged
     // session replaces (same (user_id, session_id) key), plus the changes
-    // in-place: materialize BEFORE overwriting the source files (the
-    // content derives from the very files dynamic overwrite replaces);
-    // manifested: staged generations never overlap the input — no barrier
-    val content = io.materialize(prior
+    val content = prior
       .where(monthOf.isin(affected: _*))
       .join(changed.select("user_id", "session_id"),
         Seq("user_id", "session_id"), "left_anti")
       .unionByName(changed)
-      .withColumn("month", monthOf))
-    io.replacePartitions(content, path, "month")
-    TableResult("sessions", io.read(spark, outDir, "sessions").count(), path)
+      .withColumn("month", monthOf)
+    Sources.publishPartitions(spark, path, content, "month")
+    TableResult("sessions", readTableCurrent(spark, outDir, "sessions").count(), path)
   }
 
   /** Incremental maintenance of the published `user_lifetime` table: pure
@@ -364,14 +310,14 @@ object Pipeline {
     * from the merged sketch. No event history rescan for ANY lifetime
     * indicator, including the one that used to require exact recompute —
     * exactly the HLL-style partial-aggregate posture. The table is one
-    * row per user (unpartitioned); the merged frame is
-    * localCheckpoint-ed, then the table is overwritten.
+    * row per user (unpartitioned); the merged frame is published as its
+    * next generation.
     */
   def runIncrementalLifetime(
       spark: SparkSession, cfg: RunConfig, outDir: String,
-      batchStart: String, io: LakeIO = InPlaceIO): TableResult = {
+      batchStart: String, io: ManifestedIO.type = ManifestedIO): TableResult = {
     val path = s"$outDir/user_lifetime"
-    val prior = io.read(spark, outDir, "user_lifetime")
+    val prior = readTableCurrent(spark, outDir, "user_lifetime")
     val batch = cfg.copy(startDate = None).table(spark, "events")
       .where(col("ts") >= lit(batchStart).cast("timestamp"))
       .groupBy(col("user_id"))
@@ -390,10 +336,9 @@ object Pipeline {
           .as("value_kll"))
       .withColumn("p50_value",
         KllFunctions.kllQuantile(col("value_kll"), lit(0.5)))
-    // in-place: materialize BEFORE overwriting the source files
-    io.overwrite(io.materialize(merged), None, path)
+    publish(merged, None, path)
     TableResult("user_lifetime",
-      io.read(spark, outDir, "user_lifetime").count(), path)
+      readTableCurrent(spark, outDir, "user_lifetime").count(), path)
   }
 
   /** Incremental maintenance of the published `churn_daily` ledger
@@ -410,13 +355,13 @@ object Pipeline {
     * not — the two incremental runs can execute in either order.
     * Appends cannot change ledger rows before the batch day (activity is
     * append-monotone and day(batch) ≥ batch day), so only partitions
-    * ≥ day(batchStart) are recomputed and dynamically overwritten;
-    * untouched day partitions keep their files (PipelineSpec pins
+    * ≥ day(batchStart) are recomputed and republished; untouched day
+    * partitions keep their generation and files (PipelineSpec pins
     * equality with the full rebuild and the untouched-partition law).
     */
   def runIncrementalChurn(
       spark: SparkSession, cfg: RunConfig, outDir: String,
-      batchStart: String, io: LakeIO = InPlaceIO): TableResult = {
+      batchStart: String, io: ManifestedIO.type = ManifestedIO): TableResult = {
     val path = s"$outDir/churn_daily"
     val startDay = java.time.LocalDate.parse(batchStart.take(10))
     val lookback =
@@ -435,7 +380,7 @@ object Pipeline {
       .distinct()
     // all-history first day per window user: published lifetime state ∧
     // the window's own min (least skips the null side for new users)
-    val priorFirst = io.read(spark, outDir, "user_lifetime")
+    val priorFirst = readTableCurrent(spark, outDir, "user_lifetime")
       .select(col("user_id"), to_date(col("first_ts")).as("pf"))
     val first = act.groupBy("user_id").agg(min(col("day")).as("wf"))
       .join(priorFirst, Seq("user_id"), "left")
@@ -454,76 +399,30 @@ object Pipeline {
         count(when(col("prev") === date_sub(col("day"), 1), 1))
           .as("n_retained"))
     val wd = org.apache.spark.sql.expressions.Window.orderBy("day")
-    // in-place: materialize BEFORE touching the target files
-    val ledger = io.materialize(daily
+    val ledger = daily
       .withColumn("n_churned",
         when(lag(col("day"), 1).over(wd) === date_sub(col("day"), 1),
           lag(col("n_active"), 1).over(wd) - col("n_retained")))
-      .where(col("day") >= lit(java.sql.Date.valueOf(startDay))))
-    io.replacePartitions(ledger, path, "day")
-    TableResult("churn_daily", io.read(spark, outDir, "churn_daily").count(), path)
+      .where(col("day") >= lit(java.sql.Date.valueOf(startDay)))
+    Sources.publishPartitions(spark, path, ledger, "day")
+    TableResult("churn_daily", readTableCurrent(spark, outDir, "churn_daily").count(), path)
   }
 
-  /** Dynamic partition overwrite of `df` (partitioned on `partCol`) at
-    * `path`: only the partitions present in `df` are replaced; every
-    * other partition's files are physically untouched.
-    */
-  private def writeDynamic(
-      df: DataFrame, path: String, partCol: String = "month"): Unit = {
-    val spark = df.sparkSession
-    val prevMode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try df.write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(path)
-    finally prevMode match {
-      case Some(m) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", m)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-  }
-
-  private def write(df: DataFrame, partitionCol: Option[String], path: String): TableResult = {
-    // the published-row count rides the WRITE pass via observe() —
-    // re-reading the table just to count it costs a full extra scan of
-    // the output at 100 TB. Observation blocks until the write action
-    // finishes, then hands back the in-flight metric. The overwrite mode
-    // is pinned STATIC for this full-rebuild write: under a caller
-    // session's partitionOverwriteMode=dynamic, Overwrite+partitionBy
-    // would replace only df's partitions and the observed input count
-    // would no longer equal the published table count.
-    val spark = df.sparkSession
-    val prevMode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
-    try {
-      val obs = org.apache.spark.sql.Observation(s"write_${path.split('/').last}")
-      val w = df.observe(obs, count(lit(1)).as("rows")).write.mode(SaveMode.Overwrite)
-      partitionCol.fold(w)(c => w.partitionBy(c)).parquet(path)
-      TableResult(path.split('/').last, obs.get("rows").asInstanceOf[Long], path)
-    } finally prevMode match {
-      case Some(m) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", m)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-  }
-
-  /** Current-version reader for tables published with [[ManifestedIO]].
-    * Under the partition-level layout a `month` filter prunes at LISTING
-    * time (the unwanted partitions never reach a scan); the residual
-    * `where` keeps the row-level contract identical across layouts. */
+  /** Current-version reader for the published tables. A table-level
+    * manifest means the whole-table layout; otherwise the partition-level
+    * one, where a `month` filter prunes at LISTING time (the unwanted
+    * partitions never reach a scan); the residual `where` keeps the
+    * row-level contract identical across layouts. */
   def readTableCurrent(spark: SparkSession, outDir: String, table: String,
       month: Option[String] = None): DataFrame = {
-    // partition dir values are the cast-to-string timestamp images
-    val partVals = month.map(m =>
-      Seq(if (m.length == 10) s"$m 00:00:00" else m))
-    val base = readManifested(spark, s"$outDir/$table", partVals)
-    month.fold(base)(m => base.where(col("month") === lit(m).cast("timestamp")))
-  }
-
-  /** Rehydrate a published table (month-pruned when `month` is given) —
-    * what a downstream reader does; the month filter must prune partitions,
-    * not scan them (Sources.sinkPartitioned posture, pinned in
-    * PipelineSpec).
-    */
-  def readTable(spark: SparkSession, outDir: String, table: String,
-      month: Option[String] = None): DataFrame = {
-    val base = spark.read.parquet(s"$outDir/$table")
+    val path = s"$outDir/$table"
+    val base = LakeCommit.currentGen(path, Sources.ManifestTable) match {
+      case Some(gen) => spark.read.parquet(gen)
+      case None =>
+        // partition dir values are the cast-to-string timestamp images
+        Sources.readCurrentPartitions(spark, path,
+          month.map(m => Seq(if (m.length == 10) s"$m 00:00:00" else m)))
+    }
     month.fold(base)(m => base.where(col("month") === lit(m).cast("timestamp")))
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
-import graft.config.{Pipeline, RunConfig}
+import graft.config.{LakeCommit, Pipeline, RunConfig}
+import graft.sources.Sources
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,6 +17,20 @@ class PipelineSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
 
+  private def gen(dir: String) = LakeCommit.currentGen(dir, Sources.ManifestTable)
+
+  /** The `__part=<prefix>…` state dirs of `table`, by name. */
+  private def partDirs(out: String, table: String, prefix: String = "") =
+    new java.io.File(s"$out/$table").listFiles().toSeq
+      .filter(_.getName.startsWith(s"__part=$prefix")).sortBy(_.getName)
+
+  /** Serving generation and its (file, mtime) set per partition dir. */
+  private def partState(out: String, table: String, prefix: String) =
+    partDirs(out, table, prefix).map { d =>
+      val g = gen(d.getPath).get
+      g -> new java.io.File(g).listFiles().map(f => f.getName -> f.lastModified()).toSet
+    }
+
   test("config-driven run publishes partitioned aggregates, idempotently") {
     val out = Files.createTempDirectory("graft_pipeline").toString
     val cfg = RunConfig(sf, Seq("events"),
@@ -29,7 +44,7 @@ class PipelineSpec extends AnyFunSuite {
     // published churn ledger must equal the declared operator over the
     // same window (one-definition rule: both are Etl.churnDaily)
     val churnDirect = operators.Etl.churnDaily(cfg.table(spark, "events"))
-    val churnPub = Pipeline.readTable(spark, out, "churn_daily")
+    val churnPub = Pipeline.readTableCurrent(spark, out, "churn_daily")
     assert(churnPub.count() == churnDirect.count())
     assert(churnPub.agg(sum("n_active"), sum("n_new")).head.toSeq ==
       churnDirect.agg(sum("n_active"), sum("n_new")).head.toSeq)
@@ -39,19 +54,22 @@ class PipelineSpec extends AnyFunSuite {
     val direct = operators.Etl.sessionized(cfg.table(spark, "events"))
       .groupBy(col("user_id"), col("session_id"))
       .agg(count(lit(1)).as("n_events"))
-    val published = Pipeline.readTable(spark, out, "sessions")
+    val published = Pipeline.readTableCurrent(spark, out, "sessions")
     assert(published.count() == direct.count())
     assert(published.agg(sum("n_events")).head.getLong(0) ==
       direct.agg(sum("n_events")).head.getLong(0))
 
-    // month partitioning is physical, and a month filter prunes at scan
-    assert(new java.io.File(s"$out/monthly_usage").listFiles()
-      .exists(_.getName.startsWith("month=")))
-    val pruned = Pipeline.readTable(spark, out, "monthly_usage",
+    // month partitioning is physical: one committed `__part=` state dir
+    // per month, and no table-level manifest
+    assert(partDirs(out, "monthly_usage").nonEmpty &&
+      partDirs(out, "monthly_usage").forall(d => gen(d.getPath).isDefined))
+    assert(gen(s"$out/monthly_usage").isEmpty)
+    // a month filter prunes at listing time: only that month's files scan
+    val pruned = Pipeline.readTableCurrent(spark, out, "monthly_usage",
       month = Some("2024-01-01"))
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [isnotnull(month"))
     assert(pruned.count() > 0)
+    assert(pruned.inputFiles.nonEmpty &&
+      pruned.inputFiles.forall(_.contains("__part=2024-01-01")))
 
     // rerun = rebuild: same rows, no append-duplication
     val again = Pipeline.run(spark, cfg, out)
@@ -84,7 +102,7 @@ class PipelineSpec extends AnyFunSuite {
       .coalesce(1).write.parquet(s"$d/events.parquet")
 
     def tableRows(out: String, table: String) =
-      Pipeline.readTable(spark, out, table)
+      Pipeline.readTableCurrent(spark, out, table)
         // month is derived; value_kll BYTES legitimately differ between a
         // one-pass build and an incremental merge (item order inside the
         // level-0 buffer) — the DECODED p50_value stays in the compared
@@ -102,9 +120,7 @@ class PipelineSpec extends AnyFunSuite {
     Pipeline.run(spark,
       RunConfig(d, Seq("events"), endDate = Some("2024-03-01")), outInc)
     def janState(table: String = "monthly_usage") =
-      new java.io.File(s"$outInc/$table").listFiles()
-        .filter(_.getName.startsWith("month=2024-01"))
-        .flatMap(_.listFiles()).map(f => f.getName -> f.lastModified()).toSet
+      partState(outInc, table, "2024-01")
     val janBefore = janState()
     val janSessionsBefore = janState("sessions")
     assert(janBefore.nonEmpty && janSessionsBefore.nonEmpty)
@@ -119,13 +135,19 @@ class PipelineSpec extends AnyFunSuite {
     // exact equality with the full rebuild — including user 42's March
     // row, whose n_sessions=0 needs the cross-boundary lookback
     assert(monthlyRows(outInc) == monthlyRows(outFull))
-    val u42mar = Pipeline.readTable(spark, outInc, "monthly_usage",
+    val march = Pipeline.readTableCurrent(spark, outInc, "monthly_usage",
       month = Some("2024-03-01"))
+    // listing-time pruning over a three-month table: only March's files
+    assert(partDirs(outInc, "monthly_usage").size == 3)
+    assert(march.inputFiles.nonEmpty &&
+      march.inputFiles.forall(_.contains("__part=2024-03")),
+      s"pruning leaked: ${march.inputFiles.mkString(", ")}")
+    val u42mar = march
       .where(col("user_id") === 42L).select("n_events", "n_sessions")
       .collect().head
     assert(u42mar.getLong(0) == 1L && u42mar.getLong(1) == 0L,
       "boundary-crossing session must not count as a March start")
-    // January partition files physically untouched by the incremental run
+    // January partition keeps its serving generation and its files
     assert(janState() == janBefore)
 
     // sessions: state-merge incremental == full rebuild, including user
@@ -138,7 +160,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(resS.rows > 0)
     assert(tableRows(outInc, "sessions") == tableRows(outFull, "sessions"))
     assert(janState("sessions") == janSessionsBefore,
-      "no January session changed, so its partition files must be untouched")
+      "no January session changed, so its partition must keep its generation")
 
     // lifetime: monoid merge (min/max/count combine + KLL sketch merge
     // for the p50_value indicator) == full rebuild — including the
@@ -150,7 +172,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(tableRows(outInc, "user_lifetime") == tableRows(outFull, "user_lifetime"))
     // belt-and-braces: the merged-sketch median column is populated and
     // matches the exact per-user lower-median recomputed from raw events
-    val medInc = Pipeline.readTable(spark, outInc, "user_lifetime")
+    val medInc = Pipeline.readTableCurrent(spark, outInc, "user_lifetime")
       .select("user_id", "p50_value").as[(Long, Double)].collect().toMap
     val exactMed = spark.read.parquet(s"$d/events.parquet")
       .groupBy(col("user_id"))
@@ -166,9 +188,7 @@ class PipelineSpec extends AnyFunSuite {
     // raw lookback + lifetime-state first-day fold == full rebuild.
     // Deliberately run AFTER runIncrementalLifetime absorbed the batch —
     // the least() first-day fold must be idempotent to the ordering.
-    val febState = new java.io.File(s"$outInc/churn_daily").listFiles()
-      .filter(_.getName.startsWith("day=2024-02"))
-      .flatMap(_.listFiles()).map(f => f.getName -> f.lastModified()).toSet
+    val febState = partState(outInc, "churn_daily", "2024-02")
     assert(febState.nonEmpty)
     val resC = Pipeline.runIncrementalChurn(
       spark, RunConfig(d, Seq("events"), startDate = Some("2024-03-01")),
@@ -176,11 +196,8 @@ class PipelineSpec extends AnyFunSuite {
     assert(resC.rows > 0)
     assert(tableRows(outInc, "churn_daily") == tableRows(outFull, "churn_daily"))
     // no February day can change under an append-only March batch, so
-    // its partition files must be physically untouched
-    assert(new java.io.File(s"$outInc/churn_daily").listFiles()
-      .filter(_.getName.startsWith("day=2024-02"))
-      .flatMap(_.listFiles()).map(f => f.getName -> f.lastModified()).toSet
-      == febState)
+    // each February day keeps its serving generation and its files
+    assert(partState(outInc, "churn_daily", "2024-02") == febState)
 
     // empty batch (heartbeat cycle past the data end): early return, no
     // rows claimed, ledger untouched
@@ -194,7 +211,7 @@ class PipelineSpec extends AnyFunSuite {
     // type_reach (the FIFTH incrementally-maintained table): KMV union is
     // bit-equal to the one-pass sketch (SketchLawsProps), so incremental
     // must equal full rebuild INCLUDING the sketch bytes
-    def reachRows(out: String) = Pipeline.readTable(spark, out, "type_reach")
+    def reachRows(out: String) = Pipeline.readTableCurrent(spark, out, "type_reach")
       .select(col("event_type"), base64(col("reach_kmv")), col("users_est"))
       .collect().map(_.toSeq).toSet
     val resR = Pipeline.runIncrementalReach(
@@ -278,11 +295,22 @@ class PipelineSpec extends AnyFunSuite {
       input.addData(byMonth(2)); q.processAllAvailable()
     } finally q.stop()
 
-    // the streamed lake == a from-scratch rebuild over all three months
+    // the streamed lake holds all three months and every ingested event:
+    // the maintainers read the input directory afresh on the reused
+    // session, so they see the files each batch appended
+    val ingested = byMonth.map(_.size.toLong).sum
+    val monthly = Pipeline.readTableCurrent(spark, out, "monthly_usage")
+    assert(monthly.select("month").distinct().count() == 3)
+    for (t <- Seq("monthly_usage", "user_lifetime"))
+      assert(Pipeline.readTableCurrent(spark, out, t).agg(sum("n_events"))
+        .head.getLong(0) == ingested, s"streamed $t lost events")
+
+    // the streamed lake == a from-scratch rebuild over all three months,
+    // built on a fresh session
     val outFull = Files.createTempDirectory("graft_stream_full").toString
-    Pipeline.run(spark, RunConfig(d, Seq("events")), outFull)
+    Pipeline.run(spark.newSession(), RunConfig(d, Seq("events")), outFull)
     def rowsOf(o: String, t: String) =
-      Pipeline.readTable(spark, o, t).drop("month", "value_kll")
+      Pipeline.readTableCurrent(spark, o, t).drop("month", "value_kll")
         .collect().map(_.toSeq).toSet
     for (t <- Seq("monthly_usage", "sessions", "user_lifetime", "churn_daily"))
       assert(rowsOf(out, t) == rowsOf(outFull, t),
@@ -304,9 +332,9 @@ class PipelineSpec extends AnyFunSuite {
       .withColumn("month_str", col("month").cast("string"))
     val outA = Files.createTempDirectory("graft_pub_inplace").toString
     val outB = Files.createTempDirectory("graft_pub_manifest").toString
-    // the same frame through both publish paths
-    val rPlain = monthly.write.mode("overwrite").parquet(s"$outA/monthly")
-    val r1 = Pipeline.ManifestedIO.overwrite(monthly, None, s"$outB/monthly")
+    // the same frame as a plain in-place parquet write and as a publish
+    monthly.write.mode("overwrite").parquet(s"$outA/monthly")
+    val r1 = Pipeline.publish(monthly, None, s"$outB/monthly")
     assert(r1.rows > 0)
     val plain = spark.read.parquet(s"$outA/monthly")
       .collect().map(_.toString).sorted
@@ -315,13 +343,12 @@ class PipelineSpec extends AnyFunSuite {
     assert(manifested.toSeq == plain.toSeq)
     assert(manifested.length == r1.rows)
     // a rebuild commits a new generation and the reader follows it
-    def gen = graft.config.LakeCommit.currentGen(s"$outB/monthly",
-      graft.sources.Sources.ManifestTable)
-    val g1 = gen
-    val r2 = Pipeline.ManifestedIO.overwrite(monthly.limit(3), None, s"$outB/monthly")
+    val g1 = gen(s"$outB/monthly")
+    val r2 = Pipeline.publish(monthly.limit(3), None, s"$outB/monthly")
     assert(r2.rows == 3)
     assert(Pipeline.readTableCurrent(spark, outB, "monthly").count() == 3)
-    assert(g1.isDefined && gen.isDefined && gen != g1)
+    val g2 = gen(s"$outB/monthly")
+    assert(g1.isDefined && g2.isDefined && g2 != g1)
   }
 
   test("incremental corpus build publishes through the manifested lake; " +
@@ -337,11 +364,11 @@ class PipelineSpec extends AnyFunSuite {
     // training consumer reads the UNION of the two current generations
     val corpusPacked = graft.operators.Llm
       .corpusBuild(docsDf.where(col("doc_id") < bound))
-    val rc = Pipeline.ManifestedIO.overwrite(corpusPacked, None, s"$out/packed_corpus")
+    val rc = Pipeline.publish(corpusPacked, None, s"$out/packed_corpus")
     val batchPacked = graft.operators.Llm
       .corpusBuildIncremental(spark, regDir,
         docsDf.where(col("doc_id") >= bound))
-    val r1 = Pipeline.ManifestedIO.overwrite(batchPacked, None, s"$out/packed_batch")
+    val r1 = Pipeline.publish(batchPacked, None, s"$out/packed_batch")
     assert(rc.rows > 0 && r1.rows > 0)
     // concurrent reader through a re-publish: every read must land on a
     // WHOLE version's count — the commit is atomic, so a reader
@@ -354,8 +381,7 @@ class PipelineSpec extends AnyFunSuite {
     })
     reader.start()
     try {
-      val r2 = Pipeline.ManifestedIO.overwrite(
-        batchPacked.limit(3), None, s"$out/packed_batch")
+      val r2 = Pipeline.publish(batchPacked.limit(3), None, s"$out/packed_batch")
       assert(r2.rows == 3)
       Thread.sleep(300) // let the reader observe the new generation too
     } finally { stop = true; reader.join() }
@@ -371,76 +397,59 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("manifested lake (r9): per-partition atomic incremental maintenance == " +
-    "in-place twin; untouched partitions keep their version; concurrent " +
+    "full rebuild; untouched partitions keep their version; concurrent " +
     "reader survives publish and compaction") {
-    import graft.config.LakeCommit
-    import graft.sources.Sources
-    def gen(dir: String) = LakeCommit.currentGen(dir, Sources.ManifestTable)
     // sf0.001 events span January 2024 only — split mid-month
     val pre = RunConfig(sf, Seq("events"), endDate = Some("2024-01-16"))
     val batch = RunConfig(sf, Seq("events"), startDate = Some("2024-01-16"))
-    val outP = Files.createTempDirectory("graft_lake_inplace").toString
     val outM = Files.createTempDirectory("graft_lake_manifest").toString
-    Pipeline.run(spark, pre, outP)
-    Pipeline.run(spark, pre, outM, Pipeline.ManifestedIO)
+    Pipeline.run(spark, pre, outM)
 
     // layout law: calendar tables land as PARTITION-LEVEL manifests (one
     // state dir per month/day dir), state tables as whole-table manifests
-    def partDirs(t: String) = new java.io.File(s"$outM/$t").listFiles()
-      .filter(_.getName.startsWith("__part=")).sortBy(_.getName)
-    assert(partDirs("monthly_usage").nonEmpty && partDirs("churn_daily").nonEmpty)
-    assert(partDirs("monthly_usage").forall(d => gen(d.getPath).isDefined))
+    assert(partDirs(outM, "monthly_usage").nonEmpty && partDirs(outM, "churn_daily").nonEmpty)
+    assert(partDirs(outM, "monthly_usage").forall(d => gen(d.getPath).isDefined))
     assert(gen(s"$outM/monthly_usage").isEmpty)
     assert(gen(s"$outM/user_lifetime").isDefined)
     assert(gen(s"$outM/type_reach").isDefined)
 
     val tables = Seq("sessions", "monthly_usage", "user_lifetime",
       "churn_daily", "type_reach")
-    def rowsOf(out: String, t: String, io: Pipeline.LakeIO) = {
-      // a parquet partition column reads back at the END of the schema;
-      // the manifested layout keeps the authored order — normalize
-      val df = io.read(spark, out, t).drop("month", "value_kll", "reach_kmv")
+    def rowsOf(out: String, t: String) = {
+      val df = Pipeline.readTableCurrent(spark, out, t)
+        .drop("month", "value_kll", "reach_kmv")
       df.select(df.columns.sorted.map(col): _*)
         .collect().map(_.toSeq).toSet
     }
-    for (t <- tables)
-      assert(rowsOf(outM, t, Pipeline.ManifestedIO) ==
-        rowsOf(outP, t, Pipeline.InPlaceIO), s"full rebuild diverged on $t")
 
     // capture an untouchable early-January churn DAY partition and the
     // (single, touched) month partition's generation BEFORE the batch
-    val day5Dir = partDirs("churn_daily")
-      .find(_.getName.startsWith("__part=2024-01-05")).get
-    val day5GenBefore = gen(day5Dir.getPath).get
-    val day5FilesBefore = new java.io.File(day5GenBefore)
-      .listFiles().map(f => f.getName -> f.lastModified()).toSet
-    val janDir = partDirs("monthly_usage")
-      .find(_.getName.startsWith("__part=2024-01")).get
+    val day5Before = partState(outM, "churn_daily", "2024-01-05")
+    assert(day5Before.size == 1)
+    val janDir = partDirs(outM, "monthly_usage", "2024-01").head
     val janGenBefore = gen(janDir.getPath).get
 
     // a reader that resolved the CURRENT monthly table before the batch
     // lands must keep reading the pre-batch content through the commit
     // (immutable generations + the superseded-generation retention window)
-    val preBatchReader = Pipeline.ManifestedIO.read(spark, outM, "monthly_usage")
+    val preBatchReader = Pipeline.readTableCurrent(spark, outM, "monthly_usage")
     val preBatchRows = preBatchReader.drop("month").collect().map(_.toSeq).toSet
 
-    // the incremental batch through BOTH strategies
-    for ((out, io) <- Seq((outP, Pipeline.InPlaceIO), (outM, Pipeline.ManifestedIO))) {
-      assert(Pipeline.runIncrementalMonthly(spark, batch, out, "2024-01-16", io).rows > 0)
-      assert(Pipeline.runIncrementalSessions(spark, batch, out, "2024-01-16", io).rows > 0)
-      assert(Pipeline.runIncrementalLifetime(spark, batch, out, "2024-01-16", io).rows > 0)
-      assert(Pipeline.runIncrementalChurn(spark, batch, out, "2024-01-16", io).rows > 0)
-      assert(Pipeline.runIncrementalReach(spark, batch, out, "2024-01-16", io).rows > 0)
-    }
+    // the incremental batch == a full rebuild over all of January, built
+    // on a fresh session
+    assert(Pipeline.runIncrementalMonthly(spark, batch, outM, "2024-01-16").rows > 0)
+    assert(Pipeline.runIncrementalSessions(spark, batch, outM, "2024-01-16").rows > 0)
+    assert(Pipeline.runIncrementalLifetime(spark, batch, outM, "2024-01-16").rows > 0)
+    assert(Pipeline.runIncrementalChurn(spark, batch, outM, "2024-01-16").rows > 0)
+    assert(Pipeline.runIncrementalReach(spark, batch, outM, "2024-01-16").rows > 0)
+    val outF = Files.createTempDirectory("graft_lake_full").toString
+    Pipeline.run(spark.newSession(), RunConfig(sf, Seq("events")), outF)
     for (t <- tables)
-      assert(rowsOf(outM, t, Pipeline.ManifestedIO) ==
-        rowsOf(outP, t, Pipeline.InPlaceIO), s"incremental diverged on $t")
+      assert(rowsOf(outM, t) == rowsOf(outF, t), s"incremental diverged on $t")
 
     // the untouched early-January churn day kept its generation AND
     // files; the touched month partition committed a new generation
-    assert(gen(day5Dir.getPath).contains(day5GenBefore))
-    assert(new java.io.File(day5GenBefore).listFiles()
-      .map(f => f.getName -> f.lastModified()).toSet == day5FilesBefore)
+    assert(partState(outM, "churn_daily", "2024-01-05") == day5Before)
     assert(gen(janDir.getPath).exists(_ != janGenBefore))
     // the pre-batch reader still sees exactly the pre-batch table
     assert(preBatchReader.drop("month").collect().map(_.toSeq).toSet
@@ -472,12 +481,12 @@ class PipelineSpec extends AnyFunSuite {
     // concurrent reader through a PER-PARTITION compaction: each partition
     // dir is itself a manifested state dir, so the same protocol compacts
     // one month while readers of the whole table keep their resolution
-    val tableReader = Pipeline.ManifestedIO.read(spark, outM, "monthly_usage")
+    val tableReader = Pipeline.readTableCurrent(spark, outM, "monthly_usage")
     val tableRows = tableReader.drop("month").collect().map(_.toSeq).toSet
     Sources.compactManifested(spark, janDir.getPath)
     assert(tableReader.drop("month").collect().map(_.toSeq).toSet == tableRows,
       "in-flight reader lost a partition version during partition compaction")
-    assert(Pipeline.ManifestedIO.read(spark, outM, "monthly_usage")
+    assert(Pipeline.readTableCurrent(spark, outM, "monthly_usage")
       .drop("month").collect().map(_.toSeq).toSet == tableRows,
       "post-compaction table content diverged")
   }

@@ -311,6 +311,49 @@ class SourcesSpec extends AnyFunSuite {
     assert(new java.io.File(g1).isDirectory)
   }
 
+  test("manifested writers take the table's writer lease: a live foreign " +
+    "lease refuses a publish and leaves the serving generation as it was") {
+    import graft.config.{LakeCommit, Pipeline}
+    val d = java.nio.file.Files.createTempDirectory("graft_pub_lease").toString
+    val whole = s"$d/whole"
+    val parted = s"$d/parted"
+    def gen(dir: String) = LakeCommit.currentGen(dir, Sources.ManifestTable)
+    def partGens = new java.io.File(parted).listFiles().toSeq
+      .filter(_.getName.startsWith("__part=")).sortBy(_.getName).map(f => gen(f.getPath))
+    def frame(n: Long) = (1L to n).toDF("x").withColumn("p", $"x" % 2)
+    Sources.publishVersion(spark, whole, frame(10))
+    Sources.publishPartitions(spark, parted, frame(10), "p")
+    val wholeBefore = gen(whole)
+    val partsBefore = partGens
+    assert(wholeBefore.isDefined && partsBefore.size == 2 && partsBefore.forall(_.isDefined))
+
+    // plant a LIVE foreign lease under each table: both verbs must refuse
+    val leases = Seq(whole, parted).map { t =>
+      val m = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(t, "_manifests"))
+      java.nio.file.Files.write(m.resolve(s"${Sources.ManifestTable}.lease"),
+        "hforeignhost0000:1".getBytes("UTF-8"))
+    }
+    val e1 = intercept[IllegalArgumentException](
+      Sources.publishVersion(spark, whole, frame(20)))
+    val e2 = intercept[IllegalArgumentException](
+      Sources.publishPartitions(spark, parted, frame(20), "p"))
+    assert(e1.getMessage.contains("lease") && e2.getMessage.contains("lease"))
+    assert(gen(whole) == wholeBefore && partGens == partsBefore)
+    assert(Sources.readCurrent(spark, whole).count() == 10)
+    // a table level holding only the lease's `_manifests` dir still
+    // resolves as the partition layout
+    assert(gen(parted).isEmpty)
+    assert(Pipeline.readTableCurrent(spark, d, "parted").count() == 10)
+
+    // the foreign writer leaves: the next publish takes and releases the
+    // lease, and the partition layout still resolves
+    leases.foreach(java.nio.file.Files.delete)
+    Sources.publishPartitions(spark, parted, frame(20), "p")
+    assert(!new java.io.File(s"$parted/_manifests/${Sources.ManifestTable}.lease").exists)
+    assert(gen(parted).isEmpty && partGens.forall(_.isDefined) && partGens != partsBefore)
+    assert(Pipeline.readTableCurrent(spark, d, "parted").count() == 20)
+  }
+
   test("crash window: a reader concurrent with publishes/compactions never " +
     "observes a partial table (r8 atomic-publish contract)") {
     import graft.sources.Sources
