@@ -12,8 +12,7 @@ import org.apache.spark.sql.SparkSession
   * and PQ indexes, MaintLog, SketchRegistry, AnalyticFrames, LakeCache
   * and the `Sources` manifested tables that hold every `Pipeline` lake
   * table. The plain-parquet sinks (`Sources.sinkPartitioned`,
-  * `sinkParquet`) and `Sources.compactSmallFiles` keep no versions and do
-  * not use it.
+  * `sinkParquet`) keep no versions and do not use it.
   *
   * The protocol is the manifest-pointer commit the big table formats use
   * (Iceberg's version files, Delta's log): writers STAGE a complete generation
@@ -207,10 +206,18 @@ private[graft] object LakeCommit {
     * behavior of the manifest-pointer table formats. Deterministic
     * derived caches default to 0 (byte-equal content, single-process
     * serving); the mutable index/frame verbs pass
-    * [[RetireSupersededMs]]. */
+    * [[RetireSupersededMs]].
+    *
+    * `keep(g)` names the generation dirs that committed generation `g`
+    * serves: a `Sources` partitioned table's snapshot points its untouched
+    * partitions at older generations. A superseded entry stays, manifest
+    * and dir, while the `keep` of an entry this call does not retire names
+    * its generation, so neither sweep deletes a dir a reader may still
+    * resolve; it retires in the first cleanup after no such entry names
+    * it. */
   def cleanup(
       dir: String, table: String, staleMs: Long = StaleStageMs,
-      retireMs: Long = 0L): Unit =
+      retireMs: Long = 0L, keep: String => Set[String] = _ => Set.empty): Unit =
     currentEntry(dir, table).foreach { case (_, curGen) =>
       val base = new Path(dir)
       val fs = fsOf(base)
@@ -219,13 +226,15 @@ private[graft] object LakeCommit {
       val all = entries(dir, table)
       // a superseded entry's retirement clock starts when its SUCCESSOR
       // committed (= the next manifest's creation time)
-      val superseded = all.dropRight(1).zip(all.drop(1)).filter {
+      val past = all.dropRight(1).zip(all.drop(1)).filter {
         case (_, (nextSeq, nextGen)) =>
           val nextM = new Path(md, f"$table.m$nextSeq%09d_$nextGen")
           val t = try fs.getFileStatus(nextM).getModificationTime
                   catch { case _: java.io.FileNotFoundException => now }
           now - t > retireMs
       }.map(_._1)
+      val kept = all.diff(past).flatMap(e => keep(e._2)).toSet
+      val superseded = past.filterNot(e => kept(e._2))
       // manifests first: once gone, their gens are plain orphans even
       // if this call crashes between the two deletes
       superseded.foreach { case (seq, gen) =>

@@ -15,16 +15,16 @@ import org.apache.spark.sql.graft.{KllFunctions, KmvFunctions}
   *     → the standard aggregate DAG: sessions (R3) → monthly usage (R4)
   *       → user lifetime (R5)
   *     → manifested tables under `outDir/<table>/` (R2's warehouse-table
-  *       analog; calendar tables keep one `__part=` state dir per month or
-  *       day, so month-range readers prune at listing time)
+  *       analog; calendar tables are partitioned by month or day, so
+  *       month-range readers prune at listing time)
   *
   * Re-runs REBUILD each table — the reference rebuilds its aggregate
   * tables per run, and idempotent rebuild beats incremental mutation for
-  * a lake (PipelineSpec pins rerun-idempotence). Every table lands
-  * through [[LakeCommit]]: state tables as a whole-table generation
-  * ([[Sources.publishVersion]]), calendar tables one generation per
-  * touched partition ([[Sources.publishPartitions]]). A reader sees each
-  * table, or each partition, wholly old or wholly new, and a commit
+  * a lake (PipelineSpec pins rerun-idempotence). Every table is one
+  * [[LakeCommit]] log, and every publish is one generation and one
+  * commit: state tables whole ([[Sources.publishVersion]]), calendar
+  * tables as the partitions the frame holds ([[Sources.publishPartitions]]).
+  * A reader sees each table wholly old or wholly new, and a commit
   * never overwrites the files its input frame reads, so no maintainer
   * needs a materialization barrier. Calendar partitioning is append-only:
   * a rebuild replaces the partitions it produces and leaves absent ones
@@ -45,9 +45,9 @@ object Pipeline {
     * still compile. */
   case object ManifestedIO
 
-  /** Publish `df` as the table at `path`: one generation per `partitionCol`
-    * value, or one whole-table generation. The row count rides the write
-    * pass through `observe`. */
+  /** Publish `df` as the table at `path`'s next generation, partitioned by
+    * `partitionCol` or whole. The row count rides the write pass through
+    * `observe`. */
   private[graft] def publish(
       df: DataFrame, partitionCol: Option[String], path: String): TableResult = {
     val spark = df.sparkSession
@@ -140,7 +140,6 @@ object Pipeline {
       .withColumn("users_est",
         KmvFunctions.kmvEstimate(col("reach_kmv")))
     publish(merged, None, path)
-    TableResult("type_reach", readTableCurrent(spark, outDir, "type_reach").count(), path)
   }
 
   /** Read-time set algebra over the published sketches: pairwise audience
@@ -337,8 +336,6 @@ object Pipeline {
       .withColumn("p50_value",
         KllFunctions.kllQuantile(col("value_kll"), lit(0.5)))
     publish(merged, None, path)
-    TableResult("user_lifetime",
-      readTableCurrent(spark, outDir, "user_lifetime").count(), path)
   }
 
   /** Incremental maintenance of the published `churn_daily` ledger
@@ -408,21 +405,15 @@ object Pipeline {
     TableResult("churn_daily", readTableCurrent(spark, outDir, "churn_daily").count(), path)
   }
 
-  /** Current-version reader for the published tables. A table-level
-    * manifest means the whole-table layout; otherwise the partition-level
-    * one, where a `month` filter prunes at LISTING time (the unwanted
-    * partitions never reach a scan); the residual `where` keeps the
-    * row-level contract identical across layouts. */
+  /** Current-version reader for the published tables. On a month-partitioned
+    * table a `month` filter prunes at LISTING time (the unwanted partitions
+    * never reach a scan); the residual `where` keeps the row-level contract
+    * identical for whole tables. */
   def readTableCurrent(spark: SparkSession, outDir: String, table: String,
       month: Option[String] = None): DataFrame = {
-    val path = s"$outDir/$table"
-    val base = LakeCommit.currentGen(path, Sources.ManifestTable) match {
-      case Some(gen) => spark.read.parquet(gen)
-      case None =>
-        // partition dir values are the cast-to-string timestamp images
-        Sources.readCurrentPartitions(spark, path,
-          month.map(m => Seq(if (m.length == 10) s"$m 00:00:00" else m)))
-    }
+    // partition values are the cast-to-string timestamp images
+    val base = Sources.readCurrent(spark, s"$outDir/$table",
+      month.map(m => Seq(if (m.length == 10) s"$m 00:00:00" else m)))
     month.fold(base)(m => base.where(col("month") === lit(m).cast("timestamp")))
   }
 }

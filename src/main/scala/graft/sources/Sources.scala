@@ -1,9 +1,11 @@
 package graft.sources
 
 import graft.config.LakeCommit
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** §2.A sources & sinks beyond the harness parquet tables (SURVEY.md).
   * These rows are declare=no (no file/DB fixture in the harness) but part
@@ -280,91 +282,114 @@ object Sources {
       .reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
-  /** Small-file compaction (lake maintenance, round 7): rewrite a parquet
-    * directory into ceil(totalBytes / targetBytes) files. Streaming
-    * ingest (one file per micro-batch per partition) and incremental
-    * merges accumulate thousands of KB-sized files; at 100 TB that turns
-    * every downstream scan into a listing + footer-read + task-scheduling
-    * storm (one task per file, seconds of overhead each) long before a
-    * byte of data is read — periodic compaction to ~128 MB files is the
-    * standing fix, and 128 MB ≈ one HDFS/object-store block ≈ one healthy
-    * scan task.
-    *
-    * Shape: ONE wide rewrite — a round-robin repartition (no key, so no
-    * skew risk) sized off the LISTED bytes, not a collect. The rewrite
-    * lands in a sibling temp dir first and swaps in via two renames, so a
-    * concurrent reader sees the old files or the new files, never a
-    * half-written mix. The swap is directory-level best-effort (object
-    * stores have no atomic rename — there, this utility is exactly the
-    * compaction loop a table format (Iceberg/Delta) runs under a real
-    * commit protocol; the Spark-side plan is identical).
-    *
-    * @return (files before, files after)
-    */
-  def compactSmallFiles(
-      spark: SparkSession, dir: String,
-      targetBytes: Long = 128L << 20): (Int, Int) = {
-    import org.apache.hadoop.fs.Path
-    val path = new Path(dir)
-    val fs = hadoopFs(spark, path)
-    val (nIn, nOut) = compactionPlan(spark, dir, targetBytes)
-    val tmp = new Path(path.getParent, path.getName + ".compacting")
-    fs.delete(tmp, true)
-    spark.read.parquet(dir)
-      .repartition(nOut)
-      .write.mode("overwrite").parquet(tmp.toString)
-    val old = new Path(path.getParent, path.getName + ".compacted_old")
-    fs.delete(old, true)
-    require(fs.rename(path, old), s"compact: could not retire $path")
-    require(fs.rename(tmp, path), s"compact: could not publish $tmp")
-    fs.delete(old, true)
-    (nIn, nOut)
-  }
-
-  private def hadoopFs(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
+  private def hadoopFs(spark: SparkSession, p: Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** (data files directly under `dir`, files a rewrite into
-    * `targetBytes`-sized files produces). */
+  /** (number of `files`, files a rewrite of them into `targetBytes`-sized
+    * files produces); `files` are URIs, as `inputFiles` gives them. */
   private def compactionPlan(
-      spark: SparkSession, dir: String, targetBytes: Long): (Int, Int) = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val files = hadoopFs(spark, p).listStatus(p)
-      .filter(f => f.isFile && !f.getPath.getName.startsWith("_"))
-    val totalBytes = files.map(_.getLen).sum
+      spark: SparkSession, files: Seq[String], targetBytes: Long): (Int, Int) = {
+    val totalBytes = files.map(f => new Path(new java.net.URI(f)))
+      .map(p => hadoopFs(spark, p).getFileStatus(p).getLen).sum
     (files.length, math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt)
   }
 
-  // ---- Manifested tables: every versioned table commits through
-  // ---- [[graft.config.LakeCommit]] (stage a complete generation, commit
-  // ---- by creating one manifest file, retire superseded generations
-  // ---- past [[graft.config.LakeCommit.RetireSupersededMs]]); its doc is
-  // ---- the protocol. A whole-table manifest keeps its state under
-  // ---- `tableDir`; a partition-level table keeps one state dir per
-  // ---- `__part=` dir.
+  // ---- Manifested tables. Each table is one [[graft.config.LakeCommit]]
+  // ---- log under `tableDir` (its doc is the protocol): a publish stages
+  // ---- one generation and commits it once, and a read resolves one
+  // ---- manifest. Every generation holds a `_snapshot` file, written
+  // ---- before the commit and never rewritten:
+  // ----
+  // ----   line 1   the writer's schema, so readers infer nothing
+  // ----   line 2   the partition column, empty for a whole table
+  // ----   line 3+  one serving dir per partition: `<gen>/__part=<value>`
+  // ----
+  // ---- A partitioned publish writes the partitions its frame holds and
+  // ---- points them at its generation; the rest keep the dirs the previous
+  // ---- snapshot named. `__part` is a string twin of the partition column,
+  // ---- which stays in the data files, and readers prune on its decoded
+  // ---- value at listing time.
 
-  /** Logical table name of every manifested state dir. */
+  /** Logical table name of every manifested table's log. */
   private[graft] val ManifestTable = "data"
 
-  /** Serving generation dir of the manifested state at `stateDir`;
-    * `verb` names the caller in the error when nothing was published. */
-  private def servingGen(stateDir: String, verb: String): String =
-    LakeCommit.currentGen(stateDir, ManifestTable).getOrElse(
-      throw new IllegalStateException(s"$verb: $stateDir has no published version"))
+  private val PartDirCol = "__part"
 
-  /** Commit the complete generation `gen` staged under `stateDir`, then
-    * retire what it supersedes. Returns `gen`. */
-  private def commitGen(stateDir: String, gen: String): String = {
-    require(LakeCommit.commit(stateDir, ManifestTable, gen),
+  /** A generation's `_snapshot`: `parts` maps each decoded partition value
+    * to its serving dir, relative to the table dir. */
+  private[graft] final case class Snapshot(
+      schema: StructType, partCol: Option[String], parts: Map[String, String])
+
+  private def snapshotPath(gen: String) = new Path(gen, "_snapshot")
+
+  private def writeSnapshot(spark: SparkSession, gen: String, s: Snapshot): Unit = {
+    val p = snapshotPath(gen)
+    val out = hadoopFs(spark, p).create(p, false)
+    try out.write((Seq(s.schema.json, s.partCol.getOrElse("")) ++
+      s.parts.values.toSeq.sorted).mkString("\n").getBytes("UTF-8"))
+    finally out.close()
+  }
+
+  /** The snapshot of generation dir `gen`, if it has one. */
+  private def snapshotOf(spark: SparkSession, gen: String): Option[Snapshot] = {
+    val p = snapshotPath(gen)
+    val lines = try {
+      val in = hadoopFs(spark, p).open(p)
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.split("\n", -1)
+      finally in.close()
+    } catch { case _: java.io.FileNotFoundException => return None }
+    Some(Snapshot(DataType.fromJson(lines(0)).asInstanceOf[StructType],
+      Option(lines(1)).filter(_.nonEmpty),
+      lines.drop(2).map(d => ExternalCatalogUtils.unescapePathName(
+        d.drop(d.indexOf('=') + 1)) -> d).toMap))
+  }
+
+  /** The serving generation dir of `tableDir` and its snapshot; `verb`
+    * names the caller in the error when there is none. A generation with
+    * no snapshot is an older lake layout, which must be rebuilt. */
+  private[graft] def serving(
+      spark: SparkSession, tableDir: String, verb: String): (String, Snapshot) =
+    LakeCommit.currentGen(tableDir, ManifestTable)
+      .flatMap(g => snapshotOf(spark, g).map(g -> _))
+      .getOrElse(throw new IllegalStateException(
+        s"$verb: $tableDir has no published version with a _snapshot"))
+
+  /** Read the current version of a manifested table: one manifest resolve
+    * and one snapshot read, scanned with the recorded schema, so building
+    * the frame runs no Spark job. A partitioned table is pruned to
+    * `partValues` (decoded values such as "2024-01-01 00:00:00") before
+    * any scan; a whole table ignores them. */
+  def readCurrent(spark: SparkSession, tableDir: String,
+      partValues: Option[Seq[String]] = None): DataFrame = {
+    val (gen, snap) = serving(spark, tableDir, "readCurrent")
+    val dirs =
+      if (snap.partCol.isEmpty) Seq(gen)
+      else snap.parts.toSeq.sorted.collect {
+        case (v, d) if partValues.forall(_.contains(v)) => s"$tableDir/$d"
+      }
+    require(dirs.nonEmpty, s"readCurrent: no published partition of $tableDir" +
+      partValues.fold("")(vs => s" matches ${vs.mkString(", ")}"))
+    spark.read.schema(snap.schema).parquet(dirs: _*)
+  }
+
+  /** Write `snap` into the complete generation `gen` staged under
+    * `tableDir`, commit it, then retire what it supersedes. Returns `gen`. */
+  private def commitGen(
+      spark: SparkSession, tableDir: String, gen: String, snap: Snapshot): String = {
+    writeSnapshot(spark, gen, snap)
+    require(LakeCommit.commit(tableDir, ManifestTable, gen),
       s"a racing writer committed $gen first")
-    LakeCommit.cleanup(stateDir, ManifestTable,
-      retireMs = LakeCommit.RetireSupersededMs)
+    cleanup(spark, tableDir, LakeCommit.RetireSupersededMs)
     gen
   }
 
-  /** Read the current version of a manifested table. */
-  def readCurrent(spark: SparkSession, tableDir: String): DataFrame =
-    spark.read.parquet(servingGen(tableDir, "readCurrent"))
+  /** [[LakeCommit.cleanup]] of a manifested table: a generation stays while
+    * an unretired generation's snapshot serves a partition from it. */
+  private[graft] def cleanup(
+      spark: SparkSession, tableDir: String, retireMs: Long): Unit =
+    LakeCommit.cleanup(tableDir, ManifestTable, retireMs = retireMs,
+      keep = g => snapshotOf(spark, s"$tableDir/$g").toSeq
+        .flatMap(_.parts.values.map(_.takeWhile(_ != '/'))).toSet)
 
   /** Publish `df` as the table's next generation. A reader sees the
     * previous generation until the commit, never a partial one. The
@@ -375,126 +400,57 @@ object Sources {
     LakeCommit.withLease(tableDir, ManifestTable) {
       val gen = LakeCommit.stage(tableDir, ManifestTable)
       df.write.mode(SaveMode.Overwrite).parquet(gen)
-      commitGen(tableDir, gen)
+      commitGen(spark, tableDir, gen, Snapshot(df.schema, None, Map.empty))
     }
 
-  // ---- Partition-level manifest (round 9 — VERDICT r8 #7, the
-  // ---- incremental half of the atomic-lake story): incremental
-  // ---- maintainers of PARTITIONED tables replace only the partitions a
-  // ---- batch touches. Whole-table versioning would force rewriting the
-  // ---- untouched partitions into every new version — a full table copy
-  // ---- per nightly ingest, the opposite of incremental at 100 TB — so
-  // ---- each PARTITION is its own small manifested table:
-  // ----
-  // ----   tableDir/
-  // ----     __part=2024-01-01 00%3A00%3A00/   _manifests/ data.g1-…/ data.g2-…/
-  // ----     __part=2024-02-01 00%3A00%3A00/   _manifests/ data.g1-…/
-  // ----
-  // ---- Writers stage ALL affected partitions in one Spark write pass,
-  // ---- then move each partition into its own stage and commit it.
-  // ---- Atomicity is PER PARTITION — exactly the granularity
-  // ---- of the append-only calendar-partitioned semantics (each
-  // ---- partition's content is independently complete; a reader
-  // ---- mid-publish sees some partitions old and some new, the same
-  // ---- consistency dynamic-partition-overwrite offers MINUS its
-  // ---- torn-partition crash window). The real partition column stays
-  // ---- IN the data files (`__part` is a throwaway string twin), so
-  // ---- readers need no value re-attachment or type recovery, and
-  // ---- pruning happens at LISTING time against the decoded dir names —
-  // ---- before any Spark job runs.
-
-  private val PartDirCol = "__part"
-
-  /** Stage-once, commit-per-partition publish of `df`'s partitions (by
-    * `partCol`) into the partition-level manifest at `tableDir`.
-    * Partitions of the table NOT present in `df` keep their current
-    * generation and their files — this is the incremental commit for
-    * append-only partitioned tables. Returns partition-dir → new
-    * generation dir. One Spark write stages everything; the per-partition
-    * commits are driver-side renames + manifest creations (bounded by the
-    * CALENDAR for month/day partitioning, the caller's contract). The
-    * writer holds the lease of `tableDir` (its `_manifests` dir holds no
-    * manifest, so readers still pick the partition layout). */
+  /** Publish `df`'s partitions (by `partCol`) as the table's next
+    * generation, in one Spark write and one commit. Partitions NOT in
+    * `df` keep their serving dirs and files: the incremental commit for
+    * append-only partitioned tables. A reader sees every partition old or
+    * every partition new. A frame with no rows commits nothing. The
+    * writer holds the table's lease. Returns the new generation dir, if
+    * one was committed. */
   def publishPartitions(
       spark: SparkSession, tableDir: String, df: DataFrame,
-      partCol: String): Map[String, String] =
+      partCol: String): Option[String] =
     LakeCommit.withLease(tableDir, ManifestTable) {
-      import org.apache.hadoop.fs.Path
-      val dir = new Path(tableDir)
-      val fs = hadoopFs(spark, dir)
-      val stage = new Path(dir, s"_stage_${java.util.UUID.randomUUID().toString.take(8)}")
-      try {
-        df.withColumn(PartDirCol, col(partCol).cast("string"))
-          .write.mode(SaveMode.Overwrite)
-          .partitionBy(PartDirCol).parquet(stage.toString)
-        val staged = fs.listStatus(stage)
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith(PartDirCol + "="))
-          .map(_.getPath.getName).sorted
-        staged.map { p =>
-          val pd = s"$tableDir/$p"
-          val gen = LakeCommit.stage(pd, ManifestTable)
-          fs.mkdirs(new Path(pd))
-          require(fs.rename(new Path(stage, p), new Path(gen)),
-            s"publishPartitions: could not stage $p as $gen")
-          p -> commitGen(pd, gen)
-        }.toMap
-      } finally fs.delete(stage, true)
+      val gen = LakeCommit.stage(tableDir, ManifestTable)
+      df.withColumn(PartDirCol, col(partCol).cast("string"))
+        .write.mode(SaveMode.Overwrite)
+        .partitionBy(PartDirCol).parquet(gen)
+      val written = LakeCommit.listDirs(gen).map(new Path(_).getName)
+        .filter(_.startsWith(PartDirCol + "="))
+        .map(p => ExternalCatalogUtils.unescapePathName(
+          p.stripPrefix(PartDirCol + "=")) -> s"${new Path(gen).getName}/$p")
+      if (written.isEmpty) { LakeCommit.deleteRecursive(gen); None }
+      else {
+        val prior = LakeCommit.currentGen(tableDir, ManifestTable)
+          .flatMap(snapshotOf(spark, _)).fold(Map.empty[String, String])(_.parts)
+        Some(commitGen(spark, tableDir, gen,
+          Snapshot(df.schema, Some(partCol), prior ++ written)))
+      }
     }
 
-  /** (decoded value, dir name) of every `__part=` dir under `tableDir`,
-    * sorted by dir name. */
-  private def partitionDirs(
-      spark: SparkSession, tableDir: String): Seq[(String, String)] = {
-    import org.apache.hadoop.fs.Path
-    val dir = new Path(tableDir)
-    val fs = hadoopFs(spark, dir)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(PartDirCol + "="))
-      .map(_.getPath.getName).sorted
-      .map(p => java.net.URLDecoder.decode(
-        p.stripPrefix(PartDirCol + "="), "UTF-8") -> p)
-  }
-
-  /** Decoded partition values currently published at `tableDir` (the
-    * `partCol.cast(string)` images — e.g. "2024-01-01 00:00:00"). */
-  def listPartitions(spark: SparkSession, tableDir: String): Seq[String] =
-    partitionDirs(spark, tableDir).collect {
-      case (v, p) if LakeCommit.currentGen(s"$tableDir/$p", ManifestTable).isDefined => v
-    }.sorted
-
-  /** Read the current generation of every published partition (optionally
-    * pruned to `partValues`, matched against the DECODED dir values —
-    * listing-time pruning: unwanted partitions are never resolved, let
-    * alone scanned). Each kept partition is resolved once. The result
-    * carries the original partition column because the data files kept
-    * it. */
-  def readCurrentPartitions(
-      spark: SparkSession, tableDir: String,
-      partValues: Option[Seq[String]] = None): DataFrame = {
-    val resolved = partitionDirs(spark, tableDir).flatMap { case (v, p) =>
-      if (partValues.forall(_.contains(v)))
-        LakeCommit.currentGen(s"$tableDir/$p", ManifestTable)
-      else None
-    }
-    require(resolved.nonEmpty,
-      s"readCurrentPartitions: no published partition under $tableDir" +
-        partValues.fold("")(vs => s" matches ${vs.mkString(", ")}"))
-    spark.read.parquet(resolved: _*)
-  }
-
-  /** Small-file compaction under the manifest protocol: rewrite the
-    * CURRENT generation into a new right-sized one and commit it —
-    * in-flight readers keep their immutable old dir; there is no crash
-    * window at all (contrast [[compactSmallFiles]]'s raw-dir renames).
-    * Works on a whole table or on one partition dir. Returns (files
-    * before, files after). */
+  /** Small-file compaction (lake maintenance): rewrite the serving data of
+    * `tableDir` into `targetBytes`-sized files and publish it as the next
+    * generation, one commit like any publish. In-flight readers keep their
+    * immutable old dirs, so there is no crash window. A partitioned table
+    * republishes every serving partition as one file, written by as many
+    * tasks as the plan sizes. Returns (files before, files after). */
   def compactManifested(
       spark: SparkSession, tableDir: String,
-      targetBytes: Long = 128L << 20): (Int, Int) = {
-    val cur = servingGen(tableDir, "compactManifested")
-    val (nIn, nOut) = compactionPlan(spark, cur, targetBytes)
-    publishVersion(spark, tableDir, spark.read.parquet(cur).repartition(nOut))
-    (nIn, nOut)
-  }
+      targetBytes: Long = 128L << 20): (Int, Int) =
+    LakeCommit.withLease(tableDir, ManifestTable) {
+      val snap = serving(spark, tableDir, "compactManifested")._2
+      val cur = readCurrent(spark, tableDir)
+      val (nIn, nOut) = compactionPlan(spark, cur.inputFiles.toSeq, targetBytes)
+      snap.partCol match {
+        case None =>
+          publishVersion(spark, tableDir, cur.repartition(nOut))
+          (nIn, nOut)
+        case Some(c) =>
+          publishPartitions(spark, tableDir, cur.repartition(nOut, col(c)), c)
+          (nIn, snap.parts.size)
+      }
+    }
 }

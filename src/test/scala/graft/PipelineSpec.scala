@@ -19,16 +19,16 @@ class PipelineSpec extends AnyFunSuite {
 
   private def gen(dir: String) = LakeCommit.currentGen(dir, Sources.ManifestTable)
 
-  /** The `__part=<prefix>…` state dirs of `table`, by name. */
+  /** The serving `<gen>/__part=` dirs of `table` whose decoded partition
+    * value starts with `prefix`, as its snapshot names them. */
   private def partDirs(out: String, table: String, prefix: String = "") =
-    new java.io.File(s"$out/$table").listFiles().toSeq
-      .filter(_.getName.startsWith(s"__part=$prefix")).sortBy(_.getName)
+    Sources.serving(spark, s"$out/$table", "partDirs")._2.parts.toSeq.sorted
+      .collect { case (v, d) if v.startsWith(prefix) => s"$out/$table/$d" }
 
-  /** Serving generation and its (file, mtime) set per partition dir. */
+  /** Serving dir (so its generation) and its (file, mtime) set per partition. */
   private def partState(out: String, table: String, prefix: String) =
     partDirs(out, table, prefix).map { d =>
-      val g = gen(d.getPath).get
-      g -> new java.io.File(g).listFiles().map(f => f.getName -> f.lastModified()).toSet
+      d -> new java.io.File(d).listFiles().map(f => f.getName -> f.lastModified()).toSet
     }
 
   test("config-driven run publishes partitioned aggregates, idempotently") {
@@ -59,11 +59,12 @@ class PipelineSpec extends AnyFunSuite {
     assert(published.agg(sum("n_events")).head.getLong(0) ==
       direct.agg(sum("n_events")).head.getLong(0))
 
-    // month partitioning is physical: one committed `__part=` state dir
-    // per month, and no table-level manifest
-    assert(partDirs(out, "monthly_usage").nonEmpty &&
-      partDirs(out, "monthly_usage").forall(d => gen(d.getPath).isDefined))
-    assert(gen(s"$out/monthly_usage").isEmpty)
+    // month partitioning is physical: the table's one log serves a
+    // `__part=` dir per month, and no partition dir holds a log of its own
+    assert(gen(s"$out/monthly_usage").isDefined && partDirs(out, "monthly_usage").nonEmpty)
+    val partLogs = Files.walk(java.nio.file.Paths.get(out)).toArray.map(_.toString)
+      .filter(_.matches(".*/__part=[^/]*/_manifests"))
+    assert(partLogs.isEmpty, partLogs.mkString(", "))
     // a month filter prunes at listing time: only that month's files scan
     val pruned = Pipeline.readTableCurrent(spark, out, "monthly_usage",
       month = Some("2024-01-01"))
@@ -75,6 +76,34 @@ class PipelineSpec extends AnyFunSuite {
     val again = Pipeline.run(spark, cfg, out)
     assert(again.map(r => r.table -> r.rows).toMap ==
       results.map(r => r.table -> r.rows).toMap)
+  }
+
+  test("building a reader of a published table runs no Spark job") {
+    import spark.implicits._
+    val out = Files.createTempDirectory("graft_read_jobs").toString
+    // 3 partitions: below Spark's parallel-listing threshold of 32 paths
+    val df = (0L until 30L).toDF("x").withColumn("month",
+      expr("cast(add_months(date'2024-01-01', cast(x % 3 as int)) as timestamp)"))
+    Pipeline.publish(df, None, s"$out/whole")
+    Pipeline.publish(df, Some("month"), s"$out/parted")
+    def reads() = Seq(Pipeline.readTableCurrent(spark, out, "whole"),
+      Pipeline.readTableCurrent(spark, out, "parted"),
+      Pipeline.readTableCurrent(spark, out, "parted", month = Some("2024-02-01")))
+    org.apache.spark.graft.TestBusHook.waitUntilEmpty(spark)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      reads()
+      org.apache.spark.graft.TestBusHook.waitUntilEmpty(spark)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get == 0, s"${jobs.get} jobs ran while building the readers")
+    // the readers serve the published columns and rows, and no `__part`
+    assert(reads().map(_.columns.toSeq).distinct == Seq(df.columns.toSeq))
+    assert(reads().map(_.count()) == Seq(30L, 30L, 10L))
   }
 
   test("incremental monthly/sessions/lifetime == full rebuild; untouched partitions untouched") {
@@ -396,7 +425,7 @@ class PipelineSpec extends AnyFunSuite {
     spark.catalog.clearCache() // registry pairs' batch-sketch pins
   }
 
-  test("manifested lake (r9): per-partition atomic incremental maintenance == " +
+  test("manifested lake (r9): one-commit incremental maintenance == " +
     "full rebuild; untouched partitions keep their version; concurrent " +
     "reader survives publish and compaction") {
     // sf0.001 events span January 2024 only — split mid-month
@@ -405,16 +434,14 @@ class PipelineSpec extends AnyFunSuite {
     val outM = Files.createTempDirectory("graft_lake_manifest").toString
     Pipeline.run(spark, pre, outM)
 
-    // layout law: calendar tables land as PARTITION-LEVEL manifests (one
-    // state dir per month/day dir), state tables as whole-table manifests
-    assert(partDirs(outM, "monthly_usage").nonEmpty && partDirs(outM, "churn_daily").nonEmpty)
-    assert(partDirs(outM, "monthly_usage").forall(d => gen(d.getPath).isDefined))
-    assert(gen(s"$outM/monthly_usage").isEmpty)
-    assert(gen(s"$outM/user_lifetime").isDefined)
-    assert(gen(s"$outM/type_reach").isDefined)
-
+    // layout law: every table is one log; the calendar tables' snapshots
+    // serve a partition map, the state tables' generations are whole
     val tables = Seq("sessions", "monthly_usage", "user_lifetime",
       "churn_daily", "type_reach")
+    assert(tables.forall(t => gen(s"$outM/$t").isDefined))
+    assert(partDirs(outM, "monthly_usage").nonEmpty && partDirs(outM, "churn_daily").nonEmpty)
+    assert(partDirs(outM, "user_lifetime").isEmpty && partDirs(outM, "type_reach").isEmpty)
+
     def rowsOf(out: String, t: String) = {
       val df = Pipeline.readTableCurrent(spark, out, t)
         .drop("month", "value_kll", "reach_kmv")
@@ -426,8 +453,7 @@ class PipelineSpec extends AnyFunSuite {
     // (single, touched) month partition's generation BEFORE the batch
     val day5Before = partState(outM, "churn_daily", "2024-01-05")
     assert(day5Before.size == 1)
-    val janDir = partDirs(outM, "monthly_usage", "2024-01").head
-    val janGenBefore = gen(janDir.getPath).get
+    val janDirBefore = partDirs(outM, "monthly_usage", "2024-01").head
 
     // a reader that resolved the CURRENT monthly table before the batch
     // lands must keep reading the pre-batch content through the commit
@@ -436,21 +462,23 @@ class PipelineSpec extends AnyFunSuite {
     val preBatchRows = preBatchReader.drop("month").collect().map(_.toSeq).toSet
 
     // the incremental batch == a full rebuild over all of January, built
-    // on a fresh session
-    assert(Pipeline.runIncrementalMonthly(spark, batch, outM, "2024-01-16").rows > 0)
-    assert(Pipeline.runIncrementalSessions(spark, batch, outM, "2024-01-16").rows > 0)
-    assert(Pipeline.runIncrementalLifetime(spark, batch, outM, "2024-01-16").rows > 0)
-    assert(Pipeline.runIncrementalChurn(spark, batch, outM, "2024-01-16").rows > 0)
-    assert(Pipeline.runIncrementalReach(spark, batch, outM, "2024-01-16").rows > 0)
+    // on a fresh session: the row counts each maintainer reports, and rows
+    val inc = Seq(
+      Pipeline.runIncrementalMonthly(spark, batch, outM, "2024-01-16"),
+      Pipeline.runIncrementalSessions(spark, batch, outM, "2024-01-16"),
+      Pipeline.runIncrementalLifetime(spark, batch, outM, "2024-01-16"),
+      Pipeline.runIncrementalChurn(spark, batch, outM, "2024-01-16"),
+      Pipeline.runIncrementalReach(spark, batch, outM, "2024-01-16"))
     val outF = Files.createTempDirectory("graft_lake_full").toString
-    Pipeline.run(spark.newSession(), RunConfig(sf, Seq("events")), outF)
+    val full = Pipeline.run(spark.newSession(), RunConfig(sf, Seq("events")), outF)
+    assert(inc.map(r => r.table -> r.rows).toMap == full.map(r => r.table -> r.rows).toMap)
     for (t <- tables)
       assert(rowsOf(outM, t) == rowsOf(outF, t), s"incremental diverged on $t")
 
     // the untouched early-January churn day kept its generation AND
     // files; the touched month partition committed a new generation
     assert(partState(outM, "churn_daily", "2024-01-05") == day5Before)
-    assert(gen(janDir.getPath).exists(_ != janGenBefore))
+    assert(partDirs(outM, "monthly_usage", "2024-01").head != janDirBefore)
     // the pre-batch reader still sees exactly the pre-batch table
     assert(preBatchReader.drop("month").collect().map(_.toSeq).toSet
       == preBatchRows)
@@ -478,14 +506,18 @@ class PipelineSpec extends AnyFunSuite {
       .drop("value_kll").collect().map(_.toSeq).toSet == lifeRows,
       "post-compaction reader diverged")
 
-    // concurrent reader through a PER-PARTITION compaction: each partition
-    // dir is itself a manifested state dir, so the same protocol compacts
-    // one month while readers of the whole table keep their resolution
+    // concurrent reader through a compaction of the PARTITIONED table: one
+    // commit republishes every serving month, one file each, while readers
+    // of the table keep their resolution
     val tableReader = Pipeline.readTableCurrent(spark, outM, "monthly_usage")
     val tableRows = tableReader.drop("month").collect().map(_.toSeq).toSet
-    Sources.compactManifested(spark, janDir.getPath)
+    val (monthFilesBefore, monthFilesAfter) =
+      Sources.compactManifested(spark, s"$outM/monthly_usage")
+    assert(monthFilesAfter == partDirs(outM, "monthly_usage").size &&
+      monthFilesAfter <= monthFilesBefore)
+    assert(partDirs(outM, "monthly_usage").forall(d => LakeCommit.dataFiles(d).size == 1))
     assert(tableReader.drop("month").collect().map(_.toSeq).toSet == tableRows,
-      "in-flight reader lost a partition version during partition compaction")
+      "in-flight reader lost a partition version during compaction")
     assert(Pipeline.readTableCurrent(spark, outM, "monthly_usage")
       .drop("month").collect().map(_.toSeq).toSet == tableRows,
       "post-compaction table content diverged")

@@ -188,30 +188,27 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("small-file compaction: fewer files, same rows, target-sized output") {
-    val d = Files.createTempDirectory("graft_compact").toString + "/t"
+    import graft.config.LakeCommit
+    val t = Files.createTempDirectory("graft_compact").toString + "/t"
     // simulate streaming-ingest debris: 16 one-partition micro-batch writes
-    spark.range(4000L).select(col("id"), (col("id") * 3).as("v"))
-      .repartition(16)
-      .write.parquet(d)
-    val fsPath = new org.apache.hadoop.fs.Path(d)
-    val fs = fsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def parts(): Array[org.apache.hadoop.fs.FileStatus] = fs.listStatus(fsPath)
-      .filter(f => f.isFile && !f.getPath.getName.startsWith("_"))
+    Sources.publishVersion(spark, t,
+      spark.range(4000L).select(col("id"), (col("id") * 3).as("v")).repartition(16))
+    def parts() = LakeCommit.dataFiles(LakeCommit.currentGen(t, Sources.ManifestTable).get)
     val before = parts()
     assert(before.length == 16)
-    val total = before.map(_.getLen).sum
+    val total = before.map(f => new java.io.File(f).length).sum
     // target = just over half the bytes → exactly 2 output files
     val (nBefore, nAfter) =
-      Sources.compactSmallFiles(spark, d, targetBytes = total / 2 + 1)
+      Sources.compactManifested(spark, t, targetBytes = total / 2 + 1)
     assert(nBefore == 16 && nAfter == 2)
-    assert(parts().length == 2, "published dir must hold the compacted files")
+    assert(parts().length == 2, "the serving generation must hold the compacted files")
     // contents survive byte-for-byte (same rows, same values)
-    val got = spark.read.parquet(d).collect()
+    val got = Sources.readCurrent(spark, t).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
     assert(got == (0L until 4000L).map(i => (i, i * 3)))
-    // and the temp/retired dirs are gone — no debris for the next listing
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(d + ".compacting")))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(d + ".compacted_old")))
+    // and no stage is left behind: every generation dir is committed
+    val gens = new java.io.File(t).list().filter(_.startsWith(s"${Sources.ManifestTable}.g")).toSet
+    assert(gens == LakeCommit.allEntries(t).map(_._3).toSet && gens.size == 2, gens.mkString(","))
   }
 
   test("jdbc upsert: staged MERGE keeps latest on conflicting keys, no dup rows " +
@@ -318,14 +315,14 @@ class SourcesSpec extends AnyFunSuite {
     val whole = s"$d/whole"
     val parted = s"$d/parted"
     def gen(dir: String) = LakeCommit.currentGen(dir, Sources.ManifestTable)
-    def partGens = new java.io.File(parted).listFiles().toSeq
-      .filter(_.getName.startsWith("__part=")).sortBy(_.getName).map(f => gen(f.getPath))
+    def partGens = Sources.serving(spark, parted, "test")._2.parts
     def frame(n: Long) = (1L to n).toDF("x").withColumn("p", $"x" % 2)
     Sources.publishVersion(spark, whole, frame(10))
     Sources.publishPartitions(spark, parted, frame(10), "p")
     val wholeBefore = gen(whole)
+    val partedBefore = gen(parted)
     val partsBefore = partGens
-    assert(wholeBefore.isDefined && partsBefore.size == 2 && partsBefore.forall(_.isDefined))
+    assert(wholeBefore.isDefined && partedBefore.isDefined && partsBefore.size == 2)
 
     // plant a LIVE foreign lease under each table: both verbs must refuse
     val leases = Seq(whole, parted).map { t =>
@@ -338,20 +335,44 @@ class SourcesSpec extends AnyFunSuite {
     val e2 = intercept[IllegalArgumentException](
       Sources.publishPartitions(spark, parted, frame(20), "p"))
     assert(e1.getMessage.contains("lease") && e2.getMessage.contains("lease"))
-    assert(gen(whole) == wholeBefore && partGens == partsBefore)
+    assert(gen(whole) == wholeBefore && gen(parted) == partedBefore && partGens == partsBefore)
     assert(Sources.readCurrent(spark, whole).count() == 10)
-    // a table level holding only the lease's `_manifests` dir still
-    // resolves as the partition layout
-    assert(gen(parted).isEmpty)
+    // the table-level manifest serves the partition map
+    assert(partsBefore.values.forall(_.startsWith(new java.io.File(partedBefore.get).getName)))
     assert(Pipeline.readTableCurrent(spark, d, "parted").count() == 10)
 
     // the foreign writer leaves: the next publish takes and releases the
-    // lease, and the partition layout still resolves
+    // lease, and commits the next generation of the partition map
     leases.foreach(java.nio.file.Files.delete)
     Sources.publishPartitions(spark, parted, frame(20), "p")
     assert(!new java.io.File(s"$parted/_manifests/${Sources.ManifestTable}.lease").exists)
-    assert(gen(parted).isEmpty && partGens.forall(_.isDefined) && partGens != partsBefore)
+    assert(gen(parted) != partedBefore && partGens.keySet == partsBefore.keySet &&
+      partGens.values.toSet.intersect(partsBefore.values.toSet).isEmpty)
     assert(Pipeline.readTableCurrent(spark, d, "parted").count() == 20)
+  }
+
+  test("a generation another snapshot still serves survives cleanup; one " +
+    "no snapshot names is deleted") {
+    import graft.config.LakeCommit
+    val t = java.nio.file.Files.createTempDirectory("graft_keep").toString + "/tbl"
+    def frame(tag: Int, ps: Seq[Int]) =
+      ps.flatMap(p => (1 to 5).map(_ => (tag, p))).toDF("tag", "p")
+    val g1 = Sources.publishPartitions(spark, t, frame(1, Seq(0, 1)), "p").get
+    val g2 = Sources.publishPartitions(spark, t, frame(2, Seq(0)), "p").get
+    val g3 = Sources.publishPartitions(spark, t, frame(3, Seq(0)), "p").get
+    // partition 1 is still served from g1; nothing serves g2 any more
+    Sources.cleanup(spark, t, retireMs = 0L)
+    assert(new java.io.File(g1).isDirectory && new java.io.File(g3).isDirectory)
+    assert(!new java.io.File(g2).exists)
+    assert(LakeCommit.currentGen(t, Sources.ManifestTable).contains(g3))
+    val tags = Sources.readCurrent(spark, t).groupBy("p", "tag").count()
+      .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSet
+    assert(tags == Set((0, 3, 5L), (1, 1, 5L)), tags.mkString(","))
+    // once partition 1 moves on too, g1 goes at the next cleanup
+    Sources.publishPartitions(spark, t, frame(4, Seq(1)), "p")
+    Sources.cleanup(spark, t, retireMs = 0L)
+    assert(!new java.io.File(g1).exists && new java.io.File(g3).isDirectory)
+    assert(Sources.readCurrent(spark, t).count() == 10)
   }
 
   test("crash window: a reader concurrent with publishes/compactions never " +
@@ -363,20 +384,27 @@ class SourcesSpec extends AnyFunSuite {
     // invariant per version i: exactly 100·i rows, every row's tag == i
     def frame(i: Int) =
       (1 to 100 * i).map(_ => i).toDF("tag")
+    // a partitioned table, 24 partitions of 10·i rows each, republished
+    // whole by each publish: a reader must see one publish's partitions
+    val parted = s"$d/parted"
+    def partFrame(i: Int) =
+      (0 until 24).flatMap(p => (1 to 10 * i).map(_ => (i, p))).toDF("tag", "p")
     Sources.publishVersion(spark, t, frame(1))
+    Sources.publishPartitions(spark, parted, partFrame(1), "p")
     @volatile var writerDone = false
     val violations = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val reader = new Thread(() => {
       while (!writerDone) {
-        try {
-          val rows = Sources.readCurrent(spark, t)
+        for ((dir, perTag) <- Seq(t -> 100L, parted -> 240L)) try {
+          val rows = graft.config.Pipeline.readTableCurrent(
+            spark, d, new java.io.File(dir).getName)
             .groupBy("tag").count().collect()
           if (rows.length != 1)
-            violations.add(s"mixed versions: ${rows.mkString(",")}")
+            violations.add(s"mixed versions of $dir: ${rows.mkString(",")}")
           else {
             val (tag, n) = (rows(0).getInt(0), rows(0).getLong(1))
-            if (n != 100L * tag)
-              violations.add(s"partial version $tag: $n rows")
+            if (n != perTag * tag)
+              violations.add(s"partial version $tag of $dir: $n rows")
           }
         } catch {
           case e: Exception => violations.add(s"reader error: $e")
@@ -386,6 +414,7 @@ class SourcesSpec extends AnyFunSuite {
     reader.start()
     for (i <- 2 to 8) {
       Sources.publishVersion(spark, t, frame(i))
+      Sources.publishPartitions(spark, parted, partFrame(i), "p")
       if (i % 3 == 0) Sources.compactManifested(spark, t)
     }
     // simulate a crash MID-publish: a staged generation with NO commit —
