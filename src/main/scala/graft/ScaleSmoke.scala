@@ -1600,7 +1600,7 @@ object ScaleSmoke {
     // Append-only state stays BOUNDED (round 13 — VERDICT r12 #2): the
     // maintlog used to append one file per decision FOREVER and derive
     // log_seq from an O(n) dir LIST; it now folds itself into a fresh
-    // generation once MaintlogFoldFiles accumulate, and log_seq rides
+    // generation once MaintLog.FoldFiles accumulate, and log_seq rides
     // the rows — so across N decisions the file count any reader LISTs
     // is capped at fold+1 and the sequence stays gapless through every
     // fold. 20 decisions cross the 16-file fold threshold once; the
@@ -1628,7 +1628,7 @@ object ScaleSmoke {
             config.LakeCommit.dataFiles(s"$g/log").length)
           spark.catalog.clearCache()
         }
-        require(maxFiles <= config.IvfIndex.MaintlogFoldFiles + 1,
+        require(maxFiles <= config.MaintLog.FoldFiles + 1,
           s"maintlog LIST must stay capped by the fold ($maxFiles files)")
         val seqs = config.IvfIndex.maintlog(spark, dir)
           .orderBy("log_seq").select("log_seq").collect().map(_.getLong(0))

@@ -37,9 +37,8 @@ import org.apache.spark.sql.functions._
   *     (round 13 — VERDICT r12 #2) folds the accumulated segments so
   *     the file count a reader LISTs stays bounded.
   *
-  * Round 13: every publish runs under the [[LakeCommit]] writer lease,
-  * stamps its generation layout, and retires superseded generations
-  * only past the retention window (VERDICT r12 #3/#6, ADVICE r12 #4).
+  * Every build and compact is one [[LakeCommit.publish]]; every ingest
+  * appends under the same writer lease.
   *
   * Single-writer and batch-completeness (an order's lineitems, a doc's
   * text, never split across batches) are the caller's contract, as
@@ -47,39 +46,22 @@ import org.apache.spark.sql.functions._
   */
 object AnalyticFrames {
 
-  /** Generation layout version (round 13 — VERDICT r12 #6): stamped on
-    * write, required on read — see [[IvfIndex.Layout]]. 2 = the
-    * stamped era (edges / pairs / registry+pairs table sets). */
+  /** Generation layout version: stamped on write, required on read —
+    * see [[IvfIndex.Layout]]. 2 = the stamped era (edges / pairs /
+    * registry+pairs table sets). */
   val Layout = 2
 
   private val Table = "frame"
 
-  private def gen(dir: String): String = {
-    val g = LakeCommit.currentGen(dir, Table).getOrElse(
-      sys.error(s"no committed frame generation under $dir"))
-    LakeCommit.requireLayout(g, Layout, "analytic frame")
-    g
-  }
-
-  /** Stage → stamp → commit → retire-aged: every frame publish, under
-    * the writer lease (round 13 — VERDICT r12 #3/#6, ADVICE r12 #4). */
-  private def publish(dir: String)(write: String => Unit): Unit =
-    LakeCommit.withLease(dir, Table) {
-      val stage = LakeCommit.stage(dir, Table)
-      write(stage)
-      LakeCommit.stampLayout(stage, Layout)
-      require(LakeCommit.commit(dir, Table, stage),
-        s"frame build: another writer published $stage first")
-      LakeCommit.cleanup(dir, Table,
-        retireMs = LakeCommit.RetireSupersededMs)
-    }
+  private def gen(dir: String): String =
+    LakeCommit.servingGen(dir, Table, Layout, "analytic frame")
 
   // ---- co-order edge frame: set semantics, LSM segments ----
 
   def buildCoOrder(
       spark: SparkSession, orders: DataFrame, lineitem: DataFrame,
       dir: String): Unit =
-    publish(dir) { stage =>
+    LakeCommit.publish(dir, Table, Layout) { stage =>
       Extras.coOrderEdgesFrom(orders, lineitem)
         .write.parquet(s"$stage/edges")
     }
@@ -102,7 +84,8 @@ object AnalyticFrames {
     * manifest swap, crash-safe like every compact in this repo. */
   def compactCoOrder(spark: SparkSession, dir: String): Unit = {
     val folded = coOrderEdges(spark, dir)
-    publish(dir)(stage => folded.write.parquet(s"$stage/edges"))
+    LakeCommit.publish(dir, Table, Layout)(stage =>
+      folded.write.parquet(s"$stage/edges"))
   }
 
   // ---- customer↔supplier pair frame: additive partials ----
@@ -110,7 +93,7 @@ object AnalyticFrames {
   def buildCustSupp(
       spark: SparkSession, orders: DataFrame, lineitem: DataFrame,
       dir: String): Unit =
-    publish(dir) { stage =>
+    LakeCommit.publish(dir, Table, Layout) { stage =>
       Extras.custSuppPairsFrom(orders, lineitem)
         .write.parquet(s"$stage/pairs")
     }
@@ -130,7 +113,8 @@ object AnalyticFrames {
 
   def compactCustSupp(spark: SparkSession, dir: String): Unit = {
     val folded = custSuppPairs(spark, dir)
-    publish(dir)(stage => folded.write.parquet(s"$stage/pairs"))
+    LakeCommit.publish(dir, Table, Layout)(stage =>
+      folded.write.parquet(s"$stage/pairs"))
   }
 
   // ---- verified near-dup pair frame: registry-backed appends ----
@@ -139,7 +123,7 @@ object AnalyticFrames {
     * one committed generation. */
   def buildNearDupPairs(
       spark: SparkSession, docs: DataFrame, dir: String): Unit =
-    publish(dir) { stage =>
+    LakeCommit.publish(dir, Table, Layout) { stage =>
       SketchRegistry.build(spark, docs, s"$stage/registry")
       // one frame schema — (d1, d2, est_jaccard) at the registry's τ —
       // shared by the initial recompute and every ingest delta
@@ -181,7 +165,7 @@ object AnalyticFrames {
     * before the commit the old generation serves untouched. */
   def compactNearDupPairs(spark: SparkSession, dir: String): Unit = {
     val g = gen(dir)
-    publish(dir) { stage =>
+    LakeCommit.publish(dir, Table, Layout) { stage =>
       Seq("shingles", "bands", "sizes").foreach { t =>
         spark.read.parquet(s"$g/registry/$t")
           .write.parquet(s"$stage/registry/$t")

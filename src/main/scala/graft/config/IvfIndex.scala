@@ -25,14 +25,11 @@ import org.apache.spark.sql.functions._
   * stays flat as the corpus grows — ScaleSmoke's `ivf index serve`
   * probe measures exactly that law.
   *
-  * Both tables live inside ONE generation dir published through
-  * [[LakeCommit]]'s manifest-pointer protocol (round 12 — VERDICT r11
-  * #1: the old stage→retire→publish double rename had a between-renames
-  * window serving NOTHING, and local-FS rename is the one assumption an
-  * object-store lake breaks). A generation swap — compact, retrain — is
-  * one atomic manifest creation, and because centroids and assign share
-  * the generation, a reader can never observe a centroid set from one
-  * training with an inverted file from another.
+  * Both tables live inside ONE generation dir, written through
+  * [[LakeCommit.publish]] (build, retrain) and [[LakeCommit.fold]]
+  * (compact). Because centroids and assign share the generation, a
+  * reader can never observe a centroid set from one training with an
+  * inverted file from another.
   *
   * Freshness rides [[LakeCache]] for the declared keys (fingerprint
   * covers the embeddings parquet's file listing plus every training
@@ -72,23 +69,20 @@ object IvfIndex {
   val DriftT2ThresholdMicro = 25L * 1000000 // T²/dim > 25
   val CompactTauMicro = 200000L // 20% dead
 
-  /** Generation layout version (round 13 — VERDICT r12 #6): stamped
-    * into every generation this code writes ([[LakeCommit.stampLayout]])
-    * and required back on every read, so a code upgrade that changes
-    * the generation's table set can never silently misread old state —
-    * deployment dirs have no fingerprint to churn. 6 = the v6 layout:
-    * centroids + assign + meta + the stored autoprobe curve/pick. */
+  /** Generation layout version: stamped into every generation this code
+    * writes and required back on every read ([[LakeCommit.servingGen]]),
+    * so a code upgrade that changes the generation's table set can never
+    * silently misread old state — deployment dirs have no fingerprint to
+    * churn. 6 = the v6 layout: centroids + assign + meta + the stored
+    * autoprobe curve/pick. */
   val Layout = 6
-
-  /** Fold the maintlog into one compacted generation once its current
-    * generation accumulates this many decision files (round 13 —
-    * VERDICT r12 #2) — the shared [[MaintLog]] machinery's cap. */
-  val MaintlogFoldFiles = MaintLog.FoldFiles
 
   /** The logical table name a generation publishes under. */
   private val Table = "index"
 
-
+  /** The serving generation dir, layout-checked. */
+  private def gen(dir: String): String =
+    LakeCommit.servingGen(dir, Table, Layout, "ivf index")
 
   /** Index dir for `sfDir`'s embeddings table, training it (once per
     * corpus fingerprint) if absent. */
@@ -179,10 +173,9 @@ object IvfIndex {
       k: Int, ell: Int, lloydRounds: Int,
       driftT2ThresholdMicro: Long = DriftT2ThresholdMicro,
       compactTauMicro: Long = CompactTauMicro): Unit =
-    LakeCommit.withLease(dir, Table) {
+    LakeCommit.publish(dir, Table, Layout) { stage =>
     val core = e.select(col("vec_id"), col("embedding"))
     val cents = Llm.ivfTrain(core, Llm.ivfSeedScalable(core, k, ell), lloydRounds)
-    val stage = LakeCommit.stage(dir, Table)
     cents.write.parquet(s"$stage/centroids")
     // repartition on cell BEFORE the partitionBy write: without it every
     // upstream task opens a file in every cell dir (tasks × cells tiny
@@ -221,11 +214,6 @@ object IvfIndex {
         spark.read.parquet(s"$stage/assign")
           .withColumn("cell", col("cell").cast("long")))
       .coalesce(1).write.parquet(s"$stage/autoprobe")
-    LakeCommit.stampLayout(stage, Layout)
-    require(LakeCommit.commit(dir, Table, stage),
-      s"build: another writer published generation ${stage} first")
-    LakeCommit.cleanup(dir, Table,
-      retireMs = LakeCommit.RetireSupersededMs)
   }
 
   /** Per-dimension exact moment sums of an embedding frame:
@@ -284,31 +272,29 @@ object IvfIndex {
     * ([[maintain]]), never per ingest. */
   def ingest(spark: SparkSession, dir: String, batch: DataFrame): Unit =
     LakeCommit.withLease(dir, Table) {
-      requireMutable(dir, "ingest")
+      Tombstones.requireMutable(dir, "ingest")
       val core = batch.select(col("vec_id"), col("embedding"))
       withMeta(batch, Llm.ivfAssign(core, centroids(spark, dir)))
         .repartition(col("cell")) // one compact appended segment per cell
         .write.partitionBy("cell").mode("append")
-        .parquet(s"${genDir(dir)}/assign")
+        .parquet(s"${gen(dir)}/assign")
     }
 
   /** The stored policy/baseline row — (base_sum_micro ARRAY,
     * base_sumsq_micro ARRAY, base_n, drift_t2_threshold_micro,
     * compact_tau_micro, k, ell, lloyd). */
   def meta(spark: SparkSession, dir: String): org.apache.spark.sql.Row =
-    spark.read.parquet(s"${genDir(dir)}/meta").head()
+    spark.read.parquet(s"${gen(dir)}/meta").head()
 
   /** The serving read: anti-join the tombstone markers ONLY when any
     * exist — below the compaction threshold a serve pays the anti-join,
     * and after a compact the join disappears from the plan entirely
     * (the round-12 PlanSpec-pinned policy law). */
   def liveAssignments(spark: SparkSession, dir: String): DataFrame = {
-    val files = LakeCommit.dataFiles(s"$dir/tombstones")
+    val files = LakeCommit.dataFiles(Tombstones.dir(dir))
     val a = assignments(spark, dir)
     if (files.isEmpty) a
-    else a.join(
-      spark.read.parquet(files: _*).select("vec_id").distinct(),
-      Seq("vec_id"), "left_anti")
+    else a.join(Tombstones.ids(spark, files), Seq("vec_id"), "left_anti")
   }
 
   /** The maintenance ENTRY POINT (round 12 — VERDICT r11 #2/#3: the
@@ -336,7 +322,7 @@ object IvfIndex {
     * verbs it drives. */
   def maintain(spark: SparkSession, dir: String, batch: DataFrame): String =
     LakeCommit.withLease(dir, Table) {
-    requireMutable(dir, "maintain")
+    Tombstones.requireMutable(dir, "maintain")
     val m = meta(spark, dir)
     val baseSum = m.getSeq[Long](0)
     val baseSq = m.getSeq[Long](1)
@@ -347,21 +333,17 @@ object IvfIndex {
     val drifted = t2 > thrMicro
     var action =
       if (drifted) {
-        val snap = LakeCommit.dataFiles(s"$dir/tombstones")
-        val deadIds =
-          if (snap.isEmpty) spark.range(0).select(col("id").as("vec_id"))
-          else spark.read.parquet(snap: _*).select("vec_id").distinct()
+        val snap = LakeCommit.dataFiles(Tombstones.dir(dir))
         // live corpus from the inverted file itself (vectors are stored
         // IN the index — no base-table dependency), minus the markers,
         // plus the batch; build() publishes the new generation with a
         // fresh baseline under the SAME stored thresholds
         val corpus = assignments(spark, dir).drop("cell")
-          .join(deadIds, Seq("vec_id"), "left_anti")
+          .join(Tombstones.ids(spark, snap), Seq("vec_id"), "left_anti")
           .unionByName(batch)
         build(spark, corpus, dir,
           m.getInt(5), m.getInt(6), m.getInt(7), thrMicro, tauMicro)
-        snap.foreach(LakeCommit.deleteFile)
-        LakeCommit.deleteDirIfEmpty(s"$dir/tombstones")
+        LakeCommit.clearMarkers(Tombstones.dir(dir), snap)
         "retrain"
       } else {
         ingest(spark, dir, batch)
@@ -369,8 +351,7 @@ object IvfIndex {
       }
     val deadN = tombstones(spark, dir).count()
     val totalN = assignments(spark, dir).count()
-    if (action == "ingest" && totalN > 0 &&
-      BigInt(deadN) * 1000000 > BigInt(tauMicro) * totalN) {
+    if (action == "ingest" && Tombstones.overTau(deadN, totalN, tauMicro)) {
       compact(spark, dir)
       action = "ingest+compact"
     }
@@ -382,15 +363,16 @@ object IvfIndex {
     // from the rows is a bounded aggregate and survives any fold)
     {
       import spark.implicits._
-      val logSeq = nextLogSeq(spark, dir)
-      appendMaintlog(spark, dir, Seq((logSeq,
+      val logSeq = MaintLog.nextSeq(spark, dir)
+      MaintLog.append(spark, dir, Seq((logSeq,
         LakeCommit.currentEntry(dir, Table).map(_._1).getOrElse(0L),
         action, baseSum, baseSq, baseN, bSum.toSeq, bN, t2, thrMicro,
         deadN, totalN, tauMicro))
         .toDF("log_seq", "gen_seq", "action", "base_sum_micro",
           "base_sumsq_micro", "base_n", "batch_sum_micro", "batch_n",
           "drift_t2_micro", "drift_t2_threshold_micro", "dead_n",
-          "total_n", "compact_tau_micro"))
+          "total_n", "compact_tau_micro"),
+        Layout, Table)
     }
     action
   }
@@ -401,107 +383,43 @@ object IvfIndex {
   def maintlog(spark: SparkSession, dir: String): DataFrame =
     MaintLog.read(spark, dir, Layout)
 
-  private def nextLogSeq(spark: SparkSession, dir: String): Long =
-    MaintLog.nextSeq(spark, dir)
-
-  private def appendMaintlog(
-      spark: SparkSession, dir: String, row: DataFrame): Unit =
-    MaintLog.append(spark, dir, row, Layout, Table)
-
-  private[graft] def foldMaintlog(spark: SparkSession, dir: String): Unit =
-    MaintLog.fold(spark, dir, Layout, Table)
-
-  /** Tombstone a set of vec_ids (round 11 — the third index lifecycle
-    * verb after build and ingest): deletes in an append-only inverted
-    * file are MARKERS, not rewrites — an append of the ids to a
-    * `tombstones` table OUTSIDE the generation dirs (markers survive a
-    * generation swap; [[compact]] folds exactly the marker FILES it
-    * snapshotted, so a delete racing a compact is never lost). Serving
-    * anti-joins [[tombstones]] (the llm_ann_ivf_deleted plan shape).
-    * Deleting an id twice, or an id the index never held, is harmlessly
-    * idempotent (anti-join semantics). */
+  /** Tombstone a set of vec_ids — [[Tombstones]]' markers; serving
+    * anti-joins [[tombstones]] (the llm_ann_ivf_deleted plan shape). */
   def delete(spark: SparkSession, dir: String, vecIds: DataFrame): Unit =
-    LakeCommit.withLease(dir, Table) {
-      requireMutable(dir, "delete")
-      vecIds.select(col("vec_id")).distinct().coalesce(1)
-        .write.mode("append").parquet(s"$dir/tombstones")
-    }
+    Tombstones.delete(dir, Table, vecIds)
 
   /** The tombstoned vec_ids — empty frame when none were ever deleted. */
-  def tombstones(spark: SparkSession, dir: String): DataFrame = {
-    val files = LakeCommit.dataFiles(s"$dir/tombstones")
-    if (files.nonEmpty) spark.read.parquet(files: _*).distinct()
-    else spark.range(0).select(col("id").as("vec_id"))
-  }
+  def tombstones(spark: SparkSession, dir: String): DataFrame =
+    Tombstones.all(spark, dir)
 
-  /** Fold accumulated tombstones into the inverted file: stage a NEW
-    * generation holding the live rows (plus the unchanged broadcast-
-    * sized centroids — one generation = one consistent index), commit
-    * it with a single manifest creation, then clear EXACTLY the marker
-    * files that were folded. Crash-safe at every step (the round-12
-    * crash-matrix law in IvfSpec): before the commit the old generation
-    * serves untouched; after it the new one serves and leftover markers
-    * or superseded dirs are harmless until swept. A tombstone appended
-    * AFTER the snapshot survives the fold and keeps anti-joining. */
+  /** Fold accumulated tombstones into the inverted file: a NEW
+    * generation holding the live rows plus the unchanged broadcast-sized
+    * centroids and meta (one generation = one consistent index) and the
+    * autoprobe pick refreshed from the post-fold corpus. */
   def compact(spark: SparkSession, dir: String): Unit =
     compactSteps(spark, dir, steps = 4)
 
-  /** The compaction broken into its crash-matrix steps — `steps` bounds
-    * how far the run gets (1 = stage only, 2 = +commit, 3 = +marker
-    * clear, 4 = +retire), so the spec can simulate a kill after EVERY
-    * step and assert the index still serves. */
+  /** [[compact]] bounded to its first `steps` [[LakeCommit.fold]] steps,
+    * so the crash-matrix spec can simulate a kill after every step. */
   private[graft] def compactSteps(
-      spark: SparkSession, dir: String, steps: Int,
-      retireMs: Long = LakeCommit.RetireSupersededMs): Unit =
-    LakeCommit.withLease(dir, Table) {
-    requireMutable(dir, "compact")
-    // snapshot: fold only the marker files visible NOW — late arrivals
-    // from a racing delete() stay in place and keep anti-joining
-    val snap = LakeCommit.dataFiles(s"$dir/tombstones")
-    if (snap.isEmpty) {
-      // nothing to fold — but still retire aged superseded generations,
-      // so a re-run converges after a crash that cleared markers but
-      // died before the retire step
-      if (steps >= 4) LakeCommit.cleanup(dir, Table, retireMs = retireMs)
-    } else {
-    val dead = spark.read.parquet(snap: _*).select("vec_id").distinct()
-    val live = assignments(spark, dir)
-      .join(dead, Seq("vec_id"), "left_anti")
-    val stage = LakeCommit.stage(dir, Table)
-    // 1. stage a complete generation (centroids, the policy meta and
-    //    the autoprobe state are broadcast-sized — rewriting them buys
-    //    one-manifest consistency; the autoprobe pick is refreshed from
-    //    the post-fold corpus, the VERDICT r12 #4 "recompute at
-    //    maintenance time" dial)
-    centroids(spark, dir).write.parquet(s"$stage/centroids")
-    spark.read.parquet(s"${genDir(dir)}/meta")
-      .coalesce(1).write.parquet(s"$stage/meta")
-    live.repartition(col("cell"))
-      .write.partitionBy("cell").parquet(s"$stage/assign")
-    Llm.ivfAutoprobeState(spark,
-        spark.read.parquet(s"$stage/assign")
-          .select(col("vec_id"), col("embedding")),
-        spark.read.parquet(s"$stage/centroids"),
-        spark.read.parquet(s"$stage/assign")
-          .withColumn("cell", col("cell").cast("long")))
-      .coalesce(1).write.parquet(s"$stage/autoprobe")
-    LakeCommit.stampLayout(stage, Layout)
-    if (steps >= 2) {
-    // 2. COMMIT: one atomic manifest creation — the publish point
-    require(LakeCommit.commit(dir, Table, stage),
-      s"compact: a racing writer published $stage first")
-    if (steps >= 3) {
-    // 3. clear exactly the folded markers (re-running after a crash
-    //    here re-folds already-absent ids — a no-op by anti-join)
-    snap.foreach(LakeCommit.deleteFile)
-    LakeCommit.deleteDirIfEmpty(s"$dir/tombstones")
-    if (steps >= 4)
-    // 4. retire AGED superseded generations + dead/stale stages — a
-    //    reader that resolved the previous generation keeps its files
-    //    for the retention window (round 13 — ADVICE r12 #4)
-    LakeCommit.cleanup(dir, Table, retireMs = retireMs)
-    }
-    }
+      spark: SparkSession, dir: String, steps: Int): Unit = {
+    Tombstones.requireMutable(dir, "compact")
+    LakeCommit.fold(dir, Table, Layout, Tombstones.dir(dir), steps) {
+      (stage, snap) =>
+        centroids(spark, dir).write.parquet(s"$stage/centroids")
+        spark.read.parquet(s"${gen(dir)}/meta")
+          .coalesce(1).write.parquet(s"$stage/meta")
+        assignments(spark, dir)
+          .join(Tombstones.ids(spark, snap), Seq("vec_id"), "left_anti")
+          .repartition(col("cell"))
+          .write.partitionBy("cell").parquet(s"$stage/assign")
+        Llm.ivfAutoprobeState(spark,
+            spark.read.parquet(s"$stage/assign")
+              .select(col("vec_id"), col("embedding")),
+            spark.read.parquet(s"$stage/centroids"),
+            spark.read.parquet(s"$stage/assign")
+              .withColumn("cell", col("cell").cast("long")))
+          .coalesce(1).write.parquet(s"$stage/autoprobe")
     }
   }
 
@@ -514,17 +432,6 @@ object IvfIndex {
       src.select("vec_id", extra: _*), Seq("vec_id"))
   }
 
-  /** The serving generation dir — resolved through the manifest, so
-    * readers always see ONE complete, committed index, and layout-
-    * checked (round 13 — VERDICT r12 #6) so an upgraded reader refuses
-    * an old-layout generation instead of misreading it. */
-  private[graft] def genDir(dir: String): String = {
-    val g = LakeCommit.currentGen(dir, Table).getOrElse(
-      sys.error(s"no committed index generation under $dir"))
-    LakeCommit.requireLayout(g, Layout, "ivf index")
-    g
-  }
-
   /** The stored autoprobe state — (nprobe, mean_recall, picked), one
     * row per budget, exactly one picked (round 13 — VERDICT r12 #4):
     * the recall curve measured on the offline query sample at the last
@@ -532,26 +439,16 @@ object IvfIndex {
     * declared autoprobe key SERVES the pick; its oracle replays
     * curve-and-pick from the same stored training chain. */
   def autoprobe(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"${genDir(dir)}/autoprobe")
-
-  /** Guard (round 12 — VERDICT r11 advice #2): LakeCache-managed dirs
-    * are derived caches — fingerprinted, rebuilt on any source change,
-    * and LRU-evictable, so an in-place mutation would be silently lost
-    * on the next eviction or fingerprint move. The mutating verbs
-    * refuse them; deployments mutate dirs built directly via [[build]]. */
-  private def requireMutable(dir: String, verb: String): Unit =
-    require(!LakeCache.isManaged(dir),
-      s"$verb: $dir is a LakeCache-managed derived cache (evictable, " +
-        "rebuilt-on-change) — mutating verbs require a deployment index dir")
+    spark.read.parquet(s"${gen(dir)}/autoprobe")
 
   def centroids(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"${genDir(dir)}/centroids")
+    spark.read.parquet(s"${gen(dir)}/centroids")
 
   /** The stored inverted file (vec_id, embedding, cell). The partition
     * column is cast back to the assignment's native BIGINT — partition
     * inference would otherwise read small cell ids as INT and leak the
     * layout into reader schemas. */
   def assignments(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"${genDir(dir)}/assign")
+    spark.read.parquet(s"${gen(dir)}/assign")
       .withColumn("cell", col("cell").cast("long"))
 }

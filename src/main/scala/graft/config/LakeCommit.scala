@@ -5,14 +5,11 @@ import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** The one object-store-safe commit protocol for ALL versioned lake
-  * state (round 12 — VERDICT r11 #1, the last 100 TB posture gap). A
-  * rename publish is atomic only on a local filesystem — the 100 TB
-  * deployment keeps its lake on S3/GCS, where directory rename is neither
-  * atomic nor cheap. Every versioned table commits here instead: the IVF
-  * and PQ indexes, MaintLog, SketchRegistry, AnalyticFrames, LakeCache
-  * and the `Sources` manifested tables that hold every `Pipeline` lake
-  * table. The plain-parquet sinks (`Sources.sinkPartitioned`,
-  * `sinkParquet`) keep no versions and do not use it.
+  * state. A rename publish is atomic only on a local filesystem — the
+  * 100 TB deployment keeps its lake on S3/GCS, where directory rename is
+  * neither atomic nor cheap. Every versioned table commits here instead.
+  * The plain-parquet sinks (`Sources.sinkPartitioned`, `sinkParquet`)
+  * keep no versions and do not use it.
   *
   * The protocol is the manifest-pointer commit the big table formats use
   * (Iceberg's version files, Delta's log): writers STAGE a complete generation
@@ -27,9 +24,7 @@ import org.apache.spark.sql.SparkSession
   *     resolves; the orphan stage is swept later (dead-pid / age rule);
   *   - crash after commit, before cleanup → the new manifest resolves;
   *     superseded generations leak until the next [[cleanup]];
-  *   - there is NO window with no serving state — the defect class of
-  *     the old stage→retire→publish double rename (whose between-renames
-  *     window served nothing) cannot exist here.
+  *   - there is NO window with no serving state.
   *
   * Layout under a state dir `dir` for a logical table `table`:
   *
@@ -38,26 +33,37 @@ import org.apache.spark.sql.SparkSession
   *   dir/<table>.g<seq>-<pid>/...                      // generations
   * }}}
   *
+  * Stamped writers — the IVF and PQ indexes, their [[MaintLog]] and the
+  * [[AnalyticFrames]] — know none of the order. They use three verbs:
+  *   - [[publish]]: under the writer lease, stage, write, stamp the
+  *     generation's layout last, commit, retire aged superseded
+  *     generations;
+  *   - [[servingGen]]: resolve the serving generation and refuse one
+  *     stamped with another layout;
+  *   - [[fold]]: the step-bounded tombstone fold — snapshot the marker
+  *     files, publish a generation written from that snapshot, then
+  *     clear exactly the snapshotted markers ([[Tombstones]] owns the
+  *     markers themselves).
+  *
+  * Two writers keep their own sequence because each differs in kind.
+  * `Sources`' manifested tables write no stamp, seal each generation
+  * with a `_snapshot`, pass `keep` to [[cleanup]] and drop an empty
+  * stage. `LakeCache` tolerates a lost commit race (deterministic
+  * content) and runs its own retention sweep.
+  *
   * Everything goes through the Hadoop FileSystem API resolved from the
   * path itself, so the same code serves `file:`, `hdfs:`, `s3a:` — the
   * local harness exercises the identical lifecycle the object-store
   * deployment runs.
   *
-  * Concurrency: mutable indexes carry a single-writer contract (the
-  * SketchRegistry ingest doctrine) — made CHECKABLE in round 13 by the
-  * writer lease below (VERDICT r12 #3) — and deterministic caches
+  * Concurrency: mutable state carries a single-writer contract, made
+  * checkable by the writer lease below; deterministic caches
   * (LakeCache) build byte-equal content, so a same-seq double commit,
   * which the create-fail-if-exists CAS cannot fully exclude across
   * DIFFERENT generation names, is resolved deterministically by taking
   * the lexicographically last manifest at the max sequence; the losing
   * generation is complete (it was staged before its commit) and is
   * swept as superseded once aged past the retention window.
-  *
-  * Round 13 additions, each a VERDICT/ADVICE r12 item: host-tagged
-  * stage names (pid liveness trusted same-host only), the
-  * partial-generation race fix in [[cleanup]], commit-time stage
-  * existence validation, the writer lease, the generation layout
-  * stamp, and superseded-generation retention.
   */
 private[graft] object LakeCommit {
 
@@ -205,8 +211,7 @@ private[graft] object LakeCommit {
     * file listing alive for the window — the snapshot-retention
     * behavior of the manifest-pointer table formats. Deterministic
     * derived caches default to 0 (byte-equal content, single-process
-    * serving); the mutable index/frame verbs pass
-    * [[RetireSupersededMs]].
+    * serving); [[publish]] and [[fold]] pass [[RetireSupersededMs]].
     *
     * `keep(g)` names the generation dirs that committed generation `g`
     * serves: a `Sources` partitioned table's snapshot points its untouched
@@ -260,17 +265,80 @@ private[graft] object LakeCommit {
     * that resolved the previous generation to finish its scan. */
   val RetireSupersededMs: Long = 15L * 60 * 1000
 
-  // ---- writer lease (round 13 — VERDICT r12 #3): the single-writer
-  // contract, made CHECKABLE. Mutating verbs hold a heartbeat lease
-  // file under _manifests while they run; a second writer is refused
-  // while the lease is live, and a crashed writer's lease expires by
-  // age so the table can never be wedged — stale-lease takeover
-  // replaces trusting the contract with verifying it. The lease file's
-  // CONTENT carries the holder (host tag + pid) and its MTIME is the
-  // heartbeat; acquisition is create-fail-if-exists, the same one
-  // atomic primitive the commit protocol already rests on. Re-entrant
-  // within a process (maintain drives ingest/build/compact, each of
-  // which guards itself), via a depth counter per (dir, table).
+  /** Publish one generation of `table`: under the writer lease, stage,
+    * `write(stage)` the complete generation, stamp `layout` LAST (the
+    * stamp doubles as the completeness seal), commit, and retire aged
+    * superseded generations. Returns the committed generation dir. */
+  def publish(dir: String, table: String, layout: Int)(
+      write: String => Unit): String =
+    withLease(dir, table) {
+      val gen = stage(dir, table)
+      write(gen)
+      stampLayout(gen, layout)
+      require(commit(dir, table, gen),
+        s"$table publish: another writer published $gen first")
+      cleanup(dir, table, retireMs = RetireSupersededMs)
+      gen
+    }
+
+  /** The serving generation dir of `table`, refused unless it carries
+    * `layout` — an upgraded reader never misreads old-layout state. */
+  def servingGen(dir: String, table: String, layout: Int, what: String): String = {
+    val g = currentGen(dir, table).getOrElse(
+      sys.error(s"no committed $what generation under $dir"))
+    requireLayout(g, layout, what)
+    g
+  }
+
+  /** Fold the marker files under `markers` (tombstones) into a new
+    * generation of `table`, crash-safe at every step:
+    *   1. snapshot the marker files, stage, `write(stage, snapshot)`,
+    *      stamp;
+    *   2. commit — the publish point;
+    *   3. clear EXACTLY the snapshotted markers (a marker appended after
+    *      the snapshot survives and folds next time; re-running after a
+    *      crash here re-folds already-absent ids, a no-op by anti-join);
+    *   4. retire aged superseded generations.
+    * `steps` bounds how far the run gets, so a spec can simulate a kill
+    * after every step. With no markers only step 4 runs, so a re-run
+    * converges after a crash between steps 3 and 4. */
+  def fold(dir: String, table: String, layout: Int, markers: String, steps: Int)(
+      write: (String, Seq[String]) => Unit): Unit =
+    withLease(dir, table) {
+      val snap = dataFiles(markers)
+      if (snap.nonEmpty) {
+        val gen = stage(dir, table)
+        write(gen, snap)
+        stampLayout(gen, layout)
+        if (steps >= 2) require(commit(dir, table, gen),
+          s"$table fold: a racing writer published $gen first")
+        if (steps >= 3) clearMarkers(markers, snap)
+      }
+      if (steps >= 4) cleanup(dir, table, retireMs = RetireSupersededMs)
+    }
+
+  /** Delete exactly the snapshotted marker files `snap`, then `markers`
+    * itself once no marker is left in it. */
+  def clearMarkers(markers: String, snap: Seq[String]): Unit = {
+    snap.foreach(deleteFile)
+    val path = new Path(markers)
+    val fs = fsOf(path)
+    if (fs.exists(path) && fs.listStatus(path)
+      .forall(st => st.isFile && !st.getPath.getName.endsWith(".parquet")))
+      fs.delete(path, true)
+  }
+
+  // ---- writer lease: the single-writer contract, made CHECKABLE.
+  // Mutating verbs hold a heartbeat lease file under _manifests while
+  // they run; a second writer is refused while the lease is live, and a
+  // crashed writer's lease expires by age so the table can never be
+  // wedged. The lease file's CONTENT carries the holder (host tag + pid)
+  // and its MTIME is the heartbeat; acquisition is create-fail-if-exists,
+  // the same one atomic primitive the commit protocol already rests on.
+  // Re-entrant within the holding THREAD (maintain drives
+  // ingest/build/compact, each of which guards itself), via a depth
+  // counter per (dir, table); another thread of the same process is
+  // refused like a foreign writer.
 
   /** How long a held lease fences other writers after its last
     * heartbeat — longer than any single verb, far shorter than the
@@ -281,7 +349,7 @@ private[graft] object LakeCommit {
     new Path(manifestDir(dir), s"$table.lease")
 
   private val leaseDepth =
-    scala.collection.mutable.Map.empty[(String, String), Int]
+    scala.collection.mutable.Map.empty[(String, String), (Thread, Int)]
 
   private def leaseOwner: String =
     s"$hostTag:${java.lang.ProcessHandle.current.pid}"
@@ -306,36 +374,41 @@ private[graft] object LakeCommit {
     } catch { case _: java.io.FileNotFoundException => None }
   }
 
-  /** Take (or re-enter) the writer lease. Returns false when another
-    * writer holds a live lease; a lease past `ttlMs` since its last
-    * heartbeat is taken over (delete + create — if two writers race the
-    * takeover, the create-fail-if-exists CAS picks exactly one). */
+  /** Take (or, from the holding thread, re-enter) the writer lease.
+    * Returns false when another writer — another process, or another
+    * thread of this one — holds a live lease; a lease past `ttlMs` since
+    * its last heartbeat is taken over (delete + create — if two writers
+    * race the takeover, the create-fail-if-exists CAS picks exactly
+    * one). */
   def acquireLease(
       dir: String, table: String, ttlMs: Long = LeaseTtlMs): Boolean =
     leaseDepth.synchronized {
       val key = (dir, table)
-      if (leaseDepth.getOrElse(key, 0) > 0) {
-        leaseDepth(key) = leaseDepth(key) + 1
-        return true
-      }
-      val lp = leasePath(dir, table)
-      val fs = fsOf(lp)
-      fs.mkdirs(manifestDir(dir))
-      leaseHolder(dir, table, ttlMs) match {
-        case Some((_, false)) => false // live foreign lease — refused
-        case other =>
-          // expired (delete the corpse first) or ours from a crashed
-          // same-process run (depth lost — retake)
-          if (other.isDefined || fs.exists(lp)) fs.delete(lp, false)
-          try {
-            val out = fs.create(lp, false)
-            out.write(leaseOwner.getBytes("UTF-8"))
-            out.close()
-            leaseDepth(key) = 1
-            true
-          } catch {
-            case _: FileAlreadyExistsException |
-                 _: org.apache.hadoop.fs.PathExistsException => false
+      val me = Thread.currentThread
+      leaseDepth.get(key) match {
+        case Some((holder, n)) =>
+          if (holder eq me) leaseDepth(key) = (me, n + 1)
+          holder eq me
+        case None =>
+          val lp = leasePath(dir, table)
+          val fs = fsOf(lp)
+          fs.mkdirs(manifestDir(dir))
+          leaseHolder(dir, table, ttlMs) match {
+            case Some((_, false)) => false // live foreign lease — refused
+            case other =>
+              // expired (delete the corpse first) or ours from a crashed
+              // same-process run (depth lost — retake)
+              if (other.isDefined || fs.exists(lp)) fs.delete(lp, false)
+              try {
+                val out = fs.create(lp, false)
+                out.write(leaseOwner.getBytes("UTF-8"))
+                out.close()
+                leaseDepth(key) = (me, 1)
+                true
+              } catch {
+                case _: FileAlreadyExistsException |
+                     _: org.apache.hadoop.fs.PathExistsException => false
+              }
           }
       }
     }
@@ -351,12 +424,12 @@ private[graft] object LakeCommit {
   def releaseLease(dir: String, table: String): Unit =
     leaseDepth.synchronized {
       val key = (dir, table)
-      val d = leaseDepth.getOrElse(key, 0)
-      if (d > 1) leaseDepth(key) = d - 1
-      else {
-        leaseDepth.remove(key)
-        val lp = leasePath(dir, table)
-        fsOf(lp).delete(lp, false)
+      leaseDepth.get(key) match {
+        case Some((holder, n)) if n > 1 => leaseDepth(key) = (holder, n - 1)
+        case _ =>
+          leaseDepth.remove(key)
+          val lp = leasePath(dir, table)
+          fsOf(lp).delete(lp, false)
       }
     }
 
@@ -374,21 +447,18 @@ private[graft] object LakeCommit {
     try f finally releaseLease(dir, table)
   }
 
-  // ---- generation layout stamp (round 13 — VERDICT r12 #6): a code
-  // upgrade that changes a generation's table layout used to rely on
-  // fingerprint churn to avoid misreading old state — deployment dirs
-  // have no fingerprint, so the r12 manifest-layout migration caused
-  // silent rebuilds (BASELINE.md records the incident). Writers stamp
-  // each generation with their layout number AFTER every table write
-  // (the stamp doubles as a completeness seal); readers REFUSE a
-  // mismatch instead of guessing.
+  // ---- generation layout stamp: deployment dirs have no fingerprint
+  // to churn when a code upgrade changes a generation's table layout,
+  // so [[publish]] and [[fold]] stamp each generation with its layout
+  // number AFTER every table write (the stamp doubles as a completeness
+  // seal), and [[servingGen]] REFUSES a mismatch instead of guessing.
 
   private val LayoutPrefix = "_layout_"
 
   /** Stamp `genPath` as written under layout `n` — the LAST write of
     * every stage, so a dir holding the stamp holds the whole
     * generation. */
-  def stampLayout(genPath: String, n: Int): Unit =
+  private def stampLayout(genPath: String, n: Int): Unit =
     createMarker(s"$genPath/$LayoutPrefix$n")
 
   /** The layout a generation was stamped with, if any (pre-r13
@@ -405,7 +475,7 @@ private[graft] object LakeCommit {
   /** Reader-side guard: serving a generation written under a different
     * layout is refused, not reinterpreted — migration is an explicit
     * rebuild, never a silent misread. */
-  def requireLayout(genPath: String, expected: Int, what: String): Unit = {
+  private def requireLayout(genPath: String, expected: Int, what: String): Unit = {
     val found = layoutOf(genPath)
     require(found.contains(expected),
       s"$what generation $genPath carries layout " +
@@ -482,14 +552,6 @@ private[graft] object LakeCommit {
   def deleteFile(p: String): Unit = {
     val path = new Path(p)
     fsOf(path).delete(path, false)
-  }
-
-  def deleteDirIfEmpty(p: String): Unit = {
-    val path = new Path(p)
-    val fs = fsOf(path)
-    if (fs.exists(path) && fs.listStatus(path)
-      .forall(st => st.isFile && !st.getPath.getName.endsWith(".parquet")))
-      fs.delete(path, true)
   }
 
   def exists(p: String): Boolean = { val path = new Path(p); fsOf(path).exists(path) }

@@ -3,17 +3,14 @@ package graft.config
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The ONE maintenance-decision log implementation (round 13 —
-  * factored out of IvfIndex when PqIndex gained decision logging, so
-  * both indexes share the audited machinery instead of a second copy):
-  * a manifest table named `maintlog` under the index dir, sharing the
-  * index's crash-safety. Appends land inside the current log
-  * generation; `log_seq` is read from the stored ROWS (one bounded
-  * aggregate — never the O(n) file-count LIST the r12 version paid,
-  * and monotonic across folds); the log folds itself into a fresh
-  * single-file generation once [[FoldFiles]] decision files accumulate
-  * (VERDICT r12 #2). Single-writer under the caller's lease, like the
-  * verbs that drive it.
+/** The ONE maintenance-decision log implementation, shared by
+  * [[IvfIndex]] and [[PqIndex]]: a manifest table named `maintlog` under
+  * the index dir, published through [[LakeCommit.publish]]. Appends land
+  * inside the current log generation; `log_seq` is read from the stored
+  * ROWS (one bounded aggregate, monotonic across folds); the log folds
+  * itself into a fresh single-file generation once [[FoldFiles]]
+  * decision files accumulate. Single-writer under the caller's lease,
+  * like the verbs that drive it.
   */
 private[graft] object MaintLog {
 
@@ -24,12 +21,9 @@ private[graft] object MaintLog {
   private val Table = "maintlog"
 
   /** The decision trail — one row per maintain call. */
-  def read(spark: SparkSession, dir: String, layout: Int): DataFrame = {
-    val g = LakeCommit.currentGen(dir, Table).getOrElse(
-      sys.error(s"no committed maintlog generation under $dir"))
-    LakeCommit.requireLayout(g, layout, "maintlog")
-    spark.read.parquet(s"$g/log")
-  }
+  def read(spark: SparkSession, dir: String, layout: Int): DataFrame =
+    spark.read.parquet(
+      s"${LakeCommit.servingGen(dir, Table, layout, "maintlog")}/log")
 
   /** One-plus-stored-max — gapless across folds. */
   def nextSeq(spark: SparkSession, dir: String): Long =
@@ -54,29 +48,20 @@ private[graft] object MaintLog {
         if (LakeCommit.dataFiles(s"$g/log").length > FoldFiles)
           fold(spark, dir, layout, leaseTable)
       case None =>
-        val stage = LakeCommit.stage(dir, Table)
-        row.coalesce(1).write.parquet(s"$stage/log")
-        LakeCommit.stampLayout(stage, layout)
-        require(LakeCommit.commit(dir, Table, stage),
-          s"maintlog: another writer published $stage first")
+        LakeCommit.publish(dir, Table, layout)(stage =>
+          row.coalesce(1).write.parquet(s"$stage/log"))
     }
 
   /** Fold the accumulated per-decision files into ONE file in a fresh
-    * generation — the same manifest swap every compact in this repo
-    * rides. `log_seq` lives in the rows, so ordering is untouched. */
+    * generation. `log_seq` lives in the rows, so ordering is untouched. */
   def fold(
       spark: SparkSession, dir: String, layout: Int,
       leaseTable: String): Unit =
     LakeCommit.currentGen(dir, Table).foreach { g =>
       LakeCommit.withLease(dir, leaseTable) {
-        val stage = LakeCommit.stage(dir, Table)
-        spark.read.parquet(s"$g/log")
-          .coalesce(1).write.parquet(s"$stage/log")
-        LakeCommit.stampLayout(stage, layout)
-        require(LakeCommit.commit(dir, Table, stage),
-          s"maintlog fold: another writer published $stage first")
-        LakeCommit.cleanup(dir, Table,
-          retireMs = LakeCommit.RetireSupersededMs)
+        LakeCommit.publish(dir, Table, layout)(stage =>
+          spark.read.parquet(s"$g/log")
+            .coalesce(1).write.parquet(s"$stage/log"))
       }
     }
 }

@@ -20,25 +20,26 @@ import org.apache.spark.sql.functions._
   *     base embeddings table is touched only for the bounded exact
   *     re-rank candidates.
   *
-  * Both tables share one generation dir published through
-  * [[LakeCommit]]'s manifest-pointer protocol (round 12 — VERDICT r11
-  * #1): a generation swap is one atomic manifest creation, a reader can
-  * never pair codes from one training with a codebook from another, and
-  * no step of build/compact leaves a window without serving state — the
-  * object-store posture the old local-FS double rename could not give.
-  * Freshness rides [[LakeCache]]; the declared recompute twin
+  * Both tables share one generation dir, written through
+  * [[LakeCommit.publish]] (build) and [[LakeCommit.fold]] (compact), so
+  * a reader can never pair codes from one training with a codebook from
+  * another. Freshness rides [[LakeCache]]; the declared recompute twin
   * (`llm_pq_topk_train`) keeps training inside its plan under the SAME
   * oracle, so stored codes and the live recipe can never silently
   * drift.
   */
 object PqIndex {
 
-  /** Generation layout version (round 13 — VERDICT r12 #6): stamped on
-    * write, required on read — see [[IvfIndex.Layout]]. 3 = codebook +
-    * codes + meta under an explicit stamp. */
+  /** Generation layout version: stamped on write, required on read —
+    * see [[IvfIndex.Layout]]. 3 = codebook + codes + meta under an
+    * explicit stamp. */
   val Layout = 3
 
   private val Table = "pq"
+
+  /** The serving generation dir, layout-checked. */
+  private def gen(dir: String): String =
+    LakeCommit.servingGen(dir, Table, Layout, "pq index")
 
   /** Index dir for `sfDir`'s embeddings table, training it (once per
     * corpus fingerprint) if absent. Parameters live in Llm (PqM/PqD/
@@ -74,15 +75,13 @@ object PqIndex {
     * frame-parameterized so ScaleSmoke can build synthetic-scale
     * indexes through the same code. */
   def build(spark: SparkSession, e: DataFrame, dir: String,
-      compactTauMicro: Long = IvfIndex.CompactTauMicro): Unit =
-    LakeCommit.withLease(dir, Table) {
+      compactTauMicro: Long = IvfIndex.CompactTauMicro): Unit = {
     // the subspace tick-frame feeds seeding + two assignment passes —
     // one materialization instead of three scans
     val sv = Llm.pqSubFrame(e).persist()
-    try {
+    try LakeCommit.publish(dir, Table, Layout) { stage =>
       val cb = Llm.pqRecenter(Llm.pqAssign(sv, Llm.pqSeeds(sv)))
         .localCheckpoint()
-      val stage = LakeCommit.stage(dir, Table)
       cb.write.parquet(s"$stage/codebook")
       Llm.pqCodesPacked(Llm.pqAssign(sv, cb))
         .write.parquet(s"$stage/codes")
@@ -91,11 +90,6 @@ object PqIndex {
       spark.range(1)
         .select(lit(compactTauMicro).as("compact_tau_micro"))
         .coalesce(1).write.parquet(s"$stage/meta")
-      LakeCommit.stampLayout(stage, Layout)
-      require(LakeCommit.commit(dir, Table, stage),
-        s"build: another writer published $stage first")
-      LakeCommit.cleanup(dir, Table,
-        retireMs = LakeCommit.RetireSupersededMs)
     } finally sv.unpersist()
   }
 
@@ -108,13 +102,12 @@ object PqIndex {
   def maintain(spark: SparkSession, dir: String, batch: DataFrame): String =
     LakeCommit.withLease(dir, Table) {
     ingest(spark, dir, batch)
-    val tauMicro = spark.read.parquet(s"${genDir(dir)}/meta")
+    val tauMicro = spark.read.parquet(s"${gen(dir)}/meta")
       .head().getLong(0)
     val deadN = tombstones(spark, dir).count()
     val totalN = codes(spark, dir).count()
     val action =
-      if (totalN > 0 &&
-        BigInt(deadN) * 1000000 > BigInt(tauMicro) * totalN) {
+      if (Tombstones.overTau(deadN, totalN, tauMicro)) {
         compact(spark, dir)
         "ingest+compact"
       } else "ingest"
@@ -150,85 +143,44 @@ object PqIndex {
     * code rows). */
   def ingest(spark: SparkSession, dir: String, batch: DataFrame): Unit =
     LakeCommit.withLease(dir, Table) {
-      requireMutable(dir, "ingest")
+      Tombstones.requireMutable(dir, "ingest")
       val sv = Llm.pqSubFrame(batch.select(col("vec_id"), col("embedding")))
       Llm.pqCodesPacked(Llm.pqAssign(sv, codebook(spark, dir)))
-        .write.mode("append").parquet(s"${genDir(dir)}/codes")
+        .write.mode("append").parquet(s"${gen(dir)}/codes")
     }
 
-  /** Tombstone vec_ids — [[IvfIndex.delete]]'s marker protocol applied
-    * to the code table: deletes append ids outside the generation dirs,
-    * serving anti-joins [[tombstones]], [[compact]] folds exactly the
-    * snapshotted marker files. Idempotent on repeats. */
+  /** Tombstone vec_ids — [[Tombstones]]' markers on the code table;
+    * serving anti-joins [[tombstones]]. */
   def delete(spark: SparkSession, dir: String, vecIds: DataFrame): Unit =
-    LakeCommit.withLease(dir, Table) {
-      requireMutable(dir, "delete")
-      vecIds.select(col("vec_id")).distinct().coalesce(1)
-        .write.mode("append").parquet(s"$dir/tombstones")
-    }
+    Tombstones.delete(dir, Table, vecIds)
 
-  def tombstones(spark: SparkSession, dir: String): DataFrame = {
-    val files = LakeCommit.dataFiles(s"$dir/tombstones")
-    if (files.nonEmpty) spark.read.parquet(files: _*).distinct()
-    else spark.range(0).select(col("id").as("vec_id"))
-  }
+  def tombstones(spark: SparkSession, dir: String): DataFrame =
+    Tombstones.all(spark, dir)
 
-  /** Fold accumulated tombstones into the code table — the
-    * [[IvfIndex.compact]] manifest-pointer generation swap: stage
-    * {codebook, live codes}, commit with one manifest creation, clear
-    * exactly the folded marker files, retire superseded generations.
-    * Crash-safe at every step; a delete racing the fold survives it. */
+  /** Fold accumulated tombstones into the code table: a new generation
+    * of {codebook, meta, live codes}. */
   def compact(spark: SparkSession, dir: String): Unit =
     compactSteps(spark, dir, steps = 4)
 
   /** Crash-matrix step hook — see [[IvfIndex.compactSteps]]. */
   private[graft] def compactSteps(
-      spark: SparkSession, dir: String, steps: Int,
-      retireMs: Long = LakeCommit.RetireSupersededMs): Unit =
-    LakeCommit.withLease(dir, Table) {
-    requireMutable(dir, "compact")
-    val snap = LakeCommit.dataFiles(s"$dir/tombstones")
-    if (snap.isEmpty) {
-      // converge after a crash between marker clear and retire
-      if (steps >= 4) LakeCommit.cleanup(dir, Table, retireMs = retireMs)
-    } else {
-    val dead = spark.read.parquet(snap: _*).select("vec_id").distinct()
-    val live = codes(spark, dir).join(dead, Seq("vec_id"), "left_anti")
-    val stage = LakeCommit.stage(dir, Table)
-    codebook(spark, dir).write.parquet(s"$stage/codebook")
-    spark.read.parquet(s"${genDir(dir)}/meta")
-      .coalesce(1).write.parquet(s"$stage/meta")
-    live.write.parquet(s"$stage/codes")
-    LakeCommit.stampLayout(stage, Layout)
-    if (steps >= 2) {
-    require(LakeCommit.commit(dir, Table, stage),
-      s"compact: a racing writer published $stage first")
-    if (steps >= 3) {
-    snap.foreach(LakeCommit.deleteFile)
-    LakeCommit.deleteDirIfEmpty(s"$dir/tombstones")
-    if (steps >= 4)
-    LakeCommit.cleanup(dir, Table, retireMs = retireMs)
-    }
-    }
+      spark: SparkSession, dir: String, steps: Int): Unit = {
+    Tombstones.requireMutable(dir, "compact")
+    LakeCommit.fold(dir, Table, Layout, Tombstones.dir(dir), steps) {
+      (stage, snap) =>
+        codebook(spark, dir).write.parquet(s"$stage/codebook")
+        spark.read.parquet(s"${gen(dir)}/meta")
+          .coalesce(1).write.parquet(s"$stage/meta")
+        codes(spark, dir)
+          .join(Tombstones.ids(spark, snap), Seq("vec_id"), "left_anti")
+          .write.parquet(s"$stage/codes")
     }
   }
-
-  private[graft] def genDir(dir: String): String = {
-    val g = LakeCommit.currentGen(dir, Table).getOrElse(
-      sys.error(s"no committed pq generation under $dir"))
-    LakeCommit.requireLayout(g, Layout, "pq index")
-    g
-  }
-
-  private def requireMutable(dir: String, verb: String): Unit =
-    require(!LakeCache.isManaged(dir),
-      s"$verb: $dir is a LakeCache-managed derived cache (evictable, " +
-        "rebuilt-on-change) — mutating verbs require a deployment index dir")
 
   def codebook(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"${genDir(dir)}/codebook")
+    spark.read.parquet(s"${gen(dir)}/codebook")
 
   /** The stored encoded corpus (vec_id, codes ARRAY<BIGINT>). */
   def codes(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"${genDir(dir)}/codes")
+    spark.read.parquet(s"${gen(dir)}/codes")
 }

@@ -170,10 +170,10 @@ class IvfSpec extends AnyFunSuite {
     // ensure() is idempotent per fingerprint — the second call serves
     // the same dir without rebuilding (mtime of the stored artifacts
     // must not change; the generation resolves through the manifest)
-    val gen = graft.config.IvfIndex.genDir(dir)
+    val gen = graft.config.LakeCommit.currentGen(dir, "index").get
     val mt0 = new java.io.File(s"$gen/centroids").lastModified
     assert(graft.config.IvfIndex.ensure(spark, d) == dir)
-    assert(graft.config.IvfIndex.genDir(dir) == gen)
+    assert(graft.config.LakeCommit.currentGen(dir, "index").contains(gen))
     assert(new java.io.File(s"$gen/centroids").lastModified == mt0)
     // the served plan dynamic-partition-prunes the inverted file: only
     // the probed cells' partitions are read
@@ -198,7 +198,7 @@ class IvfSpec extends AnyFunSuite {
         def walk(f: java.io.File): Seq[java.io.File] =
           if (f.isDirectory) f.listFiles.toSeq.flatMap(walk) else Seq(f)
         walk(new java.io.File(
-            s"${graft.config.IvfIndex.genDir(dir)}/assign"))
+            s"${graft.config.LakeCommit.currentGen(dir, "index").get}/assign"))
           .filter(_.getName.endsWith(".parquet")).map(_.getPath).toSet
       }
       val before = assignFiles
@@ -237,7 +237,8 @@ class IvfSpec extends AnyFunSuite {
     try {
       graft.config.PqIndex.build(spark, e.where(col("vec_id") < 400), dir)
       def codeFiles: Set[String] =
-        new java.io.File(s"${graft.config.PqIndex.genDir(dir)}/codes")
+        new java.io.File(
+          s"${graft.config.LakeCommit.currentGen(dir, "pq").get}/codes")
           .listFiles.filter(_.getName.endsWith(".parquet"))
           .map(_.getName).toSet
       val before = codeFiles
@@ -377,6 +378,39 @@ class IvfSpec extends AnyFunSuite {
       .deleteDirectory(new java.io.File(dir))
   }
 
+  /** A mutable index as the crash tests drive it: its manifest table,
+    * and its build / delete / step-bounded compact / stored rows /
+    * tombstones verbs. */
+  private case class MutableIndex(
+      table: String,
+      build: (org.apache.spark.sql.DataFrame, String) => Unit,
+      delete: (String, org.apache.spark.sql.DataFrame) => Unit,
+      compactSteps: (String, Int) => Unit,
+      rows: String => org.apache.spark.sql.DataFrame,
+      tombstones: String => org.apache.spark.sql.DataFrame) {
+    def compact(dir: String): Unit = compactSteps(dir, 4)
+    def live(dir: String): Set[Long] =
+      rows(dir).join(tombstones(dir), Seq("vec_id"), "left_anti")
+        .select("vec_id").collect().map(_.getLong(0)).toSet
+  }
+
+  private lazy val mutableIndexes = {
+    import graft.config.{IvfIndex, PqIndex}
+    Seq(
+      MutableIndex("index",
+        (e, dir) => IvfIndex.build(spark, e, dir, 16, 64, 1),
+        (dir, ids) => IvfIndex.delete(spark, dir, ids),
+        (dir, steps) => IvfIndex.compactSteps(spark, dir, steps),
+        dir => IvfIndex.assignments(spark, dir),
+        dir => IvfIndex.tombstones(spark, dir)),
+      MutableIndex("pq",
+        (e, dir) => PqIndex.build(spark, e, dir),
+        (dir, ids) => PqIndex.delete(spark, dir, ids),
+        (dir, steps) => PqIndex.compactSteps(spark, dir, steps),
+        dir => PqIndex.codes(spark, dir),
+        dir => PqIndex.tombstones(spark, dir)))
+  }
+
   test("manifest-commit crash MATRIX (r12 — VERDICT r11 #1): a kill " +
     "after EVERY compact step leaves a servable, CORRECT index, and a " +
     "re-run compact converges from every intermediate state") {
@@ -386,40 +420,34 @@ class IvfSpec extends AnyFunSuite {
     // steps: 1 = staged only, 2 = +manifest commit, 3 = +marker clear,
     // 4 = the full verb — the old rename-swap had a between-renames
     // window with NO serving dir; the manifest protocol must not
-    for (steps <- 1 to 4) {
+    for (ix <- mutableIndexes; steps <- 1 to 4) {
       val dir = java.nio.file.Files
-        .createTempDirectory(s"graft_ivf_crash$steps").toString
+        .createTempDirectory(s"graft_${ix.table}_crash$steps").toString
       try {
-        graft.config.IvfIndex.build(spark, e.where(col("vec_id") < 200),
-          dir, 16, 64, 1)
-        graft.config.IvfIndex.delete(spark, dir,
-          e.where(col("vec_id") < 10).select(col("vec_id")))
-        graft.config.IvfIndex.compactSteps(spark, dir, steps)
+        ix.build(e.where(col("vec_id") < 200), dir)
+        ix.delete(dir, e.where(col("vec_id") < 10).select(col("vec_id")))
+        ix.compactSteps(dir, steps)
         // SERVABLE at this crash point: the manifest resolves a complete
         // generation, and the anti-join serve answers exactly the
         // pre-compact live set (tombstones may or may not have folded —
         // re-anti-joining already-removed ids is a no-op)
-        val live = graft.config.IvfIndex.assignments(spark, dir)
-          .join(graft.config.IvfIndex.tombstones(spark, dir),
-            Seq("vec_id"), "left_anti")
-          .select("vec_id").collect().map(_.getLong(0)).toSet
-        assert(live == (10L until 200L).toSet,
-          s"serve must be correct after a crash at step $steps")
+        assert(ix.live(dir) == (10L until 200L).toSet,
+          s"${ix.table} serve must be correct after a crash at step $steps")
         // recovery: a plain re-run compact (plus one no-op call when the
         // markers are already folded) converges to the terminal state
-        graft.config.IvfIndex.compact(spark, dir)
-        graft.config.IvfIndex.compact(spark, dir)
-        assert(graft.config.IvfIndex.assignments(spark, dir).count() == 190)
-        assert(graft.config.IvfIndex.tombstones(spark, dir).count() == 0)
-        // round 13: exactly ONE committed generation after the aged
-        // sweep; the step-1 run's abandoned stage may remain on disk
-        // (its writer — this JVM — is alive, and a live writer's
-        // unmanifested stage is never swept: the ADVICE r12 #1 race
-        // fix) until pid-death or the stale age reclaims it
-        graft.config.LakeCommit.cleanup(dir, "index", retireMs = 0)
+        ix.compact(dir)
+        ix.compact(dir)
+        assert(ix.rows(dir).count() == 190)
+        assert(ix.tombstones(dir).count() == 0)
+        // exactly ONE committed generation after the aged sweep; the
+        // step-1 run's abandoned stage may remain on disk (its writer —
+        // this JVM — is alive, and a live writer's unmanifested stage is
+        // never swept) until pid-death or the stale age reclaims it
+        graft.config.LakeCommit.cleanup(dir, ix.table, retireMs = 0)
         assert(graft.config.LakeCommit.allEntries(dir)
-          .count(_._1 == "index") == 1,
-          s"recovery from step $steps must leave one committed generation")
+          .count(_._1 == ix.table) == 1,
+          s"${ix.table} recovery from step $steps must leave one " +
+            "committed generation")
       } finally org.apache.commons.io.FileUtils
         .deleteDirectory(new java.io.File(dir))
     }
@@ -431,33 +459,28 @@ class IvfSpec extends AnyFunSuite {
     val d = "/root/testdata/sf0.001"
     val e = Tables(spark, d, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivf_race").toString
-    try {
-      graft.config.IvfIndex.build(spark, e.where(col("vec_id") < 200),
-        dir, 16, 64, 1)
-      graft.config.IvfIndex.delete(spark, dir,
-        e.where(col("vec_id") < 10).select(col("vec_id")))
-      // the compact crashed right after its commit — its snapshot (the
-      // first marker file) is folded but not yet cleared...
-      graft.config.IvfIndex.compactSteps(spark, dir, steps = 2)
-      // ...and a racing delete lands NOW, after the snapshot was taken
-      graft.config.IvfIndex.delete(spark, dir,
-        e.where(col("vec_id") >= 10 && col("vec_id") < 20)
+    for (ix <- mutableIndexes) {
+      val dir = java.nio.file.Files
+        .createTempDirectory(s"graft_${ix.table}_race").toString
+      try {
+        ix.build(e.where(col("vec_id") < 200), dir)
+        ix.delete(dir, e.where(col("vec_id") < 10).select(col("vec_id")))
+        // the compact crashed right after its commit — its snapshot (the
+        // first marker file) is folded but not yet cleared...
+        ix.compactSteps(dir, 2)
+        // ...and a racing delete lands NOW, after the snapshot was taken
+        ix.delete(dir, e.where(col("vec_id") >= 10 && col("vec_id") < 20)
           .select(col("vec_id")))
-      // the late markers are live immediately (anti-join serve)...
-      val live = graft.config.IvfIndex.assignments(spark, dir)
-        .join(graft.config.IvfIndex.tombstones(spark, dir),
-          Seq("vec_id"), "left_anti")
-        .select("vec_id").collect().map(_.getLong(0)).toSet
-      assert(live == (20L until 200L).toSet)
-      // ...and the recovery compact folds them instead of discarding
-      // them with the crashed run's marker table (the old behavior)
-      graft.config.IvfIndex.compact(spark, dir)
-      assert(graft.config.IvfIndex.assignments(spark, dir).count() == 180)
-      assert(graft.config.IvfIndex.tombstones(spark, dir).count() == 0)
-    } finally org.apache.commons.io.FileUtils
-      .deleteDirectory(new java.io.File(dir))
+        // the late markers are live immediately (anti-join serve)...
+        assert(ix.live(dir) == (20L until 200L).toSet, ix.table)
+        // ...and the recovery compact folds them instead of discarding
+        // them with the crashed run's marker table
+        ix.compact(dir)
+        assert(ix.rows(dir).count() == 180, ix.table)
+        assert(ix.tombstones(dir).count() == 0, ix.table)
+      } finally org.apache.commons.io.FileUtils
+        .deleteDirectory(new java.io.File(dir))
+    }
   }
 
   test("LakeCache-managed dirs are IMMUTABLE (r12 — VERDICT r11 advice " +

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.config.{IvfIndex, LakeCache, LakeCommit}
+import graft.config.{AnalyticFrames, IvfIndex, LakeCache, LakeCommit, MaintLog, PqIndex}
 
 /** Round 13: the commit-protocol hardening laws — the ADVICE r12 race
   * fixes (a live writer's in-flight stage survives a same-seq sweep; a
@@ -137,6 +137,32 @@ class LakeCommitSpec extends AnyFunSuite {
       IvfIndex.ingest(spark, dir,
         e.where(col("vec_id") >= 120 && col("vec_id") < 130))
       assert(IvfIndex.assignments(spark, dir).count() == 130)
+      // re-entrancy is per thread: while thread A sits inside the lease,
+      // a second thread of this same process is refused like a foreign
+      // writer
+      val entered = new java.util.concurrent.CountDownLatch(1)
+      val leave = new java.util.concurrent.CountDownLatch(1)
+      val a = new Thread(() =>
+        LakeCommit.withLease(dir, "t") {
+          LakeCommit.withLease(dir, "index") {
+            entered.countDown()
+            leave.await()
+          }
+        })
+      a.start()
+      try {
+        entered.await()
+        assert(!LakeCommit.acquireLease(dir, "t"),
+          "a second thread must not re-enter another thread's lease")
+        val exThread = intercept[IllegalArgumentException](
+          IvfIndex.ingest(spark, dir,
+            e.where(col("vec_id") >= 130 && col("vec_id") < 140)))
+        assert(exThread.getMessage.contains("lease"), exThread.getMessage)
+      } finally { leave.countDown(); a.join() }
+      assert(IvfIndex.assignments(spark, dir).count() == 130,
+        "the refused thread must not have written anything")
+      // once thread A has left, this thread takes the lease normally
+      LakeCommit.withLease(dir, "t")(())
     } finally rm(dir)
   }
 
@@ -165,23 +191,43 @@ class LakeCommitSpec extends AnyFunSuite {
     "one — migration is explicit, never a silent misread") {
     val e = Tables(spark, d, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val dir = tmp("graft_layout")
+    val ivfDir = tmp("graft_layout")
+    val pqDir = tmp("graft_layout_pq")
+    val frameDir = tmp("graft_layout_frame")
     try {
-      IvfIndex.build(spark, e.where(col("vec_id") < 100), dir, 16, 64, 1)
-      val gen = LakeCommit.currentGen(dir, "index").get
-      assert(LakeCommit.layoutOf(gen).contains(IvfIndex.Layout))
-      // old reader / new generation: a reader pinned to layout N-1
-      // must refuse what this code wrote
-      val exOld = intercept[IllegalArgumentException](
-        LakeCommit.requireLayout(gen, IvfIndex.Layout - 1, "old reader"))
-      assert(exOld.getMessage.contains("layout"))
-      // new reader / old generation: strip the stamp (what a pre-r13
-      // build looks like) — every serving accessor must refuse it
-      LakeCommit.deleteFile(s"$gen/_layout_${IvfIndex.Layout}")
-      val exNew = intercept[IllegalArgumentException](
-        IvfIndex.assignments(spark, dir).count())
-      assert(exNew.getMessage.contains("layout"), exNew.getMessage)
-    } finally rm(dir)
+      IvfIndex.build(spark, e.where(col("vec_id") < 100), ivfDir, 16, 64, 1)
+      IvfIndex.maintain(spark, ivfDir,
+        e.where(col("vec_id") >= 100 && col("vec_id") < 110))
+      PqIndex.build(spark, e.where(col("vec_id") < 200), pqDir)
+      AnalyticFrames.buildCoOrder(spark,
+        Tables(spark, d, "orders").where(col("o_orderkey") % 10 === 0),
+        Tables(spark, d, "lineitem"), frameDir)
+      // every stamped writer: (what, dir, table, layout, a serving read)
+      val writers = Seq[(String, String, String, Int, () => Long)](
+        ("ivf index", ivfDir, "index", IvfIndex.Layout,
+          () => IvfIndex.assignments(spark, ivfDir).count()),
+        ("maintlog", ivfDir, "maintlog", IvfIndex.Layout,
+          () => IvfIndex.maintlog(spark, ivfDir).count()),
+        ("pq index", pqDir, "pq", PqIndex.Layout,
+          () => PqIndex.codes(spark, pqDir).count()),
+        ("analytic frame", frameDir, "frame", AnalyticFrames.Layout,
+          () => AnalyticFrames.coOrderEdges(spark, frameDir).count()))
+      for ((what, dir, table, layout, serve) <- writers) {
+        val gen = LakeCommit.currentGen(dir, table).get
+        assert(LakeCommit.layoutOf(gen).contains(layout), what)
+        // old reader / new generation: a reader pinned to layout N-1
+        // must refuse what this code wrote
+        val exOld = intercept[IllegalArgumentException](
+          LakeCommit.servingGen(dir, table, layout - 1, "old reader"))
+        assert(exOld.getMessage.contains("layout"), what)
+        // new reader / old generation: strip the stamp (what a pre-r13
+        // build looks like) — the serving accessor must refuse it
+        LakeCommit.deleteFile(s"$gen/_layout_$layout")
+        val exNew = intercept[IllegalArgumentException](serve())
+        assert(exNew.getMessage.contains("layout"),
+          s"$what: ${exNew.getMessage}")
+      }
+    } finally Seq(ivfDir, pqDir, frameDir).foreach(rm)
   }
 
   test("maintlog fold (VERDICT r12 #2): log_seq is read from the rows " +
@@ -198,7 +244,7 @@ class LakeCommitSpec extends AnyFunSuite {
       val logGen0 = LakeCommit.currentGen(dir, "maintlog").get
       val preFiles = LakeCommit.dataFiles(s"$logGen0/log").length
       assert(preFiles == 3, s"one decision file per maintain ($preFiles)")
-      IvfIndex.foldMaintlog(spark, dir)
+      MaintLog.fold(spark, dir, IvfIndex.Layout, "index")
       LakeCommit.cleanup(dir, "maintlog", retireMs = 0)
       val logGen1 = LakeCommit.currentGen(dir, "maintlog").get
       assert(logGen1 != logGen0, "the fold must publish a new generation")

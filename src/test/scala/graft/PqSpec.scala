@@ -115,10 +115,10 @@ class PqSpec extends AnyFunSuite {
     assert(stored.nonEmpty)
     // ensure() is idempotent per fingerprint — the second call serves
     // the same dir without rebuilding (generation resolved via manifest)
-    val gen = graft.config.PqIndex.genDir(dir)
+    val gen = graft.config.LakeCommit.currentGen(dir, "pq").get
     val mt0 = new java.io.File(s"$gen/codebook").lastModified
     assert(graft.config.PqIndex.ensure(spark, d) == dir)
-    assert(graft.config.PqIndex.genDir(dir) == gen)
+    assert(graft.config.LakeCommit.currentGen(dir, "pq").contains(gen))
     assert(new java.io.File(s"$gen/codebook").lastModified == mt0)
     // the stored code table really is the compressed representation:
     // one row per vector, PqM codes each, every code inside [0, PqK)
