@@ -1,6 +1,13 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the harness testdata tables (schemas: FIXTURES.md).
   *
@@ -58,7 +65,7 @@ object Tables {
       // the same file. All entry points already run UTC — pin it here too so
       // a non-UTC caller can't silently shift events.ts.
       spark.conf.set("spark.sql.session.timeZone", "UTC")
-      val df = spark.read.parquet(s"$sfDir/$name.parquet")
+      val df = scan(spark, s"$sfDir/$name.parquet")
       df.schema("ts").dataType match {
         case LongType => // nanos generation
           df.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
@@ -66,7 +73,26 @@ object Tables {
           df.withColumn("ts", col("ts").cast("timestamp"))
         case _ => df // already TimestampType
       }
-    } else spark.read.parquet(s"$sfDir/$name.parquet")
+    } else scan(spark, s"$sfDir/$name.parquet")
+  }
+
+  /** Scan `path` (a parquet file, or a dir of files sharing one schema)
+    * with the schema in its first data file's footer, read on the driver:
+    * `spark.read.parquet` would infer it with one Spark job per call. */
+  private[graft] def scan(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(footerSchema(spark, path)).parquet(path)
+
+  private def footerSchema(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val file = p.getFileSystem(conf).listStatus(p).toSeq
+      .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
+        !f.getPath.getName.startsWith("."))
+      .minBy(_.getPath.getName)
+    val footer = new Footer(file.getPath, ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS))
+    ParquetFileFormat.readSchemaFromFooter(footer,
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
   }
 }
 

@@ -46,19 +46,21 @@ object Pipeline {
   case object ManifestedIO
 
   /** Publish `df` as the table at `path`'s next generation, partitioned by
-    * `partitionCol` or whole. The row count rides the write pass through
-    * `observe`. */
+    * `partitionCol` or whole. Returns the table's rows after the commit,
+    * which the write observed into the snapshot. */
   private[graft] def publish(
       df: DataFrame, partitionCol: Option[String], path: String): TableResult = {
-    val spark = df.sparkSession
-    val obs = org.apache.spark.sql.Observation(s"publish_${path.split('/').last}")
-    val observed = df.observe(obs, count(lit(1)).as("rows"))
     partitionCol match {
-      case Some(c) => Sources.publishPartitions(spark, path, observed, c)
-      case None => Sources.publishVersion(spark, path, observed)
+      case Some(c) => Sources.publishPartitions(df.sparkSession, path, df, c)
+      case None => Sources.publishVersion(df.sparkSession, path, df)
     }
-    TableResult(path.split('/').last, obs.get("rows").asInstanceOf[Long], path)
+    published(df.sparkSession, path)
   }
+
+  /** The table at `path` as it serves now: its rows come from the snapshot,
+    * not a scan. */
+  private def published(spark: SparkSession, path: String): TableResult =
+    TableResult(path.split('/').last, Sources.rowCount(spark, path), path)
 
   def run(spark: SparkSession, cfg: RunConfig, outDir: String,
       io: ManifestedIO.type = ManifestedIO): Seq[TableResult] = {
@@ -193,15 +195,12 @@ object Pipeline {
       .where(col("ts") >= lit(batchStart).cast("timestamp"))
       .select(date_trunc("month", col("ts")).as("m")).distinct()
       .collect().map(_.getTimestamp(0))
-    if (affected.isEmpty)
-      return TableResult("monthly_usage", 0L, path)
+    if (affected.isEmpty) return published(spark, path)
     val lookbackStart = new java.sql.Timestamp(
       affected.map(_.getTime).min - Etl.SessionGapMinutes * 60L * 1000L)
     val recomputed = Etl.monthlyUsage(ev.where(col("ts") >= lit(lookbackStart)))
       .where(col("month").isin(affected.toSeq: _*))
-    Sources.publishPartitions(spark, path, recomputed, "month")
-    TableResult("monthly_usage",
-      readTableCurrent(spark, outDir, "monthly_usage").count(), path)
+    publish(recomputed, Some("month"), path)
   }
 
   /** Batch-local session summaries: sessionize the batch ALONE (skew-safe
@@ -262,12 +261,15 @@ object Pipeline {
     * already judged > gap within the batch). Global ids are
     * last_sid + batch_sid − bridge.
     *
-    * Only partitions holding a changed row (a bridged session keeps its
-    * OLD start month — that partition is rewritten; new sessions land in
-    * their own months) are republished; the new partition content is
-    * published-minus-replaced-plus-changed. At 100 TB the cost is one
-    * batch scan + one pass over the published SESSIONS table (to find
-    * each user's tail) — the raw event
+    * The republished months are the batch's months plus the start months
+    * of published sessions that end within the gap of `batchStart` (a
+    * bridged session keeps its OLD start month), found by two cheap scans
+    * before any merge: a superset of the months holding a changed row, so
+    * the merge runs once, inside the write. The new partition content is
+    * published-minus-replaced-plus-changed; a month with no changed row is
+    * rewritten with the rows it had. At 100 TB the cost is two batch
+    * scans + two passes over the published SESSIONS table (the month list
+    * and each user's tail) — the raw event
     * history is never rescanned, and the sessions table is orders of
     * magnitude smaller than the event stream it summarizes. ScaleSmoke
     * measures the merge at 5× cheaper than the full rebuild on a 60M-event
@@ -279,15 +281,18 @@ object Pipeline {
     val path = s"$outDir/sessions"
     val prior = readTableCurrent(spark, outDir, "sessions")
       .select("user_id", "session_id", "session_start", "session_end", "n_events")
-    val batch = cfg.copy(startDate = None).table(spark, "events")
-      .where(col("ts") >= lit(batchStart).cast("timestamp"))
-    val batchSessions = batchSessionSummaries(batch)
-    if (batchSessions.isEmpty)
-      return TableResult("sessions", readTableCurrent(spark, outDir, "sessions").count(), path)
-    val changed = mergeSessions(prior, batchSessions)
+    val start = lit(batchStart).cast("timestamp")
+    val batch = cfg.copy(startDate = None).table(spark, "events").where(col("ts") >= start)
     val monthOf = date_trunc("month", col("session_start"))
-    val affected = changed.select(monthOf.as("m")).distinct()
-      .collect().map(_.getTimestamp(0)).toSeq
+    // every month a changed row can start in, found without the merge
+    val gap = expr(s"INTERVAL ${Etl.SessionGapMinutes} MINUTES")
+    val months = batch.select(date_trunc("month", col("ts")).as("m"), lit(true).as("batch"))
+      .union(prior.where(col("session_end") + gap >= start)
+        .select(monthOf.as("m"), lit(false).as("batch")))
+      .distinct().collect()
+    if (!months.exists(_.getBoolean(1))) return published(spark, path)
+    val affected = months.map(_.getTimestamp(0)).distinct.toSeq
+    val changed = mergeSessions(prior, batchSessionSummaries(batch))
     // published rows of the affected months, minus the rows a merged
     // session replaces (same (user_id, session_id) key), plus the changes
     val content = prior
@@ -296,8 +301,7 @@ object Pipeline {
         Seq("user_id", "session_id"), "left_anti")
       .unionByName(changed)
       .withColumn("month", monthOf)
-    Sources.publishPartitions(spark, path, content, "month")
-    TableResult("sessions", readTableCurrent(spark, outDir, "sessions").count(), path)
+    publish(content, Some("month"), path)
   }
 
   /** Incremental maintenance of the published `user_lifetime` table: pure
@@ -368,7 +372,7 @@ object Pipeline {
     // heartbeat batch with no events past batchStart must not pay the
     // lookback scan + state join + overwrite machinery
     if (ev.where(col("ts") >= lit(batchStart).cast("timestamp")).isEmpty)
-      return TableResult("churn_daily", 0L, path)
+      return published(spark, path)
     val win = ev
       .where(col("ts") >= lit(lookback))
       .where(col("user_id").isNotNull)
@@ -401,8 +405,7 @@ object Pipeline {
         when(lag(col("day"), 1).over(wd) === date_sub(col("day"), 1),
           lag(col("n_active"), 1).over(wd) - col("n_retained")))
       .where(col("day") >= lit(java.sql.Date.valueOf(startDay)))
-    Sources.publishPartitions(spark, path, ledger, "day")
-    TableResult("churn_daily", readTableCurrent(spark, outDir, "churn_daily").count(), path)
+    publish(ledger, Some("day"), path)
   }
 
   /** Current-version reader for the published tables. On a month-partitioned

@@ -234,10 +234,11 @@ object Etl {
 
   /** Monthly usage indicators per (user, month) — R4, the flagship. */
   def monthlyUsage(s: SparkSession, d: String): DataFrame =
-    monthlyUsage(events(s, d))
+    monthlyUsage(events(s, d)).orderBy("user_id", "month")
 
   /** DataFrame-parameterized body, so config-driven runs ([[graft.config
-    * .Pipeline]]) can feed a date-windowed / predicate-filtered scan.
+    * .Pipeline]]) can feed a date-windowed / predicate-filtered scan;
+    * unordered — callers sort.
     */
   def monthlyUsage(ev: DataFrame): DataFrame = {
     val base = ev
@@ -259,7 +260,6 @@ object Etl {
         col("user_id"), col("month"), col("n_events"), col("active_days"),
         col("n_event_types"), col("total_value"), col("median_value"),
         coalesce(col("n_sessions"), lit(0L)).as("n_sessions"))
-      .orderBy("user_id", "month")
   }
 
   private val monthlyUsageOracle =

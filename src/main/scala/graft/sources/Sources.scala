@@ -1,9 +1,14 @@
 package graft.sources
 
 import graft.config.LakeCommit
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation,
+  InMemoryFileIndex, PartitionSpec}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -285,15 +290,6 @@ object Sources {
   private def hadoopFs(spark: SparkSession, p: Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** (number of `files`, files a rewrite of them into `targetBytes`-sized
-    * files produces); `files` are URIs, as `inputFiles` gives them. */
-  private def compactionPlan(
-      spark: SparkSession, files: Seq[String], targetBytes: Long): (Int, Int) = {
-    val totalBytes = files.map(f => new Path(new java.net.URI(f)))
-      .map(p => hadoopFs(spark, p).getFileStatus(p).getLen).sum
-    (files.length, math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt)
-  }
-
   // ---- Manifested tables. Each table is one [[graft.config.LakeCommit]]
   // ---- log under `tableDir` (its doc is the protocol): a publish stages
   // ---- one generation and commits it once, and a read resolves one
@@ -302,35 +298,54 @@ object Sources {
   // ----
   // ----   line 1   the writer's schema, so readers infer nothing
   // ----   line 2   the partition column, empty for a whole table
-  // ----   line 3+  one serving dir per partition: `<gen>/__part=<value>`
+  // ----   line 3+  one line per serving dir, tab-separated:
+  // ----              <dir> <rows> <file>:<bytes>:<mtime> [<file>:<bytes>:<mtime> ...]
+  // ----            `<dir>` is `<gen>/__part=<value>` for a partition, or
+  // ----            `<gen>` itself (one line) for a whole table
   // ----
   // ---- A partitioned publish writes the partitions its frame holds and
-  // ---- points them at its generation; the rest keep the dirs the previous
-  // ---- snapshot named. `__part` is a string twin of the partition column,
+  // ---- points them at its generation; the rest keep the lines the previous
+  // ---- snapshot held. `__part` is a string twin of the partition column,
   // ---- which stays in the data files, and readers prune on its decoded
-  // ---- value at listing time.
+  // ---- value before any scan. Row counts come from the write itself
+  // ---- (`observe`), and the data files from listing the dirs the publish
+  // ---- wrote, so a count is a sum over the snapshot and a reader lists
+  // ---- nothing (Delta Lake's per-file log entries, VLDB 2020).
 
   /** Logical table name of every manifested table's log. */
   private[graft] val ManifestTable = "data"
 
   private val PartDirCol = "__part"
 
+  /** One data file of a serving dir, as the writer's listing saw it. */
+  private[graft] final case class DataFile(name: String, bytes: Long, mtime: Long)
+
+  /** One serving dir (relative to the table dir), its rows and its files. */
+  private[graft] final case class Part(dir: String, rows: Long, files: Seq[DataFile])
+
   /** A generation's `_snapshot`: `parts` maps each decoded partition value
-    * to its serving dir, relative to the table dir. */
+    * to its serving dir; a whole table has the one part "". */
   private[graft] final case class Snapshot(
-      schema: StructType, partCol: Option[String], parts: Map[String, String])
+      schema: StructType, partCol: Option[String], parts: Map[String, Part]) {
+    def rows: Long = parts.values.map(_.rows).sum
+  }
 
   private def snapshotPath(gen: String) = new Path(gen, "_snapshot")
 
   private def writeSnapshot(spark: SparkSession, gen: String, s: Snapshot): Unit = {
+    val lines = s.parts.values.toSeq.sortBy(_.dir).map(p =>
+      (Seq(p.dir, p.rows.toString) ++ p.files.map(f => s"${f.name}:${f.bytes}:${f.mtime}"))
+        .mkString("\t"))
     val p = snapshotPath(gen)
     val out = hadoopFs(spark, p).create(p, false)
-    try out.write((Seq(s.schema.json, s.partCol.getOrElse("")) ++
-      s.parts.values.toSeq.sorted).mkString("\n").getBytes("UTF-8"))
+    try out.write((Seq(s.schema.json, s.partCol.getOrElse("")) ++ lines)
+      .mkString("\n").getBytes("UTF-8"))
     finally out.close()
   }
 
-  /** The snapshot of generation dir `gen`, if it has one. */
+  /** The snapshot of generation dir `gen`: None if it has none, or if its
+    * snapshot records no row count and data files for some serving dir
+    * (one an older layout wrote). */
   private def snapshotOf(spark: SparkSession, gen: String): Option[Snapshot] = {
     val p = snapshotPath(gen)
     val lines = try {
@@ -338,38 +353,84 @@ object Sources {
       try scala.io.Source.fromInputStream(in, "UTF-8").mkString.split("\n", -1)
       finally in.close()
     } catch { case _: java.io.FileNotFoundException => return None }
-    Some(Snapshot(DataType.fromJson(lines(0)).asInstanceOf[StructType],
-      Option(lines(1)).filter(_.nonEmpty),
-      lines.drop(2).map(d => ExternalCatalogUtils.unescapePathName(
-        d.drop(d.indexOf('=') + 1)) -> d).toMap))
+    val partCol = lines.lift(1).filter(_.nonEmpty)
+    scala.util.Try(lines.drop(2).toSeq.map(_.split("\t").toSeq).map {
+      case dir +: rows +: files =>
+        val key = if (partCol.isEmpty) ""
+          else ExternalCatalogUtils.unescapePathName(dir.drop(dir.indexOf('=') + 1))
+        key -> Part(dir, rows.toLong, files.map(_.split(':') match {
+          case Array(name, bytes, mtime) => DataFile(name, bytes.toLong, mtime.toLong)
+        }))
+    }).toOption.filter(_.nonEmpty).map(parts =>
+      Snapshot(DataType.fromJson(lines(0)).asInstanceOf[StructType], partCol, parts.toMap))
   }
 
+  /** The serving generation dir of `tableDir` and its snapshot, if one was
+    * committed. A generation without a snapshot of row counts and files is
+    * an older lake layout: it is refused, and the table must be rebuilt. */
+  private def current(
+      spark: SparkSession, tableDir: String, verb: String): Option[(String, Snapshot)] =
+    LakeCommit.currentGen(tableDir, ManifestTable).map(g => g -> snapshotOf(spark, g)
+      .getOrElse(throw new IllegalStateException(
+        s"$verb: $tableDir serves $g without a _snapshot of row counts and files, " +
+          "an older lake layout; rebuild the table")))
+
   /** The serving generation dir of `tableDir` and its snapshot; `verb`
-    * names the caller in the error when there is none. A generation with
-    * no snapshot is an older lake layout, which must be rebuilt. */
+    * names the caller in the error when there is none. */
   private[graft] def serving(
       spark: SparkSession, tableDir: String, verb: String): (String, Snapshot) =
-    LakeCommit.currentGen(tableDir, ManifestTable)
-      .flatMap(g => snapshotOf(spark, g).map(g -> _))
-      .getOrElse(throw new IllegalStateException(
-        s"$verb: $tableDir has no published version with a _snapshot"))
+    current(spark, tableDir, verb).getOrElse(throw new IllegalStateException(
+      s"$verb: $tableDir has no published version"))
+
+  /** Rows of the current version of a manifested table (0 before its first
+    * publish): a sum over its snapshot, with no scan. */
+  def rowCount(spark: SparkSession, tableDir: String): Long =
+    current(spark, tableDir, "rowCount").fold(0L)(_._2.rows)
 
   /** Read the current version of a manifested table: one manifest resolve
-    * and one snapshot read, scanned with the recorded schema, so building
-    * the frame runs no Spark job. A partitioned table is pruned to
-    * `partValues` (decoded values such as "2024-01-01 00:00:00") before
+    * and one snapshot read, scanned with the recorded schema over the
+    * recorded files, so building the frame lists nothing and runs no Spark
+    * job, whatever the number of partitions. A partitioned table is pruned
+    * to `partValues` (decoded values such as "2024-01-01 00:00:00") before
     * any scan; a whole table ignores them. */
   def readCurrent(spark: SparkSession, tableDir: String,
       partValues: Option[Seq[String]] = None): DataFrame = {
-    val (gen, snap) = serving(spark, tableDir, "readCurrent")
-    val dirs =
-      if (snap.partCol.isEmpty) Seq(gen)
-      else snap.parts.toSeq.sorted.collect {
-        case (v, d) if partValues.forall(_.contains(v)) => s"$tableDir/$d"
-      }
-    require(dirs.nonEmpty, s"readCurrent: no published partition of $tableDir" +
+    val snap = serving(spark, tableDir, "readCurrent")._2
+    val parts = snap.parts.toSeq.sortBy(_._1).collect {
+      case (v, p) if snap.partCol.isEmpty || partValues.forall(_.contains(v)) => p
+    }
+    require(parts.nonEmpty, s"readCurrent: no published partition of $tableDir" +
       partValues.fold("")(vs => s" matches ${vs.mkString(", ")}"))
-    spark.read.schema(snap.schema).parquet(dirs: _*)
+    val root = hadoopFs(spark, new Path(tableDir)).makeQualified(new Path(tableDir))
+    val listed = parts.map { p =>
+      val dir = new Path(root, p.dir)
+      dir -> p.files.map(f =>
+        new FileStatus(f.bytes, false, 1, 0L, f.mtime, new Path(dir, f.name))).toArray
+    }
+    // the index takes every dir's files from this cache instead of listing
+    val recorded = new FileStatusCache {
+      private val byDir = listed.toMap
+      override def getLeafFiles(path: Path): Option[Array[FileStatus]] = byDir.get(path)
+      override def putLeafFiles(path: Path, files: Array[FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = ()
+    }
+    val index = new InMemoryFileIndex(spark, listed.map(_._1), Map.empty,
+      Some(snap.schema), recorded, Some(PartitionSpec(new StructType(), Nil)))
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, new StructType(),
+      snap.schema.toNullable, None, new ParquetFileFormat, Map.empty)(spark))
+  }
+
+  /** The parquet files of staged generation `gen`, in it or in its
+    * `__part=` dirs, by the name of the dir that holds them. A glob lists
+    * plain statuses: a recursive `listFiles` builds located ones, which on
+    * a local file system fork a process per file for its permissions. */
+  private def writtenFiles(spark: SparkSession, gen: String): Map[String, Seq[DataFile]] = {
+    val fs = hadoopFs(spark, new Path(gen))
+    Seq(new Path(gen, "*.parquet"), new Path(gen, s"$PartDirCol=*/*.parquet"))
+      .flatMap(g => Option(fs.globStatus(g)).toSeq.flatten)
+      .groupMap(_.getPath.getParent.getName)(f =>
+        DataFile(f.getPath.getName, f.getLen, f.getModificationTime))
+      .map { case (d, files) => d -> files.sortBy(_.name) }
   }
 
   /** Write `snap` into the complete generation `gen` staged under
@@ -389,7 +450,7 @@ object Sources {
       spark: SparkSession, tableDir: String, retireMs: Long): Unit =
     LakeCommit.cleanup(tableDir, ManifestTable, retireMs = retireMs,
       keep = g => snapshotOf(spark, s"$tableDir/$g").toSeq
-        .flatMap(_.parts.values.map(_.takeWhile(_ != '/'))).toSet)
+        .flatMap(_.parts.values.map(_.dir.takeWhile(_ != '/'))).toSet)
 
   /** Publish `df` as the table's next generation. A reader sees the
     * previous generation until the commit, never a partial one. The
@@ -399,36 +460,60 @@ object Sources {
       spark: SparkSession, tableDir: String, df: DataFrame): String =
     LakeCommit.withLease(tableDir, ManifestTable) {
       val gen = LakeCommit.stage(tableDir, ManifestTable)
-      df.write.mode(SaveMode.Overwrite).parquet(gen)
-      commitGen(spark, tableDir, gen, Snapshot(df.schema, None, Map.empty))
+      val rows = Observation()
+      df.observe(rows, count(lit(1)).as("rows")).write.mode(SaveMode.Overwrite).parquet(gen)
+      val name = new Path(gen).getName
+      commitGen(spark, tableDir, gen, Snapshot(df.schema, None, Map("" -> Part(
+        name, rows.get("rows").asInstanceOf[Long], writtenFiles(spark, gen).values.flatten.toSeq))))
     }
+
+  /** Rows per `__part` value: the aggregate a partitioned publish observes.
+    * Its size is the number of partitions written, which the calendar
+    * bounds, not the data. */
+  private object PartRows extends Aggregator[String, Map[String, Long], Map[String, Long]] {
+    def zero: Map[String, Long] = Map.empty
+    def reduce(m: Map[String, Long], v: String): Map[String, Long] =
+      m.updated(v, m.getOrElse(v, 0L) + 1L)
+    def merge(a: Map[String, Long], b: Map[String, Long]): Map[String, Long] =
+      b.foldLeft(a) { case (m, (v, n)) => m.updated(v, m.getOrElse(v, 0L) + n) }
+    def finish(m: Map[String, Long]): Map[String, Long] = m
+    private val counts: Encoder[Map[String, Long]] = ExpressionEncoder[Map[String, Long]]()
+    def bufferEncoder: Encoder[Map[String, Long]] = counts
+    def outputEncoder: Encoder[Map[String, Long]] = counts
+  }
 
   /** Publish `df`'s partitions (by `partCol`) as the table's next
     * generation, in one Spark write and one commit. Partitions NOT in
-    * `df` keep their serving dirs and files: the incremental commit for
-    * append-only partitioned tables. A reader sees every partition old or
-    * every partition new. A frame with no rows commits nothing. The
-    * writer holds the table's lease. Returns the new generation dir, if
-    * one was committed. */
+    * `df` keep their serving dirs, files and counts: the incremental
+    * commit for append-only partitioned tables. A reader sees every
+    * partition old or every partition new. A frame with no rows commits
+    * nothing. The writer holds the table's lease. Returns the new
+    * generation dir, if one was committed. */
   def publishPartitions(
       spark: SparkSession, tableDir: String, df: DataFrame,
       partCol: String): Option[String] =
     LakeCommit.withLease(tableDir, ManifestTable) {
+      val prior = current(spark, tableDir, "publishPartitions")
+        .filter(_._2.partCol.contains(partCol)).fold(Map.empty[String, Part])(_._2.parts)
       val gen = LakeCommit.stage(tableDir, ManifestTable)
+      val obs = Observation()
+      // a null or empty value lands in the writer's default partition dir
+      val dirValue = when(col(PartDirCol).isNull || col(PartDirCol) === "",
+        lit(ExternalCatalogUtils.DEFAULT_PARTITION_NAME)).otherwise(col(PartDirCol))
       df.withColumn(PartDirCol, col(partCol).cast("string"))
+        .observe(obs, udaf(PartRows, Encoders.STRING)(dirValue).as("rows"))
         .write.mode(SaveMode.Overwrite)
         .partitionBy(PartDirCol).parquet(gen)
-      val written = LakeCommit.listDirs(gen).map(new Path(_).getName)
-        .filter(_.startsWith(PartDirCol + "="))
-        .map(p => ExternalCatalogUtils.unescapePathName(
-          p.stripPrefix(PartDirCol + "=")) -> s"${new Path(gen).getName}/$p")
-      if (written.isEmpty) { LakeCommit.deleteRecursive(gen); None }
-      else {
-        val prior = LakeCommit.currentGen(tableDir, ManifestTable)
-          .flatMap(snapshotOf(spark, _)).fold(Map.empty[String, String])(_.parts)
-        Some(commitGen(spark, tableDir, gen,
-          Snapshot(df.schema, Some(partCol), prior ++ written)))
+      val rows = obs.get("rows").asInstanceOf[scala.collection.Map[String, Long]]
+      val written = writtenFiles(spark, gen).collect {
+        case (d, files) if d.startsWith(PartDirCol + "=") =>
+          val v = ExternalCatalogUtils.unescapePathName(d.stripPrefix(PartDirCol + "="))
+          v -> Part(s"${new Path(gen).getName}/$d", rows.getOrElse(v,
+            sys.error(s"publishPartitions: wrote $d but observed no rows for it")), files)
       }
+      if (written.isEmpty) { LakeCommit.deleteRecursive(gen); None }
+      else Some(commitGen(spark, tableDir, gen,
+        Snapshot(df.schema, Some(partCol), prior ++ written)))
     }
 
   /** Small-file compaction (lake maintenance): rewrite the serving data of
@@ -443,7 +528,10 @@ object Sources {
     LakeCommit.withLease(tableDir, ManifestTable) {
       val snap = serving(spark, tableDir, "compactManifested")._2
       val cur = readCurrent(spark, tableDir)
-      val (nIn, nOut) = compactionPlan(spark, cur.inputFiles.toSeq, targetBytes)
+      val files = snap.parts.values.flatMap(_.files).toSeq
+      val nIn = files.size
+      val nOut = math.max(1L,
+        (files.map(_.bytes).sum + targetBytes - 1) / targetBytes).toInt
       snap.partCol match {
         case None =>
           publishVersion(spark, tableDir, cur.repartition(nOut))

@@ -11,13 +11,10 @@ import graft.config.AnalyticFrames
   * append-only between publishes, and compaction folds segments without
   * changing what the frame serves.
   */
-class AnalyticFramesSpec extends AnyFunSuite {
+class AnalyticFramesSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
 
   private val d = "/root/testdata/sf0.001"
-
-  private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(name).toString
 
   private def rm(dir: String): Unit =
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
@@ -36,7 +33,7 @@ class AnalyticFramesSpec extends AnyFunSuite {
     "append-only segments; compact folds without changing the served set") {
     val orders = Tables(spark, d, "orders")
     val lines = Tables(spark, d, "lineitem")
-    val dir = tmp("graft_frame_coorder")
+    val dir = tempDir("graft_frame_coorder")
     try {
       val base = orders.where(col("o_orderkey") % 5 =!= 0)
       AnalyticFrames.buildCoOrder(spark, base, lines, dir)
@@ -71,7 +68,7 @@ class AnalyticFramesSpec extends AnyFunSuite {
     "aggregate; compact folds them") {
     val orders = Tables(spark, d, "orders")
     val lines = Tables(spark, d, "lineitem")
-    val dir = tmp("graft_frame_custsupp")
+    val dir = tempDir("graft_frame_custsupp")
     try {
       AnalyticFrames.buildCustSupp(spark,
         orders.where(col("o_orderkey") % 3 === 0), lines, dir)
@@ -95,7 +92,7 @@ class AnalyticFramesSpec extends AnyFunSuite {
   test("near-dup pair frame: registry-backed ∝-batch ingests accumulate " +
     "exactly the full recompute's verified pairs") {
     val docs = Tables(spark, d, "documents").select("doc_id", "text")
-    val dir = tmp("graft_frame_neardup")
+    val dir = tempDir("graft_frame_neardup")
     try {
       AnalyticFrames.buildNearDupPairs(spark,
         docs.where(col("doc_id") < 300), dir)
@@ -140,7 +137,7 @@ class AnalyticFramesSpec extends AnyFunSuite {
     import spark.implicits._
     val orders = Tables(spark, d, "orders")
     val lines = Tables(spark, d, "lineitem")
-    val dir = tmp("graft_frame_stream_coorder")
+    val dir = tempDir("graft_frame_stream_coorder")
     try {
       AnalyticFrames.buildCoOrder(spark,
         orders.where(col("o_orderkey") % 3 === 0), lines, dir)
@@ -180,7 +177,7 @@ class AnalyticFramesSpec extends AnyFunSuite {
     implicit val sq = spark.sqlContext
     import spark.implicits._
     val docs = Tables(spark, d, "documents").select("doc_id", "text")
-    val dir = tmp("graft_frame_stream")
+    val dir = tempDir("graft_frame_stream")
     try {
       AnalyticFrames.buildNearDupPairs(spark,
         docs.where(col("doc_id") < 300), dir)

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * DuckDB's, so the check is the documented rsd error bound vs exact
   * (SURVEY.md §2.D) — the 100 TB path for distinct counts.
   */
-class ApproxSpec extends AnyFunSuite {
+class ApproxSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
 
   test("approx_count_distinct stays within the configured rsd of exact") {
@@ -25,7 +25,7 @@ class ApproxSpec extends AnyFunSuite {
     val exact = ev.agg(countDistinct(col("user_id"))).head().getLong(0)
     // two disjoint batches with OVERLAPPING users, sketched separately and
     // persisted to a lake dir — the across-runs shape
-    val d = java.nio.file.Files.createTempDirectory("graft_hll").toString
+    val d = tempDir("graft_hll")
     for (par <- 0 to 1)
       ev.where(col("event_id") % 2 === par)
         .agg(hllSketch(col("user_id")).as("sk"))
@@ -121,7 +121,7 @@ class ApproxSpec extends AnyFunSuite {
     // two disjoint batches sketched separately, persisted to a lake dir,
     // merged — the across-runs shape that lets monthly medians accumulate
     // without rescanning history
-    val d = java.nio.file.Files.createTempDirectory("graft_kll").toString
+    val d = tempDir("graft_kll")
     for (par <- 0 to 1)
       ev.where(col("event_id") % 2 === par)
         .agg(kllSketch(col("value")).as("sk"))
@@ -159,7 +159,7 @@ class ApproxSpec extends AnyFunSuite {
     val rows = (0 until 10000).map { i =>
       (i.toLong, if (i % 10 < 3) "heavy" else s"cold${i % 1000}")
     }.toDF("id", "item")
-    val d = java.nio.file.Files.createTempDirectory("graft_mg").toString
+    val d = tempDir("graft_mg")
     for (par <- 0 to 1)
       rows.where($"id" % 2 === par)
         .agg(mgSketch($"item", 16).as("sk"))
@@ -194,7 +194,7 @@ class ApproxSpec extends AnyFunSuite {
     val df = members.toDF("k")
     // two disjoint halves built separately, persisted, merged — the OR is
     // exact, so the merge must equal the one-pass filter bit-for-bit
-    val d = java.nio.file.Files.createTempDirectory("graft_bloom").toString
+    val d = tempDir("graft_bloom")
     for (par <- 0 to 1)
       df.where(pmod(xxhash64($"k"), lit(2)) === par)
         .agg(bloomBuild($"k").as("bf"))

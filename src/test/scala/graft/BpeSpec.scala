@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
 /** llm_bpe_train vs a driver-side reference BPE trainer (Sennrich et al.
@@ -10,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * where greedy non-overlapping matching and blocked-match resolution
   * decide the result.
   */
-class BpeSpec extends AnyFunSuite {
+class BpeSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
 
   /** Reference trainer: word-frequency map → `rounds` greedy merges. */
@@ -48,7 +47,7 @@ class BpeSpec extends AnyFunSuite {
 
   private def trainOn(corpus: Seq[String], rounds: Int) = {
     import spark.implicits._
-    val d = Files.createTempDirectory("graft_bpe").toString
+    val d = tempDir("graft_bpe")
     corpus.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text")
       .coalesce(1).write.mode("overwrite").parquet(s"$d/documents.parquet")
@@ -115,7 +114,7 @@ class BpeSpec extends AnyFunSuite {
   test("apply ≡ reference encoding (symbol counts per word)") {
     val corpus = Seq("abab abab cdcd", "abab cdcd cdcd ab cd")
     import spark.implicits._
-    val d = Files.createTempDirectory("graft_bpe_apply").toString
+    val d = tempDir("graft_bpe_apply")
     corpus.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text")
       .coalesce(1).write.mode("overwrite").parquet(s"$d/documents.parquet")

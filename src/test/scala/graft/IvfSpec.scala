@@ -15,7 +15,7 @@ import graft.operators.Llm
   * spec pins the part an exactness oracle cannot see — that training
   * helps.
   */
-class IvfSpec extends AnyFunSuite {
+class IvfSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -189,8 +189,7 @@ class IvfSpec extends AnyFunSuite {
     val d = "/root/testdata/sf0.001"
     val e = Tables(spark, d, "embeddings")
       .select(col("vec_id"), col("embedding"), col("label"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivf_ingest").toString
+    val dir = tempDir("graft_ivf_ingest")
     try {
       graft.config.IvfIndex.build(spark, e.where(col("vec_id") < 400),
         dir, 16, 64, 2)
@@ -232,8 +231,7 @@ class IvfSpec extends AnyFunSuite {
     val d = "/root/testdata/sf0.001"
     val e = Tables(spark, d, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_pq_ingest").toString
+    val dir = tempDir("graft_pq_ingest")
     try {
       graft.config.PqIndex.build(spark, e.where(col("vec_id") < 400), dir)
       def codeFiles: Set[String] =
@@ -285,8 +283,7 @@ class IvfSpec extends AnyFunSuite {
     val d = "/root/testdata/sf0.001"
     val e = Tables(spark, d, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivf_delete").toString
+    val dir = tempDir("graft_ivf_delete")
     try {
       graft.config.IvfIndex.build(spark, e.where(col("vec_id") < 400),
         dir, 16, 64, 2)
@@ -345,8 +342,7 @@ class IvfSpec extends AnyFunSuite {
     val d = "/root/testdata/sf0.001"
     val e = Tables(spark, d, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_pq_delete").toString
+    val dir = tempDir("graft_pq_delete")
     try {
       graft.config.PqIndex.build(spark, e.where(col("vec_id") < 400), dir)
       val dead = e.where(col("vec_id") % 50 === 0 && col("vec_id") < 400)
@@ -421,8 +417,7 @@ class IvfSpec extends AnyFunSuite {
     // 4 = the full verb — the old rename-swap had a between-renames
     // window with NO serving dir; the manifest protocol must not
     for (ix <- mutableIndexes; steps <- 1 to 4) {
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft_${ix.table}_crash$steps").toString
+      val dir = tempDir(s"graft_${ix.table}_crash$steps")
       try {
         ix.build(e.where(col("vec_id") < 200), dir)
         ix.delete(dir, e.where(col("vec_id") < 10).select(col("vec_id")))
@@ -460,8 +455,7 @@ class IvfSpec extends AnyFunSuite {
     val e = Tables(spark, d, "embeddings")
       .select(col("vec_id"), col("embedding"))
     for (ix <- mutableIndexes) {
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft_${ix.table}_race").toString
+      val dir = tempDir(s"graft_${ix.table}_race")
       try {
         ix.build(e.where(col("vec_id") < 200), dir)
         ix.delete(dir, e.where(col("vec_id") < 10).select(col("vec_id")))
@@ -513,8 +507,7 @@ class IvfSpec extends AnyFunSuite {
     val d = "/root/testdata/sf0.001"
     val e = Tables(spark, d, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivf_stream").toString
+    val dir = tempDir("graft_ivf_stream")
     try {
       // static-trained base (the nightly posture): first 300 vectors
       graft.config.IvfIndex.build(spark, e.where(col("vec_id") < 300),
@@ -552,8 +545,7 @@ class IvfSpec extends AnyFunSuite {
     val d = "/root/testdata/sf0.001"
     val e = Tables(spark, d, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivf_maintain").toString
+    val dir = tempDir("graft_ivf_maintain")
     // replay a decision from its log row — the audit's math over the
     // exact integer moment sums the row carries
     def replayDrifted(r: org.apache.spark.sql.Row): Boolean =
@@ -621,8 +613,7 @@ class IvfSpec extends AnyFunSuite {
     val d = "/root/testdata/sf0.001"
     val e = Tables(spark, d, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivf_autocompact").toString
+    val dir = tempDir("graft_ivf_autocompact")
     def servePlan(): String = graft.config.IvfIndex
       .liveAssignments(spark, dir)
       .queryExecution.executedPlan.toString
@@ -655,8 +646,7 @@ class IvfSpec extends AnyFunSuite {
       assert(graft.config.IvfIndex.assignments(spark, dir).count() == 280)
       assert(graft.config.IvfIndex.tombstones(spark, dir).count() == 0)
       // PQ mirrors the policy from ITS stored τ
-      val pqDir = java.nio.file.Files
-        .createTempDirectory("graft_pq_autocompact").toString
+      val pqDir = tempDir("graft_pq_autocompact")
       try {
         graft.config.PqIndex.build(spark,
           e.where(col("vec_id") < 300), pqDir)
@@ -694,8 +684,7 @@ class IvfSpec extends AnyFunSuite {
     val d = "/root/testdata/sf0.001"
     val e = Tables(spark, d, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivf_stream_maintain").toString
+    val dir = tempDir("graft_ivf_stream_maintain")
     try {
       graft.config.IvfIndex.build(spark, e.where(col("vec_id") < 300),
         dir, 16, 64, 2)

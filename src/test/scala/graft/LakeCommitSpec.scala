@@ -12,16 +12,13 @@ import graft.config.{AnalyticFrames, IvfIndex, LakeCache, LakeCommit, MaintLog, 
   * layout stamp (VERDICT r12 #6), and the maintlog fold (VERDICT r12
   * #2: monotonic log_seq across a fold, bounded file count).
   */
-class LakeCommitSpec extends AnyFunSuite {
+class LakeCommitSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
 
   private val d = "/root/testdata/sf0.001"
 
   // far above this kernel's pid_max (32768 here) — never a live pid
   private val DeadPid = 29999999L
-
-  private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(name).toString
 
   private def rm(dir: String): Unit =
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
@@ -35,7 +32,7 @@ class LakeCommitSpec extends AnyFunSuite {
     "at a sequence that already committed (ADVICE r12 #1: the " +
     "concurrent-first-build partial-generation race); dead same-host " +
     "writers are swept, cross-host writers only by age") {
-    val dir = tmp("graft_commit_race")
+    val dir = tempDir("graft_commit_race")
     val t = "tbl"
     try {
       // writer A stages and commits generation 1
@@ -77,7 +74,7 @@ class LakeCommitSpec extends AnyFunSuite {
   test("commit refuses a staged generation that is not on disk " +
     "(ADVICE r12 #3): a swept stage fails loudly instead of becoming " +
     "a committed pointer to nothing") {
-    val dir = tmp("graft_commit_missing")
+    val dir = tempDir("graft_commit_missing")
     try {
       val stage = LakeCommit.stage(dir, "tbl")
       val ex = intercept[IllegalArgumentException](
@@ -113,7 +110,7 @@ class LakeCommitSpec extends AnyFunSuite {
     "crashed verb never wedges the table") {
     val e = Tables(spark, d, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val dir = tmp("graft_lease")
+    val dir = tempDir("graft_lease")
     try {
       IvfIndex.build(spark, e.where(col("vec_id") < 100), dir, 16, 64, 1)
       val batch = e.where(col("vec_id") >= 100 && col("vec_id") < 120)
@@ -168,7 +165,7 @@ class LakeCommitSpec extends AnyFunSuite {
 
   test("lease renewal: a heartbeat keeps a long verb's lease alive " +
     "past the TTL, so only CRASHED writers are taken over") {
-    val dir = tmp("graft_lease_renew")
+    val dir = tempDir("graft_lease_renew")
     try {
       new java.io.File(s"$dir/_manifests").mkdirs()
       assert(LakeCommit.acquireLease(dir, "t", ttlMs = 60000))
@@ -191,9 +188,9 @@ class LakeCommitSpec extends AnyFunSuite {
     "one — migration is explicit, never a silent misread") {
     val e = Tables(spark, d, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val ivfDir = tmp("graft_layout")
-    val pqDir = tmp("graft_layout_pq")
-    val frameDir = tmp("graft_layout_frame")
+    val ivfDir = tempDir("graft_layout")
+    val pqDir = tempDir("graft_layout_pq")
+    val frameDir = tempDir("graft_layout_frame")
     try {
       IvfIndex.build(spark, e.where(col("vec_id") < 100), ivfDir, 16, 64, 1)
       IvfIndex.maintain(spark, ivfDir,
@@ -235,7 +232,7 @@ class LakeCommitSpec extends AnyFunSuite {
     "every decision still replays from its stored numbers") {
     val e = Tables(spark, d, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val dir = tmp("graft_maintfold")
+    val dir = tempDir("graft_maintfold")
     try {
       IvfIndex.build(spark, e.where(col("vec_id") < 200), dir, 16, 64, 1)
       def batch(i: Int) = e.where(

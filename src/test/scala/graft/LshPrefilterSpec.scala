@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.VectorFunctions.cosineSim
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,7 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * matches from non-matches (per-bit agreement 0.61 vs 0.5 baseline) — that
   * regime belongs to minhash banding on text shingles or brute force.
   */
-class LshPrefilterSpec extends AnyFunSuite {
+class LshPrefilterSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -27,7 +26,7 @@ class LshPrefilterSpec extends AnyFunSuite {
   // isotropic noise vectors — same construction as NearDupSpec, plus noise
   // so candidate-set shrinkage is measurable.
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft_lsh").toString
+    val d = suiteTempDir("graft_lsh")
     val vecs = (0 until 30).map { i =>
       val c = i / 10
       val r = new scala.util.Random(c)
@@ -90,7 +89,7 @@ class LshPrefilterSpec extends AnyFunSuite {
   // ------------------------------------------------------------------
 
   private lazy val moderateDir: String = {
-    val d = Files.createTempDirectory("graft_lsh_mod").toString
+    val d = suiteTempDir("graft_lsh_mod")
     val pairs = (0 until 40).map { i =>
       val target = 0.35 + 0.3 * (i % 8) / 7.0 // sims spread over [0.35, 0.65]
       val ru = new scala.util.Random(9000 + i)

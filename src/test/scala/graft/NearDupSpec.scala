@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,12 +9,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * The Llm query fns read `<dir>/documents.parquet` / `embeddings.parquet`,
   * so the fixtures are written as tiny parquet tables in a temp dir.
   */
-class NearDupSpec extends AnyFunSuite {
+class NearDupSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft_neardup").toString
+    val d = suiteTempDir("graft_neardup")
     val words = Vector("alpha", "beta", "gamma", "delta", "epsilon", "zeta",
       "eta", "theta", "iota", "kappa", "lambda", "mu", "nu", "xi", "omicron")
     val rnd = new scala.util.Random(3)
@@ -161,7 +160,7 @@ class NearDupSpec extends AnyFunSuite {
   // PortableHash banding (per-link detection is ~0.9, not 1; the fixture
   // guard test below fails loudly if the sketch family ever changes).
   private lazy val chainDir: String = {
-    val d = Files.createTempDirectory("graft_chain").toString
+    val d = suiteTempDir("graft_chain")
     val stream = (0 until 188).map(i => s"x$i")
     val docs = (0L to 4L).map { i =>
       val t = stream.slice(i.toInt * 27, i.toInt * 27 + 80).mkString(" ")
@@ -234,7 +233,7 @@ class NearDupSpec extends AnyFunSuite {
   }
 
   test("exact dedup groups identical normalized docs") {
-    val d2 = Files.createTempDirectory("graft_exact").toString
+    val d2 = tempDir("graft_exact")
     Seq(
       (0L, "Hello,   World!", "en", "s", 14L),
       (1L, "hello world", "en", "s", 11L),

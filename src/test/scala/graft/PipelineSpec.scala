@@ -13,7 +13,7 @@ case class PEv(event_id: Long, ts: Long, user_id: Long,
 /** End-to-end config-driven run: RunConfig window → aggregate DAG →
   * month-partitioned lake tables → pruned read-back.
   */
-class PipelineSpec extends AnyFunSuite {
+class PipelineSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
 
@@ -22,8 +22,13 @@ class PipelineSpec extends AnyFunSuite {
   /** The serving `<gen>/__part=` dirs of `table` whose decoded partition
     * value starts with `prefix`, as its snapshot names them. */
   private def partDirs(out: String, table: String, prefix: String = "") =
-    Sources.serving(spark, s"$out/$table", "partDirs")._2.parts.toSeq.sorted
-      .collect { case (v, d) if v.startsWith(prefix) => s"$out/$table/$d" }
+    Sources.serving(spark, s"$out/$table", "partDirs")._2.parts.toSeq.sortBy(_._1)
+      .collect { case (v, p) if v.startsWith(prefix) => s"$out/$table/${p.dir}" }
+
+  /** Each maintainer's reported rows are the published table's rows. */
+  private def assertCounted(out: String, r: Pipeline.TableResult) =
+    assert(r.rows == Pipeline.readTableCurrent(spark, out, r.table).count(),
+      s"${r.table} reported ${r.rows} rows")
 
   /** Serving dir (so its generation) and its (file, mtime) set per partition. */
   private def partState(out: String, table: String, prefix: String) =
@@ -32,7 +37,7 @@ class PipelineSpec extends AnyFunSuite {
     }
 
   test("config-driven run publishes partitioned aggregates, idempotently") {
-    val out = Files.createTempDirectory("graft_pipeline").toString
+    val out = tempDir("graft_pipeline")
     val cfg = RunConfig(sf, Seq("events"),
       startDate = Some("2024-01-01"), endDate = Some("2024-02-01"))
     val results = Pipeline.run(spark, cfg, out)
@@ -80,15 +85,20 @@ class PipelineSpec extends AnyFunSuite {
 
   test("building a reader of a published table runs no Spark job") {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft_read_jobs").toString
-    // 3 partitions: below Spark's parallel-listing threshold of 32 paths
+    val out = tempDir("graft_read_jobs")
+    // 3 partitions: below Spark's parallel-listing threshold of 32 paths;
+    // 40: above it, where a listing of the serving dirs would run a job
     val df = (0L until 30L).toDF("x").withColumn("month",
       expr("cast(add_months(date'2024-01-01', cast(x % 3 as int)) as timestamp)"))
+    val wide = (0L until 80L).toDF("x").withColumn("month",
+      expr("cast(add_months(date'2024-01-01', cast(x % 40 as int)) as timestamp)"))
     Pipeline.publish(df, None, s"$out/whole")
     Pipeline.publish(df, Some("month"), s"$out/parted")
+    Pipeline.publish(wide, Some("month"), s"$out/wide")
     def reads() = Seq(Pipeline.readTableCurrent(spark, out, "whole"),
       Pipeline.readTableCurrent(spark, out, "parted"),
-      Pipeline.readTableCurrent(spark, out, "parted", month = Some("2024-02-01")))
+      Pipeline.readTableCurrent(spark, out, "parted", month = Some("2024-02-01")),
+      Pipeline.readTableCurrent(spark, out, "wide"))
     org.apache.spark.graft.TestBusHook.waitUntilEmpty(spark)
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -103,7 +113,8 @@ class PipelineSpec extends AnyFunSuite {
     assert(jobs.get == 0, s"${jobs.get} jobs ran while building the readers")
     // the readers serve the published columns and rows, and no `__part`
     assert(reads().map(_.columns.toSeq).distinct == Seq(df.columns.toSeq))
-    assert(reads().map(_.count()) == Seq(30L, 30L, 10L))
+    assert(reads().map(_.count()) == Seq(30L, 30L, 10L, 80L))
+    assert(partDirs(out, "wide").size == 40)
   }
 
   test("incremental monthly/sessions/lifetime == full rebuild; untouched partitions untouched") {
@@ -112,7 +123,7 @@ class PipelineSpec extends AnyFunSuite {
     // layout Tables expects), with a planted 15-min-gap session CROSSING
     // the Feb→Mar boundary: a lookback-free recompute of March would
     // wrongly count a session start for user 42
-    val d = Files.createTempDirectory("graft_inc").toString
+    val d = tempDir("graft_inc")
     val rnd = new scala.util.Random(11)
     def ns(s: String) = TestSpark.ts(s).getTime * 1000000L
     val base = TestSpark.ts("2024-01-01 00:00:00").getTime
@@ -142,10 +153,10 @@ class PipelineSpec extends AnyFunSuite {
         .collect().map(_.toSeq).toSet
     def monthlyRows(out: String) = tableRows(out, "monthly_usage")
 
-    val outFull = Files.createTempDirectory("graft_inc_full").toString
+    val outFull = tempDir("graft_inc_full")
     Pipeline.run(spark, RunConfig(d, Seq("events")), outFull)
 
-    val outInc = Files.createTempDirectory("graft_inc_inc").toString
+    val outInc = tempDir("graft_inc_inc")
     Pipeline.run(spark,
       RunConfig(d, Seq("events"), endDate = Some("2024-03-01")), outInc)
     def janState(table: String = "monthly_usage") =
@@ -160,7 +171,7 @@ class PipelineSpec extends AnyFunSuite {
     val res = Pipeline.runIncrementalMonthly(
       spark, RunConfig(d, Seq("events"), startDate = Some("2024-03-01")),
       outInc, "2024-03-01")
-    assert(res.rows > 0)
+    assertCounted(outInc, res)
     // exact equality with the full rebuild — including user 42's March
     // row, whose n_sessions=0 needs the cross-boundary lookback
     assert(monthlyRows(outInc) == monthlyRows(outFull))
@@ -186,7 +197,7 @@ class PipelineSpec extends AnyFunSuite {
     val resS = Pipeline.runIncrementalSessions(
       spark, RunConfig(d, Seq("events"), startDate = Some("2024-03-01")),
       outInc, "2024-03-01")
-    assert(resS.rows > 0)
+    assertCounted(outInc, resS)
     assert(tableRows(outInc, "sessions") == tableRows(outFull, "sessions"))
     assert(janState("sessions") == janSessionsBefore,
       "no January session changed, so its partition must keep its generation")
@@ -197,7 +208,7 @@ class PipelineSpec extends AnyFunSuite {
     val resL = Pipeline.runIncrementalLifetime(
       spark, RunConfig(d, Seq("events"), startDate = Some("2024-03-01")),
       outInc, "2024-03-01")
-    assert(resL.rows > 0)
+    assertCounted(outInc, resL)
     assert(tableRows(outInc, "user_lifetime") == tableRows(outFull, "user_lifetime"))
     // belt-and-braces: the merged-sketch median column is populated and
     // matches the exact per-user lower-median recomputed from raw events
@@ -222,19 +233,24 @@ class PipelineSpec extends AnyFunSuite {
     val resC = Pipeline.runIncrementalChurn(
       spark, RunConfig(d, Seq("events"), startDate = Some("2024-03-01")),
       outInc, "2024-03-01")
-    assert(resC.rows > 0)
+    assertCounted(outInc, resC)
     assert(tableRows(outInc, "churn_daily") == tableRows(outFull, "churn_daily"))
     // no February day can change under an append-only March batch, so
     // each February day keeps its serving generation and its files
     assert(partState(outInc, "churn_daily", "2024-02") == febState)
 
-    // empty batch (heartbeat cycle past the data end): early return, no
-    // rows claimed, ledger untouched
+    // empty batch (heartbeat cycle past the data end): early return with
+    // the table's rows, and no table changes
+    val empty = RunConfig(d, Seq("events"), startDate = Some("2025-01-01"))
+    val gensBefore = Seq("monthly_usage", "sessions", "churn_daily")
+      .map(t => gen(s"$outInc/$t"))
     val ledgerBefore = tableRows(outInc, "churn_daily")
-    val resE = Pipeline.runIncrementalChurn(
-      spark, RunConfig(d, Seq("events"), startDate = Some("2025-01-01")),
-      outInc, "2025-01-01")
-    assert(resE.rows == 0L)
+    val resE = Seq(
+      Pipeline.runIncrementalMonthly(spark, empty, outInc, "2025-01-01"),
+      Pipeline.runIncrementalSessions(spark, empty, outInc, "2025-01-01"),
+      Pipeline.runIncrementalChurn(spark, empty, outInc, "2025-01-01"))
+    resE.foreach(assertCounted(outInc, _))
+    assert(resE.map(_.table).map(t => gen(s"$outInc/$t")) == gensBefore)
     assert(tableRows(outInc, "churn_daily") == ledgerBefore)
 
     // type_reach (the FIFTH incrementally-maintained table): KMV union is
@@ -246,7 +262,7 @@ class PipelineSpec extends AnyFunSuite {
     val resR = Pipeline.runIncrementalReach(
       spark, RunConfig(d, Seq("events"), startDate = Some("2024-03-01")),
       outInc, "2024-03-01")
-    assert(resR.rows > 0)
+    assertCounted(outInc, resR)
     assert(reachRows(outInc) == reachRows(outFull),
       "incrementally merged reach sketches must be bit-equal to rebuild")
     // read-time set algebra: 10 users < k → exact regime, so the overlap
@@ -265,6 +281,45 @@ class PipelineSpec extends AnyFunSuite {
       val truth = byType(t1).intersect(byType(t2)).size.toDouble
       assert(est == truth, s"overlap $t1/$t2: est=$est truth=$truth")
     }
+  }
+
+  test("an incremental sessions run merges once: one executed plan sessionizes") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.graft.SessionizeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import spark.implicits._
+    val d = tempDir("graft_sessions_once")
+    // 5 users, one event a day in January and February (ts as raw nanos)
+    (for (u <- 0L until 5L; m <- 1 to 2; day <- 1 to 20) yield
+      (u * 1000 + m * 100 + day, u, "click", 1.0,
+        TestSpark.ts(f"2024-0$m-$day%02d 10:00:00").getTime * 1000000L))
+      .toDF("event_id", "user_id", "event_type", "value", "ts")
+      .coalesce(1).write.parquet(s"$d/events.parquet")
+    val out = s"$d/out"
+    Pipeline.run(spark, RunConfig(d, Seq("events"), endDate = Some("2024-02-01")), out)
+    def sessionizes(p: SparkPlan): Boolean = p match {
+      case _: SessionizeExec => true
+      case a: AdaptiveSparkPlanExec => sessionizes(a.initialPlan)
+      case other => other.children.exists(sessionizes)
+    }
+    org.apache.spark.graft.TestBusHook.waitUntilEmpty(spark)
+    val plans = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (sessionizes(qe.executedPlan)) plans.incrementAndGet()
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val res = try {
+      val r = Pipeline.runIncrementalSessions(
+        spark, RunConfig(d, Seq("events")), out, "2024-02-01")
+      org.apache.spark.graft.TestBusHook.waitUntilEmpty(spark)
+      r
+    } finally spark.listenerManager.unregister(listener)
+    assert(plans.get == 1, s"${plans.get} executed plans sessionized the batch")
+    assertCounted(out, res)
+    assert(res.rows == 5L * 40)
   }
 
   test("streaming ingest maintains the lake tables exactly (foreachBatch incremental)") {
@@ -294,8 +349,8 @@ class PipelineSpec extends AnyFunSuite {
         }
       }
     }
-    val d = Files.createTempDirectory("graft_stream_lake").toString
-    val out = Files.createTempDirectory("graft_stream_out").toString
+    val d = tempDir("graft_stream_lake")
+    val out = tempDir("graft_stream_out")
     // bootstrap: month 1 published by a normal batch run
     byMonth(0).toDF().coalesce(1).write.mode("append")
       .parquet(s"$d/events.parquet")
@@ -336,7 +391,7 @@ class PipelineSpec extends AnyFunSuite {
 
     // the streamed lake == a from-scratch rebuild over all three months,
     // built on a fresh session
-    val outFull = Files.createTempDirectory("graft_stream_full").toString
+    val outFull = tempDir("graft_stream_full")
     Pipeline.run(spark.newSession(), RunConfig(d, Seq("events")), outFull)
     def rowsOf(o: String, t: String) =
       Pipeline.readTableCurrent(spark, o, t).drop("month", "value_kll")
@@ -347,7 +402,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("pipeline without the events table fails loudly") {
-    val out = Files.createTempDirectory("graft_pipeline2").toString
+    val out = tempDir("graft_pipeline2")
     intercept[IllegalArgumentException] {
       Pipeline.run(spark, RunConfig(sf, Seq("orders")), out)
     }
@@ -359,8 +414,8 @@ class PipelineSpec extends AnyFunSuite {
       startDate = Some("2024-01-01"), endDate = Some("2024-02-01"))
     val monthly = graft.operators.Etl.monthlyUsage(cfg.table(spark, "events"))
       .withColumn("month_str", col("month").cast("string"))
-    val outA = Files.createTempDirectory("graft_pub_inplace").toString
-    val outB = Files.createTempDirectory("graft_pub_manifest").toString
+    val outA = tempDir("graft_pub_inplace")
+    val outB = tempDir("graft_pub_manifest")
     // the same frame as a plain in-place parquet write and as a publish
     monthly.write.mode("overwrite").parquet(s"$outA/monthly")
     val r1 = Pipeline.publish(monthly, None, s"$outB/monthly")
@@ -387,7 +442,7 @@ class PipelineSpec extends AnyFunSuite {
     val bound = (docsDf.agg(max(col("doc_id"))).head.getLong(0) + 1L) * 4L / 5L
     val regDir =
       graft.config.SketchRegistry.ensureCorpusRegistry(spark, d, bound)
-    val out = Files.createTempDirectory("graft_corpus_lake").toString
+    val out = tempDir("graft_corpus_lake")
     // nightly shape: the corpus half's full build is the published base
     // table; each batch's incremental build publishes beside it and the
     // training consumer reads the UNION of the two current generations
@@ -431,7 +486,7 @@ class PipelineSpec extends AnyFunSuite {
     // sf0.001 events span January 2024 only — split mid-month
     val pre = RunConfig(sf, Seq("events"), endDate = Some("2024-01-16"))
     val batch = RunConfig(sf, Seq("events"), startDate = Some("2024-01-16"))
-    val outM = Files.createTempDirectory("graft_lake_manifest").toString
+    val outM = tempDir("graft_lake_manifest")
     Pipeline.run(spark, pre, outM)
 
     // layout law: every table is one log; the calendar tables' snapshots
@@ -440,7 +495,8 @@ class PipelineSpec extends AnyFunSuite {
       "churn_daily", "type_reach")
     assert(tables.forall(t => gen(s"$outM/$t").isDefined))
     assert(partDirs(outM, "monthly_usage").nonEmpty && partDirs(outM, "churn_daily").nonEmpty)
-    assert(partDirs(outM, "user_lifetime").isEmpty && partDirs(outM, "type_reach").isEmpty)
+    assert(Seq("user_lifetime", "type_reach")
+      .forall(t => Sources.serving(spark, s"$outM/$t", "layout")._2.partCol.isEmpty))
 
     def rowsOf(out: String, t: String) = {
       val df = Pipeline.readTableCurrent(spark, out, t)
@@ -469,7 +525,7 @@ class PipelineSpec extends AnyFunSuite {
       Pipeline.runIncrementalLifetime(spark, batch, outM, "2024-01-16"),
       Pipeline.runIncrementalChurn(spark, batch, outM, "2024-01-16"),
       Pipeline.runIncrementalReach(spark, batch, outM, "2024-01-16"))
-    val outF = Files.createTempDirectory("graft_lake_full").toString
+    val outF = tempDir("graft_lake_full")
     val full = Pipeline.run(spark.newSession(), RunConfig(sf, Seq("events")), outF)
     assert(inc.map(r => r.table -> r.rows).toMap == full.map(r => r.table -> r.rows).toMap)
     for (t <- tables)
@@ -521,5 +577,9 @@ class PipelineSpec extends AnyFunSuite {
     assert(Pipeline.readTableCurrent(spark, outM, "monthly_usage")
       .drop("month").collect().map(_.toSeq).toSet == tableRows,
       "post-compaction table content diverged")
+    // a compaction's snapshot counts the rows it rewrote
+    for (t <- Seq("user_lifetime", "monthly_usage"))
+      assert(Sources.rowCount(spark, s"$outM/$t") ==
+        Pipeline.readTableCurrent(spark, outM, t).count(), s"$t after compaction")
   }
 }

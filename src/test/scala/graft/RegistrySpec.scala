@@ -15,7 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *  (3) append-only storage: ingest never rewrites an existing registry
   *      file (the untouched-partition law of the Pipeline tables).
   */
-class RegistrySpec extends AnyFunSuite {
+class RegistrySpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
 
@@ -40,8 +40,7 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("ingest == full recompute for the batch; registry files append-only") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_registry").toString
+    val dir = tempDir("graft_registry")
     SketchRegistry.build(spark, docs.where(col("doc_id") < 400), dir)
     spark.catalog.clearCache()
     val before = files(s"$dir/shingles") ++ files(s"$dir/bands")
@@ -61,8 +60,7 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("two sequential ingests accumulate exact state") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_registry2").toString
+    val dir = tempDir("graft_registry2")
     SketchRegistry.build(spark, docs.where(col("doc_id") < 300), dir)
     val p1 = got(SketchRegistry.ingest(spark, dir,
       docs.where(col("doc_id") >= 300 && col("doc_id") < 400)))
@@ -117,7 +115,7 @@ class RegistrySpec extends AnyFunSuite {
     import graft.config.LakeCache
     val rootName = s"graft_lakecache_spec_${System.nanoTime()}"
     val root = new java.io.File(sys.props("java.io.tmpdir"), rootName)
-    val srcF = java.io.File.createTempFile("graft_lc_src", ".txt")
+    val srcF = new java.io.File(tempDir("graft_lc_src"), "src.txt")
     try {
       java.nio.file.Files.write(srcF.toPath, "state".getBytes)
       // K rebuilds beyond the cap: each tag is a new fingerprint (the
@@ -166,7 +164,7 @@ class RegistrySpec extends AnyFunSuite {
     import graft.config.{LakeCache, LakeCommit}
     val rootName = s"graft_lakecommit_spec_${System.nanoTime()}"
     val root = new java.io.File(sys.props("java.io.tmpdir"), rootName)
-    val srcF = java.io.File.createTempFile("graft_lc2_src", ".txt")
+    val srcF = new java.io.File(tempDir("graft_lc2_src"), "src.txt")
     try {
       java.nio.file.Files.write(srcF.toPath, "state".getBytes)
       // 1. a COMPLETE stage without a manifest resolves to nothing —

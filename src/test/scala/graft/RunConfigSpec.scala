@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * with the date window reaching the parquet scan as pushed filters where
   * the column is raw (orders), and correct values everywhere.
   */
-class RunConfigSpec extends AnyFunSuite {
+class RunConfigSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.01"
 
@@ -20,7 +20,7 @@ class RunConfigSpec extends AnyFunSuite {
          | "startDate": "2024-01-10",
          | "endDate": "2024-01-20",
          | "where": {"events": "event_type IN ('signup', 'purchase')"}}""".stripMargin
-    val path = Files.createTempFile("graft_cfg", ".json")
+    val path = java.nio.file.Paths.get(tempDir("graft_cfg"), "cfg.json")
     Files.writeString(path, json)
     val cfg = RunConfig.fromJsonFile(path.toString)
     assert(cfg.tables == Seq("events", "orders"))
@@ -42,6 +42,42 @@ class RunConfigSpec extends AnyFunSuite {
         col("o_orderdate") < lit("2024-01-20").cast("date"))
       .count()
     assert(out("orders").count() == expectedOrders)
+  }
+
+  test("building a configured table reads its schema from one footer: no Spark job") {
+    import spark.implicits._
+    // the two encodings of events.ts: the harness file's TIMESTAMP(NANOS)
+    // and a Spark-written TIMESTAMP(MICROS), three files each
+    val nanos = tempDir("graft_cfg_nanos")
+    val micros = tempDir("graft_cfg_micros")
+    Files.createDirectories(java.nio.file.Paths.get(nanos, "events.parquet"))
+    for (i <- 0 until 3) Files.copy(java.nio.file.Paths.get(sf, "events.parquet"),
+      java.nio.file.Paths.get(nanos, "events.parquet", s"part-$i.parquet"))
+    Seq((1L, TestSpark.ts("2024-01-02 03:04:05.123456"), 7L, "click", 1.5),
+        (2L, TestSpark.ts("2024-01-03 00:00:00"), 8L, "view", 2.5),
+        (3L, TestSpark.ts("2024-01-04 00:00:00"), 9L, "view", 0.5))
+      .toDF("event_id", "ts", "user_id", "event_type", "value")
+      .repartition(3).write.parquet(s"$micros/events.parquet")
+    for (dir <- Seq(nanos, micros)) {
+      val cfg = RunConfig(dir, Seq("events"))
+      org.apache.spark.graft.TestBusHook.waitUntilEmpty(spark)
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(listener)
+      val events = try {
+        val t = cfg.table(spark, "events")
+        org.apache.spark.graft.TestBusHook.waitUntilEmpty(spark)
+        t
+      } finally spark.sparkContext.removeSparkListener(listener)
+      assert(jobs.get == 0, s"${jobs.get} jobs ran while building events over $dir")
+      val file = s"$dir/events.parquet"
+      assert(Tables.scan(spark, file).schema == spark.read.parquet(file).schema)
+      assert(events.schema("ts").dataType == org.apache.spark.sql.types.TimestampType)
+      assert(events.count() == spark.read.parquet(file).count())
+    }
   }
 
   test("date window pushes down to the parquet scan on raw date columns") {

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-class SourcesSpec extends AnyFunSuite {
+class SourcesSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -15,7 +15,7 @@ class SourcesSpec extends AnyFunSuite {
     StructField("score", DoubleType)))
 
   test("json ingest: explicit schema and inference agree on typed rows") {
-    val d = Files.createTempDirectory("graft_src").toString
+    val d = tempDir("graft_src")
     val json = Seq(
       """{"id": 1, "name": "a", "score": 1.5}""",
       """{"id": 2, "name": "b", "score": 2.5}""")
@@ -29,7 +29,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("csv ingest: header + typed casting") {
-    val d = Files.createTempDirectory("graft_csv").toString
+    val d = tempDir("graft_csv")
     Files.write(java.nio.file.Paths.get(s"$d/in.csv"),
       "id,name,score\n1,a,1.5\n2,b,2.5\n".getBytes)
     val df = Sources.readCsv(spark, s"$d/in.csv", schema)
@@ -38,7 +38,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("text ingest: per-line and whole-file modes (r8)") {
-    val d = Files.createTempDirectory("graft_txt").toString
+    val d = tempDir("graft_txt")
     Files.write(java.nio.file.Paths.get(s"$d/a.txt"),
       "line one\nline two\n".getBytes)
     Files.write(java.nio.file.Paths.get(s"$d/b.txt"),
@@ -54,7 +54,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("partitioned sink lays out by event_date and prunes on read") {
-    val d = Files.createTempDirectory("graft_lake").toString
+    val d = tempDir("graft_lake")
     val df = Seq(
       (1L, TestSpark.ts("2024-01-01 10:00:00")),
       (2L, TestSpark.ts("2024-01-02 10:00:00")))
@@ -70,7 +70,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("orc round-trip preserves rows and pushes filters to the scan") {
-    val d = Files.createTempDirectory("graft_orc").toString
+    val d = tempDir("graft_orc")
     val li = Tables(spark, "/root/testdata/sf0.001", "lineitem")
       .select("l_orderkey", "l_quantity", "l_shipdate")
     Sources.sinkOrc(li, s"$d/li_orc")
@@ -90,7 +90,7 @@ class SourcesSpec extends AnyFunSuite {
     // Derby ships in /opt/spark/jars — an in-JVM warehouse stand-in, so
     // the R1/R2 JDBC interop claim is exercised with real rows moving
     // over a real JDBC connection, no network.
-    val d = Files.createTempDirectory("graft_derby").toString
+    val d = tempDir("graft_derby")
     val url = s"jdbc:derby:$d/db;create=true"
     val props = Map("driver" -> "org.apache.derby.iapi.jdbc.AutoloadedDriver")
     val df = (1L to 100L).map(i => (i, s"name_$i", i * 1.5))
@@ -110,7 +110,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("schema evolution: added + renamed columns keep v1 data queryable") {
-    val d = Files.createTempDirectory("graft_evo").toString
+    val d = tempDir("graft_evo")
     // v1 snapshot: (id, amt) — the original schema
     Seq((1L, 10.0), (2L, 20.0)).toDF("id", "amt")
       .write.parquet(s"$d/lake/v=1")
@@ -134,7 +134,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("schema evolution: widened int->long type drift via readVersioned") {
-    val d = Files.createTempDirectory("graft_evo2").toString
+    val d = tempDir("graft_evo2")
     Seq((1L, 7), (2L, 8)).toDF("id", "amount")          // amount: INT
       .write.parquet(s"$d/v1")
     Seq((3L, 9L)).toDF("id", "amount")                  // amount: BIGINT
@@ -153,7 +153,7 @@ class SourcesSpec extends AnyFunSuite {
   test("binaryFile source feeds the multimodal column end-to-end") {
     import graft.operators.Multimodal
     import graft.operators.Multimodal.{Media, MediaHeaderCodec, MediaRow}
-    val d = Files.createTempDirectory("graft_bin").toString
+    val d = tempDir("graft_bin")
     // real JDK-encoded objects on disk — the crawl-ingest shape
     val img = new java.awt.image.BufferedImage(
       9, 6, java.awt.image.BufferedImage.TYPE_INT_RGB)
@@ -189,7 +189,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("small-file compaction: fewer files, same rows, target-sized output") {
     import graft.config.LakeCommit
-    val t = Files.createTempDirectory("graft_compact").toString + "/t"
+    val t = tempDir("graft_compact") + "/t"
     // simulate streaming-ingest debris: 16 one-partition micro-batch writes
     Sources.publishVersion(spark, t,
       spark.range(4000L).select(col("id"), (col("id") * 3).as("v")).repartition(16))
@@ -213,7 +213,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("jdbc upsert: staged MERGE keeps latest on conflicting keys, no dup rows " +
     "(r8 — the R9 idempotent-reimport contract at the warehouse boundary)") {
-    val d = Files.createTempDirectory("graft_derby_upsert").toString
+    val d = tempDir("graft_derby_upsert")
     val url = s"jdbc:derby:$d/db;create=true"
     val props = Map("driver" -> "org.apache.derby.iapi.jdbc.AutoloadedDriver")
     val b1 = (1L to 50L).map(i => (i, s"v1_$i", i * 1.0)).toDF("id", "name", "score")
@@ -264,7 +264,7 @@ class SourcesSpec extends AnyFunSuite {
   test("manifested publish: each publish commits a generation; superseded ones retire") {
     import graft.config.LakeCommit
     import graft.sources.Sources
-    val d = java.nio.file.Files.createTempDirectory("graft_manifest").toString
+    val d = tempDir("graft_manifest")
     val t = s"$d/tbl"
     import spark.implicits._
     def current = LakeCommit.currentGen(t, Sources.ManifestTable)
@@ -291,7 +291,7 @@ class SourcesSpec extends AnyFunSuite {
   test("crashed stage: uncommitted generation stays invisible; next publish succeeds") {
     import graft.config.LakeCommit
     import graft.sources.Sources
-    val d = java.nio.file.Files.createTempDirectory("graft_dangling").toString
+    val d = tempDir("graft_dangling")
     val t = s"$d/tbl"
     import spark.implicits._
     val g1 = Sources.publishVersion(spark, t, (1L to 10L).toDF("x"))
@@ -311,11 +311,11 @@ class SourcesSpec extends AnyFunSuite {
   test("manifested writers take the table's writer lease: a live foreign " +
     "lease refuses a publish and leaves the serving generation as it was") {
     import graft.config.{LakeCommit, Pipeline}
-    val d = java.nio.file.Files.createTempDirectory("graft_pub_lease").toString
+    val d = tempDir("graft_pub_lease")
     val whole = s"$d/whole"
     val parted = s"$d/parted"
     def gen(dir: String) = LakeCommit.currentGen(dir, Sources.ManifestTable)
-    def partGens = Sources.serving(spark, parted, "test")._2.parts
+    def partGens = Sources.serving(spark, parted, "test")._2.parts.map { case (v, p) => v -> p.dir }
     def frame(n: Long) = (1L to n).toDF("x").withColumn("p", $"x" % 2)
     Sources.publishVersion(spark, whole, frame(10))
     Sources.publishPartitions(spark, parted, frame(10), "p")
@@ -354,7 +354,7 @@ class SourcesSpec extends AnyFunSuite {
   test("a generation another snapshot still serves survives cleanup; one " +
     "no snapshot names is deleted") {
     import graft.config.LakeCommit
-    val t = java.nio.file.Files.createTempDirectory("graft_keep").toString + "/tbl"
+    val t = tempDir("graft_keep") + "/tbl"
     def frame(tag: Int, ps: Seq[Int]) =
       ps.flatMap(p => (1 to 5).map(_ => (tag, p))).toDF("tag", "p")
     val g1 = Sources.publishPartitions(spark, t, frame(1, Seq(0, 1)), "p").get
@@ -375,10 +375,38 @@ class SourcesSpec extends AnyFunSuite {
     assert(Sources.readCurrent(spark, t).count() == 10)
   }
 
+  test("the snapshot counts each partition's rows and names its files; " +
+    "a snapshot without them is an older lake and is refused") {
+    import graft.config.LakeCommit
+    val t = tempDir("graft_counts") + "/tbl"
+    def frame(ps: Seq[Int]) = ps.flatMap(p => (0 until p + 1).map(i => (p, i))).toDF("p", "i")
+    Sources.publishPartitions(spark, t, frame(Seq(0, 1, 2)), "p")
+    Sources.publishPartitions(spark, t, frame(Seq(2, 3)), "p")
+    val (gen, snap) = Sources.serving(spark, t, "test")
+    // untouched partitions keep their counts; republished ones count anew
+    assert(snap.parts.map { case (v, p) => v -> p.rows } ==
+      Map("0" -> 1L, "1" -> 2L, "2" -> 3L, "3" -> 4L))
+    assert(Sources.rowCount(spark, t) == 10L && Sources.readCurrent(spark, t).count() == 10L)
+    assert(snap.parts.values.forall(p =>
+      p.files.map(f => s"$t/${p.dir}/${f.name}").toSet == LakeCommit.dataFiles(s"$t/${p.dir}").toSet))
+    // the same generation as an older layout wrote it: no counts, no files
+    val p = java.nio.file.Paths.get(gen, "_snapshot")
+    val lines = new String(java.nio.file.Files.readAllBytes(p), "UTF-8").split("\n")
+    java.nio.file.Files.write(p, (lines.take(2) ++ lines.drop(2).map(_.split("\t").head))
+      .mkString("\n").getBytes("UTF-8"))
+    java.nio.file.Files.delete(java.nio.file.Paths.get(gen, "._snapshot.crc"))
+    for (refused <- Seq[() => Any](() => Sources.readCurrent(spark, t),
+        () => Sources.rowCount(spark, t),
+        () => Sources.publishPartitions(spark, t, frame(Seq(4)), "p"))) {
+      val e = intercept[IllegalStateException](refused())
+      assert(e.getMessage.contains("rebuild"), e.getMessage)
+    }
+  }
+
   test("crash window: a reader concurrent with publishes/compactions never " +
     "observes a partial table (r8 atomic-publish contract)") {
     import graft.sources.Sources
-    val d = java.nio.file.Files.createTempDirectory("graft_crashwin").toString
+    val d = tempDir("graft_crashwin")
     val t = s"$d/tbl"
     import spark.implicits._
     // invariant per version i: exactly 100·i rows, every row's tag == i

@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 case class Ev(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
     event_type: String)
 
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = TestSpark.spark
   import TestSpark.ts
   import spark.implicits._
@@ -484,7 +484,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("transformWithState funnel (v2 API) matches flatMapGroupsWithState") {
-    val d = java.nio.file.Files.createTempDirectory("graft_tws").toString
+    val d = tempDir("graft_tws")
     val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
@@ -517,7 +517,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming parquet sink writes partitioned output with checkpoint") {
-    val d = java.nio.file.Files.createTempDirectory("graft_sink").toString
+    val d = tempDir("graft_sink")
     val input = MemoryStream[Ev](spark)
     val q = Streaming.sinkParquet(input.toDF(), s"$d/out", s"$d/chk").start()
     try {
@@ -535,7 +535,7 @@ class StreamingSpec extends AnyFunSuite {
     // kill are not re-written (no duplicates), rows queued while no query
     // was running are not lost. This is the recovery contract a 100 TB
     // ingest pipeline leans on when an executor/driver dies mid-stream.
-    val d = java.nio.file.Files.createTempDirectory("graft_recover").toString
+    val d = tempDir("graft_recover")
     val input = MemoryStream[Ev](spark)
     def start() =
       Streaming.sinkParquet(input.toDF(), s"$d/out", s"$d/chk").start()

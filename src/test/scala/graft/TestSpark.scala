@@ -19,3 +19,31 @@ object TestSpark {
 
   def ts(s: String): java.sql.Timestamp = java.sql.Timestamp.valueOf(s)
 }
+
+/** Temp dirs for a suite's tests, deleted with all they hold in a
+  * `finally`, pass or fail: a [[tempDir]] when the test that made it ends,
+  * a [[suiteTempDir]] (a fixture the suite's tests share) when the suite
+  * ends. */
+trait TempDirs extends org.scalatest.TestSuiteMixin { this: org.scalatest.TestSuite =>
+  private val perTest, perSuite = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]
+
+  private def make(prefix: String, owner: java.util.Queue[java.io.File]): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    owner.add(d)
+    d.toString
+  }
+
+  private def drain(owner: java.util.Queue[java.io.File]): Unit =
+    while (!owner.isEmpty) org.apache.commons.io.FileUtils.deleteQuietly(owner.poll())
+
+  def tempDir(prefix: String): String = make(prefix, perTest)
+
+  def suiteTempDir(prefix: String): String = make(prefix, perSuite)
+
+  abstract override def withFixture(test: NoArgTest): org.scalatest.Outcome =
+    try super.withFixture(test) finally drain(perTest)
+
+  abstract override def run(
+      testName: Option[String], args: org.scalatest.Args): org.scalatest.Status =
+    try super.run(testName, args) finally drain(perSuite)
+}
