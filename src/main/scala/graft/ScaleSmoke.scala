@@ -606,7 +606,7 @@ object ScaleSmoke {
         (pmod(xxhash64(col("id"), lit(2)), lit(5)) + 1).as("cnt"))
       val sym = e.unionAll(
         e.select(col("dst").as("src"), col("src").as("dst"), col("cnt")))
-      val r = operators.Extras.pageRank(sym, 3, noDanglings = true)
+      val r = operators.Extras.pageRank(sym, 3, sinks = false)
       val row = r.agg(sum(col("rank")), count(lit(1))).head()
       val mass = row.getLong(0); val nodes = row.getLong(1)
       spark.catalog.clearCache() // release the pageRank edge/outw persists
@@ -629,7 +629,7 @@ object ScaleSmoke {
         pmod(xxhash64(col("id")), lit(m)).as("src"),
         (pmod(xxhash64(col("id"), lit(1)), lit(m)) + m).as("dst"),
         (pmod(xxhash64(col("id"), lit(2)), lit(5)) + 1).as("cnt"))
-      val r = operators.Extras.pageRank(e, 3, knownDanglings = true)
+      val r = operators.Extras.pageRank(e, 3, sinks = true)
       val row = r.agg(sum(col("rank")), count(lit(1))).head()
       val mass = row.getLong(0); val nodes = row.getLong(1)
       spark.catalog.clearCache()

@@ -367,13 +367,9 @@ object Pipeline {
     val startDay = java.time.LocalDate.parse(batchStart.take(10))
     val lookback =
       java.sql.Timestamp.valueOf(startDay.minusDays(1).atStartOfDay())
-    val ev = cfg.copy(startDate = None).table(spark, "events")
-    // empty-batch early return (the runIncrementalMonthly posture): a
-    // heartbeat batch with no events past batchStart must not pay the
-    // lookback scan + state join + overwrite machinery
-    if (ev.where(col("ts") >= lit(batchStart).cast("timestamp")).isEmpty)
-      return published(spark, path)
-    val win = ev
+    // an empty batch needs no check of its own: it leaves no ledger row
+    // at or after startDay, and a publish with no rows commits nothing
+    val win = cfg.copy(startDate = None).table(spark, "events")
       .where(col("ts") >= lit(lookback))
       .where(col("user_id").isNotNull)
     val act = win

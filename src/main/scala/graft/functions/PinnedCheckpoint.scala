@@ -1,35 +1,50 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.catalyst.expressions.{Ascending, SortOrder}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.classic.{Dataset, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, count, lit}
 
-/** Checkpoint a frame hash-partitioned (and sorted) on a key, and make the
-  * resulting plan DECLARE that layout.
+/** The two ways an iterative engine loop materializes a frame.
   *
+  *  - [[byKey]] holds a LOOP-INVARIANT frame: one the loop joins on the
+  *    same key every round and never changes (an edge list, a node set).
+  *    It crosses the network once, and every round reads it with no
+  *    exchange on that key.
+  *  - [[counted]] holds a round's STATE (labels, a shrinking edge set, a
+  *    frontier): a plain `localCheckpoint` that flattens lineage, with the
+  *    loop's convergence count observed in the same job, so counting the
+  *    round costs no job of its own.
+  *
+  * Shrinking state is never pinned: pinning the per-round frames of the
+  * peel and label loops measured about 2× slower (round 14) — each round
+  * would pay an exchange and a sort to lay out a frame read only once.
+  *
+  * Why `byKey` rebuilds the plan:
   * `df.repartition(n, col(k)).sortWithinPartitions(k).localCheckpoint()`
-  * materializes exactly the layout an iterative consumer wants (each loop
-  * round joins on `k`, so the big frame should cross the network once) —
-  * but under AQE the checkpoint's `LogicalRDD` records
-  * `UnknownPartitioning(0)`: at capture time the physical plan is an
-  * un-finalized `AdaptiveSparkPlanExec`, whose output partitioning is not
-  * yet known, so `Dataset.checkpoint` cannot copy it. Every downstream
-  * join then re-exchanges the already-partitioned blocks (plan evidence:
+  * materializes exactly the layout the loop wants — but under AQE the
+  * checkpoint's `LogicalRDD` records `UnknownPartitioning(0)`: at capture
+  * time the physical plan is an un-finalized `AdaptiveSparkPlanExec`,
+  * whose output partitioning is not yet known, so `Dataset.checkpoint`
+  * cannot copy it. Every downstream join would then re-exchange the
+  * already-partitioned blocks (plan evidence:
   * plans/r14/graph_pagerank_before.txt, `Scan ExistingRDD ...
   * UnknownPartitioning(0)` under `Exchange hashpartitioning(src, 32)`
-  * once per iteration).
-  *
-  * This helper rebuilds the checkpointed `LogicalRDD` with the
-  * partitioning and sort order the exchange it just executed provably
-  * produced: `HashPartitioning(k, n)` rows placed by
+  * once per iteration). `byKey` rebuilds the checkpointed `LogicalRDD`
+  * with the partitioning and sort order the exchange it just executed
+  * provably produced: `HashPartitioning(k, n)` rows placed by
   * `murmur3(k) pmod n` — precisely the contract `repartition(n, col(k))`
   * guarantees — and ascending-nulls-first order within each partition
   * from `sortWithinPartitions(k)`. Declaring a layout the blocks already
   * have is metadata repair, not a semantics change; origin statistics are
-  * carried over so join-strategy choices are unaffected.
+  * carried over so join-strategy choices are unaffected. `n` is the
+  * session's `defaultParallelism`: an explicit count is a hard constraint
+  * AQE will not coalesce, so a loop whose cost is its join OUTPUT (the
+  * wedge self-joins) keeps every core busy however small the input bytes.
+  * PlanSpec's "pinned keys" test checks that no plan re-exchanges a pin on
+  * its own key.
   *
   * Lifetime — the one rule for every engine materialization, pins
   * included. A frame built and used inside one eager call is released by
@@ -43,8 +58,8 @@ import org.apache.spark.sql.functions.col
   * caller's lazy frame still reads would make that frame fail.
   */
 object PinnedCheckpoint {
-  def byKey(df: DataFrame, parts: Int, key: String): DataFrame = {
-    require(parts > 0, s"pinned checkpoint needs parts > 0, got $parts")
+  def byKey(df: DataFrame, key: String): DataFrame = {
+    val parts = df.sparkSession.sparkContext.defaultParallelism
     val ck = df.repartition(parts, col(key))
       .sortWithinPartitions(key)
       .localCheckpoint()
@@ -65,5 +80,13 @@ object PinnedCheckpoint {
         // just loses the pin, never correctness
         ck
     }
+  }
+
+  /** `df` checkpointed, with the aggregate `c` (a row count unless given)
+    * computed by the checkpoint's own job. */
+  def counted(df: DataFrame, c: Column = count(lit(1))): (DataFrame, Long) = {
+    val obs = Observation()
+    val out = df.observe(obs, c.as("c")).localCheckpoint()
+    (out, obs.get("c").asInstanceOf[Long])
   }
 }

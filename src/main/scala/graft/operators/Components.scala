@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PinnedCheckpoint
 
 /** Distributed connected components via min-label propagation iterated TO
   * FIXPOINT (SURVEY.md §2.K dedup-group stage; used by llm_dedup_groups /
@@ -22,15 +23,13 @@ import org.apache.spark.sql.functions._
   * components on the harness testdata (the sf0.01 cosine≥0.35 graph needs
   * 9 rounds, sf0.1 needs 10) — fixpoint is correctness, not polish.
   *
-  * Scale posture (100 TB): the edge frame is read ONCE into a
-  * localCheckpoint hash-partitioned on the join column, so no round
-  * re-derives it. The checkpoint does not declare that layout under AQE
-  * (its plan reports `UnknownPartitioning(0)`, see
-  * [[org.apache.spark.sql.graft.PinnedCheckpoint]]), so every round's
-  * edge join still exchanges the edge frame. Each round's labels are
-  * localCheckpoint-ed so lineage stays flat (on a real cluster:
-  * checkpoint() to durable storage for fault tolerance). Label state is
-  * one (id, lbl) row per node — never O(edges²).
+  * Scale posture (100 TB): the edge frame is read ONCE and pinned on its
+  * join column ([[PinnedCheckpoint.byKey]]), so no round re-derives or
+  * re-exchanges it. Each round's labels are checkpointed with the
+  * round's changed-label count ([[PinnedCheckpoint.counted]]), so
+  * lineage stays flat (on a real cluster: checkpoint() to durable storage
+  * for fault tolerance). Label state is one (id, lbl) row per node —
+  * never O(edges²).
   */
 object Components {
 
@@ -63,17 +62,13 @@ object Components {
     // frames shrink from |corpus| to |dup-ish docs|. Symmetric edges mean
     // the `a` endpoints alone cover every touched node. Singletons rejoin
     // with lbl = id after convergence (one left join, outside the loop).
-    //
-    // Materialize the edge frame ONCE, partitioned by the join key `a`.
-    // The checkpoint declares no layout under AQE, so each round's join
-    // on `a` still exchanges it: one edge shuffle per round.
-    val eByA = edges.repartition(col("a")).localCheckpoint()
-    var labels = eByA
+    val eByA = PinnedCheckpoint.byKey(edges, "a")
+    val (seed, nSeed) = PinnedCheckpoint.counted(eByA
       .select(col("a").as("id"))
       .distinct()
-      .withColumn("lbl", col("id"))
-      .localCheckpoint()
-    val noEdges = labels.isEmpty
+      .withColumn("lbl", col("id")))
+    var labels = seed
+    val noEdges = nSeed == 0L
     var converged = noEdges
     var rounds = 0
     while (!converged && rounds < maxPropagationRounds) {
@@ -81,14 +76,6 @@ object Components {
       // sane broadcast threshold, and AQE runtime stats must never promote
       // it (or a large label frame) to a driver-built broadcast relation —
       // same hygiene as the band joins in Llm.minhashVerified.
-      // the convergence signal rides the checkpoint materialization via
-      // observe() (the Pipeline write-count idiom): the checkpoint is
-      // already an eager job over this exact plan, so folding the
-      // changed-label count into it makes each round ONE job instead of
-      // two (checkpoint + a separate isEmpty scan) — at any scale that
-      // halves the fixpoint's action count, and the saved job is pure
-      // scheduling overhead on small label frames.
-      val obs = org.apache.spark.sql.Observation(s"cc_round_$rounds")
       // Neighbor minimum PUSHED from the a-endpoint (round 13, guide §2.3):
       // join the node-sized label vector onto the edge frame on `a` and
       // aggregate min(lbl) by b — the partial (map-side) aggregation
@@ -125,11 +112,10 @@ object Components {
             col("lbl1") === col("p_id"), "left")
           .select(col("id"), col("old_lbl"),
             least(col("lbl1"), coalesce(col("p_lbl"), col("lbl1"))).as("lbl"))
-      val stepped = jumped
-        .observe(obs, count(when(col("lbl") < col("old_lbl"), 1)).as("changed"))
-        .localCheckpoint()
+      val (stepped, changed) = PinnedCheckpoint.counted(
+        jumped, count(when(col("lbl") < col("old_lbl"), 1)))
       // labels only ever decrease; an unchanged round is the fixpoint.
-      converged = obs.get("changed").asInstanceOf[Long] == 0L
+      converged = changed == 0L
       labels = stepped.select(col("id"), col("lbl"))
       rounds += 1
     }
@@ -196,18 +182,7 @@ object Components {
         .select(col("b").as("a"), col("m").as("b"))
       sym(kept.unionByName(m.select(col("a"), col("m").as("b"))))
     }
-    // the round's edge count rides the checkpoint materialization via
-    // observe() (round 13 — the propagation loop's idiom): the checkpoint
-    // is already an eager job over this exact plan, so folding the count
-    // in makes each round two jobs (mid + next) instead of three
-    // (mid + next + a separate count scan).
-    def checkpointCounted(df: DataFrame, name: String): (DataFrame, Long) = {
-      val obs = org.apache.spark.sql.Observation(name)
-      val out = df.observe(obs, count(lit(1)).as("n")).localCheckpoint()
-      (out, obs.get("n").asInstanceOf[Long])
-    }
-    val (e0, n0) =
-      checkpointCounted(sym(edges.select(col("a"), col("b"))), "star_init")
+    val (e0, n0) = PinnedCheckpoint.counted(sym(edges.select(col("a"), col("b"))))
     var e = e0
     var eCount = n0
     var rounds = 0
@@ -217,8 +192,7 @@ object Components {
       // its input three times (min-agg, kept join, union) — uncached, the
       // whole large-star pass would re-execute per reference
       val mid = star(e, large = true).localCheckpoint()
-      val (next, nextCount) =
-        checkpointCounted(star(mid, large = false), s"star_round_$rounds")
+      val (next, nextCount) = PinnedCheckpoint.counted(star(mid, large = false))
       rounds += 1
       // fixpoint = identical edge set; frames are deduped, so equal
       // counts + one-sided except suffice for set equality
@@ -247,13 +221,10 @@ object Components {
     * either way, since peeling is confluent (the core is the unique
     * maximal fixpoint; removal order only affects intermediate states).
     *
-    * Scale shape (the [[connectedComponents]] idiom): the symmetric edge
-    * frame is checkpointed once, hash-partitioned on `a`; the checkpoint
-    * declares no layout under AQE, so each round's degree count and
-    * semi-joins exchange it again. Each round is one degree count + two
-    * semi-joins against the (small) qualifying-node frame,
-    * localCheckpoint-ed to keep lineage flat, with the round's edge count
-    * folded into the checkpoint job via observe() — one job per round.
+    * Scale shape: the edge set shrinks every round, so it is state, not a
+    * pin — each round is one degree count + two semi-joins against the
+    * (small) qualifying-node frame, checkpointed with its edge count
+    * ([[PinnedCheckpoint.counted]]): one job per round.
     * Rounds are data-bounded: each round strictly shrinks the edge set
     * until the fixpoint, and `maxRounds` caps adversarial peel chains
     * the way DefaultMaxPropagationRounds caps CC
@@ -266,9 +237,7 @@ object Components {
     *         within-core degree
     */
   def kCore(edges: DataFrame, k: Int, maxRounds: Int = 8): DataFrame = {
-    var cur = edges.select(col("a"), col("b"))
-      .repartition(col("a")).localCheckpoint()
-    var n = cur.count()
+    var (cur, n) = PinnedCheckpoint.counted(edges.select(col("a"), col("b")))
     var converged = n == 0L
     var rounds = 0
     while (!converged && rounds < maxRounds) {
@@ -276,17 +245,13 @@ object Components {
         .agg(count(lit(1)).as("deg"))
         .where(col("deg") >= k)
         .select(col("a").as("node"))
-      val obs = org.apache.spark.sql.Observation(s"kcore_round_$rounds")
       // keep is bounded by the current node set — but like the CC label
       // frames it scales with the data, so shuffle_hash keeps AQE from
       // ever promoting it to a driver-built broadcast at corpus scale.
-      val next = cur
+      val (next, m) = PinnedCheckpoint.counted(cur
         .join(keep.hint("shuffle_hash"), col("a") === col("node"), "left_semi")
         .join(keep.select(col("node").as("node_b")).hint("shuffle_hash"),
-          col("b") === col("node_b"), "left_semi")
-        .observe(obs, count(lit(1)).as("n_edges"))
-        .localCheckpoint()
-      val m = obs.get("n_edges").asInstanceOf[Long]
+          col("b") === col("node_b"), "left_semi"))
       // edges only ever leave the frame: unchanged count = fixpoint
       converged = m == n
       cur = next

@@ -4,6 +4,7 @@ import graft.{Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PinnedCheckpoint
 
 /** The remaining declare=opt rows of SURVEY.md §2: interval-overlap join
   * (2.C), ordered per-group collection (2.D), map functions (2.H).
@@ -17,14 +18,12 @@ object Extras {
     * (node, rank).
     *
     * DANGLING nodes (round 8 — a sink with no out-edges would silently
-    * LEAK its mass every round): a one-job probe counts sinks up front.
-    * A caller whose edges have no sinks BY CONSTRUCTION (symmetrization
-    * puts an out-edge on every node — the declared key and every graph_*
-    * caller here) passes `noDanglings = true` and skips the probe
-    * entirely: the probe is a distinct(dst) + anti-join scan, measured
-    * ~1 s of pure overhead on the 2M-edge declared key (round-8 cont. 3
-    * bench). Zero sinks takes the lean loop below; a
-    * directed graph with sinks takes the dangling-aware loop, which
+    * LEAK its mass every round): the caller states whether its graph can
+    * have sinks, because it knows by construction and probing for them
+    * is a distinct(dst) + anti-join scan (measured ~1 s of pure overhead
+    * on the 2M-edge declared key, round-8 cont. 3 bench). `sinks = false`
+    * (symmetrization puts an out-edge on every node) takes the lean loop
+    * below; `sinks = true` takes the dangling-aware loop, which
     * redistributes the sinks' total mass uniformly each round (one
     * broadcast 1-row scalar per round — the standard PageRank dangling
     * treatment, Page et al. 1999 §2.5) over the FULL node set (src ∪
@@ -38,9 +37,7 @@ object Extras {
     * unpersisted here because the returned frame is lazy; callers doing
     * repeated runs should clearCache() when done.
     */
-  def pageRank(edges0: DataFrame, iterations: Int = 3,
-      noDanglings: Boolean = false,
-      knownDanglings: Boolean = false): DataFrame = {
+  def pageRank(edges0: DataFrame, iterations: Int, sinks: Boolean): DataFrame = {
     // the input is referenced twice below (out-weight aggregate + the
     // weight merge join) — persist it so an unpersisted upstream edge
     // derivation is evaluated once, not twice (the same
@@ -51,17 +48,8 @@ object Extras {
     // instead of two joins — the per-round network cost is exactly the
     // rank vector, nothing else
     val outw = e0p.groupBy("src").agg(sum(col("cnt")).as("w")).persist()
-    val edges = org.apache.spark.sql.graft.PinnedCheckpoint.byKey(
-      e0p.join(outw, Seq("src")),
-      edges0.sparkSession.sparkContext.defaultParallelism, "src")
-    lazy val sinks = e0p.select(col("dst")).distinct()
-      .join(outw, col("dst") === col("src"), "left_anti")
-      .persist()
-    // the probe job runs only when the caller asserts NEITHER direction:
-    // noDanglings (symmetrized callers) and knownDanglings (the directed
-    // declared key, where every supplier is a sink by construction) each
-    // skip the distinct+anti-join scan — same move, opposite branch
-    if (noDanglings || (!knownDanglings && sinks.isEmpty)) {
+    val edges = PinnedCheckpoint.byKey(e0p.join(outw, Seq("src")), "src")
+    if (!sinks) {
       val n = outw.agg(count(lit(1)).cast("long").as("n_nodes"))
       var rank = outw.crossJoin(broadcast(n))
         .select(col("src").as("node"),
@@ -77,9 +65,12 @@ object Extras {
       }
       rank
     } else {
+      val sinkNodes = e0p.select(col("dst")).distinct()
+        .join(outw, col("dst") === col("src"), "left_anti")
+        .persist()
       // full node set: sources ∪ sinks — sinks hold rank too
       val nodes = outw.select(col("src").as("node"))
-        .unionByName(sinks.select(col("dst").as("node")))
+        .unionByName(sinkNodes.select(col("dst").as("node")))
         .persist()
       val n = nodes.agg(count(lit(1)).cast("long").as("n_nodes"))
       var rank = nodes.crossJoin(broadcast(n))
@@ -138,11 +129,8 @@ object Extras {
     // Two pinned copies of the edge frame: the auth half-round joins on
     // src, the hub half-round on dst. eDst derives from the materialized
     // e, so the caller's edge derivation runs once.
-    val npHits = edges0.sparkSession.sparkContext.defaultParallelism
-    val e = org.apache.spark.sql.graft.PinnedCheckpoint.byKey(
-      edges0, npHits, "src")
-    val eDst = org.apache.spark.sql.graft.PinnedCheckpoint.byKey(
-      e, npHits, "dst")
+    val e = PinnedCheckpoint.byKey(edges0, "src")
+    val eDst = PinnedCheckpoint.byKey(e, "dst")
     def rescale(raw0: DataFrame): DataFrame = {
       // checkpoint the PRE-rescale scores (round 13): raw is referenced
       // twice (the Σ rescale scalar and the projection) — checkpointing
@@ -427,7 +415,7 @@ object Extras {
           struct(col("s").as("src"), col("c").as("dst"), col("cnt")))).as("e"))
         .select(col("e.src").as("src"), col("e.dst").as("dst"),
           col("e.cnt").as("cnt"))
-      pageRank(edges, 3, noDanglings = true).orderBy(col("rank").desc, col("node")).limit(20)
+      pageRank(edges, 3, sinks = false).orderBy(col("rank").desc, col("node")).limit(20)
     },
 
     // DIRECTED PageRank with dangling sinks (round 8, cont. 4) — the
@@ -518,11 +506,8 @@ object Extras {
         |ORDER BY rank DESC, node LIMIT 20""".stripMargin) { (s, d) =>
       val edges = custSuppPairs(s, d)
         .select(col("c").as("src"), col("s").as("dst"), col("cnt"))
-      // knownDanglings: every supplier is a sink BY CONSTRUCTION (edges
-      // only run c→s), so the eager probe job is skipped and the sink
-      // frame evaluates inside the main plan instead — byte-identical
-      // output either way (ComponentsSpec pins it)
-      pageRank(edges, 3, knownDanglings = true)
+      // every supplier is a sink BY CONSTRUCTION (edges only run c→s)
+      pageRank(edges, 3, sinks = true)
         .orderBy(col("rank").desc, col("node")).limit(20)
     },
 
@@ -970,9 +955,8 @@ object Extras {
          |            - (SELECT count(*) FROM e3) AS BIGINT)
          |ORDER BY peel_round""".stripMargin
     }) { (s, d) =>
-      var e = coOrderEdges(s, d, "1997-01-01", "1997-02-01")
-        .localCheckpoint()
-      var prev = e.count()
+      var (e, prev) = PinnedCheckpoint.counted(
+        coOrderEdges(s, d, "1997-01-01", "1997-02-01"))
       val out = (1 to 3).map { r =>
         val sym = e.select(col("a"), col("b"))
           .unionAll(e.select(col("b").as("a"), col("a").as("b")))
@@ -983,14 +967,13 @@ object Extras {
             col("ya") === col("b") && col("yb") === col("xb"))
           .groupBy(col("a"), col("b"))
           .agg(count(lit(1)).as("cn"))
-        e = e.join(sup.select(col("a").as("sa"), col("b").as("sb"),
-            col("cn")),
-            col("a") === col("sa") && col("b") === col("sb"), "left")
-          .where(coalesce(col("cn"), lit(0L)) >= 2)
-          .select(col("a"), col("b"))
-          .localCheckpoint()
-        val n = e.count()
+        val (next, n) = PinnedCheckpoint.counted(
+          e.join(sup.select(col("a").as("sa"), col("b").as("sb"), col("cn")),
+              col("a") === col("sa") && col("b") === col("sb"), "left")
+            .where(coalesce(col("cn"), lit(0L)) >= 2)
+            .select(col("a"), col("b")))
         val row = (r.toLong, n, prev - n)
+        e = next
         prev = n
         row
       }
@@ -1109,8 +1092,8 @@ object Extras {
     // round budget IS the declared semantics (both engines replay it).
     //
     // Scale shape: per round ONE shuffle of the label vector to the
-    // edge partitioning (edges repartitioned by the probe side +
-    // checkpointed once) + one (node,label) count — O(1) edge-sized
+    // edge partitioning (edges pinned on the probe side once) + one
+    // (node,label) count — O(1) edge-sized
     // shuffles per round like the CC loop; labels localCheckpointed per
     // round (each referenced by the next join twice: count + pick).
     // Output: community-size histogram (bounded by sqrt-ish distinct
@@ -1227,11 +1210,9 @@ object Extras {
         |       floor(CAST(6 * n1 + 3 * n2 + 2 * n3 AS DOUBLE) / 6
         |             * 1000000) / 1000000 AS harmonic3
         |FROM h ORDER BY node""".stripMargin) { (s, d) =>
-      // materialized once for the degree count and the BFS; the
-      // checkpoint declares no layout under AQE, so neither reuses the
-      // partitioning on `a` (multiSourceDistances repartitions again)
+      // materialized once, by multiSourceDistances' pin; the degree count
+      // reads the stored co-order frame
       val e = symmetrize(coOrderEdges(s, d, "1997-01-01", "1997-02-01"))
-        .repartition(col("a")).localCheckpoint()
       val deg = e.groupBy(col("a").as("node"))
         .agg(count(lit(1)).as("degree"))
       val seeds = deg.orderBy(col("degree").desc, col("node")).limit(8)
@@ -1303,7 +1284,7 @@ object Extras {
           struct(col("s").as("src"), col("c").as("dst"), col("cnt")))).as("e"))
         .select(col("e.src").as("src"), col("e.dst").as("dst"),
           col("e.cnt").as("cnt"))
-      pageRank(edges, 3, noDanglings = true)
+      pageRank(edges, 3, sinks = false)
         .orderBy(col("rank").desc, col("node")).limit(20)
     },
 
@@ -1357,13 +1338,12 @@ object Extras {
         |SELECT node, rank FROM r3
         |ORDER BY rank DESC, node LIMIT 20""".stripMargin) { (s, d) =>
       val pair = custSuppPairs(s, d)
-      val edges = org.apache.spark.sql.graft.PinnedCheckpoint.byKey(
+      val edges = PinnedCheckpoint.byKey(
         pair.select(explode(array(
             struct(col("c").as("src"), col("s").as("dst"), col("cnt")),
             struct(col("s").as("src"), col("c").as("dst"), col("cnt")))).as("e"))
           .select(col("e.src").as("src"), col("e.dst").as("dst"),
-            col("e.cnt").as("cnt")),
-        s.sparkContext.defaultParallelism, "src")
+            col("e.cnt").as("cnt")), "src")
       var rank = edges.select(col("src").as("node")).distinct()
         .withColumn("rank", lit(1000000L))
       for (_ <- 1 to 3) {
@@ -1438,18 +1418,16 @@ object Extras {
         |SELECT node, x AS katz FROM x3
         |ORDER BY katz DESC, node LIMIT 20""".stripMargin) { (s, d) =>
       val pair = custSuppPairs(s, d)
-      val edges = org.apache.spark.sql.graft.PinnedCheckpoint.byKey(
+      val edges = PinnedCheckpoint.byKey(
         pair.select(explode(array(
             struct(col("c").as("src"), col("s").as("dst"), col("cnt")),
             struct(col("s").as("src"), col("c").as("dst"), col("cnt")))).as("e"))
           .select(col("e.src").as("src"), col("e.dst").as("dst"),
-            col("e.cnt").as("cnt")),
-        s.sparkContext.defaultParallelism, "src")
+            col("e.cnt").as("cnt")), "src")
       // node-sized, referenced by every round's left join on `node` —
       // pinned so neither the nodes side nor its sort re-runs per round
-      val nodes = org.apache.spark.sql.graft.PinnedCheckpoint.byKey(
-        edges.select(col("src").as("node")).distinct(),
-        s.sparkContext.defaultParallelism, "node")
+      val nodes = PinnedCheckpoint.byKey(
+        edges.select(col("src").as("node")).distinct(), "node")
       var x = nodes.withColumn("x", lit(1000000L))
       for (_ <- 1 to 3) {
         val y = edges.join(x, col("node") === col("src"))
@@ -1951,10 +1929,9 @@ object Extras {
     // < k until stable; survivors are the maximal subgraph where every
     // node keeps ≥ 4 neighbors. Same January-1997 co-order graph as
     // graph_cc (fixpoint in ≤ 4 peels at every harness SF, measured;
-    // maxRounds = 8 is a 2× budget). Peeling is Components.kCore — the CC
-    // loop idiom (edge frame hash-partitioned once, per-round semi-joins
-    // against the small qualifying-node frame, observe-fused counts,
-    // localCheckpoint lineage) — while the oracle replays the SAME
+    // maxRounds = 8 is a 2× budget). Peeling is Components.kCore (per-round
+    // semi-joins against the small qualifying-node frame, each round
+    // checkpointed with its edge count) — while the oracle replays the SAME
     // simultaneous-removal rounds as a capped recursive window-function
     // peel: degrees computed over the round's snapshot, both endpoints
     // filtered against it. Peel order can't change the answer (the core
@@ -2175,15 +2152,12 @@ object Extras {
     * cannot see: it sizes the join's reduce partitions from the tiny
     * edge-frame input bytes and coalesced the whole wedge enumeration
     * onto 2 tasks (event-log evidence: 3.4M wedge rows produced by 2
-    * tasks of ~2 s on 32 cores). An EXPLICIT partition count is a hard constraint AQE
-    * will not coalesce, sized from the session's parallelism
-    * (scale-adaptive — cores of the cluster, not a tuned constant).
+    * tasks of ~2 s on 32 cores); the pin's explicit partition count is a
+    * hard constraint AQE will not coalesce.
     */
-  private def symByV(e: DataFrame): DataFrame = {
-    val np = e.sparkSession.sparkContext.defaultParallelism
-    org.apache.spark.sql.graft.PinnedCheckpoint.byKey(
-      symmetrize(e).select(col("a").as("u"), col("b").as("v")), np, "v")
-  }
+  private def symByV(e: DataFrame): DataFrame =
+    PinnedCheckpoint.byKey(
+      symmetrize(e).select(col("a").as("u"), col("b").as("v")), "v")
 
   def commonNeighbors(edges0: DataFrame, k: Int): DataFrame = {
     val e = edges0.persist()
@@ -2264,16 +2238,12 @@ object Extras {
     * shortest hop count ≤ maxHops (also driven at 20M edges by
     * ScaleSmoke). Per level: one frontier⋈edges equi-join + one anti-join
     * against the visited set. The edge frame crosses the network ONCE
-    * (persisted hash-partitioned on the join key, the Components idiom) —
-    * each round shuffles only the frontier; per-level persists truncate
-    * the unrolled lineage.
-    *
-    * Cache contract: persists the edge frame and the per-level
-    * visited/frontier frames; callers doing repeated runs should
-    * clearCache() when done, as with [[pageRank]].
+    * (pinned on the join key, [[PinnedCheckpoint.byKey]]) — each round
+    * shuffles only the frontier; per-level checkpoints truncate the
+    * unrolled lineage.
     */
   def bfs(edgesSym: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
-    val sym = edgesSym.repartition(col("a")).persist()
+    val sym = PinnedCheckpoint.byKey(edgesSym, "a")
     // each LEVEL is persisted once; `visited` stays a lazy unionAll of
     // the cached levels — persisting the growing superset per round
     // would double the cache footprint and rewrite the whole visited
@@ -2308,14 +2278,13 @@ object Extras {
     * synchronous LPA can 2-cycle on bipartite-ish regions, so a
     * convergence loop would not terminate there.
     *
-    * Scale shape: edge frame repartitioned on the probe side +
-    * checkpointed ONCE; the checkpoint declares no layout under AQE, so
-    * each round's join exchanges the edge frame as well as the label
-    * vector, then runs one (node, label) count; labels localCheckpointed
-    * per round (flat lineage, the CC-loop posture).
+    * Scale shape: edge frame pinned ONCE on the probe side
+    * ([[PinnedCheckpoint.byKey]]), so each round's join exchanges only
+    * the label vector, then runs one (node, label) count; labels
+    * localCheckpointed per round (flat lineage, the CC-loop posture).
     */
   def labelPropagation(edgesSym: DataFrame, rounds: Int): DataFrame = {
-    val e = edgesSym.repartition(col("b")).localCheckpoint()
+    val e = PinnedCheckpoint.byKey(edgesSym, "b")
     var labels = e.select(col("a").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
       .localCheckpoint()
@@ -2340,9 +2309,7 @@ object Extras {
     */
   def multiSourceDistances(
       edgesSym: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
-    // materialized once; the checkpoint declares no layout under AQE, so
-    // every hop's join on `a` still exchanges the edge frame
-    val e = edgesSym.repartition(col("a")).localCheckpoint()
+    val e = PinnedCheckpoint.byKey(edgesSym, "a")
     var visited = seeds
       .select(col("node").as("seed"), col("node"), lit(0).as("dist"))
     var frontier = visited

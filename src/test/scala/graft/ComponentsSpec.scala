@@ -91,6 +91,24 @@ class ComponentsSpec extends AnyFunSuite {
     assert(got == (0L until 5L).map(i => i -> i).toMap)
   }
 
+  test("kCore and an edgeless connectedComponents run no count or isEmpty " +
+    "action: each round's count rides its checkpoint") {
+    val path = (0L until 11L).map(i => (i, i + 1)).toDF("a", "b")
+    val sym = path.unionByName(path.select($"b".as("a"), $"a".as("b")))
+    val nodes = spark.range(5L).toDF("id")
+    val noEdges = Seq.empty[(Long, Long)].toDF("a", "b")
+    var labels: org.apache.spark.sql.DataFrame = null
+    val actions = TestSpark.actionsDuring {
+      Components.kCore(sym, k = 2, maxRounds = 3)
+      labels = Components.connectedComponents(nodes, "id", noEdges)
+    }
+    assert(actions.contains("localCheckpoint"), s"no checkpoint ran: $actions")
+    assert(!actions.exists(Set("count", "isEmpty")),
+      s"a count ran as its own action: $actions")
+    assert(labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      (0L until 5L).map(i => i -> i).toMap)
+  }
+
   test("degree-oriented triangle counting == id-oriented, incl. a hub graph") {
     // equality law on random graphs + a brute-force oracle: orientation
     // is just a total order on vertices, so counts must be invariant
@@ -213,7 +231,7 @@ class ComponentsSpec extends AnyFunSuite {
     val edges = Seq((0L, 5L, 1L), (1L, 5L, 1L), (2L, 5L, 1L),
         (3L, 5L, 1L), (4L, 5L, 1L), (6L, 0L, 1L))
       .toDF("src", "dst", "cnt")
-    val out = operators.Extras.pageRank(edges, iterations = 3)
+    val out = operators.Extras.pageRank(edges, iterations = 3, sinks = true)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // every node appears — including sink 5, which the old loop dropped
     assert(out.keySet == Set(0L, 1L, 2L, 3L, 4L, 5L, 6L))
@@ -224,32 +242,29 @@ class ComponentsSpec extends AnyFunSuite {
       s"mass leaked: total=$total")
     // the sink holds the LARGEST rank (it receives five sources)
     assert(out(5L) == out.values.max, s"sink must accumulate rank: $out")
-    // the probe-skipping knownDanglings hint (the directed declared
-    // key's spelling) takes the SAME dangling loop — byte-identical
-    val hinted = operators.Extras
-      .pageRank(edges, iterations = 3, knownDanglings = true)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(hinted == out)
     spark.catalog.clearCache()
   }
 
   test("pageRank sink-free fast path unchanged: symmetrized graph takes " +
     "the lean loop and conserves mass too") {
+    def ranks(edges: Seq[(Long, Long, Long)], sinks: Boolean) =
+      operators.Extras.pageRank(
+          (edges ++ edges.map { case (a, b, c) => (b, a, c) })
+            .toDF("src", "dst", "cnt"), iterations = 3, sinks)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // symmetrized triangle — no sinks, exercises the declared key's path
-    val tri = Seq((0L, 1L), (1L, 2L), (2L, 0L))
-    val sym = (tri ++ tri.map(_.swap)).map { case (a, b) => (a, b, 1L) }
-      .toDF("src", "dst", "cnt")
-    val out = operators.Extras.pageRank(sym, iterations = 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val out = ranks(Seq((0L, 1L, 1L), (1L, 2L, 1L), (2L, 0L, 1L)), sinks = false)
     // symmetric regular graph → uniform fixed point, exactly N^-1 each
     assert(out.values.toSet.size == 1, s"regular graph must be uniform: $out")
     assert(math.abs(out.values.sum - 1000000000000L) <= 10L)
-    // the probe-skipping caller-invariant path (noDanglings = true, the
-    // declared key's spelling) is the SAME loop — byte-identical output
-    val skipped = operators.Extras
-      .pageRank(sym, iterations = 3, noDanglings = true)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(skipped == out)
+    // a symmetric graph has no sinks, so the dangling loop moves no mass
+    // and must return exactly the lean loop's ranks, here on an irregular
+    // weighted graph (a triangle with a two-edge tail)
+    val irregular = Seq((0L, 1L, 1L), (1L, 2L, 3L), (2L, 0L, 1L),
+      (2L, 3L, 2L), (3L, 4L, 5L))
+    val lean = ranks(irregular, sinks = false)
+    assert(lean.values.toSet.size > 1, s"irregular graph, uniform ranks: $lean")
+    assert(ranks(irregular, sinks = true) == lean)
     spark.catalog.clearCache()
   }
 

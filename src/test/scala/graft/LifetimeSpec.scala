@@ -25,9 +25,9 @@ class LifetimeSpec extends AnyFunSuite {
   test("a pinned frame stays readable after six more pins") {
     val base = spark.range(0, 2000)
       .select((col("id") % 37).as("k"), col("id").as("v"))
-    val first = PinnedCheckpoint.byKey(base, 4, "k")
+    val first = PinnedCheckpoint.byKey(base, "k")
     (1 to 6).foreach(i =>
-      PinnedCheckpoint.byKey(base.where(col("v") >= i), 4, "k"))
+      PinnedCheckpoint.byKey(base.where(col("v") >= i), "k"))
     assert(first.count() == 2000L)
   }
 
@@ -39,7 +39,7 @@ class LifetimeSpec extends AnyFunSuite {
     val edges = ab.union(ab.select(col("b"), col("a"))).distinct()
       .select(col("a").as("src"), col("b").as("dst"), lit(1L).as("cnt"))
     val builders: Seq[(String, () => DataFrame)] = Seq(
-      "pageRank" -> (() => Extras.pageRank(edges, noDanglings = true)),
+      "pageRank" -> (() => Extras.pageRank(edges, 3, sinks = false)),
       "hits" -> (() => Extras.hits(edges)._1))
     val serial = builders.map { case (k, b) => k -> rows(b()) }.toMap
     // each thread builds three times and reads nothing until both threads

@@ -333,7 +333,9 @@ class PlanSpec extends AnyFunSuite {
       case _ => None
     }
     for (k <- Seq("graph_pagerank", "graph_pagerank_directed", "graph_katz",
-        "graph_hits", "graph_common_neighbors", "graph_jaccard_neighbors")) {
+        "graph_hits", "graph_common_neighbors", "graph_jaccard_neighbors",
+        "graph_label_propagation", "graph_harmonic", "graph_bfs",
+        "llm_dedup_groups")) {
       val plans = plansOf(k)
       spark.catalog.clearCache()
       assert(plans.exists(_.exists(pinKeys(_).isDefined)),
@@ -345,6 +347,14 @@ class PlanSpec extends AnyFunSuite {
       assert(reExchanged.isEmpty,
         s"$k re-exchanges a pin on its own key:\n${reExchanged.mkString("\n")}")
     }
+  }
+
+  test("graph_truss_peel: each round's edge count rides its checkpoint, " +
+    "no count action") {
+    val actions = TestSpark.actionsDuring(SparkEntry.queries("graph_truss_peel")(spark, sf))
+    assert(actions.count(_ == "localCheckpoint") == 4, s"four checkpoints: $actions")
+    assert(!actions.exists(Set("count", "isEmpty")),
+      s"a count ran as its own action: $actions")
   }
 
   test("graph edge derivation: within-order pairs explode in-row, no self-join") {

@@ -18,6 +18,24 @@ object TestSpark {
   }
 
   def ts(s: String): java.sql.Timestamp = java.sql.Timestamp.valueOf(s)
+
+  /** The Dataset actions (`count`, `isEmpty`, `localCheckpoint`, ...) that
+    * `body` runs, by name, in the order they finished. */
+  def actionsDuring(body: => Unit): Seq[String] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(f)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = seen.add(f)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      org.apache.spark.graft.TestBusHook.waitUntilEmpty(spark)
+    } finally spark.listenerManager.unregister(listener)
+    seen.toArray(Array.empty[String]).toSeq
+  }
 }
 
 /** Temp dirs for a suite's tests, deleted with all they hold in a
