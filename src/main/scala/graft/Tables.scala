@@ -22,31 +22,11 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Analyzed-DataFrame cache per (session, dir, table) — round 13,
-    * guide §5/§7.3 (driver-side planning cost): every `spark.read
-    * .parquet` call re-lists the path and re-reads the parquet footer
-    * for schema inference, tens of ms of pure DRIVER work that the
-    * 500-query bench paid ~8 tables × 3 passes per key. A DataFrame is
-    * an immutable lazy plan, so reusing one is metadata reuse only —
-    * every action still scans the parquet files; nothing about the DATA
-    * is cached. Keyed on the session so test sessions and the bench
-    * session never share plans; bounded by #sessions × #dirs × 10
-    * tables. A cached plan keeps the file listing it was built with, so
-    * it serves immutable inputs only (the harness tables); a directory
-    * that grows between runs loads through [[graft.config.RunConfig]],
-    * which calls [[load]]. */
-  private val planCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, String), DataFrame]
-
-  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    planCache.computeIfAbsent((spark, sfDir, name),
-      _ => load(spark, sfDir, name))
-
-  /** Plan `<sfDir>/<name>.parquet` afresh (new file listing), decoding
-    * `events.ts` to microsecond timestamps. */
-  private[graft] def load(
-      spark: SparkSession, sfDir: String, name: String): DataFrame = {
+  /** Plan `<sfDir>/<name>.parquet` afresh on every call (a new file
+    * listing, so a file that lands in the directory is read by the next
+    * call), decoding `events.ts` to microsecond timestamps. Planning
+    * reads one footer on the driver and runs no job. */
+  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     if (name == "events") {
       // events.ts has shipped in two physical encodings across testdata
       // generations: parquet INT64 TIMESTAMP(NANOS) (no native Spark type —

@@ -22,8 +22,8 @@ import org.apache.spark.sql.functions._
   * Serving reads both tables and pays zero training: probe cost is
   * ∝ probed-cell population (DPP prunes the rest at the scan), and with
   * cell count grown ~√n the per-cell population (and so per-query cost)
-  * stays flat as the corpus grows — ScaleSmoke's `ivf index serve`
-  * probe measures exactly that law.
+  * stays flat as the corpus grows (SCALING.md, "Round-10 measurements":
+  * `ivf index serve` 2.76 s → 2.08 s as the corpus doubles).
   *
   * Both tables live inside ONE generation dir, written through
   * [[LakeCommit.publish]] (build, retrain) and [[LakeCommit.fold]]
@@ -59,9 +59,10 @@ object IvfIndex {
     * fit bias (holdout batches read 0.13 below the baseline on the
     * sf0.001 fixture — every batch would "drift"), and raw
     * mean-DIRECTION cosine is noise-dominated when the corpus mean is
-    * near zero (the uniform ScaleSmoke corpus: batch-mean direction is
-    * all sampling noise). The standardized shift has E[T²/dim] ≈ 1 for
-    * same-distribution batches regardless of the corpus shape, and
+    * near zero (the uniform 1M-vector corpus of SCALING.md's "Round-12
+    * measurements": batch-mean direction is all sampling noise). The
+    * standardized shift has E[T²/dim] ≈ 1 for same-distribution
+    * batches regardless of the corpus shape, and
     * grows ∝ n_batch·δ²/σ² under a real shift — the 25× threshold
     * leaves orders-of-magnitude margin on both sides (measured: ~1–10
     * same-distribution, >10⁴ shifted). All inputs are exact BIGINT
@@ -163,9 +164,10 @@ object IvfIndex {
     }
 
   /** Train on `e` (vec_id, embedding, + any metadata columns) and
-    * publish generation 1 — frame-parameterized so ScaleSmoke can build
-    * synthetic-scale indexes through the same code. Metadata columns
-    * beyond (vec_id, embedding) ride into the inverted file unchanged
+    * publish generation 1 — frame-parameterized so synthetic-scale
+    * indexes build through the same code (SCALING.md, "Round-10
+    * measurements"). Metadata columns beyond (vec_id, embedding) ride
+    * into the inverted file unchanged
     * (the filtered-ANN predicate columns); training sees only the
     * vectors. */
   def build(
@@ -309,8 +311,9 @@ object IvfIndex {
     *      the quantizer no longer describes the data → RETRAIN on the
     *      live corpus ∪ batch (pays the corpus exactly once — the new
     *      baseline then admits the new distribution, so the next batch
-    *      ingests ∝ batch again; ScaleSmoke pins both laws). The
-    *      retrain folds the tombstones it snapshotted, like a compact.
+    *      ingests ∝ batch again; both walls are in SCALING.md's
+    *      "Round-12 measurements"). The retrain folds the tombstones it
+    *      snapshotted, like a compact.
     *   2. compact gate (ingest path only — a retrain subsumes it):
     *      when tombstoned fraction > the stored τ, fold the markers so
     *      the serve-time anti-join disappears.

@@ -216,8 +216,9 @@ object Pipeline {
     * exactness argument): bridge each user's FIRST batch session onto
     * their published tail under the strict gap rule, renumber the rest,
     * and return the CHANGED session rows (merged tails + new sessions).
-    * Exposed for ScaleSmoke, which measures it against a full rebuild at
-    * 60M-event scale on in-memory frames.
+    * Package-visible so it can be measured against a full rebuild on
+    * in-memory frames (SCALING.md, "incremental session merge at 60M
+    * events").
     */
   private[graft] def mergeSessions(
       prior: DataFrame, batchSessions: DataFrame): DataFrame = {
@@ -271,9 +272,10 @@ object Pipeline {
     * scans + two passes over the published SESSIONS table (the month list
     * and each user's tail) — the raw event
     * history is never rescanned, and the sessions table is orders of
-    * magnitude smaller than the event stream it summarizes. ScaleSmoke
-    * measures the merge at 5× cheaper than the full rebuild on a 60M-event
-    * history + 1M-event batch.
+    * magnitude smaller than the event stream it summarizes. The merge
+    * measured 5× cheaper than the full rebuild on a 60M-event history +
+    * 1M-event batch (SCALING.md, "incremental session merge at 60M
+    * events").
     */
   def runIncrementalSessions(
       spark: SparkSession, cfg: RunConfig, outDir: String,

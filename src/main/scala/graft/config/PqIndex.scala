@@ -72,8 +72,8 @@ object PqIndex {
     }
 
   /** Train on `e` (vec_id, embedding) and publish generation 1 —
-    * frame-parameterized so ScaleSmoke can build synthetic-scale
-    * indexes through the same code. */
+    * frame-parameterized so synthetic-scale indexes build through the
+    * same code (SCALING.md, "Round-10 measurements"). */
   def build(spark: SparkSession, e: DataFrame, dir: String,
       compactTauMicro: Long = IvfIndex.CompactTauMicro): Unit = {
     // the subspace tick-frame feeds seeding + two assignment passes —

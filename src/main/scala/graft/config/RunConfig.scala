@@ -48,11 +48,11 @@ final case class RunConfig(
     s"RunConfig: 'where' predicates for unselected tables $orphanWhere")
 
   /** One configured table: scan → date window → per-table predicate. The
-    * scan is planned afresh on every call (no `Tables` plan cache), so a
-    * reused session sees files appended to `sfDir` since its last run. */
+    * scan is planned afresh on every call, so a reused session sees files
+    * appended to `sfDir` since its last run. */
   def table(spark: SparkSession, name: String): DataFrame = {
     require(tables.contains(name), s"table $name not selected by this run")
-    val base = Tables.load(spark, sfDir, name)
+    val base = Tables(spark, sfDir, name)
     val dated = RunConfig.dateColumns.get(name) match {
       case Some(c) =>
         val lo = startDate.map(d => col(c) >= lit(d).cast("date"))

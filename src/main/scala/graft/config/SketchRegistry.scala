@@ -78,9 +78,10 @@ object SketchRegistry {
     val stored = spark.read.parquet(s"$dir/bands")
     // candidates: (stored ∪ batch) × batch on the band key —
     // batch-batch pairs surface here too (a.doc_id < b.doc_id keeps
-    // each once). Build-side discipline (round 9 — a 1M-corpus
-    // ScaleSmoke probe OOMed the old shape): every shuffle-hash hint
-    // sits on the BATCH-proportional side, so the in-memory hash maps
+    // each once). Build-side discipline (round 9 — the 1M-corpus probe
+    // in SCALING.md's "Round-9 measurements" OOMed the old shape): every
+    // shuffle-hash hint sits on the BATCH-proportional side, so the
+    // in-memory hash maps
     // are ∝ batch while the corpus-proportional frames (stored bands,
     // stored shingles, sizes) STREAM through the probe side. The hint
     // still forbids broadcast promotion of either side (the

@@ -33,8 +33,8 @@ trait HashStrategy {
 /** Production sketch hashing: xxhash64, truncated to the same bit widths
   * as [[PortableHash]]. NOT oracle-twinnable (DuckDB has no xxhash64 with
   * Spark's semantics) — never used by a declared query; the scale path
-  * (ScaleSmoke, library callers at 100 TB) saves the md5 digest cost on
-  * every shingle/token. NearDupSpec pins that both strategies verify the
+  * (library callers at 100 TB) saves the md5 digest cost on every
+  * shingle/token. NearDupSpec pins that both strategies verify the
   * same near-dup pairs on planted duplicates (est_jaccard is computed
   * from EXACT shingle sets, so agreement is over candidate recall).
   */

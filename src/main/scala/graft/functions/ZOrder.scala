@@ -12,9 +12,10 @@ import org.apache.spark.sql.functions._
   * sorted by. Sorting by the interleaved key clusters BOTH dimensions at
   * once (each 2^s × 2^s tile of the (a,b) grid is a contiguous z-range),
   * so range predicates on either dimension skip all but ~√selectivity of
-  * the row groups. ScaleSmoke measures the effect at 100M rows; the
-  * write is `repartitionByRange(z).sortWithinPartitions(z)` — plain
-  * Spark, no custom committer.
+  * the row groups (100M rows: SCALING.md, "lake layout — single-column
+  * sort vs Z-order"); the write is
+  * `repartitionByRange(z).sortWithinPartitions(z)` — plain Spark, no
+  * custom committer.
   *
   * Built entirely from bitwise Column expressions, so the key stays
   * inside whole-stage codegen — no UDF in the layout-write path.
@@ -45,8 +46,8 @@ object ZOrder {
     * MUST normalize both dimensions onto the SAME bit width first (e.g.
     * `(x * 65536) DIV range` for a 16-bit grid): with unequal widths the
     * wider dimension's high bits own the top z bits and the "z" sort
-    * degenerates into a plain sort on that dimension — ScaleSmoke's
-    * pruning audit demonstrates exactly this failure.
+    * degenerates into a plain sort on that dimension — the pruning audit
+    * in SCALING.md's lake-layout section records exactly this failure.
     */
   def key(a: Column, b: Column): Column =
     spread(a).bitwiseOR(shiftleft(spread(b), 1))

@@ -35,13 +35,16 @@ object Components {
 
   /** Rounds of min-label propagation before [[connectedComponents]]
     * abandons the O(diameter) loop for the O(log n) star contraction.
-    * Near-dup graphs have small diameters (sf0.1 fixpoint = 10 rounds;
-    * 500k-doc ScaleSmoke corpus = 9), so the declared pipelines never hit
-    * the cap — it exists for adversarial boilerplate chains where
-    * O(diameter) means thousands of shuffle rounds and the job would die
-    * long before converging. Labels are engine-independent (both reach
-    * lbl = component-min; ComponentsSpec pins equality vs union-find), so
-    * the switch can never change a declared answer.
+    * Most near-dup graphs converge well inside it (sf0.01 and sf0.1 need
+    * 9 and 10 rounds; the 500k-node chains of SCALING.md's "connected-
+    * components engine choice" move labels for 9), but a declared
+    * pipeline can reach it: `llm_dedup_groups` at sf0.001 has a
+    * component of diameter 17, spends all 12 rounds and restarts on star
+    * contraction. The cap exists for adversarial boilerplate chains
+    * where O(diameter) means thousands of shuffle rounds and the job
+    * would die long before converging. Labels are engine-independent
+    * (both reach lbl = component-min; ComponentsSpec pins equality vs
+    * union-find), so the switch can never change a declared answer.
     */
   val DefaultMaxPropagationRounds = 12
 

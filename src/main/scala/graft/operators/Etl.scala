@@ -33,15 +33,15 @@ object Etl {
     */
   val SessionGapMinutes = 30
 
-  /** Secondary-sort SCAN twin of etl_clamped_ledger's in-row fold — the
-    * unbounded-history dial the declared key's scaladoc names, as code:
-    * repartition by user, sort (user, ts, event_id) WITHIN partitions
-    * (the classic secondary sort — one exchange, one partition-local
-    * sort, no per-key array ever materializes), then a sequential
-    * mapPartitions scan with key-change detection. A Zipf hot user whose
-    * history would blow the in-row collect_list buffer streams through
-    * this scan in O(1) state (ScaleSmoke drives it at 60M with a ~6M-row
-    * hot key; LawsProps-style equality vs the fold in EtlSpec).
+  /** The clamped running ledger etl_clamped_ledger runs, as a
+    * secondary-sort SCAN: repartition by user, sort (user, ts, event_id)
+    * WITHIN partitions (the classic secondary sort — one exchange, one
+    * partition-local sort, no per-key array ever materializes), then a
+    * sequential mapPartitions scan with key-change detection. A Zipf hot
+    * user whose history would blow an in-row collect_list buffer streams
+    * through this scan in O(1) state (SCALING.md, "clamped-ledger scan vs
+    * in-row fold": 60M events with a ~6.2M-row hot key; equality vs the
+    * fold in EtlSpec).
     *
     * Input: (user_id LONG, ts_micros LONG, event_id LONG, delta LONG
     * cents). Output: (user_id, n_events, balance_cents, n_clamps),
@@ -2184,13 +2184,14 @@ object Etl {
     //
     // Determinism/plan: deltas in integer CENTS (round(value·100) —
     // value is a 2-decimal tick, so the product is integer up to one ulp
-    // and round snaps it); per-user fold over the day-ordered in-row
-    // ledger with an ARRAY accumulator [balance, clamps] (functional in
-    // both engines — the etl_forecast_holt finding); ONE fact shuffle
-    // (the user groupBy), top-20 via TakeOrderedAndProject. Per-user
-    // event counts are bounded here (~20); for keys with unbounded
-    // history the dial is the SessionizePlan-style sorted-scan physical
-    // operator or flatMapGroupsWithState — the fold body is unchanged.
+    // and round snaps it); the per-user fold runs as [[clampedLedgerScan]]
+    // — ONE fact shuffle (the user repartition), a partition-local sort
+    // and O(1) state per user, so no per-user array is ever built; top-20
+    // via TakeOrderedAndProject. It beat the in-row collect_list fold at
+    // report scale and streams a 6.2M-row hot key (SCALING.md,
+    // "clamped-ledger scan vs in-row fold"); the fold stays as EtlSpec's
+    // reference. The oracle folds the same ledger with list_reduce and an
+    // ARRAY accumulator [balance, clamps] (the etl_forecast_holt finding).
     Q("etl_clamped_ledger",
       """WITH e AS (
         |  SELECT user_id, ts, event_id,
@@ -2215,27 +2216,10 @@ object Etl {
         val delta = when(col("event_type") === "purchase",
           round(col("value") * 100).cast("long"))
           .otherwise(-round(col("value") * 100).cast("long"))
-        events(s, d)
-          .where(col("user_id").isNotNull && col("value").isNotNull)
-          .select(col("user_id"), col("ts"), col("event_id"),
-            delta.as("delta"))
-          .groupBy("user_id")
-          .agg(count(lit(1)).as("n_events"),
-            expr("sort_array(collect_list(struct(ts, event_id, delta)))")
-              .as("ledger"))
-          .select(col("user_id"), col("n_events"),
-            expr(
-              """aggregate(ledger,
-                |  array(CAST(0 AS BIGINT), CAST(0 AS BIGINT)),
-                |  (a, x) -> array(
-                |    greatest(CAST(0 AS BIGINT), element_at(a, 1) + x.delta),
-                |    element_at(a, 2) + CASE WHEN element_at(a, 1) + x.delta < 0
-                |                            THEN CAST(1 AS BIGINT)
-                |                            ELSE CAST(0 AS BIGINT) END))"""
-                .stripMargin).as("fin"))
-          .select(col("user_id"), col("n_events"),
-            expr("element_at(fin, 1)").as("balance_cents"),
-            expr("element_at(fin, 2)").as("n_clamps"))
+        clampedLedgerScan(events(s, d)
+            .where(col("user_id").isNotNull && col("value").isNotNull)
+            .select(col("user_id"), unix_micros(col("ts")).as("ts_micros"),
+              col("event_id"), delta.as("delta")))
           .orderBy(col("balance_cents").desc, col("user_id"))
           .limit(20)
     },

@@ -196,10 +196,11 @@ object Extras {
     * landed). Degree orientation makes every hub the HIGHEST rank among
     * its neighbors — zero out-edges, zero hub wedges — capping any
     * vertex's out-degree at O(√m) and total wedges at O(m^1.5)
-    * REGARDLESS of the degree distribution (ScaleSmoke measures the
-    * mid-id-hub A/B). Every triangle {x,y,z} with rank rx<ry<rz is
-    * enumerated exactly once at its lowest-rank vertex as wedge (y,z)
-    * closed by oriented edge y→z — same counts as [[triangles]]
+    * REGARDLESS of the degree distribution (SCALING.md, "hub-graph A/B —
+    * id vs degree orientation"). Every triangle {x,y,z} with rank
+    * rx<ry<rz is enumerated exactly once at its lowest-rank vertex as
+    * wedge (y,z) closed by oriented edge y→z — same counts as
+    * [[triangles]]
     * (equality law + brute-force oracle in ComponentsSpec), same input
     * contract (distinct undirected edges as a<b), same output row. The
     * total rank packs (degree, id) into one BIGINT — degree and id both
@@ -407,9 +408,9 @@ object Extras {
       val pair = custSuppPairs(s, d)
       // symmetrize via two-struct explode (ONE evaluation of the
       // materialized pair frame — the unionAll form read it twice)
-      // and hand off to the ONE pageRank definition (also driven at 20M
-      // edges by ScaleSmoke): edges/outw are persisted pre-partitioned
-      // in there, so each round shuffles only the ranks
+      // and hand off to the ONE pageRank definition (SCALING.md,
+      // "PageRank iteration cost at 20M edges"): edges/outw are persisted
+      // pre-partitioned in there, so each round shuffles only the ranks
       val edges = pair.select(explode(array(
           struct(col("c").as("src"), col("s").as("dst"), col("cnt")),
           struct(col("s").as("src"), col("c").as("dst"), col("cnt")))).as("e"))
@@ -2137,10 +2138,11 @@ object Extras {
 
   /** Top-k common-neighbors link prediction over an id-ORIENTED distinct
     * edge frame (a < b) — the wedge self-join on the shared neighbor,
-    * existing edges removed by anti-join BEFORE the fused top-k (also
-    * driven at 6M edges by ScaleSmoke). The oriented frame feeds the
-    * symmetric adjacency (both self-join sides) plus the anti probe, so
-    * it is persisted once — the multiply-referenced-frame idiom.
+    * existing edges removed by anti-join BEFORE the fused top-k (wedge
+    * volume at scale: SCALING.md, "Graph family at scale"). The oriented
+    * frame feeds the symmetric adjacency (both self-join sides) plus the
+    * anti probe, so it is persisted once — the multiply-referenced-frame
+    * idiom.
     *
     * Cache contract: persists the edge frame; callers doing repeated
     * runs should clearCache() when done, as with [[pageRank]].
@@ -2235,8 +2237,8 @@ object Extras {
 
   /** Bounded-hop frontier BFS over a SYMMETRIC edge frame (a, b) from a
     * seed frame with one `node` column — returns (node, dist) with dist =
-    * shortest hop count ≤ maxHops (also driven at 20M edges by
-    * ScaleSmoke). Per level: one frontier⋈edges equi-join + one anti-join
+    * shortest hop count ≤ maxHops (20M edges: SCALING.md, "Graph family
+    * at scale"). Per level: one frontier⋈edges equi-join + one anti-join
     * against the visited set. The edge frame crosses the network ONCE
     * (pinned on the join key, [[PinnedCheckpoint.byKey]]) — each round
     * shuffles only the frontier; per-level checkpoints truncate the

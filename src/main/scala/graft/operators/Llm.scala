@@ -1786,8 +1786,8 @@ object Llm {
     }.mkString("\n  UNION ALL ")
 
   /** Spark side: vec_id + 16 sign bits (codegen dot via [[VectorDot]]).
-    * Takes any (vec_id, embedding) frame so ScaleSmoke can drive it at
-    * synthetic scale.
+    * Takes any (vec_id, embedding) frame (1M synthetic vectors:
+    * SCALING.md, "sketch ops at synthetic scale").
     */
   private[graft] def lshSig(embDf: DataFrame): DataFrame = {
     val bits = lshPlanes.zipWithIndex.map { case (p, i) =>
@@ -1973,7 +1973,8 @@ object Llm {
     * shingles (min over multiset == min over set; a seeds-crossJoin would
     * shuffle 16× the data) with ONE md5 per shingle, then unpivoted to 8
     * band keys whose equi-self-join yields candidates. Takes any
-    * (doc_id, text) frame so ScaleSmoke can drive it at synthetic scale.
+    * (doc_id, text) frame (500k synthetic docs: SCALING.md, "sketch ops
+    * at synthetic scale").
     * `d2Min`: incremental mode — the b-side of the band join is restricted
     * to the NEW batch (doc_id ≥ d2Min) BEFORE the join, so the
     * corpus×corpus quadrant is never probed and the per-ingest cost scales
@@ -1983,20 +1984,19 @@ object Llm {
     * bands) that CANNOT be unpersisted here — they back the returned lazy
     * plan. Bench/Verify release them via `spark.catalog.clearCache()`
     * between queries; any other long-lived caller owns the same duty
-    * after materializing the result (ScaleSmoke and the NearDupSpec
-    * parity test do).
+    * after materializing the result (the NearDupSpec parity test
+    * does).
     */
   private[graft] def minhashVerified(
       docsDf: DataFrame, d2Min: Option[Long] = None,
       hashes: graft.functions.HashStrategy = PortableHash): DataFrame =
-    minhashVerifiedWithSketch(docsDf, d2Min, hashes,
-      persistSketch = false)._1
+    minhashVerifiedWithSketch(docsDf, d2Min, hashes)._1
 
-  /** [[minhashVerified]] plus the persisted 16-slot SKETCH frame
-    * (doc_id, m_0..m_15 — ONE narrow row per doc) — for callers that
-    * score the sketch itself (llm_minhash_est_quality): reusing the pin
-    * avoids a SECOND full shingle→md5→16-min aggregation pass over the
-    * corpus, and joining the sketch instead of the banded unpivot keeps
+  /** [[minhashVerified]] plus its 16-slot SKETCH frame (doc_id,
+    * m_0..m_15 — ONE narrow row per doc, never persisted) — for callers
+    * that score the sketch itself (llm_minhash_est_quality): reusing the
+    * pipeline's sketch subtree avoids a SECOND shingle→md5→16-min
+    * derivation, and joining the sketch instead of the banded unpivot keeps
     * the readout's probe 8× narrower AND doc_id-keyed (the band frame is
     * partitioned on (band, k1, k2) for the candidate join — a doc_id
     * probe against it would re-shuffle 8 rows per doc twice; round-8
@@ -2005,7 +2005,6 @@ object Llm {
       docsDf: DataFrame, d2Min: Option[Long] = None,
       hashes: graft.functions.HashStrategy = PortableHash,
       pairSampleMod: Option[Int] = None,
-      persistSketch: Boolean = true,
       persistFrames: Boolean = true): (DataFrame, DataFrame) = {
     // persistFrames=false (round 10, the est-quality readout): skip ALL
     // block-manager pins. The persists exist so the corpus-scale frames
@@ -2046,17 +2045,12 @@ object Llm {
     // shingle), the double-hash runs once per DISTINCT shingle, and the
     // groupBy(doc_id) reuses sh's cached hash-partitioning, so the whole
     // sketch aggregation plans ZERO exchanges.
-    // the narrow 16-slot sketch persists doc_id-keyed (one row per doc)
-    // ONLY when the caller scores the sketch itself (persistSketch —
-    // round 10: the r8 unconditional persist materialized a second
-    // cached copy of the sketch for EVERY minhash-family key while only
-    // llm_minhash_est_quality ever read it; the band frame below is the
-    // sole other consumer and it persists its own derivation, so for
-    // everyone else the extra cache was pure build+memory overhead —
-    // part of the r9 minhash-family cost-delta adjudication)
-    val sk0 = sketchFromHashes(
+    // the narrow 16-slot sketch is not persisted: the band frame below
+    // persists its own derivation, and a second cached copy of the
+    // sketch cost every minhash-family key build time and memory
+    // (SCALING.md, round-10 "minhash sketch-persist A/B 500k")
+    val sk = sketchFromHashes(
       sh.select(col("doc_id"), h1c.as("h1"), h2c.as("h2")))
-    val sk = if (persistSketch && persistFrames) sk0.persist() else sk0
     val bands = pin(bandExplode(sk)
       // partitioned by the band key ONCE at build time (round 4): the
       // candidate self-join's equi-keys are exactly (band, k1, k2), so
@@ -2183,19 +2177,17 @@ object Llm {
         struct(col(c2).as("a"), col(c1).as("b")))).as("e"))
       .select(col("e.a").as("a"), col("e.b").as("b"))
 
-  /** Frame-parameterized body of llm_corpus_build, so ScaleSmoke can
-    * drive the E2E corpus pipeline at synthetic scale. `docsDf` needs
-    * (doc_id, text, source); `hashes` picks the sketch family
-    * ([[graft.functions.FastHash]] off the declared path).
+  /** Frame-parameterized body of llm_corpus_build (500k synthetic docs:
+    * SCALING.md, "the full corpus pipeline end-to-end"). `docsDf` needs
+    * (doc_id, text, source).
     */
   private[graft] def corpusBuild(
       docsDf: DataFrame,
-      hashes: graft.functions.HashStrategy = PortableHash,
       qualityMin: Double = 0.25,
       tokenizer: graft.functions.Tokenizer =
         graft.functions.WhitespaceTokenizer,
       scrubPii: Boolean = false): DataFrame = {
-    val e0 = minhashVerified(docsDf, hashes = hashes)
+    val e0 = minhashVerified(docsDf)
       .where(col("est_jaccard") >= 0.2).select("d1", "d2")
     val keep = Components.connectedComponents(docsDf, "doc_id",
         symPairs(e0, "d1", "d2"))
@@ -2246,7 +2238,8 @@ object Llm {
     * universe, unioned with the published corpus through the manifested
     * lake protocol (PipelineSpec's concurrent-reader publish proves the
     * union read). The recompute twin llm_corpus_build pays the corpus
-    * cost every run; ScaleSmoke times both at 1M docs.
+    * cost every run (SCALING.md, "Round-10 measurements": 10.0 s for
+    * 1M+5k vs 12.6 s for the 500k recompute).
     */
   private[graft] def corpusBuildIncremental(
       s: SparkSession, regDir: String, batchDocs: DataFrame,
@@ -5442,7 +5435,8 @@ object Llm {
     // — the driver enforces that stored-state reads and live recompute
     // can never drift (hash-verify vs string-verify is the registry's
     // documented ~2⁻¹²⁰/pair tradeoff; identical results on any real
-    // corpus). ScaleSmoke measures the flat-ingest-cost claim.
+    // corpus). The flat-ingest-cost numbers are in SCALING.md,
+    // "Round-9 measurements".
     // Registry state audit (round 11): the monitoring query a lake
     // operator runs against the persisted sketch registry — doc count,
     // shingle-row and band-row cardinality, and the shingle-set size
@@ -6183,8 +6177,9 @@ object Llm {
     // ASSIGNED against the stored centroids — the plan reads the stored
     // base inverted file, assigns the batch in-plan (compute ∝ batch,
     // the llm_incremental_neardup_registry read-only posture; the
-    // mutating append is config.IvfIndex.ingest, spec+ScaleSmoke-proven
-    // ∝ batch), unions base+delta, and serves the standard probe.
+    // mutating append is config.IvfIndex.ingest, spec-proven ∝ batch;
+    // SCALING.md, "Round-11 measurements"), unions base+delta, and serves
+    // the standard probe.
     // Because assignment is per-vector independent, base-assign ∪
     // batch-assign ≡ assign-everything — the oracle replays base-only
     // training then assigns the WHOLE corpus, so a served base+delta
@@ -6978,9 +6973,10 @@ object Llm {
     // components snap to a 1e-7 integer grid (floats have 7 significant
     // digits), so the moment sums T_j = Σx_j and Q_jk = Σx_j·x_k are
     // exact integers whatever the partitioning/order — ACCUMULATED in
-    // DECIMAL(38,0) (oracle HUGEINT): a 1M-vector ScaleSmoke run caught
-    // BIGINT sums overflowing at ~1e20 (per-row products stay BIGINT;
-    // the 1e-7 grid bounds them below 2^63 for |x| ≤ 100). The CENTERED
+    // DECIMAL(38,0) (oracle HUGEINT): a 1M-vector run (SCALING.md,
+    // "Round-8 continuation 6") caught BIGINT sums overflowing at ~1e20
+    // (per-row products stay BIGINT; the 1e-7 grid bounds them below
+    // 2^63 for |x| ≤ 100). The CENTERED
     // scatter S = n·Q − T·Tᵀ assembles in the same wide types. The bounded stage: S is a
     // 64×64 = 4096-cell ONE-ROW frame; 3 power-iteration rounds from
     // the all-ones vector (deterministic sign) + the Rayleigh quotient
@@ -8834,7 +8830,7 @@ object Llm {
          |             / CAST(count(*) AS DOUBLE)) / 1000000 AS mean_abs_err
          |FROM u GROUP BY bucket ORDER BY bucket""".stripMargin
     }) { (s, d) =>
-      // reuse the pipeline's own persisted SKETCH frame (round-7 cont.
+      // reuse the pipeline's own SKETCH subtree (round-7 cont.
       // fix: a separate build here was a SECOND full shingle→md5→sketch
       // pass; round-8 cont. 4: join the 1-row-per-doc sketch on doc_id
       // instead of re-shuffling the 8-rows-per-doc band frame twice off
@@ -9362,8 +9358,8 @@ object Llm {
     // per-vector independent, base-encode ∪ batch-encode ≡
     // encode-everything — the oracle replays base-only training then
     // encodes the whole corpus, so drifted stored codes hash-mismatch.
-    // The mutating append is PqIndex.ingest (spec + ScaleSmoke: 0.9 s
-    // for a 10k batch vs 14 s for the 1M rebuild).
+    // The mutating append is PqIndex.ingest (SCALING.md, "Round-11
+    // measurements": 0.9 s for a 10k batch vs 12.7 s for the 1M build).
     Q("llm_pq_topk_ingest", pqTopkIngestOracle) { (s, d) =>
       val dir = graft.config.PqIndex.ensureBase(s, d, 400L)
       val cb = graft.config.PqIndex.codebook(s, dir)

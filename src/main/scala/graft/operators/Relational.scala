@@ -474,8 +474,9 @@ object Relational {
     // hot-key defense (Skew.saltedJoin — probe side salted by a content
     // hash, build side exploded salt×) proven RESULT-TRANSPARENT
     // against the plain-join oracle — salting redistributes rows, it
-    // must never change them. Spec-only until now (SkewSpec + Zipf
-    // ScaleSmoke measured the skew math); this key puts the actual
+    // must never change them. Spec-only until now (SkewSpec; the Zipf
+    // skew numbers are in SCALING.md, "Zipfian key skew at 60M rows");
+    // this key puts the actual
     // operator under the driver's hash compare. When AQE's skew-join
     // handles the shape, prefer it — saltedJoin is for the cases AQE
     // can't see (single mega-key joins, non-sort-merge plans).

@@ -4,9 +4,11 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Skew-join fallback (SURVEY.md §7.3.8). AQE's OptimizeSkewedJoin is the
-  * first line of defense; this helper is the manual fallback for the cases
-  * AQE can't fix (e.g. a skewed AGGREGATION key, or a build side too large
-  * to broadcast but with a few hot probe keys).
+  * first line of defense; this helper is the manual fallback for a build
+  * side too large to broadcast but with a few hot probe keys. A skewed
+  * AGGREGATION key needs no salting: map-side partial aggregation already
+  * sends each reducer one partial per mapper (SCALING.md, "Zipfian key
+  * skew at 60M rows").
   *
   * The probe side's hot keys are spread over `salt` sub-keys with a
   * DETERMINISTIC salt (hash of a tie-break column, never `rand()` — results
@@ -37,25 +39,5 @@ object Skew {
     val b = build.withColumn(sc,
       explode(sequence(lit(0), lit(salt - 1))))
     p.join(b, Seq(key, sc)).drop(sc)
-  }
-
-  /** Two-phase aggregation for skewed group keys: first aggregate on
-    * (key, salt), then combine the partials — the hot key's partial
-    * aggregation parallelizes over `salt` reducers. `partials` must be
-    * re-aggregable expressions (sum/count/min/max style).
-    */
-  def saltedAgg(
-      df: DataFrame, key: String, tieBreak: Column, salt: Int)(
-      partials: (String, Column)*)(
-      finals: (String, Column)*): DataFrame = {
-    val sc = freshSaltCol(df)
-    val staged = df
-      .withColumn(sc, pmod(xxhash64(tieBreak), lit(salt)).cast("int"))
-      .groupBy(col(key), col(sc))
-      .agg(partials.head._2.as(partials.head._1),
-        partials.tail.map { case (n, c) => c.as(n) }: _*)
-    staged.groupBy(col(key))
-      .agg(finals.head._2.as(finals.head._1),
-        finals.tail.map { case (n, c) => c.as(n) }: _*)
   }
 }

@@ -177,10 +177,9 @@ object Streaming {
   /** Streaming twin of the etl_clamped_ledger declared key — the
     * NON-ASSOCIATIVE clamped running balance as a mapGroupsWithState
     * fold: state is ONE (balance, clamps, n) record per user however
-    * long the history, which is exactly the unbounded-history dial the
-    * batch key's scaladoc names (the batch form folds an in-row ledger,
-    * bounded by per-key event count; the stream form is O(users) state
-    * at any history length). Within a micro-batch events fold in
+    * long the history (the batch form, `Etl.clampedLedgerScan`, streams
+    * each user's sorted run; the stream form is O(users) state at any
+    * history length). Within a micro-batch events fold in
     * (tsMicros, event_id) order; cross-batch order is arrival order —
     * the standard at-least-once streaming contract (StreamingSpec feeds
     * time-ordered batches and pins stream == driver-side reference).

@@ -170,8 +170,8 @@ class EtlSpec extends AnyFunSuite {
       (u, i.toLong * 1000L, i.toLong, (rnd.nextInt(300) - 170).toLong)
     }
     val df = rows.toDF("user_id", "ts_micros", "event_id", "delta")
-    // reference: the in-row array-accumulator fold the declared
-    // etl_clamped_ledger key runs (same expression text)
+    // reference: the in-row array-accumulator fold, the shape of the
+    // etl_clamped_ledger oracle's list_reduce
     val fold = df.groupBy("user_id")
       .agg(count(lit(1)).as("n_events"),
         expr("sort_array(collect_list(struct(ts_micros, event_id, delta)))")

@@ -1225,6 +1225,17 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("TakeOrderedAndProject"), s"must fuse to top-k:\n$p")
   }
 
+  test("etl_clamped_ledger: no per-user array buffer (no collect_list, " +
+    "no higher-order aggregate)") {
+    import org.apache.spark.sql.catalyst.expressions.ArrayAggregate
+    import org.apache.spark.sql.catalyst.expressions.aggregate.CollectList
+    val root = opTree("etl_clamped_ledger")
+    val buffers = root.flatMap(_.expressions).flatMap(
+      _.collect { case e: CollectList => e; case e: ArrayAggregate => e })
+    assert(buffers.isEmpty,
+      s"a hot user's history must stream, not collect into one row:\n$root")
+  }
+
   test("dq_ks_test / agg_mann_whitney / agg_spearman_daily / " +
     "agg_theil_sen: in-row folds plan ZERO window operators") {
     for (k <- Seq("dq_ks_test", "agg_mann_whitney", "agg_spearman_daily",

@@ -80,6 +80,15 @@ class RunConfigSpec extends AnyFunSuite with TempDirs {
     }
   }
 
+  test("Tables reads a file that lands in a table dir on the same session") {
+    val dir = tempDir("graft_tables_grow")
+    val region = Tables(spark, sf, "region")
+    region.write.parquet(s"$dir/region.parquet")
+    val before = Tables(spark, dir, "region").count()
+    region.write.mode("append").parquet(s"$dir/region.parquet")
+    assert(Tables(spark, dir, "region").count() == 2 * before)
+  }
+
   test("date window pushes down to the parquet scan on raw date columns") {
     val cfg = RunConfig(sf, Seq("orders"),
       startDate = Some("2024-01-10"), endDate = Some("2024-01-20"))

@@ -406,7 +406,7 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
         deltaCents = (rnd.nextInt(300) - 180).toLong) // debit-leaning
     }
     // driver-side sequential reference — the semantics the declared
-    // etl_clamped_ledger key folds in-row
+    // etl_clamped_ledger key scans
     val ref = evs.groupBy(_.user_id).map { case (u, es) =>
       val fin = es.sortBy(e => (e.tsMicros, e.event_id))
         .foldLeft((0L, 0L, 0L)) { case ((b, c, n), e) =>

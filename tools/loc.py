@@ -17,6 +17,12 @@ starts with code is ignored only because the line already counts as code.
 
 With `--base`, the base revision's files are read with `git show <rev>:<path>`,
 so no checkout is needed.
+
+Files named in SEPARATE (the ScaleSmoke measurement main, which moved from
+src/main to src/test) are totalled on their own row, in neither root, so a
+move shows as no change to either root and only lines deleted from the file
+show in its row. With `--base`, the last line prints the src/main code lines
+deleted since the base, as a positive number.
 """
 
 import argparse
@@ -26,6 +32,7 @@ import sys
 from pathlib import Path
 
 ROOTS = ("src/main", "src/test")
+SEPARATE = ("ScaleSmoke.scala",)
 
 
 def classify(text):
@@ -84,11 +91,14 @@ def counts(files):
 
 
 def root_of(path):
+    name = os.path.basename(path)
+    if name in SEPARATE:
+        return name
     return next(r for r in ROOTS if path.startswith(r + "/"))
 
 
 def totals(per_file):
-    out = {r: [0, 0, 0] for r in ROOTS}
+    out = {r: [0, 0, 0] for r in ROOTS + SEPARATE}
     for path, c in per_file.items():
         out[root_of(path)] = [a + b for a, b in zip(out[root_of(path)], c)]
     return out
@@ -133,6 +143,10 @@ def main():
     ht, bt = totals(head), totals(base or {})
     for r in ROOTS:
         row(ht[r], bt[r], f"TOTAL {r}")
+    for r in SEPARATE:
+        row(ht[r], bt[r], f"TOTAL {r} (in neither root)")
+    if base is not None:
+        print(f"src/main code lines deleted: {bt['src/main'][0] - ht['src/main'][0]}")
     return 0
 
 
