@@ -17,86 +17,86 @@ object Extras {
     * portable; see the graph_pagerank Q for the full rationale). Returns
     * (node, rank).
     *
-    * DANGLING nodes (round 8 — a sink with no out-edges would silently
-    * LEAK its mass every round): the caller states whether its graph can
-    * have sinks, because it knows by construction and probing for them
-    * is a distinct(dst) + anti-join scan (measured ~1 s of pure overhead
-    * on the 2M-edge declared key, round-8 cont. 3 bench). `sinks = false`
-    * (symmetrization puts an out-edge on every node) takes the lean loop
-    * below; `sinks = true` takes the dangling-aware loop, which
-    * redistributes the sinks' total mass uniformly each round (one
-    * broadcast 1-row scalar per round — the standard PageRank dangling
-    * treatment, Page et al. 1999 §2.5) over the FULL node set (src ∪
-    * dst), and localCheckpoints each round because the rank vector is
-    * referenced twice (contribution join + sink-mass aggregate) — an
-    * unbroken lazy chain would double the plan per round (the BPE
-    * lesson). ComponentsSpec pins mass conservation on a sink graph.
+    * DANGLING nodes (a sink with no out-edges would silently LEAK its
+    * mass every round): the caller states whether its graph can have
+    * sinks, because it knows by construction. `sinks = false`
+    * (symmetrization puts an out-edge on every node) ranks the sources
+    * only and returns one lazy plan with the rounds unrolled. `sinks =
+    * true` ranks the FULL node set (src ∪ dst) and re-spreads the sinks'
+    * total mass uniformly each round (the standard dangling treatment,
+    * Page et al. 1999 §2.5); ComponentsSpec pins mass conservation on a
+    * sink graph.
     *
-    * Cache contract: persists the edge list (pre-partitioned on src) and
-    * the out-weight frame — they feed every iteration and cannot be
-    * unpersisted here because the returned frame is lazy; callers doing
-    * repeated runs should clearCache() when done.
+    * Plan. Both modes pin two loop-invariant frames
+    * ([[PinnedCheckpoint.byKey]]): the edges by src, each carrying its
+    * source's out-weight `w` as a window that shares the pin's exchange
+    * when the session's shuffle partitions equal its parallelism (as in
+    * every entry point), and the node set as (node, sink) by node,
+    * whose pin job observes the node and sink counts, so `n` enters the
+    * rounds as a literal. With `sinks = true` each round is then one
+    * merge join of the edge pin with the rank checkpoint (co-partitioned,
+    * both sorted: no exchange), one contribution shuffle on dst, and one
+    * merge join back onto the node pin, checkpointed with the round's
+    * sink mass `dmass` observed in the same job
+    * ([[PinnedCheckpoint.countedByKey]]): two jobs a round, no scalar
+    * subplan, and the same generated classes every round.
+    *
+    * Lifetime: with `sinks = true` the pins and the earlier rounds'
+    * checkpoints are freed before the call returns; the returned frame
+    * reads only its own checkpoint. With `sinks = false` the returned
+    * lazy frame reads both pins, which last as long as it is reachable.
     */
   def pageRank(edges0: DataFrame, iterations: Int, sinks: Boolean): DataFrame = {
-    // the input is referenced twice below (out-weight aggregate + the
-    // weight merge join) — persist it so an unpersisted upstream edge
-    // derivation is evaluated once, not twice (the same
-    // double-evaluation finding as Extras.symmetrize)
-    val e0p = edges0.persist()
-    // out-weights are O(nodes); merging them INTO the persisted edge list
-    // up front means each iteration is ONE equi-join + one groupBy
-    // instead of two joins — the per-round network cost is exactly the
-    // rank vector, nothing else
-    val outw = e0p.groupBy("src").agg(sum(col("cnt")).as("w")).persist()
-    val edges = PinnedCheckpoint.byKey(e0p.join(outw, Seq("src")), "src")
+    require(iterations >= 1, s"pageRank: iterations=$iterations must be >= 1")
+    val edges = PinnedCheckpoint.byKey(
+      edges0.select(col("src"), col("dst"), col("cnt"),
+        sum(col("cnt")).over(Window.partitionBy("src")).as("w")), "src")
+    // sink iff the node never appears as a source
+    val (nodes, counts) = PinnedCheckpoint.byKeyObserved(
+      edges.select(explode(array(
+          struct(col("src").as("node"), lit(false).as("sink")),
+          struct(col("dst").as("node"), lit(true).as("sink")))).as("e"))
+        .groupBy(col("e.node").as("node")).agg(bool_and(col("e.sink")).as("sink")),
+      "node", count(lit(1)).as("n"), count_if(col("sink")).as("sinks"))
+    val nSinks = counts("sinks").asInstanceOf[Long]
+    // a sink-free graph ranks its sources: every node of its contract
+    val n = counts("n").asInstanceOf[Long] - (if (sinks) 0L else nSinks)
+    val init = 1000000000000L / n
     if (!sinks) {
-      val n = outw.agg(count(lit(1)).cast("long").as("n_nodes"))
-      var rank = outw.crossJoin(broadcast(n))
-        .select(col("src").as("node"),
-          expr("CAST(1000000000000 div n_nodes AS BIGINT)").as("rank"))
+      var rank = nodes.where(!col("sink")).select(col("node"), lit(init).as("rank"))
       for (_ <- 1 to iterations) {
         rank = edges
           .join(rank, col("node") === col("src"))
-          .crossJoin(broadcast(n))
-          .groupBy(col("dst"), col("n_nodes"))
-          .agg(expr("CAST((150000000000 div n_nodes)" +
+          .groupBy(col("dst"))
+          .agg(expr(s"CAST(${150000000000L / n}" +
             " + (85 * sum((rank * cnt) div w)) div 100 AS BIGINT)").as("rank"))
           .select(col("dst").as("node"), col("rank"))
       }
       rank
     } else {
-      val sinkNodes = e0p.select(col("dst")).distinct()
-        .join(outw, col("dst") === col("src"), "left_anti")
-        .persist()
-      // full node set: sources ∪ sinks — sinks hold rank too
-      val nodes = outw.select(col("src").as("node"))
-        .unionByName(sinkNodes.select(col("dst").as("node")))
-        .persist()
-      val n = nodes.agg(count(lit(1)).cast("long").as("n_nodes"))
-      var rank = nodes.crossJoin(broadcast(n))
-        .select(col("node"),
-          expr("CAST(1000000000000 div n_nodes AS BIGINT)").as("rank"))
-        .localCheckpoint()
-      for (_ <- 1 to iterations) {
-        // the round's ONE broadcast scalar: total mass sitting on sinks
-        val dangling = rank
-          .join(outw, col("node") === col("src"), "left_anti")
-          .agg(coalesce(sum(col("rank")), lit(0L)).as("dmass"))
+      var rank = nodes.select(col("node"), col("sink"), lit(init).as("rank"))
+      var dmass = nSinks * init
+      for (r <- 1 to iterations) {
         val contrib = edges
-          .join(rank, col("node") === col("src"))
+          .join(rank.hint("merge"), col("node") === col("src"))
           .groupBy(col("dst"))
           .agg(sum(expr("(rank * cnt) div w")).as("c"))
-        rank = nodes
-          .join(contrib, col("node") === col("dst"), "left")
-          .crossJoin(broadcast(dangling))
-          .crossJoin(broadcast(n))
-          .select(col("node"),
-            expr("CAST((150000000000 div n_nodes) + (85 * " +
-              "(coalesce(c, 0) + dmass div n_nodes)) div 100 AS BIGINT)")
-              .as("rank"))
-          .localCheckpoint()
+        // each node's share of the sink mass enters as a DECIMAL literal:
+        // generated code inlines a BIGINT literal into its text but reads
+        // a decimal one from its reference array, so every round compiles
+        // to the same classes (the exact integer arithmetic is unchanged)
+        val (next, d) = PinnedCheckpoint.countedByKey(
+          nodes.join(contrib.hint("merge"), col("node") === col("dst"), "left")
+            .select(col("node"), col("sink"),
+              expr(s"CAST(${150000000000L / n} + (85 * (coalesce(c, 0) + " +
+                s"CAST(${dmass / n} AS DECIMAL(20, 0)))) div 100 AS BIGINT)").as("rank")),
+          "node", coalesce(sum(when(col("sink"), col("rank"))), lit(0L)))
+        if (r > 1) PinnedCheckpoint.release(rank)
+        rank = next
+        dmass = d
       }
-      rank
+      PinnedCheckpoint.release(edges, nodes)
+      rank.select(col("node"), col("rank"))
     }
   }
 
@@ -117,8 +117,8 @@ object Extras {
     * equi-join + groupBy + a broadcast 1-row rescale scalar; score
     * frames are node-sized and localCheckpointed per half-round (each
     * is referenced twice: next contribution join + its own rescale
-    * aggregate — the pageRank dangling-loop lesson). Cache contract as
-    * with [[pageRank]]: callers doing repeated runs should clearCache().
+    * aggregate). Lifetime: nothing is SQL-cached; the pins and
+    * checkpoints are freed once unreachable ([[PinnedCheckpoint]]).
     */
   def hits(edges0: DataFrame, rounds: Int = 2,
       mass: Long = 1000000000L): (DataFrame, DataFrame) = {
@@ -173,7 +173,7 @@ object Extras {
     *
     * Cache contract: persists the edge frame (it feeds three join
     * references); callers doing repeated runs should clearCache() when
-    * done, as with [[pageRank]].
+    * done.
     */
   def triangles(edges0: DataFrame): DataFrame = {
     val e = edges0.persist()
@@ -398,19 +398,19 @@ object Extras {
     // bleeds ≤1 unit per edge per iteration (measured ~1e-7 relative),
     // the standard price of fixed-point PageRank.
     //
-    // Scale shape: each iteration is one equi-join of the edge list with
-    // the rank vector (shuffle on src) + one groupBy dst — the classic
-    // distributed PageRank round. The three iterations unroll into ONE
-    // plan, so Spark's ReusedExchange serves the edge/outw subtrees from
-    // the first shuffle instead of rescanning; an open-ended production
-    // loop would checkpoint per round like operators/Components does.
+    // Scale shape: each iteration is one equi-join of the pinned edge list
+    // with the rank vector + one groupBy dst — the classic distributed
+    // PageRank round. The three iterations unroll into ONE lazy plan over
+    // the edge and node pins; an open-ended production loop would
+    // checkpoint per round like the sink-aware loop in [[pageRank]].
     Q("graph_pagerank", pagerankOracle) { (s, d) =>
       val pair = custSuppPairs(s, d)
       // symmetrize via two-struct explode (ONE evaluation of the
       // materialized pair frame — the unionAll form read it twice)
       // and hand off to the ONE pageRank definition (SCALING.md,
-      // "PageRank iteration cost at 20M edges"): edges/outw are persisted
-      // pre-partitioned in there, so each round shuffles only the ranks
+      // "PageRank iteration cost at 20M edges"): the edges, with their
+      // out-weights, are pinned on src in there, so each round shuffles
+      // only the ranks
       val edges = pair.select(explode(array(
           struct(col("c").as("src"), col("s").as("dst"), col("cnt")),
           struct(col("s").as("src"), col("c").as("dst"), col("cnt")))).as("e"))
@@ -426,17 +426,17 @@ object Extras {
     // EVERY supplier is a sink by construction — the hostile shape for
     // naive PageRank (here ~6% of nodes hold the entire damped inflow).
     // Each round the sinks' total mass is re-spread uniformly over the
-    // full node set before damping (Page et al. 1999 §2.5), as one
-    // broadcast 1-row scalar — mass is conserved up to div truncation
-    // (ComponentsSpec pins the law on a star-into-sink graph).
+    // full node set before damping (Page et al. 1999 §2.5) — mass is
+    // conserved up to div truncation (ComponentsSpec pins the law on a
+    // star-into-sink graph).
     //
     // Same integer-mass determinism doctrine as graph_pagerank: BIGINT
     // micro-units, every update a truncating div, so the oracle replays
     // the identical arithmetic — including the per-round dmass div n —
-    // with zero float wobble. Plan: per round ONE rank shuffle (edges
-    // persisted pre-partitioned on src inside pageRank), one O(sinks)
-    // anti-join aggregate for dmass, rank vector localCheckpointed
-    // because it is referenced twice per round.
+    // with zero float wobble. Plan (see [[Extras.pageRank]]): the edges
+    // and the flagged node set are pinned once, and each round is one
+    // contribution shuffle plus the rank checkpoint, whose job also
+    // observes the round's sink mass: two jobs a round, no scalar join.
     Q("graph_pagerank_directed",
       """WITH pair AS (
         |  SELECT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s,
@@ -1300,10 +1300,9 @@ object Extras {
     // round renormalizes by max via ONE truncating division (rank' =
     // y div (max(y) div 10⁶) — division-first, so no product ever
     // exceeds ~10¹³ at sf0.1 and the arithmetic replays exactly in both
-    // engines). Plan: per round one equi-join of the persisted
-    // pre-partitioned edge list with the rank vector + one groupBy dst
-    // + a broadcast 1-row max — the pageRank round shape minus the
-    // out-weight join.
+    // engines). Plan: per round one equi-join of the pinned edge list
+    // with the rank vector + one groupBy dst + a broadcast 1-row max —
+    // the graph_pagerank round shape without the out-weights.
     Q("graph_eigenvector",
       """WITH pair AS (
         |  SELECT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s,
@@ -1815,8 +1814,8 @@ object Extras {
     // count IS the pair support (ps is a set per order, so each order
     // contributes a pair at most once); item supports are one O(parts)
     // aggregate joined back on the pair keys, and the order-universe
-    // size rides in as a broadcast scalar (pageRank's crossJoin idiom —
-    // no driver collect). Lift stays a pure function of BIGINT counts
+    // size rides in as a broadcast scalar (a crossJoin of a 1-row
+    // aggregate — no driver collect). Lift stays a pure function of BIGINT counts
     // cast once to double, so both engines compute identical IEEE
     // values; ordering uses the rounded score, ties → (a,b).
     Q("etl_basket_affinity",
@@ -2145,7 +2144,7 @@ object Extras {
     * idiom.
     *
     * Cache contract: persists the edge frame; callers doing repeated
-    * runs should clearCache() when done, as with [[pageRank]].
+    * runs should clearCache() when done.
     */
   /** Symmetrized adjacency (u, v) pinned ([[PinnedCheckpoint]]) at FULL
     * parallelism on the wedge key v, so both sides of the wedge
@@ -2507,7 +2506,7 @@ object Extras {
     * orders⋈lineitem aggregate per key. Oracles still replay the
     * derivation from the base tables; re-spread on read per the
     * 1-split lesson. */
-  private def custSuppPairs(
+  private[graft] def custSuppPairs(
       s: SparkSession, d: String): DataFrame = {
     val dir = graft.config.LakeCache.ensure(
       Seq(s"$d/orders.parquet", s"$d/lineitem.parquet"),
@@ -2520,7 +2519,7 @@ object Extras {
     // repartition on their own loop key (src), so a repartition(c, s)
     // here was one pure-overhead exchange per key that the next exchange
     // immediately threw away (guide §2.4).
-    s.read.parquet(dir)
+    Tables.scan(s, dir)
   }
 
   /** The customer↔supplier pair derivation, frame-parameterized
@@ -2567,7 +2566,7 @@ object Extras {
     // own distribution key so every consumer starts at full parallelism
     // — the same hash exchange the in-memory distinct() used to leave
     // behind, paid once per key over a tiny frame.
-    s.read.parquet(dir).repartition(col("a"), col("b"))
+    Tables.scan(s, dir).repartition(col("a"), col("b"))
   }
 
   /** The live derivation (the only statement of the edge semantics —

@@ -1940,7 +1940,7 @@ object Llm {
     * hash-mismatches all of them immediately. Pair-bounded (never
     * corpus²) and re-spread on read (the materialized-frame
     * parallelism lesson, BASELINE.md round 11). */
-  private def minhashVerifiedLake(s: SparkSession, d: String): DataFrame = {
+  private[graft] def minhashVerifiedLake(s: SparkSession, d: String): DataFrame = {
     val dir = graft.config.LakeCache.ensure(
       s"$d/documents.parquet",
       "neardup_pairs:v1:shingle3:minhash16:bands8x2:portablehash",
@@ -1951,7 +1951,7 @@ object Llm {
       // materializes contract)
       s.catalog.clearCache()
     }
-    s.read.parquet(dir).repartition(col("d1"))
+    Tables.scan(s, dir).repartition(col("d1"))
   }
 
   /** The ≥0.2 verified near-dup pairs (d1, d2) the minhash groups join. */

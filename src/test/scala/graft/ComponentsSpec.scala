@@ -245,6 +245,20 @@ class ComponentsSpec extends AnyFunSuite {
     spark.catalog.clearCache()
   }
 
+  test("pageRank with sinks: a round costs at most four jobs") {
+    // a directed graph with two sinks (5 and 7) and a cycle
+    val edges = Seq((0L, 1L, 2L), (1L, 2L, 1L), (2L, 0L, 1L), (2L, 5L, 3L),
+        (3L, 5L, 1L), (4L, 3L, 1L), (1L, 7L, 1L), (6L, 4L, 2L))
+      .toDF("src", "dst", "cnt")
+    // nothing cached by one call may serve the next
+    def jobs(iterations: Int) = {
+      spark.catalog.clearCache()
+      TestSpark.jobsDuring(operators.Extras.pageRank(edges, iterations, sinks = true).collect())
+    }
+    val (two, three) = (jobs(2), jobs(3))
+    assert(three - two <= 4, s"a round ran ${three - two} jobs ($two at 2 rounds, $three at 3)")
+  }
+
   test("pageRank sink-free fast path unchanged: symmetrized graph takes " +
     "the lean loop and conserves mass too") {
     def ranks(edges: Seq[(Long, Long, Long)], sinks: Boolean) =

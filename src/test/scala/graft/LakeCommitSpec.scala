@@ -105,6 +105,18 @@ class LakeCommitSpec extends AnyFunSuite with TempDirs {
       new java.io.File(sys.props("java.io.tmpdir"), "graft_test_recovery"))
   }
 
+  test("lake-cached frames: once built, a second call plans with no job") {
+    def frames(): Unit = {
+      operators.Extras.custSuppPairs(spark, d)
+      operators.Extras.coOrderEdges(spark, d, "1997-01-01", "1998-01-01")
+      operators.Llm.minhashVerifiedLake(spark, d)
+    }
+    frames()
+    val jobs = TestSpark.jobsDuring(frames())
+    assert(jobs == 0, s"$jobs jobs ran while planning the built frames")
+    spark.catalog.clearCache()
+  }
+
   test("writer lease (VERDICT r12 #3): a second writer is refused " +
     "while the lease is live, a stale lease is taken over, and a " +
     "crashed verb never wedges the table") {

@@ -31,6 +31,23 @@ class LifetimeSpec extends AnyFunSuite {
     assert(first.count() == 2000L)
   }
 
+  test("pageRank with sinks frees its pins and earlier rounds: only the " +
+    "returned checkpoint stays, readable after another pageRank and hits build") {
+    // a chain into a sink (3) plus a cycle with a sink off it (6)
+    val edges = spark.createDataFrame(Seq((0L, 1L, 1L), (1L, 2L, 2L), (2L, 3L, 1L),
+        (4L, 5L, 1L), (5L, 4L, 3L), (5L, 6L, 1L), (2L, 0L, 1L)))
+      .toDF("src", "dst", "cnt")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val ranks = Extras.pageRank(edges, 3, sinks = true)
+    val kept = sc.getPersistentRDDs.keySet -- before
+    assert(kept.size == 1, s"pageRank left ${kept.size} persisted RDDs: $kept")
+    val expected = rows(Extras.pageRank(edges, 3, sinks = true))
+    Extras.hits(edges)
+    assert(rows(ranks) == expected)
+    spark.catalog.clearCache()
+  }
+
   test("two threads building pinned graph results: each lazily held " +
     "result survives the other thread's builds and matches the serial rows") {
     // symmetric edges (a ring plus chords), so every node has an out-edge

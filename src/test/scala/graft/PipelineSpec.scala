@@ -99,18 +99,8 @@ class PipelineSpec extends AnyFunSuite with TempDirs {
       Pipeline.readTableCurrent(spark, out, "parted"),
       Pipeline.readTableCurrent(spark, out, "parted", month = Some("2024-02-01")),
       Pipeline.readTableCurrent(spark, out, "wide"))
-    org.apache.spark.graft.TestBusHook.waitUntilEmpty(spark)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      reads()
-      org.apache.spark.graft.TestBusHook.waitUntilEmpty(spark)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get == 0, s"${jobs.get} jobs ran while building the readers")
+    val jobs = TestSpark.jobsDuring(reads())
+    assert(jobs == 0, s"$jobs jobs ran while building the readers")
     // the readers serve the published columns and rows, and no `__part`
     assert(reads().map(_.columns.toSeq).distinct == Seq(df.columns.toSeq))
     assert(reads().map(_.count()) == Seq(30L, 30L, 10L, 80L))

@@ -60,19 +60,9 @@ class RunConfigSpec extends AnyFunSuite with TempDirs {
       .repartition(3).write.parquet(s"$micros/events.parquet")
     for (dir <- Seq(nanos, micros)) {
       val cfg = RunConfig(dir, Seq("events"))
-      org.apache.spark.graft.TestBusHook.waitUntilEmpty(spark)
-      val jobs = new java.util.concurrent.atomic.AtomicInteger
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(listener)
-      val events = try {
-        val t = cfg.table(spark, "events")
-        org.apache.spark.graft.TestBusHook.waitUntilEmpty(spark)
-        t
-      } finally spark.sparkContext.removeSparkListener(listener)
-      assert(jobs.get == 0, s"${jobs.get} jobs ran while building events over $dir")
+      var events: org.apache.spark.sql.DataFrame = null
+      val jobs = TestSpark.jobsDuring { events = cfg.table(spark, "events") }
+      assert(jobs == 0, s"$jobs jobs ran while building events over $dir")
       val file = s"$dir/events.parquet"
       assert(Tables.scan(spark, file).schema == spark.read.parquet(file).schema)
       assert(events.schema("ts").dataType == org.apache.spark.sql.types.TimestampType)

@@ -435,7 +435,7 @@ object ScaleSmoke {
     // PageRank at 20M symmetrized edges over 1M nodes (round 5): the
     // REAL operators.Extras.pageRank (one definition with the declared
     // key). Each of the 3 rounds is one edges⋈ranks equi-join + one
-    // groupBy dst over the persisted pre-partitioned edge list — the
+    // groupBy dst over the edge list pinned on src — the
     // measurement here is that iteration cost stays flat (no lineage
     // blowup, no per-round rescans) and the integer mass actually
     // conserves at 2×10⁷ truncations per round.
@@ -450,7 +450,8 @@ object ScaleSmoke {
       val r = operators.Extras.pageRank(sym, 3, sinks = false)
       val row = r.agg(sum(col("rank")), count(lit(1))).head()
       val mass = row.getLong(0); val nodes = row.getLong(1)
-      spark.catalog.clearCache() // release the pageRank edge/outw persists
+      // nothing to clear: pageRank caches nothing, and its pins are
+      // freed once `r` is unreachable
       // truncation bleeds ≤1 unit per edge per round (≤6e7 of 1e12 here);
       // anything below that means a round dropped contributions
       require(mass > 999900000000L && mass <= 1000000000000L,
@@ -459,9 +460,9 @@ object ScaleSmoke {
     }
 
     // Directed + dangling PageRank and HITS at the same 10M-edge scale
-    // (round 8, cont. 4): the dangling loop adds a per-round sink-mass
-    // aggregate + localCheckpoint; HITS runs 2 rounds × 2 half-rounds of
-    // join+groupBy+rescale. Both must stay in the same cost class as the
+    // (round 8, cont. 4): the dangling loop checkpoints each round's rank
+    // vector, observing its sink mass in the same job; HITS runs 2
+    // rounds × 2 half-rounds of join+groupBy+rescale. Both must stay in the same cost class as the
     // lean loop — a blow-up here means a rescale/checkpoint became a
     // second edge shuffle.
     time("pagerank directed+dangling 10M edges") {
@@ -473,7 +474,6 @@ object ScaleSmoke {
       val r = operators.Extras.pageRank(e, 3, sinks = true)
       val row = r.agg(sum(col("rank")), count(lit(1))).head()
       val mass = row.getLong(0); val nodes = row.getLong(1)
-      spark.catalog.clearCache()
       require(mass > 999900000000L && mass <= 1000000000000L,
         s"dangling loop must conserve mass up to truncation ($mass)")
       nodes

@@ -36,6 +36,22 @@ object TestSpark {
     } finally spark.listenerManager.unregister(listener)
     seen.toArray(Array.empty[String]).toSeq
   }
+
+  /** The number of Spark jobs that `body` starts. */
+  def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    org.apache.spark.graft.TestBusHook.waitUntilEmpty(spark)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.graft.TestBusHook.waitUntilEmpty(spark)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get
+  }
 }
 
 /** Temp dirs for a suite's tests, deleted with all they hold in a
